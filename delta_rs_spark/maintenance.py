@@ -52,25 +52,16 @@ def create_checkpoint(
     table has; sidecars are independently written and read (parallel I/O,
     bounded memory), and an incremental writer could reuse unchanged
     sidecars across checkpoints. Requires the ``v2Checkpoint`` table
-    feature (``DeltaTable.enable_v2_checkpoints``)."""
+    feature (``DeltaTable.enable_v2_checkpoints``).
+
+    The add/remove columns are written from the snapshot's Arrow state
+    (``protocol/state.py``) without building an action object per file;
+    parquet is zstd-compressed."""
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     snap = table.snapshot
     state = snap.state
     meta = snap.metadata
-    schema = snap.schema()
-    pcols = meta.partition_columns
-    # partitionValues (and _parsed) are keyed by PHYSICAL name when column
-    # mapping is active — same keys the add actions carry
-    from .protocol import column_mapping as _cmap
-
-    if snap.mapping_mode() != "none":
-        _p = _cmap.top_level_physical(schema)
-        ptypes = {_p[f.name]: f.dataType for f in schema.fields if f.name in pcols}
-        pcols = [_p[c] for c in pcols]
-    else:
-        ptypes = {f.name: f.dataType for f in schema.fields if f.name in pcols}
 
     proto: dict = {
         "minReaderVersion": state.min_reader_version or 1,
@@ -80,49 +71,17 @@ def create_checkpoint(
         proto["readerFeatures"] = state.reader_features
     if state.writer_features is not None:
         proto["writerFeatures"] = state.writer_features
-    rows: list[dict] = []
-    rows.append({"protocol": proto})
-    rows.append({"metaData": meta.to_json_dict()})
+    rows: list[dict] = [{"protocol": proto}, {"metaData": meta.to_json_dict()}]
     for app_id, version in sorted(state.app_transaction_version.items()):
         rows.append({"txn": {"appId": app_id, "version": version}})
     for domain, config in sorted(state.domain_metadata.items()):
         rows.append(
             {"domainMetadata": {"domain": domain, "configuration": config, "removed": False}}
         )
-    for r in state.tombstones.values():
-        rows.append({"remove": r.to_json_dict()})
-    # public checkpoint stats properties: writeStatsAsJson (default true)
-    # keeps the `stats` JSON column; writeStatsAsStruct additionally writes
-    # `stats_parsed` as a typed struct — engines that prune from checkpoints
-    # directly read the struct column without 400k JSON parses
-    cfg = meta.configuration or {}
-    stats_as_json = (
-        str(cfg.get("delta.checkpoint.writeStatsAsJson", "true")).lower() != "false"
-    )
-    stats_as_struct = (
-        str(cfg.get("delta.checkpoint.writeStatsAsStruct", "false")).lower() == "true"
-    )
-    for a in state.files.values():
-        add_d = a.to_json_dict()
-        if pcols:
-            add_d["partitionValues_parsed"] = {
-                c: _parsed_partition_value(a.partition_values.get(c), ptypes[c])
-                for c in pcols
-            }
-        if stats_as_struct:
-            parsed = a.get_stats()
-            if parsed is not None:
-                add_d["stats_parsed"] = parsed
-        if not stats_as_json:
-            add_d.pop("stats", None)
-        rows.append({"add": add_d})
-
-    rows = [_drop_empty_dicts(r) for r in rows]
-
-    import io
+    singletons = pa.table(_rows_to_struct_columns([_drop_empty_dicts(r) for r in rows]))
+    files = _file_action_columns(snap)
 
     limit = part_rows or CHECKPOINT_PART_ROWS
-
     cfg = meta.configuration or {}
     policy = policy or cfg.get("delta.checkpointPolicy", "classic")
     if policy not in ("classic", "v2"):
@@ -133,67 +92,129 @@ def create_checkpoint(
                 "v2 checkpoints need the v2Checkpoint table feature; call "
                 "DeltaTable.enable_v2_checkpoints() first"
             )
-        return _create_v2_checkpoint(table, rows, limit, pcols, ptypes)
+        return _create_v2_checkpoint(table, singletons, files, limit)
 
-    if len(rows) <= limit:
-        cp = CheckPoint(version=snap.version, size=len(rows))
-        path = table.log.checkpoint_paths(CheckPoint(version=snap.version))[0]
+    # multi-part past `limit` rows: the reference's part-numbered layout;
+    # each part is a self-contained parquet (readers parse parts
+    # independently, so a part with no removes simply has no remove column)
+    whole = pa.concat_tables([singletons, files], promote_options="default")
+    n_parts = -(-whole.num_rows // limit)
+    cp = CheckPoint(
+        version=snap.version, size=whole.num_rows, parts=n_parts if n_parts > 1 else None
+    )
+    for part, path in enumerate(table.log.checkpoint_paths(cp)):
         # serialize through the storage backend (memory/object-store safe);
         # checkpoints are metadata-sized, so an in-memory buffer is fine
-        buf = io.BytesIO()
-        pq.write_table(pa.table(_rows_to_struct_columns(pa, rows, pcols, ptypes)), buf, compression="snappy")
-        table.log.backend.put_obj(path, buf.getvalue())
-        table.log.put_last_checkpoint(cp)
-        return cp
-
-    # multi-part: chunk the action rows into the reference's
-    # part-numbered layout; each part is a self-contained parquet (readers
-    # parse parts record-wise and independently, so per-part struct columns
-    # may differ — a part with no removes simply has no remove column)
-    n_parts = -(-len(rows) // limit)
-    cp = CheckPoint(version=snap.version, size=len(rows), parts=n_parts)
-    paths = table.log.checkpoint_paths(cp)
-    for part, path in enumerate(paths):
-        chunk = rows[part * limit : (part + 1) * limit]
-        buf = io.BytesIO()
-        pq.write_table(
-            pa.table(_rows_to_struct_columns(pa, chunk, pcols, ptypes)),
-            buf,
-            compression="snappy",
-        )
-        table.log.backend.put_obj(path, buf.getvalue())
+        table.log.backend.put_obj(path, _parquet_bytes(whole.slice(part * limit, limit)))
     table.log.put_last_checkpoint(cp)
     return cp
 
 
-def _create_v2_checkpoint(table, rows: list[dict], limit: int, pcols, ptypes) -> CheckPoint:
+def _file_action_columns(snap):
+    """The snapshot's removes then adds as checkpoint rows (a ``remove`` and
+    an ``add`` struct column), read from its Arrow state. Adds carry
+    ``partitionValues_parsed`` — the typed partition values — and, under
+    ``delta.checkpoint.writeStatsAsStruct``, ``stats_parsed``;
+    ``writeStatsAsJson=false`` drops the ``stats`` JSON column."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    from .protocol import column_mapping as _cmap
+
+    schema = snap.schema()
+    pcols = snap.metadata.partition_columns
+    # partitionValues (and _parsed) are keyed by PHYSICAL name when column
+    # mapping is active — same keys the add actions carry
+    if snap.mapping_mode() != "none":
+        _p = _cmap.top_level_physical(schema)
+        ptypes = {_p[f.name]: f.dataType for f in schema.fields if f.name in pcols}
+        pcols = [_p[c] for c in pcols]
+    else:
+        ptypes = {f.name: f.dataType for f in schema.fields if f.name in pcols}
+    # public checkpoint stats properties: writeStatsAsJson (default true)
+    # keeps the `stats` JSON column; writeStatsAsStruct additionally writes
+    # `stats_parsed` as a typed struct — engines that prune from checkpoints
+    # directly read the struct column without 400k JSON parses
+    cfg = snap.metadata.configuration or {}
+    stats_as_json = (
+        str(cfg.get("delta.checkpoint.writeStatsAsJson", "true")).lower() != "false"
+    )
+    stats_as_struct = (
+        str(cfg.get("delta.checkpoint.writeStatsAsStruct", "false")).lower() == "true"
+    )
+
+    adds = snap.state.live_files()
+    add_tbl = adds.table()
+    cols = dict(zip(add_tbl.column_names, add_tbl.columns))
+    if pcols:
+        pv = add_tbl["partitionValues"]
+        cols["partitionValues_parsed"] = pa.StructArray.from_arrays(
+            [
+                pa.array(
+                    [
+                        _parsed_partition_value(v, ptypes[c])
+                        for v in pc.map_lookup(pv, c, "first").to_pylist()
+                    ]
+                )
+                for c in pcols
+            ],
+            names=pcols,
+        )
+    if stats_as_struct:
+        cols["stats_parsed"] = adds.stats().struct(add_tbl["stats"].is_valid())
+    if not stats_as_json:
+        del cols["stats"]
+    add = _struct_column(cols, len(adds))
+    rm_tbl = snap.state.tombstones.select().table()
+    remove = _struct_column(dict(zip(rm_tbl.column_names, rm_tbl.columns)), rm_tbl.num_rows)
+    n_rm, n_add = len(remove), len(add)
+    return pa.table(
+        {
+            "remove": pa.concat_arrays([remove, pa.nulls(n_add, remove.type)]),
+            "add": pa.concat_arrays([pa.nulls(n_rm, add.type), add]),
+        }
+    )
+
+
+def _struct_column(cols: dict, n: int):
+    """One action struct column; fields null on every row are left out
+    (readers treat an absent optional field as null)."""
+    import pyarrow as pa
+
+    cols = {k: c for k, c in cols.items() if k == "path" or c.null_count < n}
+    arrays = [c.combine_chunks() if isinstance(c, pa.ChunkedArray) else c for c in cols.values()]
+    if n == 0:  # from_arrays cannot infer a length from zero-row children
+        return pa.array([], pa.struct([(k, a.type) for k, a in zip(cols, arrays)]))
+    return pa.StructArray.from_arrays(arrays, names=list(cols))
+
+
+def _parquet_bytes(t) -> bytes:
+    """One checkpoint/sidecar parquet file; columns null on every row of
+    ``t`` are left out."""
+    import io
+
+    import pyarrow.parquet as pq
+
+    t = t.select([i for i, c in enumerate(t.columns) if c.null_count < t.num_rows])
+    buf = io.BytesIO()
+    pq.write_table(t, buf, compression="zstd")
+    return buf.getvalue()
+
+
+def _create_v2_checkpoint(table, singletons, files, limit: int) -> CheckPoint:
     """V2 layout: file actions → ``_sidecars/{uuid}.parquet`` chunks;
     manifest ``{v}.checkpoint.{uuid}.parquet`` with the singleton actions,
     one ``checkpointMetadata`` row, and one ``sidecar`` row per chunk."""
-    import io
     import uuid as _uuid
 
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
     log = table.log
     version = table.snapshot.version
-    file_rows = [r for r in rows if "add" in r or "remove" in r]
-    singleton_rows = [r for r in rows if "add" not in r and "remove" not in r]
-
     sidecar_rows: list[dict] = []
-    for i in range(0, max(len(file_rows), 1), limit):
-        chunk = file_rows[i : i + limit]
-        if not chunk:
-            break
+    for i in range(0, files.num_rows, limit):
         name = f"{_uuid.uuid4().hex}.parquet"
-        buf = io.BytesIO()
-        pq.write_table(
-            pa.table(_rows_to_struct_columns(pa, chunk, pcols, ptypes)),
-            buf,
-            compression="snappy",
-        )
-        data = buf.getvalue()
+        data = _parquet_bytes(files.slice(i, limit))
         log.backend.put_obj(log.sidecar_path(name), data)
         sidecar_rows.append(
             {
@@ -204,21 +225,14 @@ def _create_v2_checkpoint(table, rows: list[dict], limit: int, pcols, ptypes) ->
                 }
             }
         )
-
-    manifest_rows = (
-        singleton_rows
-        + [{"checkpointMetadata": {"version": version}}]
-        + sidecar_rows
+    extra = [{"checkpointMetadata": {"version": version}}] + sidecar_rows
+    manifest = pa.concat_tables(
+        [singletons, pa.table(_rows_to_struct_columns(extra))], promote_options="default"
     )
-    uid = _uuid.uuid4().hex
-    cp = CheckPoint(version=version, size=len(rows), uuid=uid)
-    buf = io.BytesIO()
-    pq.write_table(
-        pa.table(_rows_to_struct_columns(pa, manifest_rows, pcols, ptypes)),
-        buf,
-        compression="snappy",
+    cp = CheckPoint(
+        version=version, size=singletons.num_rows + files.num_rows, uuid=_uuid.uuid4().hex
     )
-    log.backend.put_obj(log.checkpoint_paths(cp)[0], buf.getvalue())
+    log.backend.put_obj(log.checkpoint_paths(cp)[0], _parquet_bytes(manifest))
     log.put_last_checkpoint(cp)
     return cp
 
@@ -245,12 +259,13 @@ def _drop_empty_dicts(node):
     return node
 
 
-def _rows_to_struct_columns(pa, rows: list[dict], pcols, ptypes) -> dict:
-    """Sparse row dicts → one pyarrow struct array per action column."""
+def _rows_to_struct_columns(rows: list[dict]) -> dict:
+    """Sparse row dicts of the singleton actions → one pyarrow struct
+    array per action column."""
+    import pyarrow as pa
+
     cols = [
         "txn",
-        "add",
-        "remove",
         "metaData",
         "protocol",
         "domainMetadata",
@@ -1010,7 +1025,7 @@ def _version_checksum_payload(table) -> dict:
     numMetadata, numProtocol, numDeletedRecordsOpt, numDeletionVectorsOpt,
     setTransactions, domainMetadata, metadata, protocol)."""
     state = table.snapshot.state
-    files = list(state.files.values())
+    files = state.live_files()
     protocol: dict = {
         "minReaderVersion": state.min_reader_version,
         "minWriterVersion": state.min_writer_version,
@@ -1019,17 +1034,13 @@ def _version_checksum_payload(table) -> dict:
         protocol["readerFeatures"] = sorted(state.reader_features)
     if state.writer_features is not None:
         protocol["writerFeatures"] = sorted(state.writer_features)
-    dv_files = [a for a in files if a.deletion_vector]
     return {
-        "tableSizeBytes": sum(a.size or 0 for a in files),
+        "tableSizeBytes": files.size_bytes(),
         "numFiles": len(files),
         "numMetadata": 1,
         "numProtocol": 1,
-        "numDeletedRecordsOpt": sum(
-            int((a.deletion_vector or {}).get("cardinality") or 0)
-            for a in dv_files
-        ),
-        "numDeletionVectorsOpt": len(dv_files),
+        "numDeletedRecordsOpt": files.dv_cardinality(),
+        "numDeletionVectorsOpt": files.dv_count(),
         "metadata": state.metadata.to_json_dict() if state.metadata else None,
         "protocol": protocol,
         "setTransactions": [

@@ -242,7 +242,7 @@ def sync_water_marks(table) -> dict[str, int]:
     marks: dict[str, int] = {}
     for name, spec in ids.items():
         mm = table_min_max(
-            table.snapshot.state.files.values(), phys.get(name, name)
+            table.snapshot.files(), phys.get(name, name)
         )
         if mm is None:
             continue

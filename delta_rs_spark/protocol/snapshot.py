@@ -5,11 +5,17 @@ from the newest checkpoint ≤ target version (``_last_checkpoint`` hint, else
 log-dir scan), fold the JSON commit tail. All of this is driver-side and
 small; the resulting file list feeds one Spark parquet scan — the scan itself
 (vectorized reader, pushdown, codegen) is entirely Catalyst's.
+
+Snapshot state is columnar (``protocol/state.py``): the checkpoint's
+add/remove rows stay the Arrow tables pyarrow decoded, shared by every
+snapshot folded from that checkpoint, and the commit tail folds into a
+small overlay reconciled with them by path. Listing files, counting rows
+and pruning read columns; ``AddAction`` objects are built only for callers
+that iterate actions (DML, the writer, CDF, DataFrame construction).
 """
 
 from __future__ import annotations
 
-import json
 from typing import Any, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
@@ -22,14 +28,20 @@ from .actions import (
     DomainMetadataAction,
     MetaDataAction,
     ProtocolAction,
-    RemoveAction,
     TxnAction,
 )
 from . import column_mapping as cm
 from .log import CheckPoint, DeltaLog
-from .partitions import FilterTuple, compile_filters, file_matches
+from .partitions import FilterTuple, compile_filters
 from .schema import partition_value_to_typed, schema_string_to_spark
-from .state import TableState
+from .state import (
+    ADD_SCHEMA,
+    REMOVE_SCHEMA,
+    CheckpointActions,
+    Files,
+    TableState,
+    file_action_table,
+)
 from .stats import SkipTuple, prune_files
 
 
@@ -142,32 +154,12 @@ class Snapshot:
         The fold runs on a COPY of the state: this snapshot stays the
         immutable view its docstring promises, so a caller that captured it
         (time travel, CDF planning) keeps reading version-consistent data
-        while the table object moves forward. The copy is shallow-per-field
-        (dict/list containers re-created, actions shared — they are never
-        mutated), O(#files) like the fold itself."""
+        while the table object moves forward. The copy shares the
+        checkpoint's Arrow base and copies only the commit-tail overlay."""
         v = self.version + 1
         if self.log.try_read_commit(v) is None:
             return self  # nothing new — skip the state copy entirely
-        import dataclasses as _dc
-
-        state = _dc.replace(
-            self.state,
-            files=dict(self.state.files),
-            tombstones=dict(self.state.tombstones),
-            commit_infos=list(self.state.commit_infos),
-            app_transaction_version=dict(self.state.app_transaction_version),
-            reader_features=(
-                list(self.state.reader_features)
-                if self.state.reader_features is not None
-                else None
-            ),
-            writer_features=(
-                list(self.state.writer_features)
-                if self.state.writer_features is not None
-                else None
-            ),
-            domain_metadata=dict(self.state.domain_metadata),
-        )
+        state = self.state.copy()
         loaded = self.version
         while True:
             actions = self.log.try_read_commit(v)
@@ -219,20 +211,26 @@ class Snapshot:
         self,
         partition_filters: Sequence[FilterTuple] | None = None,
         skip_predicates: Sequence[SkipTuple] | None = None,
-    ) -> list[AddAction]:
-        adds = list(self.state.files.values())
+    ) -> Files:
+        """Live add actions after partition filtering and stats skipping,
+        as a columnar selection: pruning reads the partitionValues and
+        stats columns, and an ``AddAction`` is built only when an element
+        is read."""
+        files = self.state.live_files()
         if partition_filters:
             compiled = compile_filters(self._phys_tuples(partition_filters))
-            adds = [a for a in adds if file_matches(a, compiled)]
+            files = files.where(
+                [all(f.matches(pv) for f in compiled) for pv in files.partition_values()]
+            )
         if skip_predicates:
-            adds = prune_files(adds, self._phys_tuples(skip_predicates))
-        return adds
+            files = prune_files(files, self._phys_tuples(skip_predicates))
+        return files
 
     def file_paths(self, **kw) -> list[str]:
-        return [a.path for a in self.files(**kw)]
+        return self.files(**kw).paths()
 
     def file_uris(self, **kw) -> list[str]:
-        return [self._absolute(a.path) for a in self.files(**kw)]
+        return [self._absolute(p) for p in self.file_paths(**kw)]
 
     def _absolute(self, path: str) -> str:
         if "://" in path or path.startswith("/"):
@@ -629,21 +627,21 @@ class Snapshot:
 
 # ---- checkpoint parquet → actions (driver-side pyarrow) -------------------
 
-def read_checkpoint_actions(log: DeltaLog, cp: CheckPoint) -> list[Action]:
-    """Decode checkpoint parquet rows into actions.
+def read_checkpoint_actions(log: DeltaLog, cp: CheckPoint) -> CheckpointActions:
+    """Decode a checkpoint's parquet parts (and V2 sidecars).
 
     Row layout per the Delta protocol (one struct column per action type;
     reference reader ``rust/src/action.rs:726-775``). Reads with pyarrow on
     the driver: checkpoints are a few MB of metadata, not data-plane I/O.
-    The bulk columns (add/remove — hundreds of thousands of rows on a big
-    table) decode COLUMN-wise (one ``to_pylist`` per struct field) instead
-    of row-wise nested dicts, which is what keeps a 400k-file snapshot
-    reload in low single-digit seconds; the singleton action types
-    (metaData/protocol/txn) stay on the simple row path.
+    The add/remove columns stay Arrow — projected onto the state's schemas
+    with no Python per row — and become the snapshot's shared base; only
+    the singleton actions (metaData/protocol/txn/domainMetadata, a few
+    rows) are decoded into objects.
     """
     import io
     from concurrent.futures import ThreadPoolExecutor
 
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
     def _fetch_many(paths: list[str]) -> list[bytes]:
@@ -655,76 +653,55 @@ def read_checkpoint_actions(log: DeltaLog, cp: CheckPoint) -> list[Action]:
         with ThreadPoolExecutor(max_workers=min(16, len(paths))) as ex:
             return list(ex.map(log.backend.get_obj, paths))
 
-    actions: list[Action] = []
-    part_blobs = _fetch_many(log.checkpoint_paths(cp))
+    singletons: list[Action] = []
+    files: dict[str, list] = {"add": [], "remove": []}
+
+    def decode(table) -> None:
+        singletons.extend(_singleton_actions(table))
+        for name, schema in (("add", ADD_SCHEMA), ("remove", REMOVE_SCHEMA)):
+            if name in table.column_names:
+                files[name].append(file_action_table(table.column(name), schema))
+
+    # one decode thread: a checkpoint is a few MB, and Arrow allocations
+    # spread over per-thread arenas raise the driver's resident memory on
+    # every open more than the threads save in time
     sidecar_names: list[str] = []
-    for blob in part_blobs:
-        table = pq.read_table(io.BytesIO(blob))
-        actions.extend(_decode_checkpoint_table(table))
+    for blob in _fetch_many(log.checkpoint_paths(cp)):
+        table = pq.read_table(io.BytesIO(blob), use_threads=False)
+        decode(table)
         # V2 manifests: file actions live in _sidecars/ parquet files named
-        # by `sidecar` rows — fetched below and decoded with the same
-        # columnar path. Sidecars hold ONLY add/remove.
+        # by `sidecar` rows. Sidecars hold ONLY add/remove.
         if "sidecar" in table.column_names:
-            for sc in table.column("sidecar").to_pylist():
-                if sc and sc.get("path"):
-                    sidecar_names.append(sc["path"])
+            sc = table.column("sidecar")
+            for d in sc.filter(sc.is_valid()).to_pylist():
+                if d.get("path"):
+                    sidecar_names.append(d["path"])
     for blob in _fetch_many([log.sidecar_path(n) for n in sidecar_names]):
-        actions.extend(_decode_checkpoint_table(pq.read_table(io.BytesIO(blob))))
-    return actions
+        decode(pq.read_table(io.BytesIO(blob), use_threads=False))
+
+    def concat(tables: list, schema) -> "pa.Table":
+        return pa.concat_tables(tables).combine_chunks() if tables else schema.empty_table()
+
+    return CheckpointActions(
+        singletons, concat(files["add"], ADD_SCHEMA), concat(files["remove"], REMOVE_SCHEMA)
+    )
 
 
-def _decode_checkpoint_table(table) -> list[Action]:
-    """One checkpoint/sidecar parquet → actions (columnar add/remove decode;
-    `checkpointMetadata`/`sidecar` columns are handled by the caller)."""
+def _singleton_actions(table) -> list[Action]:
+    """The few metaData/protocol/txn/domainMetadata rows of a checkpoint."""
     actions: list[Action] = []
-    # singleton action types: row-wise over their (few) non-null rows
-    for name, builder in (
-        ("metaData", lambda d: MetaDataAction.from_json_dict(_strip_none(_fix_meta(d)))),
-        ("protocol", ProtocolAction.from_json_dict),
-        ("txn", TxnAction.from_json_dict),
-        ("domainMetadata", DomainMetadataAction.from_json_dict),
+    for name, key, builder in (
+        ("metaData", "id", lambda d: MetaDataAction.from_json_dict(_strip_none(_fix_meta(d)))),
+        ("protocol", "minReaderVersion", ProtocolAction.from_json_dict),
+        ("txn", "appId", TxnAction.from_json_dict),
+        ("domainMetadata", "domain", DomainMetadataAction.from_json_dict),
     ):
         if name not in table.column_names:
             continue
-        key = {
-            "metaData": "id",
-            "protocol": "minReaderVersion",
-            "txn": "appId",
-            "domainMetadata": "domain",
-        }[name]
-        for d in table.column(name).to_pylist():
-            if d and d.get(key) is not None:
+        col = table.column(name)
+        for d in col.filter(col.is_valid()).to_pylist():
+            if d.get(key) is not None:
                 actions.append(builder(d))
-
-    for name, cls in (("add", AddAction), ("remove", RemoveAction)):
-        if name not in table.column_names:
-            continue
-        for chunk in table.column(name).chunks:
-            fields = {f.name: chunk.field(i).to_pylist() for i, f in enumerate(chunk.type)}
-            paths = fields.get("path") or []
-            for i, p in enumerate(paths):
-                if p is None:
-                    continue
-                d = {
-                    k: v[i]
-                    for k, v in fields.items()
-                    if v[i] is not None
-                    and k not in ("stats_parsed", "partitionValues_parsed")
-                }
-                if "stats" not in d and fields.get("stats_parsed") is not None:
-                    sp = fields["stats_parsed"][i]
-                    if sp is not None:
-                        d["stats"] = json.dumps(sp, default=str)
-                pv = d.get("partitionValues")
-                if isinstance(pv, list):  # pyarrow map type → list of (k, v)
-                    d["partitionValues"] = dict(pv)
-                # pyarrow unifies mixed DV descriptors (inline vs filed
-                # vs legacy) into one superset struct with None-filled
-                # gaps — strip them so absent-key semantics survive the
-                # checkpoint (offset=None would break decode)
-                if isinstance(d.get("deletionVector"), dict):
-                    d["deletionVector"] = _strip_none(d["deletionVector"])
-                actions.append(cls.from_json_dict(d))
     return actions
 
 

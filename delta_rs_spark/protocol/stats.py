@@ -16,7 +16,14 @@ power two things Spark cannot do by itself (it never sees our log):
 from __future__ import annotations
 
 import datetime as _dt
-from typing import Any, Iterable, Optional, Sequence
+import functools
+import json
+from typing import Any, Optional, Sequence
+
+import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.json as pj
 
 from .actions import AddAction
 
@@ -74,88 +81,104 @@ def file_may_match(add: AddAction, predicates: Sequence[SkipTuple]) -> bool:
     String min/max on timestamps compare lexicographically == chronologically
     for ISO-8601, so date/timestamp predicates skip correctly.
     """
-    stats = add.get_stats()
-    if not stats:
-        return True
-    mins = stats.get("minValues") or {}
-    maxs = stats.get("maxValues") or {}
-    null_counts = stats.get("nullCount") or {}
-    num_records = stats.get("numRecords")
+    return prune_mask(FileStats.of([add]), predicates)[0]
 
+
+def _may_match(op: str, lit: Any, lo_raw: Any, hi_raw: Any, nulls: Any, num_records: Any) -> bool:
+    """One predicate against one file's min/max/nullCount of its column."""
+    all_null = num_records is not None and isinstance(nulls, int) and nulls >= num_records > 0
+    if all_null:
+        return False  # every value NULL → no comparison predicate can match
+    pair_lo = _coerce(lo_raw, lit)
+    pair_hi = _coerce(hi_raw, lit)
+    if pair_lo is None or pair_hi is None:
+        return True
+    lo, v = pair_lo
+    hi, _ = pair_hi
+    # written as negated prune conditions: NaN bounds must keep the file
+    if op == "=":
+        return not (v < lo or v > hi)
+    if op == "<":
+        return not lo >= v
+    if op == "<=":
+        return not lo > v
+    if op == ">":
+        return not hi <= v
+    if op == ">=":
+        return not hi < v
+    # "!=": only a constant column equal to the literal, with no NULLs, fails
+    return not (lo == hi == v and isinstance(nulls, int) and nulls <= 0)
+
+
+def prune_mask(stats: "FileStats", predicates: Sequence[SkipTuple]) -> list[bool]:
+    """Per file: True unless its stats prove no row matches every predicate."""
+    keep = [True] * len(stats)
+    num_records = stats.values("numRecords")
     for col, op, lit in predicates:
         if op not in _SKIP_OPS:
             continue  # unknown op: cannot skip on it
-        lo_raw, hi_raw = mins.get(col), maxs.get(col)
-        nulls = null_counts.get(col)
-        all_null = (
-            num_records is not None and isinstance(nulls, int) and nulls >= num_records > 0
+        columns = zip(
+            stats.values("minValues", col),
+            stats.values("maxValues", col),
+            stats.values("nullCount", col),
+            num_records,
         )
-        if all_null:
-            return False  # every value NULL → no comparison predicate can match
-        pair_lo = _coerce(lo_raw, lit)
-        pair_hi = _coerce(hi_raw, lit)
-        if pair_lo is None or pair_hi is None:
-            continue
-        lo, v = pair_lo
-        hi, _ = pair_hi
-        if op == "=" and (v < lo or v > hi):
-            return False
-        if op == "<" and lo >= v:
-            return False
-        if op == "<=" and lo > v:
-            return False
-        if op == ">" and hi <= v:
-            return False
-        if op == ">=" and hi < v:
-            return False
-        if op == "!=" and lo == hi == v and not _has_nulls(null_counts, col):
-            return False
-    return True
+        for i, (lo, hi, nulls, n) in enumerate(columns):
+            if keep[i] and not _may_match(op, lit, lo, hi, nulls, n):
+                keep[i] = False
+    return keep
 
 
-def _has_nulls(null_counts: dict[str, Any], col: str) -> bool:
-    n = null_counts.get(col)
-    return not isinstance(n, int) or n > 0
+def _as_files(files):
+    from .state import Files
+
+    return files if isinstance(files, Files) else Files.of(files)
 
 
-def prune_files(
-    files: Iterable[AddAction], predicates: Sequence[SkipTuple] | None
-) -> list[AddAction]:
+def prune_files(files, predicates: Sequence[SkipTuple] | None):
+    """The files whose stats may satisfy every predicate. ``files`` is a
+    columnar :class:`~.state.Files` selection (what the snapshot passes; the
+    result is one too) or AddActions (the result is a list)."""
+    from .state import Files
+
+    if isinstance(files, Files):
+        return files.where(prune_mask(files.stats(), predicates)) if predicates else files
+    files = list(files)
     if not predicates:
-        return list(files)
-    return [a for a in files if file_may_match(a, predicates)]
+        return files
+    keep = prune_mask(FileStats.of(files), predicates)
+    return [a for a, k in zip(files, keep) if k]
 
 
 # ---- metadata-only aggregates (reference delta_datafusion.rs:117-209) -----
 
-def table_num_records(files: Iterable[AddAction]) -> Optional[int]:
-    """Σ live rows (numRecords minus deletion-vector cardinality)."""
-    total = 0
-    for a in files:
-        n = a.logical_records
-        if n is None:
-            return None
-        total += n
-    return total
+def table_num_records(files) -> Optional[int]:
+    """Σ live rows (numRecords minus deletion-vector cardinality); None if
+    any file lacks stats."""
+    files = _as_files(files)
+    counts = files.stats().values("numRecords")
+    if any(n is None for n in counts):
+        return None
+    return sum(counts) - files.dv_cardinality()
 
 
-def table_min_max(files: Iterable[AddAction], column: str) -> tuple[Any, Any] | None:
+def table_min_max(files, column: str) -> tuple[Any, Any] | None:
     """Global (min, max) of a column from per-file stats; None if any file
     lacks the stat (then the caller falls back to a Spark scan)."""
+    files = _as_files(files)
+    if files.dv_count():
+        # the deleted rows may have held the extremum; stats are only a
+        # conservative superset under a DV — metadata answer unsafe
+        return None
+    stats = files.stats()
     gmin: Any = None
     gmax: Any = None
-    for a in files:
-        if a.deletion_vector is not None:
-            # the deleted rows may have held the extremum; stats are only a
-            # conservative superset under a DV — metadata answer unsafe
-            return None
-        stats = a.get_stats()
-        if not stats:
-            return None
-        lo = (stats.get("minValues") or {}).get(column)
-        hi = (stats.get("maxValues") or {}).get(column)
-        nulls = (stats.get("nullCount") or {}).get(column)
-        n = stats.get("numRecords")
+    for lo, hi, nulls, n in zip(
+        stats.values("minValues", column),
+        stats.values("maxValues", column),
+        stats.values("nullCount", column),
+        stats.values("numRecords"),
+    ):
         if lo is None or hi is None:
             # all-NULL file contributes nothing; anything else → unknown
             if isinstance(nulls, int) and n is not None and nulls >= n:
@@ -164,3 +187,161 @@ def table_min_max(files: Iterable[AddAction], column: str) -> tuple[Any, Any] | 
         gmin = lo if gmin is None or lo < gmin else gmin
         gmax = hi if gmax is None or hi > gmax else gmax
     return (gmin, gmax)
+
+
+# ---- stats as columns ------------------------------------------------------------
+
+# Delta type → Arrow type of its min/max in the stats JSON; dates and
+# timestamps stay the ISO strings the JSON holds (the JSON reader would
+# otherwise infer timestamps from them)
+_VALUE_TYPES = {
+    "byte": pa.int64(),
+    "short": pa.int64(),
+    "integer": pa.int64(),
+    "long": pa.int64(),
+    "float": pa.float64(),
+    "double": pa.float64(),
+    "boolean": pa.bool_(),
+    "string": pa.string(),
+    "binary": pa.string(),
+    "date": pa.string(),
+    "timestamp": pa.string(),
+    "timestamp_ntz": pa.string(),
+}
+
+
+@functools.lru_cache(maxsize=64)
+def stats_schema(schema_string: str, physical: bool) -> pa.Schema:
+    """The Arrow schema stats JSON parses with, from the table schema:
+    minValues/maxValues typed per column, nullCount as longs, keyed by
+    physical names when column mapping is on."""
+
+    def key(f: dict) -> str:
+        meta = f.get("metadata") or {}
+        return meta.get("delta.columnMapping.physicalName", f["name"]) if physical else f["name"]
+
+    def values(fields: list) -> list[pa.Field]:
+        out = []
+        for f in fields:
+            t = f["type"]
+            if isinstance(t, dict):
+                sub = values(t["fields"]) if t.get("type") == "struct" else []
+                if sub:
+                    out.append(pa.field(key(f), pa.struct(sub)))
+                continue
+            typ = pa.float64() if t.startswith("decimal") else _VALUE_TYPES.get(t)
+            if typ is not None:
+                out.append(pa.field(key(f), typ))
+        return out
+
+    def counts(fields: list) -> list[pa.Field]:
+        out = []
+        for f in fields:
+            t = f["type"]
+            if isinstance(t, dict) and t.get("type") == "struct":
+                sub = counts(t["fields"])
+                if sub:
+                    out.append(pa.field(key(f), pa.struct(sub)))
+            else:
+                out.append(pa.field(key(f), pa.int64()))
+        return out
+
+    fields = json.loads(schema_string).get("fields", [])
+    out = [pa.field("numRecords", pa.int64())]
+    vals = values(fields)
+    if vals:
+        out += [pa.field("minValues", pa.struct(vals)), pa.field("maxValues", pa.struct(vals))]
+    nulls = counts(fields)
+    if nulls:
+        out.append(pa.field("nullCount", pa.struct(nulls)))
+    out.append(pa.field("tightBounds", pa.bool_()))
+    return pa.schema(out)
+
+
+class FileStats:
+    """Per-file stats of a file list, column-wise. Parsed once by pyarrow's
+    JSON reader with :func:`stats_schema`; files without stats read as all
+    null. Without a schema, or where the reader rejects the JSON (a value
+    that does not fit its column's type), each file's JSON is parsed on
+    its own, with the same results ``AddAction.get_stats`` gives."""
+
+    def __init__(self, parsed: pa.Table | list[Optional[dict]]):
+        self._parsed = parsed
+
+    @classmethod
+    def of(cls, adds: Sequence[AddAction]) -> "FileStats":
+        return cls([a.get_stats() for a in adds])
+
+    @classmethod
+    def parse(cls, strings: pa.ChunkedArray, schema: Optional[pa.Schema]) -> "FileStats":
+        if schema is not None:
+            if not len(strings):
+                return cls(schema.empty_table())
+            lines = pc.binary_join_element_wise(pc.fill_null(strings, "{}"), "", "\n")
+            lines = lines.combine_chunks()
+            offsets = np.frombuffer(lines.buffers()[1], dtype=np.int32)
+            offsets = offsets[lines.offset : lines.offset + len(lines) + 1]
+            data = lines.buffers()[2][offsets[0] : offsets[-1]]
+            options = pj.ParseOptions(explicit_schema=schema, unexpected_field_behavior="ignore")
+            try:
+                parsed = pj.read_json(
+                    pa.BufferReader(data),
+                    read_options=pj.ReadOptions(use_threads=False),  # see read_checkpoint_actions
+                    parse_options=options,
+                )
+                if parsed.num_rows == len(strings):
+                    return cls(parsed)
+            except pa.ArrowInvalid:
+                pass
+        return cls([_loads(s) for s in strings.to_pylist()])
+
+    def __len__(self) -> int:
+        parsed = self._parsed
+        return len(parsed) if isinstance(parsed, list) else parsed.num_rows
+
+    def take(self, positions: np.ndarray) -> "FileStats":
+        if isinstance(self._parsed, list):
+            return FileStats([self._parsed[i] for i in positions.tolist()])
+        return FileStats(self._parsed.take(positions))
+
+    def values(self, *path: str) -> list:
+        """One stat of every file, e.g. ``values("minValues", "id")``."""
+        if isinstance(self._parsed, list):
+            out = []
+            for d in self._parsed:
+                for k in path:
+                    d = d.get(k) if isinstance(d, dict) else None
+                out.append(d)
+            return out
+        table = self._parsed
+        if path[0] not in table.column_names:
+            return [None] * table.num_rows
+        col = table[path[0]]
+        for k in path[1:]:
+            if not pa.types.is_struct(col.type) or col.type.get_field_index(k) < 0:
+                return [None] * table.num_rows
+            col = pc.struct_field(col, k)
+        return col.to_pylist()
+
+    def struct(self, valid: pa.Array) -> pa.Array:
+        """The stats as one struct column (``stats_parsed``); null where
+        ``valid`` is false."""
+        if isinstance(self._parsed, list):
+            return pa.array(self._parsed)
+        table = self._parsed.combine_chunks()
+        if isinstance(valid, pa.ChunkedArray):
+            valid = valid.combine_chunks()
+        return pa.StructArray.from_arrays(
+            [c.combine_chunks() for c in table.columns],
+            fields=list(table.schema),
+            mask=pc.invert(valid),
+        )
+
+
+def _loads(text: Optional[str]) -> Optional[dict]:
+    if not text:
+        return None
+    try:
+        return json.loads(text)
+    except (ValueError, TypeError):
+        return None

@@ -18,6 +18,18 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Half of the machine's ``MemTotal``, in whole GiB, between 1g and 16g.
+    The driver JVM in local mode also runs the executors, and it shares the
+    machine with the Python driver; ``4g`` where MemTotal cannot be read."""
+    try:
+        with open(meminfo) as f:
+            kib = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "4g"
+    return f"{min(16, max(1, kib // (2 * 1024 * 1024)))}g"
+
+
 def get_spark(app_name: str = "delta_rs_spark", extra_conf: dict | None = None) -> SparkSession:
     cpus = default_parallelism()
     builder = (
@@ -48,7 +60,10 @@ def get_spark(app_name: str = "delta_rs_spark", extra_conf: dict | None = None) 
         # surface as long; sources/tables.py converts to µs timestamps
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.parquet.int96RebaseModeInRead", "CORRECTED")

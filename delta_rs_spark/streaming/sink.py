@@ -53,13 +53,19 @@ class ExactlyOnceDeltaSink:
     def _refresh_table(self):
         """Cached handle: full log replay on first use, incremental apply
         of new commits afterwards. Raises NotATableError until the table
-        exists (first batch creates it)."""
+        exists (first batch creates it). When the incremental apply fails
+        (the table was deleted or recreated underneath the handle), the
+        handle is dropped and the log replayed afresh, so a missing table
+        takes the NotATableError path again."""
         from ..table import DeltaTable
 
-        if self._table is None:
-            self._table = DeltaTable(self.table_uri)
-        else:
-            self._table.update()
+        if self._table is not None:
+            try:
+                self._table.update()
+                return self._table
+            except Exception:
+                self._table = None
+        self._table = DeltaTable(self.table_uri)
         return self._table
 
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
@@ -168,7 +174,6 @@ class UpsertDeltaSink:
         from ..dml import merge
         from ..protocol.actions import TxnAction
         from ..protocol.snapshot import NotATableError
-        from ..table import DeltaTable
         from ..writer import write_deltalake
 
         spark = (

@@ -220,7 +220,7 @@ class DeltaTable:
         ``to_df`` (or compacted with ``optimize`` first)."""
         import pyarrow.dataset as ds
 
-        if any(a.deletion_vector for a in self._snapshot.state.files.values()):
+        if self._snapshot.files().dv_count():
             raise ValueError(
                 "table has deletion vectors; use to_pyarrow_table()/to_df() "
                 "(position-aware) or run optimize() to materialize deletes"
@@ -400,14 +400,14 @@ class DeltaTable:
     # ---- metadata-only fast path (reference delta_datafusion.rs:117-209) ----
     def count_rows(self) -> Optional[int]:
         """count(*) from per-file stats; None → caller should scan."""
-        return table_num_records(self._snapshot.state.files.values())
+        return table_num_records(self._snapshot.files())
 
     def column_min_max(self, column: str) -> tuple[Any, Any] | None:
         if self._snapshot.mapping_mode() != "none":
             from .protocol import column_mapping as cm
 
             column = cm.top_level_physical(self.schema()).get(column, column)
-        return table_min_max(self._snapshot.state.files.values(), column)
+        return table_min_max(self._snapshot.files(), column)
 
     # ---- maintenance (implemented in sibling modules) -----------------------
     def vacuum(

@@ -1099,28 +1099,22 @@ def _parse_partition_path(part_dir: str) -> dict[str, Optional[str]]:
 def _collect_footer_stats(
     spark: SparkSession, paths: list[str], stats_columns: Optional[set[str]] = None
 ) -> dict[str, str]:
-    """path → Delta stats JSON, by reading parquet footers on executors.
+    """path → Delta stats JSON, from the parquet footers of locally staged
+    files, read on the driver by a thread pool (footer reads are small and
+    release the GIL in pyarrow; no Spark job is started for them).
 
     Row-group min/max/null_count aggregate to file-level stats. Binary and
     nested columns get null counts only (min/max on bytes is not meaningful
     in Delta's JSON stats); ``stats_columns`` (from
     ``delta.dataSkippingNumIndexedCols``) restricts which columns get stats
-    at all — numRecords is always kept. A handful of files is done inline
-    on the driver to skip job-launch overhead.
+    at all — numRecords is always kept.
     """
+    from concurrent.futures import ThreadPoolExecutor
+
     if not paths:
         return {}
-    if len(paths) <= 8:
-        out = {p: _footer_stats_json(p, stats_columns) for p in paths}
-    else:
-        sc = spark.sparkContext
-        n_slices = min(len(paths), int(sc.defaultParallelism) * 2)
-        pairs = (
-            sc.parallelize(paths, n_slices)
-            .map(lambda p: (p, _footer_stats_json(p, stats_columns)))
-            .collect()
-        )
-        out = dict(pairs)
+    with ThreadPoolExecutor(max_workers=min(8, len(paths))) as ex:
+        out = dict(zip(paths, ex.map(lambda p: _footer_stats_json(p, stats_columns), paths)))
     # files whose footer pyarrow cannot parse (e.g. the VARIANT logical
     # type) fall back to one distributed Spark aggregation for the same
     # stats shape — slower (reads data, not just footers) but correct

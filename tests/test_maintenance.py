@@ -737,6 +737,32 @@ def test_clustered_table_optimize_reclusters(spark, tmp_path):
         )
 
 
+def test_zstd_checkpoint_reads_back(spark, tmp_path):
+    """Checkpoints are zstd parquet; pyarrow, Spark and a reload read them."""
+    import pyarrow.parquet as pq
+
+    uri = str(tmp_path / "t")
+    df = spark.range(0, 40).selectExpr("id", "CAST(id % 4 AS STRING) AS p")
+    write_deltalake(spark, df.repartition(2), uri, partition_by=["p"])
+    write_deltalake(spark, df.limit(5), uri, mode="overwrite", partition_by=["p"])
+    t = DeltaTable(uri)
+    cp = t.create_checkpoint()
+    path = DeltaLog(uri).checkpoint_paths(cp)[0]
+
+    meta = pq.ParquetFile(path).metadata
+    rg = meta.row_group(0)
+    assert {rg.column(i).compression for i in range(rg.num_columns)} == {"ZSTD"}
+    table = pq.read_table(path)
+    assert table["add"].drop_null().to_pylist()
+    spark_rows = spark.read.parquet(path)
+    assert spark_rows.where("add IS NOT NULL").count() == len(t.files())
+    assert spark_rows.where("remove IS NOT NULL").count() == len(t.get_tombstones())
+    assert sorted(r["path"] for r in spark_rows.where("add IS NOT NULL").select("add.path").collect()) == sorted(t.files())
+    reloaded = DeltaTable(uri)
+    assert reloaded.files() == t.files()
+    assert reloaded.to_df(spark).count() == 5
+
+
 def test_checkpoint_stats_as_struct_roundtrip(spark, tmp_path, sf_dir):
     """writeStatsAsStruct writes stats_parsed; with writeStatsAsJson=false
     the JSON column is dropped and reloads reconstruct stats from the

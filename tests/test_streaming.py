@@ -65,6 +65,32 @@ def test_exactly_once_sink_skips_replayed_epochs(spark, tmp_path):
     assert ops.count("STREAMING UPDATE") == 2
 
 
+def test_sink_recovers_when_cached_handle_fails(spark, tmp_path, monkeypatch):
+    """A failed incremental refresh drops the sink's cached handle: the
+    next batch replays the log afresh, so a table deleted mid-stream takes
+    the not-a-table path and is recreated by the batch."""
+    import shutil
+
+    uri = str(tmp_path / "recreated")
+    sink = ExactlyOnceDeltaSink(uri, app_id="q-re")
+    sink(spark.range(0, 3), 0)
+    sink(spark.range(3, 4), 1)  # loads and caches the handle
+    stale = sink._table
+    assert stale is not None
+    shutil.rmtree(uri)
+
+    def vanished():
+        raise FileNotFoundError(uri)
+
+    monkeypatch.setattr(stale, "update", vanished)
+    sink(spark.range(3, 5), 2)
+    t = DeltaTable(uri)
+    assert sink._table is not stale
+    assert t.version == 0
+    assert t.get_app_transaction_version("q-re") == 2
+    assert sorted(r.id for r in t.to_df(spark).collect()) == [3, 4]
+
+
 def test_sink_distinct_app_ids_are_independent(spark, tmp_path):
     uri = str(tmp_path / "multi_app")
     a = ExactlyOnceDeltaSink(uri, app_id="app-a")

@@ -101,6 +101,37 @@ def test_stats_skipping_on_written_table(spark, tmp_path, lineitem):
     assert len(t.files(skip_predicates=[("l_orderkey", ">=", lo)])) == len(t.files())
 
 
+def test_footer_stats_read_on_driver(spark, tmp_path, monkeypatch):
+    """A 20-file write takes its stats from each file's parquet footer, read
+    on the driver: the stats equal the published files' footers, and no
+    Spark job runs while they are collected."""
+    from delta_rs_spark import writer
+
+    jobs_during_stats = []
+    real = writer._collect_footer_stats
+    tracker = spark.sparkContext.statusTracker()
+
+    def watched(*args, **kwargs):
+        before = set(tracker.getJobIdsForGroup())
+        out = real(*args, **kwargs)
+        jobs_during_stats.append(set(tracker.getJobIdsForGroup()) - before)
+        return out
+
+    monkeypatch.setattr(writer, "_collect_footer_stats", watched)
+    uri = str(tmp_path / "t")
+    df = spark.range(0, 2000).selectExpr("id", "id % 7 AS v", "CAST(id AS STRING) AS s")
+    write_deltalake(spark, df.repartition(20), uri)
+    t = DeltaTable(uri)
+    adds = t.add_actions()
+    assert len(adds) == 20
+    assert jobs_during_stats == [set()]
+    for a in adds:
+        assert json.loads(a.stats) == json.loads(
+            writer._footer_stats_json(os.path.join(uri, a.path))
+        )
+    assert t.count_rows() == 2000
+
+
 def test_timestamp_round_trip(spark, tmp_path, sf_dir):
     orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
     uri = str(tmp_path / "t")
