@@ -136,18 +136,10 @@ def _as_files(files):
 
 
 def prune_files(files, predicates: Sequence[SkipTuple] | None):
-    """The files whose stats may satisfy every predicate. ``files`` is a
-    columnar :class:`~.state.Files` selection (what the snapshot passes; the
-    result is one too) or AddActions (the result is a list)."""
-    from .state import Files
-
-    if isinstance(files, Files):
-        return files.where(prune_mask(files.stats(), predicates)) if predicates else files
-    files = list(files)
-    if not predicates:
-        return files
-    keep = prune_mask(FileStats.of(files), predicates)
-    return [a for a, k in zip(files, keep) if k]
+    """The files whose stats may satisfy every predicate, as a columnar
+    :class:`~.state.Files` selection (a list of AddActions is wrapped)."""
+    files = _as_files(files)
+    return files.where(prune_mask(files.stats(), predicates)) if predicates else files
 
 
 # ---- metadata-only aggregates (reference delta_datafusion.rs:117-209) -----
@@ -193,7 +185,9 @@ def table_min_max(files, column: str) -> tuple[Any, Any] | None:
 
 # Delta type → Arrow type of its min/max in the stats JSON; dates and
 # timestamps stay the ISO strings the JSON holds (the JSON reader would
-# otherwise infer timestamps from them)
+# otherwise infer timestamps from them). Decimals are left out: their stats
+# are JSON numbers (or strings) that a float64 would round above 2**53, so
+# they are read per file from the JSON, exactly as ``json.loads`` gives them
 _VALUE_TYPES = {
     "byte": pa.int64(),
     "short": pa.int64(),
@@ -229,7 +223,7 @@ def stats_schema(schema_string: str, physical: bool) -> pa.Schema:
                 if sub:
                     out.append(pa.field(key(f), pa.struct(sub)))
                 continue
-            typ = pa.float64() if t.startswith("decimal") else _VALUE_TYPES.get(t)
+            typ = _VALUE_TYPES.get(t)
             if typ is not None:
                 out.append(pa.field(key(f), typ))
         return out
@@ -261,12 +255,20 @@ def stats_schema(schema_string: str, physical: bool) -> pa.Schema:
 class FileStats:
     """Per-file stats of a file list, column-wise. Parsed once by pyarrow's
     JSON reader with :func:`stats_schema`; files without stats read as all
-    null. Without a schema, or where the reader rejects the JSON (a value
-    that does not fit its column's type), each file's JSON is parsed on
-    its own, with the same results ``AddAction.get_stats`` gives."""
+    null. A stat the schema leaves out (a decimal column) is read from each
+    file's JSON on first use. Without a schema, or where the reader rejects
+    the JSON (a value that does not fit its column's type), each file's JSON
+    is parsed on its own, with the same results ``AddAction.get_stats``
+    gives."""
 
-    def __init__(self, parsed: pa.Table | list[Optional[dict]]):
+    def __init__(
+        self,
+        parsed: pa.Table | list[Optional[dict]],
+        strings: Optional[pa.ChunkedArray] = None,
+    ):
         self._parsed = parsed
+        self._strings = strings  # the JSON, for stats the parsed table lacks
+        self._dicts: Optional[list[Optional[dict]]] = None
 
     @classmethod
     def of(cls, adds: Sequence[AddAction]) -> "FileStats":
@@ -276,7 +278,7 @@ class FileStats:
     def parse(cls, strings: pa.ChunkedArray, schema: Optional[pa.Schema]) -> "FileStats":
         if schema is not None:
             if not len(strings):
-                return cls(schema.empty_table())
+                return cls(schema.empty_table(), strings)
             lines = pc.binary_join_element_wise(pc.fill_null(strings, "{}"), "", "\n")
             lines = lines.combine_chunks()
             offsets = np.frombuffer(lines.buffers()[1], dtype=np.int32)
@@ -290,7 +292,7 @@ class FileStats:
                     parse_options=options,
                 )
                 if parsed.num_rows == len(strings):
-                    return cls(parsed)
+                    return cls(parsed, strings)
             except pa.ArrowInvalid:
                 pass
         return cls([_loads(s) for s in strings.to_pylist()])
@@ -302,26 +304,34 @@ class FileStats:
     def take(self, positions: np.ndarray) -> "FileStats":
         if isinstance(self._parsed, list):
             return FileStats([self._parsed[i] for i in positions.tolist()])
-        return FileStats(self._parsed.take(positions))
+        return FileStats(self._parsed.take(positions), self._strings.take(positions))
 
     def values(self, *path: str) -> list:
         """One stat of every file, e.g. ``values("minValues", "id")``."""
-        if isinstance(self._parsed, list):
-            out = []
-            for d in self._parsed:
-                for k in path:
-                    d = d.get(k) if isinstance(d, dict) else None
-                out.append(d)
-            return out
+        if isinstance(self._parsed, pa.Table):
+            col = self._column(path)
+            if col is not None:
+                return col.to_pylist()
+            if self._dicts is None:
+                self._dicts = [_loads(s) for s in self._strings.to_pylist()]
+        out = []
+        for d in self._dicts if self._dicts is not None else self._parsed:
+            for k in path:
+                d = d.get(k) if isinstance(d, dict) else None
+            out.append(d)
+        return out
+
+    def _column(self, path: tuple[str, ...]) -> Optional[pa.ChunkedArray]:
+        """The parsed column at ``path``; None when the schema lacks it."""
         table = self._parsed
         if path[0] not in table.column_names:
-            return [None] * table.num_rows
+            return None
         col = table[path[0]]
         for k in path[1:]:
             if not pa.types.is_struct(col.type) or col.type.get_field_index(k) < 0:
-                return [None] * table.num_rows
+                return None
             col = pc.struct_field(col, k)
-        return col.to_pylist()
+        return col
 
     def struct(self, valid: pa.Array) -> pa.Array:
         """The stats as one struct column (``stats_parsed``); null where

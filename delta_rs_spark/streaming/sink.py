@@ -20,6 +20,17 @@ from typing import Optional
 from pyspark.sql import DataFrame
 
 
+def _commit_identity(table) -> Optional[tuple[int, float]]:
+    """Size and mtime of the commit file ``table`` is loaded at; None when
+    that file is gone."""
+    log = table.log
+    try:
+        head = log.backend.head_obj(log.commit_path(table.version))
+    except FileNotFoundError:
+        return None
+    return head.size, head.modification_time
+
+
 class ExactlyOnceDeltaSink:
     def __init__(
         self,
@@ -47,26 +58,33 @@ class ExactlyOnceDeltaSink:
         # loaded snapshot), so per-batch log I/O is ∝ new commits, not
         # checkpoint + tail. A restart builds a fresh sink → fresh replay.
         self._table = None
+        self._table_head = None  # _commit_identity of the cached handle
 
     _SKIP_LOG_CAP = 64
 
     def _refresh_table(self):
         """Cached handle: full log replay on first use, incremental apply
         of new commits afterwards. Raises NotATableError until the table
-        exists (first batch creates it). When the incremental apply fails
-        (the table was deleted or recreated underneath the handle), the
-        handle is dropped and the log replayed afresh, so a missing table
-        takes the NotATableError path again."""
+        exists (first batch creates it). The handle is trusted only while
+        the commit file it was loaded at is still the same file: a table
+        deleted (or deleted and recreated) underneath it, or an incremental
+        apply that fails, drops the handle and replays the log afresh, so a
+        missing table takes the NotATableError path again."""
         from ..table import DeltaTable
 
-        if self._table is not None:
+        table, self._table = self._table, None
+        head = self._table_head
+        if table is not None and head is not None and _commit_identity(table) == head:
             try:
-                self._table.update()
-                return self._table
+                table.update()
             except Exception:
-                self._table = None
-        self._table = DeltaTable(self.table_uri)
-        return self._table
+                table = None
+        else:
+            table = None
+        if table is None:
+            table = DeltaTable(self.table_uri)
+        self._table, self._table_head = table, _commit_identity(table)
+        return table
 
     def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
         from ..protocol.actions import TxnAction
@@ -147,6 +165,7 @@ class UpsertDeltaSink:
         self.skipped_epoch_count: int = 0
         # cached handle, same per-batch log-I/O rationale as the append sink
         self._table = None
+        self._table_head = None
 
     _SKIP_LOG_CAP = 64
 

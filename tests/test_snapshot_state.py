@@ -12,6 +12,8 @@ import json
 import tempfile
 import uuid
 
+import pyarrow as pa
+import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
@@ -24,6 +26,7 @@ from delta_rs_spark.protocol.actions import (
     TxnAction,
 )
 from delta_rs_spark.protocol.log import DeltaLog
+from delta_rs_spark.protocol.stats import file_may_match
 from delta_rs_spark.table import DeltaTable
 
 _SCHEMA = json.dumps(
@@ -207,3 +210,44 @@ def test_cold_open_builds_no_add_actions(tmp_path, monkeypatch):
     t = DeltaTable(uri)
     assert (t.version, len(t.files()), t.count_rows()) == (9, 9000, 90000)
     assert len(built) == 0
+
+
+@pytest.mark.parametrize("as_string", [False, True])
+def test_decimal_stats_stay_exact(tmp_path, as_string):
+    """decimal(38,0) stats above 2**53, as JSON numbers (what Spark writes)
+    or strings (what this writer writes), prune and fold exactly like each
+    file's own parsed JSON, and the rest of the stats still parse as
+    columns."""
+    schema = json.dumps(
+        {
+            "type": "struct",
+            "fields": [
+                {"name": n, "type": t, "nullable": True, "metadata": {}}
+                for n, t in (("d", "decimal(38,0)"), ("id", "long"))
+            ],
+        }
+    )
+    big = 2**53 + 1
+
+    def add(path: str, d: int) -> AddAction:
+        value = str(d) if as_string else d
+        stats = {"numRecords": 1, "minValues": {"d": value, "id": 0},
+                 "maxValues": {"d": value, "id": 9}, "nullCount": {"d": 0, "id": 0}}
+        return AddAction(path=path, size=1, stats=json.dumps(stats))
+
+    uri = str(tmp_path / "dec")
+    log = DeltaLog(uri)
+    meta = MetaDataAction(id="t", schema_string=schema, partition_columns=[], configuration={})
+    adds = [add("hit.parquet", big), add("below.parquet", big - 2), add("above.parquet", big + 2)]
+    log.try_commit(log.write_tmp_commit([ProtocolAction(1, 2), meta, *adds], "v0"), 0)
+    for _ in range(2):
+        t = DeltaTable(uri)
+        for op, lit in (("=", big), ("<", big), (">", big), ("<=", big - 1)):
+            kept = t.files(skip_predicates=[("d", op, lit)])
+            assert kept == [a.path for a in adds if file_may_match(a, [("d", op, lit)])]
+        assert t.files(skip_predicates=[("d", "=", big)]) == ["hit.parquet"]
+        assert t.files(skip_predicates=[("id", ">", 9)]) == []
+        lo, hi = t.column_min_max("d")
+        assert (int(lo), int(hi)) == (big - 2, big + 2)
+        assert isinstance(t.snapshot.state.live_files().stats()._parsed, pa.Table)
+        t.create_checkpoint()  # the second pass opens from it

@@ -65,30 +65,39 @@ def test_exactly_once_sink_skips_replayed_epochs(spark, tmp_path):
     assert ops.count("STREAMING UPDATE") == 2
 
 
-def test_sink_recovers_when_cached_handle_fails(spark, tmp_path, monkeypatch):
-    """A failed incremental refresh drops the sink's cached handle: the
-    next batch replays the log afresh, so a table deleted mid-stream takes
-    the not-a-table path and is recreated by the batch."""
+def test_sink_recovers_when_table_is_recreated(spark, tmp_path):
+    """A table deleted and recreated under the sink's cached handle is
+    loaded afresh: the new table's commits are not folded onto the old
+    table's state, so the old watermark does not skip the new table's
+    batches."""
     import shutil
 
     uri = str(tmp_path / "recreated")
     sink = ExactlyOnceDeltaSink(uri, app_id="q-re")
-    sink(spark.range(0, 3), 0)
-    sink(spark.range(3, 4), 1)  # loads and caches the handle
+    for epoch in range(3):
+        sink(spark.range(epoch, epoch + 1), epoch)
     stale = sink._table
-    assert stale is not None
+    assert (stale.version, stale.get_app_transaction_version("q-re")) == (1, 1)
+
     shutil.rmtree(uri)
-
-    def vanished():
-        raise FileNotFoundError(uri)
-
-    monkeypatch.setattr(stale, "update", vanished)
-    sink(spark.range(3, 5), 2)
-    t = DeltaTable(uri)
+    for start in range(100, 112, 3):  # a new table, versions 0..3
+        write_deltalake(spark, spark.range(start, start + 3), uri, mode="append")
+    sink(spark.range(7, 9), 1)  # epoch 1 never reached the new table
+    assert sink.skipped_epochs == []
     assert sink._table is not stale
+    t = DeltaTable(uri)
+    assert t.version == 4
+    assert t.get_app_transaction_version("q-re") == 1
+    assert sorted(r.id for r in t.to_df(spark).collect()) == [7, 8, *range(100, 112)]
+    sink(spark.range(7, 9), 1)  # the replay is skipped against the new table
+    assert sink.skipped_epochs == [1]
+
+    shutil.rmtree(uri)  # deleted outright: the batch creates the table
+    sink(spark.range(20, 22), 2)
+    t = DeltaTable(uri)
     assert t.version == 0
     assert t.get_app_transaction_version("q-re") == 2
-    assert sorted(r.id for r in t.to_df(spark).collect()) == [3, 4]
+    assert sorted(r.id for r in t.to_df(spark).collect()) == [20, 21]
 
 
 def test_sink_distinct_app_ids_are_independent(spark, tmp_path):
