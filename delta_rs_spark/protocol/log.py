@@ -9,8 +9,11 @@ commits ``_delta_log/{version:020d}.json``, checkpoints
 
 from __future__ import annotations
 
+import bisect
+import datetime as _dt
 import json
 import re
+from collections.abc import Sequence
 from dataclasses import dataclass
 from typing import Optional
 
@@ -34,6 +37,18 @@ _COMPACTION_RE = re.compile(r"^(\d{20})\.(\d{20})\.compacted\.json$")
 # pattern (whose {part}.{parts} segment would also satisfy uniqueStr)
 _CHECKPOINT_V2_RE = re.compile(r"^(\d{20})\.checkpoint\.([A-Za-z0-9_-]+)\.parquet$")
 SIDECAR_DIR = "_sidecars"
+# public Delta ICT enablement bookkeeping, recorded in the table metadata by
+# the commit that turns in-commit timestamps on for an existing table
+ICT_ENABLEMENT_VERSION_KEY = "delta.inCommitTimestampEnablementVersion"
+ICT_ENABLEMENT_TS_KEY = "delta.inCommitTimestampEnablementTimestamp"
+
+
+class DeltaTableError(Exception):
+    pass
+
+
+class NotATableError(DeltaTableError):
+    pass
 
 
 @dataclass
@@ -63,6 +78,45 @@ class CheckPoint:
             parts=d.get("parts"),
             uuid=d.get("uuid"),
         )
+
+
+@dataclass
+class LogListing(Sequence):
+    """What one ``list_objs`` of ``_delta_log`` saw. As a sequence it is the
+    sorted commit versions; it also carries each commit file's mtime (ms),
+    the complete checkpoints (newest first) and the log-compaction ranges,
+    so that a time travel resolves and loads its version from one listing.
+    """
+
+    versions: list[int]
+    mtimes_ms: list[int]
+    checkpoints: list[CheckPoint]
+    compactions: list[tuple[int, int]]
+
+    def __getitem__(self, i):
+        return self.versions[i]
+
+    def __len__(self) -> int:
+        return len(self.versions)
+
+    def checkpoints_for(self, version: Optional[int]) -> list[CheckPoint]:
+        """Complete checkpoints at or below ``version`` (all when None),
+        newest first."""
+        return [cp for cp in self.checkpoints if version is None or cp.version <= version]
+
+
+_EPOCH = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
+
+
+def _timestamp_ms(ts: "str | _dt.datetime") -> int:
+    """Epoch milliseconds of an ISO-8601 string (``Z`` accepted) or a
+    datetime; a value without a zone is read as UTC. Integer arithmetic:
+    a time exactly at a commit's millisecond never rounds below it."""
+    if isinstance(ts, str):
+        ts = _dt.datetime.fromisoformat(ts.replace("Z", "+00:00"))
+    if ts.tzinfo is None:
+        ts = ts.replace(tzinfo=_dt.timezone.utc)
+    return (ts - _EPOCH) // _dt.timedelta(milliseconds=1)
 
 
 class DeltaLog:
@@ -119,81 +173,85 @@ class DeltaLog:
             self.latest_version() is not None or self.read_last_checkpoint() is not None
         )
 
-    def list_commit_versions(self) -> list[int]:
-        versions = []
+    def list_commit_versions(self) -> LogListing:
+        """One listing of ``_delta_log``: commit versions with their mtimes,
+        complete checkpoints and compaction ranges (see :class:`LogListing`).
+
+        A checkpoint qualifies as in the reference's regex scan
+        (``rust/src/delta.rs:445-502``), with one strengthening: a
+        multi-part checkpoint only qualifies when every one of its parts is
+        present — a writer that crashed after uploading part 1 of 3 must not
+        poison snapshot loads.
+        """
+        commits: list[tuple[int, int]] = []
+        singles: set[int] = set()
+        multi: dict[tuple[int, int], set[int]] = {}
+        v2: dict[int, str] = {}
+        compactions: list[tuple[int, int]] = []
         for meta in self.backend.list_objs(self.log_dir):
             name = meta.path.rsplit("/", 1)[-1]
-            m = _COMMIT_RE.match(name)
-            if m:
-                versions.append(int(m.group(1)))
-        return sorted(versions)
+            # dispatch on the suffix: most entries (.crc checksums, temp
+            # files) match no pattern and cost no regex
+            if name.endswith(".json"):
+                if m := _COMMIT_RE.match(name):
+                    commits.append((int(m.group(1)), int(meta.modification_time * 1000)))
+                elif m := _COMPACTION_RE.match(name):
+                    compactions.append((int(m.group(1)), int(m.group(2))))
+            elif name.endswith(".parquet"):
+                if m := _CHECKPOINT_RE.match(name):
+                    singles.add(int(m.group(1)))
+                elif m := _CHECKPOINT_PARTS_RE.match(name):
+                    v, part, parts = int(m.group(1)), int(m.group(2)), int(m.group(3))
+                    multi.setdefault((v, parts), set()).add(part)
+                elif m := _CHECKPOINT_V2_RE.match(name):
+                    v2[int(m.group(1))] = m.group(2)
+
+        # newest first; at one version classic, then multi-part, then V2
+        ranked = sorted(
+            [(v, 0, CheckPoint(version=v)) for v in singles]
+            + [
+                (v, 1, CheckPoint(version=v, parts=n))
+                for (v, n), got in multi.items()
+                if len(got) == n
+            ]
+            + [(v, 2, CheckPoint(version=v, uuid=u)) for v, u in v2.items()],
+            key=lambda r: (-r[0], r[1]),
+        )
+        commits.sort()
+        return LogListing(
+            versions=[v for v, _ in commits],
+            mtimes_ms=[t for _, t in commits],
+            checkpoints=[cp for _v, _rank, cp in ranked],
+            compactions=sorted(compactions),
+        )
 
     def latest_version(self) -> Optional[int]:
         versions = self.list_commit_versions()
         return versions[-1] if versions else None
 
     def read_last_checkpoint(self) -> Optional[CheckPoint]:
+        """The ``_last_checkpoint`` hint, or None when it is absent or
+        unreadable (a torn write): the hint never overrides the log."""
         try:
             return CheckPoint.from_json(
                 self.backend.get_obj(self.last_checkpoint_path()).decode("utf-8")
             )
-        except FileNotFoundError:
+        # ValueError covers a torn JSON body and bad UTF-8; Key/TypeError a
+        # body that parses but is not a checkpoint pointer
+        except (FileNotFoundError, ValueError, KeyError, TypeError):
             return None
 
     def find_latest_checkpoint_for_version(self, version: int) -> Optional[CheckPoint]:
-        """Newest COMPLETE checkpoint ≤ version, by log-dir scan (single,
-        multi-part and v2).
-
-        Mirrors the reference's regex scan (``rust/src/delta.rs:445-502``),
-        with one strengthening: a multi-part checkpoint only qualifies when
-        every one of its parts is present — a writer that crashed after
-        uploading part 1 of 3 must not poison snapshot loads; replay falls
-        back to the next-newest complete checkpoint (or plain commits).
-        """
-        singles: set[int] = set()
-        multi: dict[tuple[int, int], set[int]] = {}
-        v2: dict[int, str] = {}
-        for meta in self.backend.list_objs(self.log_dir):
-            name = meta.path.rsplit("/", 1)[-1]
-            m = _CHECKPOINT_RE.match(name)
-            if m:
-                singles.add(int(m.group(1)))
-                continue
-            m = _CHECKPOINT_PARTS_RE.match(name)
-            if m:
-                v, part, parts = int(m.group(1)), int(m.group(2)), int(m.group(3))
-                multi.setdefault((v, parts), set()).add(part)
-                continue
-            m = _CHECKPOINT_V2_RE.match(name)
-            if m:
-                v2[int(m.group(1))] = m.group(2)
-
-        best: Optional[CheckPoint] = None
-        for v in singles:
-            if v <= version and (best is None or v > best.version):
-                best = CheckPoint(version=v)
-        for (v, parts), seen in multi.items():
-            if v <= version and len(seen) == parts and (
-                best is None or v > best.version
-            ):
-                best = CheckPoint(version=v, parts=parts)
-        for v, uid in v2.items():
-            if v <= version and (best is None or v > best.version):
-                best = CheckPoint(version=v, uuid=uid)
-        return best
+        """Newest complete checkpoint ≤ version, by log-dir scan (single,
+        multi-part and v2)."""
+        return next(iter(self.list_commit_versions().checkpoints_for(version)), None)
 
     def sidecar_path(self, name: str) -> str:
         return self.backend.join(self.log_dir, SIDECAR_DIR, name)
 
     def list_compactions(self) -> list[tuple[int, int]]:
         """(start, end) ranges of every log-compaction file, sorted."""
-        out: list[tuple[int, int]] = []
-        for meta in self.backend.list_objs(self.log_dir):
-            name = meta.path.rsplit("/", 1)[-1]
-            m = _COMPACTION_RE.match(name)
-            if m:
-                out.append((int(m.group(1)), int(m.group(2))))
-        return sorted(out)
+        return self.list_commit_versions().compactions
 
     def try_read_compaction(self, start: int, end: int) -> Optional[list[Action]]:
         try:
@@ -225,8 +283,15 @@ class DeltaLog:
         cached = self._ts_cache.get(version)
         if cached is not None:
             return cached
+        ts = self._in_commit_timestamp(version)
+        if ts is None:
+            ts = int(self.backend.head_obj(self.commit_path(version)).modification_time * 1000)
+        self._ts_cache[version] = ts
+        return ts
+
+    def _in_commit_timestamp(self, version: int) -> Optional[int]:
+        """``commitInfo.inCommitTimestamp`` of a commit, or None."""
         path = self.commit_path(version)
-        ict: Optional[int] = None
         try:
             # bounded head read: commitInfo is the first log line by writer
             # contract, so 64 KB covers it however many actions follow (a
@@ -236,18 +301,79 @@ class DeltaLog:
             if not sep and len(raw) == 65536:
                 # pathological first line longer than the head window
                 first = self.backend.get_obj(path).split(b"\n", 1)[0]
-            obj = json.loads(first)
-            info = obj.get("commitInfo")
+            info = json.loads(first).get("commitInfo")
             if info is not None and info.get("inCommitTimestamp") is not None:
-                ict = int(info["inCommitTimestamp"])
+                return int(info["inCommitTimestamp"])
         except FileNotFoundError:
             raise
         except Exception:  # malformed first line → mtime fallback
-            ict = None
-        if ict is None:
-            ict = int(self.backend.head_obj(path).modification_time * 1000)
-        self._ts_cache[version] = ict
-        return ict
+            pass
+        return None
+
+    def version_at_timestamp(
+        self,
+        ts: "str | _dt.datetime",
+        at_or_after: bool = False,
+        listing: Optional[LogListing] = None,
+    ) -> int:
+        """The last version committed at or before ``ts``; with
+        ``at_or_after``, the first committed at or after it (the streaming
+        ``startingTimestamp`` contract: the earliest version when ``ts``
+        predates the table, latest + 1 when it is past the last commit).
+
+        Binary search over commit times, like the reference's
+        ``load_with_datetime`` (``rust/src/delta.rs:1041-1075``). The times
+        are the commit files' mtimes from one listing (``listing``, else
+        this call lists), so the search makes no request per commit.
+        When the latest commit carries an in-commit timestamp, ICT is on:
+        the search reads each probed commit's head (:meth:`commit_timestamp_ms`)
+        and stays inside one clock domain, split at the enablement version
+        and timestamp recorded in the latest metadata. A table whose latest
+        commit has no ICT uses mtimes throughout, as the protocol's reader
+        rule says, even where older commits carry one.
+        """
+        target = _timestamp_ms(ts)
+        if listing is None:
+            listing = self.list_commit_versions()
+        if not listing:
+            raise NotATableError(f"{self.table_root} has no commits")
+        versions = listing.versions
+        if self._in_commit_timestamp(versions[-1]) is None:
+            domain, time_of = versions, dict(zip(versions, listing.mtimes_ms)).__getitem__
+        else:
+            domain, time_of = self._ict_domain(target, listing), self.commit_timestamp_ms
+        if at_or_after:
+            i = bisect.bisect_left(domain, target, key=time_of)
+            if i < len(domain):
+                return domain[i]
+            # nothing at or after in the searched clock domain: when that
+            # domain was the pre-enablement (mtime) range, the answer is the
+            # first commit on the writer clock
+            later = [v for v in versions if v > domain[-1]]
+            return later[0] if later else versions[-1] + 1
+        i = bisect.bisect_right(domain, target, key=time_of)
+        if i == 0:
+            raise DeltaTableError(f"no version of {self.table_root} existed at {ts}")
+        return domain[i - 1]
+
+    def _ict_domain(self, target_ms: int, listing: LogListing) -> list[int]:
+        """The versions on ``target_ms``'s clock. A table that enabled ICT
+        mid-life has file-mtime clocks below the enablement version and
+        writer clocks at and above it; each sequence is monotonic but their
+        concatenation need not be, so a search must not straddle the
+        boundary (public ICT enablement contract; the bookkeeping is
+        written by ``transactions.py`` into the metadata)."""
+        from .snapshot import Snapshot  # the latest metadata records the enablement
+
+        versions = listing.versions
+        meta = Snapshot.load(self, listing=listing).state.metadata
+        cfg = (meta.configuration if meta is not None else None) or {}
+        ev, et = cfg.get(ICT_ENABLEMENT_VERSION_KEY), cfg.get(ICT_ENABLEMENT_TS_KEY)
+        if ev is None or et is None:
+            return versions
+        if target_ms >= int(et):
+            return [v for v in versions if v >= int(ev)] or versions
+        return [v for v in versions if v < int(ev)] or versions
 
     def write_tmp_commit(self, actions: list[Action], token: str) -> str:
         """Phase 1 of two-phase commit: NDJSON to ``_commit_<token>.json.tmp``."""
@@ -282,4 +408,12 @@ class DeltaLog:
         self.backend.put_obj(self.last_checkpoint_path(), cp.to_json().encode("utf-8"))
 
 
-__all__ = ["DeltaLog", "CheckPoint", "FileAlreadyExistsError", "DELTA_LOG_DIR"]
+__all__ = [
+    "DeltaLog",
+    "CheckPoint",
+    "LogListing",
+    "DeltaTableError",
+    "NotATableError",
+    "FileAlreadyExistsError",
+    "DELTA_LOG_DIR",
+]

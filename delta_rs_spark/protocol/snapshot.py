@@ -1,8 +1,10 @@
 """Table snapshot: log replay → active file list → Spark DataFrame.
 
 Load strategy mirrors the reference (``rust/src/delta.rs:589-709``): start
-from the newest checkpoint ≤ target version (``_last_checkpoint`` hint, else
-log-dir scan), fold the JSON commit tail. All of this is driver-side and
+from the newest complete checkpoint ≤ target version, fold the JSON commit
+tail. One listing of ``_delta_log`` chooses the checkpoint and the
+log-compaction files; the ``_last_checkpoint`` hint is not needed for that,
+so a torn or stale hint cannot override the log. All of this is driver-side and
 small; the resulting file list feeds one Spark parquet scan — the scan itself
 (vectorized reader, pushdown, codegen) is entirely Catalyst's.
 
@@ -31,7 +33,7 @@ from .actions import (
     TxnAction,
 )
 from . import column_mapping as cm
-from .log import CheckPoint, DeltaLog
+from .log import CheckPoint, DeltaLog, DeltaTableError, LogListing, NotATableError
 from .partitions import FilterTuple, compile_filters
 from .schema import partition_value_to_typed, schema_string_to_spark
 from .state import (
@@ -43,14 +45,6 @@ from .state import (
     file_action_table,
 )
 from .stats import SkipTuple, prune_files
-
-
-class DeltaTableError(Exception):
-    pass
-
-
-class NotATableError(DeltaTableError):
-    pass
 
 
 class UnsupportedFeatureError(DeltaTableError):
@@ -87,37 +81,35 @@ class Snapshot:
 
     # ---- construction --------------------------------------------------
     @classmethod
-    def load(cls, log: DeltaLog, version: Optional[int] = None) -> "Snapshot":
+    def load(
+        cls, log: DeltaLog, version: Optional[int] = None, listing: Optional[LogListing] = None
+    ) -> "Snapshot":
+        """The table at ``version`` (latest when None). ``listing`` is a
+        listing of ``_delta_log`` the caller already made (a timestamp
+        resolution), else this call lists once."""
+        if listing is None:
+            listing = log.list_commit_versions()
         state = TableState()
-        start_version = 0
+        loaded = -1
+        for cp in listing.checkpoints_for(version):
+            try:
+                actions = read_checkpoint_actions(log, cp)
+            except FileNotFoundError:
+                # removed since the listing, or a V2 sidecar is missing: an
+                # older checkpoint or the commits decide
+                continue
+            state.apply_all(actions)
+            loaded = cp.version
+            break
 
-        cp: Optional[CheckPoint] = None
-        last_cp = log.read_last_checkpoint()
-        if version is None:
-            cp = last_cp
-        else:
-            if last_cp is not None and last_cp.version <= version:
-                cp = last_cp
-            else:
-                cp = log.find_latest_checkpoint_for_version(version)
-        if cp is not None:
-            state.apply_all(read_checkpoint_actions(log, cp))
-            start_version = cp.version + 1
-
-        v = start_version
-        loaded = cp.version if cp is not None else -1
+        v = loaded + 1
         # log-compaction files covering [s, e] fold in place of the commits
-        # they reconcile — on object stores that's 1 GET instead of e-s+1.
-        # Listed lazily (first tail iteration) so compaction-free tables pay
-        # nothing extra beyond the list call they already make elsewhere.
-        comps: Optional[dict[int, int]] = None
+        # they reconcile — on object stores that's 1 GET instead of e-s+1
+        comps: dict[int, int] = {}
+        for s, e in listing.compactions:
+            if version is None or e <= version:  # one that overshoots is unusable
+                comps[s] = max(comps.get(s, -1), e)
         while version is None or v <= version:
-            if comps is None:
-                comps = {}
-                for s, e in log.list_compactions():
-                    if version is not None and e > version:
-                        continue  # overshoots the target: unusable here
-                    comps[s] = max(comps.get(s, -1), e)
             end = comps.get(v)
             if end is not None and end > v:
                 actions = log.try_read_compaction(v, end)
@@ -157,17 +149,15 @@ class Snapshot:
         while the table object moves forward. The copy shares the
         checkpoint's Arrow base and copies only the commit-tail overlay."""
         v = self.version + 1
-        if self.log.try_read_commit(v) is None:
+        actions = self.log.try_read_commit(v)
+        if actions is None:
             return self  # nothing new — skip the state copy entirely
         state = self.state.copy()
-        loaded = self.version
-        while True:
-            actions = self.log.try_read_commit(v)
-            if actions is None:
-                break
+        while actions is not None:
             state.apply_all(actions)
-            loaded = v
             v += 1
+            actions = self.log.try_read_commit(v)
+        loaded = v - 1
         # same reader gate as a cold load: a concurrent protocol upgrade to
         # an unimplemented reader feature must stop this reader, not let it
         # silently ignore the feature's semantics

@@ -93,12 +93,15 @@ class DeltaStreamReader(DataSourceStreamReader):
             self.starting_version = int(sv)
         ts = options.get("startingtimestamp")
         if ts is not None:
-            # resolved once at stream start: the Delta-source contract is
-            # at-or-after — a commit stamped exactly ts is included, and a
-            # ts before table creation starts from the earliest version
-            from ..table import DeltaTable as _DT
+            # resolved once at stream start from one log listing (no
+            # snapshot is loaded): the Delta-source contract is at-or-after —
+            # a commit stamped exactly ts is included, and a ts before table
+            # creation starts from the earliest version
+            from ..protocol.log import DeltaLog
 
-            self.starting_version = _DT(options["path"]).first_version_at_or_after(ts)
+            self.starting_version = DeltaLog(options["path"]).version_at_timestamp(
+                ts, at_or_after=True
+            )
         self.ignore_changes = str(options.get("ignorechanges", "false")).lower() == "true"
         # public Delta source options for tables with deletes/updates:
         # ignoreDeletes tolerates DELETE-ONLY commits (skipped entirely);

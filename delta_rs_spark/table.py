@@ -18,7 +18,7 @@ from pyspark.sql import types as T
 from .protocol.actions import AddAction, MetaDataAction
 from .protocol.log import DeltaLog
 from .protocol.partitions import FilterTuple
-from .protocol.snapshot import DeltaTableError, NotATableError, Snapshot
+from .protocol.snapshot import NotATableError, Snapshot
 from .protocol.stats import SkipTuple, table_min_max, table_num_records
 
 
@@ -26,11 +26,14 @@ class DeltaTable:
     """A versioned Delta table over local/object storage."""
 
     def __init__(self, table_uri: str, version: Optional[int] = None):
+        self._attach(table_uri)
+        self._snapshot = Snapshot.load(self.log, version)
+
+    def _attach(self, table_uri: str) -> None:
         self.table_uri = table_uri
         self.log = DeltaLog(table_uri)
         if not self.log.backend.exists(self.log.log_dir):
             raise NotATableError(f"{table_uri} is not a Delta table (no _delta_log)")
-        self._snapshot = Snapshot.load(self.log, version)
 
     # ---- constructors (reference delta.rs:1453-1484) ---------------------
     @classmethod
@@ -43,7 +46,10 @@ class DeltaTable:
 
     @classmethod
     def for_timestamp(cls, table_uri: str, ts: str | _dt.datetime) -> "DeltaTable":
-        t = cls(table_uri)
+        """The table at the last version committed at or before ``ts``; only
+        that version is loaded (see :meth:`load_with_datetime`)."""
+        t = cls.__new__(cls)
+        t._attach(table_uri)
         t.load_with_datetime(ts)
         return t
 
@@ -59,92 +65,24 @@ class DeltaTable:
     def load_version(self, version: int) -> None:
         self._snapshot = Snapshot.load(self.log, version)
 
-    def _ict_enablement_bounds(self, versions, target_ms):
-        """Restrict a timestamp binary search to ONE clock domain.
-
-        A table that enabled in-commit timestamps mid-life has file-mtime
-        clocks below the enablement version and writer clocks at/above it —
-        the two sequences are individually monotonic but their concatenation
-        need not be, so the search must not straddle the boundary (public
-        ICT enablement contract; bookkeeping written by transactions.py)."""
-        from .transactions import ICT_ENABLEMENT_TS_KEY, ICT_ENABLEMENT_VERSION_KEY
-
-        try:
-            cfg = self.metadata().configuration or {}
-        except Exception:
-            return versions
-        ev_raw, et_raw = cfg.get(ICT_ENABLEMENT_VERSION_KEY), cfg.get(ICT_ENABLEMENT_TS_KEY)
-        if ev_raw is None or et_raw is None:
-            return versions
-        ev, et = int(ev_raw), int(et_raw)
-        if target_ms >= et:
-            return [v for v in versions if v >= ev] or versions
-        return [v for v in versions if v < ev] or versions
-
     def version_at_timestamp(self, ts: str | _dt.datetime) -> int:
-        """Last version committed ≤ ts.
-
-        Binary search over commit-file mtimes, like the reference
-        (``rust/src/delta.rs:1041-1075``) but over the listed version range
-        (one listing, O(log n) stat calls).
-        """
-        if isinstance(ts, str):
-            ts = _dt.datetime.fromisoformat(ts.replace("Z", "+00:00"))
-        if ts.tzinfo is None:
-            ts = ts.replace(tzinfo=_dt.timezone.utc)
-        target_ms = int(ts.timestamp() * 1000)
-
-        versions = self.log.list_commit_versions()
-        if not versions:
-            raise NotATableError(f"{self.table_uri} has no commits")
-        versions = self._ict_enablement_bounds(versions, target_ms)
-        lo, hi, best = 0, len(versions) - 1, None
-        while lo <= hi:
-            mid = (lo + hi) // 2
-            if self.log.commit_timestamp_ms(versions[mid]) <= target_ms:
-                best = versions[mid]
-                lo = mid + 1
-            else:
-                hi = mid - 1
-        if best is None:
-            raise DeltaTableError(f"no version of {self.table_uri} existed at {ts.isoformat()}")
-        return best
+        """Last version committed at or before ts
+        (:meth:`DeltaLog.version_at_timestamp`)."""
+        return self.log.version_at_timestamp(ts)
 
     def first_version_at_or_after(self, ts: str | _dt.datetime) -> int:
-        """First version whose commit timestamp is >= ts (the Delta
-        streaming ``startingTimestamp`` contract: changes committed at or
-        after the timestamp are included). Falls back to the earliest
-        version when ts predates the table; returns latest+1 when ts is
-        past the last commit (the stream then waits for future commits)."""
-        if isinstance(ts, str):
-            ts = _dt.datetime.fromisoformat(ts.replace("Z", "+00:00"))
-        if ts.tzinfo is None:
-            ts = ts.replace(tzinfo=_dt.timezone.utc)
-        target_ms = int(ts.timestamp() * 1000)
-
-        all_versions = self.log.list_commit_versions()
-        if not all_versions:
-            raise NotATableError(f"{self.table_uri} has no commits")
-        versions = self._ict_enablement_bounds(all_versions, target_ms)
-        lo, hi, best = 0, len(versions) - 1, None
-        while lo <= hi:
-            mid = (lo + hi) // 2
-            if self.log.commit_timestamp_ms(versions[mid]) >= target_ms:
-                best = versions[mid]
-                hi = mid - 1
-            else:
-                lo = mid + 1
-        if best is not None:
-            return best
-        # nothing at-or-after in the searched clock domain: when that domain
-        # was the pre-enablement (mtime) range, the answer is the enablement
-        # version itself — the first commit on the writer clock
-        nxt = [v for v in all_versions if v > versions[-1]]
-        return nxt[0] if nxt else all_versions[-1] + 1
+        """First version committed at or after ts (the Delta streaming
+        ``startingTimestamp`` contract: the earliest version when ts
+        predates the table, latest + 1 when it is past the last commit)."""
+        return self.log.version_at_timestamp(ts, at_or_after=True)
 
     def load_with_datetime(self, ts: str | _dt.datetime) -> None:
-        """Time travel to the last version committed ≤ ts."""
-        self.load_version(self.version_at_timestamp(ts))
+        """Time travel to the last version committed ≤ ts. One listing of
+        ``_delta_log`` both resolves the version and chooses the checkpoint
+        that version loads from."""
+        listing = self.log.list_commit_versions()
+        version = self.log.version_at_timestamp(ts, listing=listing)
+        self._snapshot = Snapshot.load(self.log, version, listing)
 
     def update(self) -> int:
         """Refresh to the latest version (incremental apply); returns version."""

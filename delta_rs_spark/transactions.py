@@ -25,7 +25,11 @@ import uuid
 from typing import Any, Optional
 
 from .protocol.actions import Action, AddAction, CommitInfoAction, RemoveAction
-from .protocol.log import FileAlreadyExistsError
+from .protocol.log import (
+    ICT_ENABLEMENT_TS_KEY,
+    ICT_ENABLEMENT_VERSION_KEY,
+    FileAlreadyExistsError,
+)
 
 DEFAULT_MAX_RETRY_COMMIT_ATTEMPTS = 10_000_000  # reference delta.rs:1158
 
@@ -56,12 +60,6 @@ SUPPORTED_WRITER_FEATURES = frozenset(
         "deltaRsSpark.deletionVectors",  # vendor token, pre-round-3 tables
     }
 )
-
-# public Delta ICT enablement bookkeeping (set when the feature turns on
-# mid-table-life; timestamp resolution splits its search at this boundary)
-ICT_ENABLEMENT_VERSION_KEY = "delta.inCommitTimestampEnablementVersion"
-ICT_ENABLEMENT_TS_KEY = "delta.inCommitTimestampEnablementTimestamp"
-
 
 class TransactionError(Exception):
     pass

@@ -576,18 +576,22 @@ def test_concurrent_increments_serializable_fuzz(spark, tmp_path, seed):
     assert validate_checksum(t) in (True, None)
     # a checkpoint written mid-race must replay to the same state as a
     # pure JSON-tail replay. The first read above went through the
-    # checkpoint-seeded path (Snapshot.load starts from _last_checkpoint,
-    # written by the racing checkpointer); force the log-only path by
-    # copying the table WITHOUT _last_checkpoint — with no hint and no
-    # explicit version, load() replays every commit from version 0.
+    # checkpoint-seeded path (Snapshot.load starts from the newest listed
+    # checkpoint, written by the racing checkpointer); force the log-only
+    # path by copying the table WITHOUT its checkpoints and _last_checkpoint
+    # — with none listed, load() replays every commit from version 0.
     import shutil
 
     log_only = str(tmp_path / "serial-log-only")
     shutil.copytree(uri, log_only)
-    os.remove(os.path.join(log_only, "_delta_log", "_last_checkpoint"))
+    log_dir = os.path.join(log_only, "_delta_log")
+    for name in os.listdir(log_dir):
+        if ".checkpoint." in name or name == "_last_checkpoint":
+            os.remove(os.path.join(log_dir, name))
     from delta_rs_spark.protocol.log import DeltaLog as _DL
 
     assert _DL(log_only).read_last_checkpoint() is None
+    assert _DL(log_only).list_commit_versions().checkpoints == []
     assert _table_state(spark, log_only) == want
 
 
