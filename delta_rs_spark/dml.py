@@ -1,4 +1,10 @@
-"""Copy-on-write DML: DELETE / UPDATE / MERGE over Delta tables.
+"""DML: DELETE / UPDATE / MERGE over Delta tables.
+
+Tables with ``delta.enableDeletionVectors=true`` (the default for new
+tables) take the merge-on-read paths (``_delete_merge_on_read``,
+``_update_merge_on_read``, ``_merge_merge_on_read``): changed rows are
+marked in deletion vectors and only new rows are written. The rest of this
+docstring describes the copy-on-write paths the other tables take.
 
 The reference (delta-rs v0) lists MERGE/UPDATE/DELETE as explicit gaps and
 only sketches update semantics in a test (``rust/tests/write_exploration.rs:
@@ -186,15 +192,16 @@ def _norm_file_uri(uri: str) -> str:
 
 
 def _insert_select_exprs(
-    schema, src_cols: set[str], fill_missing_nullable: bool = False
+    schema, src_cols: set[str], fill_missing_nullable: bool = False, prefix: str = ""
 ) -> tuple[list, dict]:
-    """MERGE INSERT projection: source columns cast to the table types;
-    columns the source omits materialize their DEFAULT expression or, for
-    identity columns, the system-assignment expression (the caller
-    validated nothing else is missing). With ``fill_missing_nullable``
-    (schema-evolution merges) other omitted nullable columns read NULL.
-    Returns (exprs, assigned identity specs) — the caller must advance the
-    assigned columns' water marks in the same commit."""
+    """MERGE INSERT projection: source columns (``prefix`` + name) cast to
+    the table types; columns the source omits materialize their DEFAULT
+    expression or, for identity columns, the system-assignment expression
+    (the caller validated nothing else is missing). With
+    ``fill_missing_nullable`` (schema-evolution merges) other omitted
+    nullable columns read NULL. Returns (exprs, assigned identity specs) —
+    the caller must advance the assigned columns' water marks in the same
+    commit."""
     from .protocol import defaults as _dfl
     from .protocol import identity as _idc
 
@@ -206,7 +213,7 @@ def _insert_select_exprs(
     assigned: dict = {}
     for c in schema.names:
         if c in src_cols:
-            out.append(F.col(c).cast(types[c]).alias(c))
+            out.append(F.col(prefix + c).cast(types[c]).alias(c))
         elif c in ids:
             out.append(_idc.assign_expr(ids[c]).alias(c))
             assigned[c] = ids[c]
@@ -327,53 +334,11 @@ def _stage_and_swap(
     for column-mapped tables must use the evolved mapping or the evolved
     columns' data would be written under unmapped names and read back
     NULL."""
-    import uuid as _uuid
-
-    from .writer import _promote_staged_files, check_constraints, data_skipping_columns
-
-    from .protocol import column_mapping as cm
-    from .protocol import identity as _idc
-
     log = table.log
-    pcols = table.metadata().partition_columns
     schema = schema_override if schema_override is not None else table.schema()
     cfg = table.metadata().configuration
-    # CHECK constraints apply to the rewritten content (UPDATE/MERGE can
-    # introduce violations; DELETE survivors pass trivially)
-    check_constraints(new_rows, cfg, schema=schema)
-
-    # column-mapped tables store PHYSICAL names in data files, partition
-    # dirs, and stats; the frame stays logical until this last hop
-    stage_rows, stage_pcols = new_rows, pcols
-    stats_cols = data_skipping_columns(cfg, schema.names)
-    _idn = set(_idc.specs(schema))
-    if _idn and stats_cols is not None:
-        # identity water marks read the columns' footer min/max
-        stats_cols = stats_cols | _idn
-    if cm.is_mapped(cfg):
-        stage_rows = cm.to_physical_df(new_rows, schema)
-        phys = cm.top_level_physical(schema)
-        stage_pcols = [phys[c] for c in pcols]
-        if stats_cols is not None:
-            stats_cols = {phys.get(c, c) for c in stats_cols}
-
-    if table._uniform_enabled() and not cm.is_mapped(cfg):
-        from .uniform.iceberg import attach_parquet_field_ids
-
-        stage_rows = attach_parquet_field_ids(stage_rows, schema)
-    staging_dir = log.data_plane.stage_dir("commit")
-    writer = stage_rows.write.mode("overwrite")
-    if stage_pcols:
-        writer = writer.partitionBy(*stage_pcols)
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
-    writer.parquet(staging_dir)
-    adds = _promote_staged_files(
-        spark,
-        log,
-        staging_dir,
-        stage_pcols,
-        stats_columns=stats_cols,
+    adds = _stage_rows(
+        spark, table, new_rows, schema=schema, max_records_per_file=max_records_per_file
     )
 
     cdc_actions: list = []
@@ -524,8 +489,9 @@ def _partition_exact_files(
 
 
 def dv_enabled(table: DeltaTable) -> bool:
-    cfg = table.metadata().configuration or {}
-    return str(cfg.get("delta.enableDeletionVectors", "")).lower() == "true"
+    from .protocol import dv
+
+    return dv.enabled(table.metadata().configuration)
 
 
 # Above this many matched positions a merge-on-read DML falls back to
@@ -546,10 +512,10 @@ def _delete_merge_on_read(
 
     The 100 TB shape this exists for: a compliance delete of a few thousand
     rows scattered over TB-sized files. Copy-on-write rewrites every touched
-    file; merge-on-read writes kilobytes of positions (one distributed
-    filtered scan over the *pruned* candidates) and a metadata commit.
-    Readers pay one (usually broadcast) anti join on the DV'd files only;
-    OPTIMIZE later materializes the deletes and drops the vectors.
+    file; merge-on-read writes kilobytes of positions (one aggregate over a
+    filtered scan of the *pruned* candidates) and a metadata commit.
+    Readers drop the positions inside their scan; OPTIMIZE later
+    materializes the deletes and drops the vectors.
     """
     from .cdf import write_change_files
 
@@ -558,76 +524,88 @@ def _delete_merge_on_read(
     FILE, POS = snap.FILE_LINEAGE_COL, snap.POS_LINEAGE_COL
 
     df = snap.df_for_adds(spark, candidates, with_lineage=True)
-    hits = df.filter(cond).select(
-        F.col(FILE).alias("path"), F.col(POS).alias("row_index")
+    rows = _positions_by_file(
+        df.filter(cond).select(F.col(FILE).alias("path"), F.col(POS).alias("row_index"))
     )
-    hits = hits.cache()
-    try:
-        if hits.count() > DV_MAX_POSITIONS:
-            return None  # bulk delete: caller falls back to copy-on-write
-        actions, per_file, n_tomb = _dv_swap_actions(log, candidates, hits)
-        n_deleted = sum(per_file.values())
-        if not per_file:
-            return {
-                "version": table.version,
-                "numRemovedFiles": 0,
-                "numAddedFiles": 0,
-                "numDeletedRows": 0,
-                "numDeletionVectorsAdded": 0,
-            }
-
-        if cdf_enabled(table):
-            change_rows = df.filter(cond).select(*table.schema().names).withColumn(
-                CHANGE_TYPE_COL, F.lit("delete")
-            )
-            actions = (
-                write_change_files(
-                    spark, log, change_rows,
-                    table_schema=table.schema(),
-                    configuration=table.metadata().configuration,
-                )
-                + actions
-            )
-
-        metrics = {
-            "numRemovedFiles": str(n_tomb),
-            "numAddedFiles": "0",
-            "numDeletedRows": str(n_deleted),
-            "numDeletionVectorsAdded": str(len(per_file) - n_tomb),
+    if rows is None:
+        return None  # bulk delete: caller falls back to copy-on-write
+    actions, per_file, n_tomb = _dv_swap_actions(log, candidates, rows)
+    n_deleted = sum(per_file.values())
+    if not per_file:
+        return {
+            "version": table.version,
+            "numRemovedFiles": 0,
+            "numAddedFiles": 0,
+            "numDeletedRows": 0,
+            "numDeletionVectorsAdded": 0,
         }
-        version = _commit_dv_txn(
-            table, actions, "DELETE", {"predicate": predicate}, metrics, reads=reads
+
+    if cdf_enabled(table):
+        change_rows = df.filter(cond).select(*table.schema().names).withColumn(
+            CHANGE_TYPE_COL, F.lit("delete")
         )
-        return {"version": version, **{k: int(v) for k, v in metrics.items()}}
-    finally:
-        hits.unpersist()
+        actions = (
+            write_change_files(
+                spark, log, change_rows,
+                table_schema=table.schema(),
+                configuration=table.metadata().configuration,
+            )
+            + actions
+        )
+
+    metrics = {
+        "numRemovedFiles": str(n_tomb),
+        "numAddedFiles": "0",
+        "numDeletedRows": str(n_deleted),
+        "numDeletionVectorsAdded": str(len(per_file) - n_tomb),
+    }
+    version = _commit_dv_txn(
+        table, actions, "DELETE", {"predicate": predicate}, metrics, reads=reads
+    )
+    return {"version": version, **{k: int(v) for k, v in metrics.items()}}
 
 
-def _dv_swap_actions(log, candidates: list[AddAction], pos_df) -> tuple[list, dict, int]:
-    """Collect ``pos_df`` (path, row_index — MUST be cached by the caller)
-    into spec-format RoaringBitmap deletion vectors and build the log
-    actions that swap the touched adds: Remove(old) + re-Add with the
-    merged DV descriptor, or a plain tombstone when every physical row of
-    the file is now dead.
+def _positions_by_file(keys: DataFrame) -> Optional[list]:
+    """One aggregate over ``keys`` (``path`` = lineage file, ``row_index``,
+    and optionally a boolean ``matched``): per file, the row count ``n``,
+    the positions, and — with ``matched`` — ``n_matched``, the rows that
+    flag counts. Returns the collected rows, or None when the positions
+    exceed ``DV_MAX_POSITIONS`` (the caller falls back to copy-on-write).
+    A file past the cap ships no positions, so the driver never receives
+    more than the cap from one file."""
+    n = F.count(F.lit(1))
+    aggs = [
+        n.alias("n"),
+        F.when(n <= DV_MAX_POSITIONS, F.collect_list("row_index")).alias("positions"),
+    ]
+    if "matched" in keys.columns:
+        aggs.append(F.sum(F.col("matched").cast("long")).alias("n_matched"))
+    rows = keys.groupBy("path").agg(*aggs).collect()
+    if sum(r["n"] for r in rows if r["path"] is not None) > DV_MAX_POSITIONS:
+        return None
+    return rows
 
-    Position sets come to the driver (grouped per file, Arrow-batched) —
-    the same bounded materialization every Delta implementation performs
-    when writing DVs; deletes too bulky for that are exactly the ones
-    copy-on-write serves better (``DV_MAX_POSITIONS`` guards the cap and
-    the caller falls back). Prior DVs (spec or pre-round-3 parquet-dir
-    format) are decoded and unioned, so repeated deletes merge into one
-    bitmap per file instead of chaining artifacts.
+
+def _dv_swap_actions(log, candidates: list[AddAction], per_file_rows: list) -> tuple[list, dict, int]:
+    """Turn per-file positions (rows of ``_positions_by_file``) into
+    spec-format RoaringBitmap deletion vectors and build the log actions
+    that swap the touched adds: Remove(old) + re-Add with the merged DV
+    descriptor, or a plain tombstone when every physical row of the file is
+    now dead.
+
+    Position sets come to the driver grouped per file — the same bounded
+    materialization every Delta implementation performs when writing DVs;
+    deletes too bulky for that are exactly the ones copy-on-write serves
+    better (``DV_MAX_POSITIONS`` guards the cap and the caller falls back).
+    Prior DVs (spec or pre-round-3 parquet-dir format) are decoded and
+    unioned, so repeated deletes merge into one bitmap per file instead of
+    chaining artifacts.
 
     Returns (actions, per_file match counts, tombstoned-file count)."""
     import dataclasses
 
     from .protocol.dv import build_descriptors, descriptor_positions
 
-    per_file_rows = (
-        pos_df.groupBy("path")
-        .agg(F.collect_list("row_index").alias("positions"))
-        .collect()
-    )
     if not per_file_rows:
         return [], {}, 0
 
@@ -696,9 +674,12 @@ def _commit_dv_txn(
     table: DeltaTable, actions: list, operation: str, params: dict, metrics: dict,
     guard=None, reads: Optional[dict[str, Any]] = None,
 ) -> int:
-    """One DV commit: protocol bump to reader 3 / writer 7 on first use
-    (deletion vectors are a reader-visible feature — foreign readers must
-    fail fast), then the swap actions."""
+    """One DV commit: the swap actions, plus a protocol bump to reader 3 /
+    writer 7 on tables that lack the feature (deletion vectors are
+    reader-visible — foreign readers must fail fast). Tables created with
+    DVs, or that enabled them through ``set_properties``, already carry it,
+    so their DV commits change no protocol and abort no concurrent writer;
+    only tables whose property was set by older builds bump here."""
     txn = DeltaTransaction(table)
     if reads:
         txn.record_reads(**reads)
@@ -708,8 +689,8 @@ def _commit_dv_txn(
         from .protocol.actions import upgraded_protocol
 
         # readerFeatures/writerFeatures are mandatory at 3/7 per the public
-        # Delta spec. The bump only ever fires on a table's FIRST DV commit,
-        # and every descriptor this engine writes is the spec RoaringBitmap
+        # Delta spec. The bump fires at most once per table, and every
+        # descriptor this engine writes is the spec RoaringBitmap
         # format (protocol/dv.py) — so the spec's own feature token is
         # correct and the table is foreign-readable. (Tables bumped by
         # pre-round-3 builds carry the vendor token for their parquet-dir
@@ -762,12 +743,12 @@ def delete(
     """``DELETE FROM table [WHERE predicate]``.
 
     Rows where the predicate is TRUE are deleted; FALSE/NULL rows survive
-    (SQL DELETE semantics). Default is copy-on-write: only files containing
-    at least one matching row are rewritten; commit is Remove+Add in one
-    version, operation "DELETE". With table property
-    ``delta.enableDeletionVectors=true`` (and a local-filesystem table whose
-    adds use log-relative paths), the delete is merge-on-read instead — see
-    ``_delete_merge_on_read``.
+    (SQL DELETE semantics). With table property
+    ``delta.enableDeletionVectors=true`` (the default for new tables) and
+    adds with log-relative paths, the delete is merge-on-read — see
+    ``_delete_merge_on_read``. Otherwise it is copy-on-write: only files
+    containing at least one matching row are rewritten; commit is
+    Remove+Add in one version, operation "DELETE".
 
     No predicate = delete EVERYTHING: the Delta fast path — every active
     file gets a tombstone in one metadata-only commit, zero data read or
@@ -892,9 +873,14 @@ def _update_merge_on_read(
     df = snap.df_for_adds(
         spark, candidates, with_lineage=True, with_row_ids=rt_on
     )
+    # cached: the matched rows feed the positions aggregate, the staged
+    # write of their updated versions and the change files
     matched_df = df.filter(cond).cache()
     try:
-        if matched_df.count() > DV_MAX_POSITIONS:
+        rows = _positions_by_file(
+            matched_df.select(F.col(FILE).alias("path"), F.col(POS).alias("row_index"))
+        )
+        if rows is None:
             return None  # bulk update: caller falls back to copy-on-write
         from .protocol import generated as _gen
 
@@ -916,10 +902,7 @@ def _update_merge_on_read(
         updated_rows = matched_df.select(*upd_cols)
         updated_rows = _gen.recompute(updated_rows, schema)
 
-        pos = matched_df.select(
-            F.col(FILE).alias("path"), F.col(POS).alias("row_index")
-        )
-        actions, per_file, n_tomb = _dv_swap_actions(log, candidates, pos)
+        actions, per_file, n_tomb = _dv_swap_actions(log, candidates, rows)
         n_updated = sum(per_file.values())
         if not per_file:
             return {
@@ -929,7 +912,7 @@ def _update_merge_on_read(
                 "numUpdatedRows": 0,
             }
 
-        new_adds = _stage_new_rows(spark, table, updated_rows)
+        new_adds = _stage_rows(spark, table, updated_rows, n_rows=n_updated)
 
         if cdf_enabled(table):
             pre = matched_df.select(*schema.names).withColumn(
@@ -962,43 +945,67 @@ def _update_merge_on_read(
         matched_df.unpersist()
 
 
-def _stage_new_rows(spark: SparkSession, table: DeltaTable, rows: DataFrame) -> list:
+# merge-on-read writes only changed rows, whose count the positions
+# aggregate already gave: one write task per this many rows, so a small
+# upsert adds one file instead of one per source partition
+MOR_ROWS_PER_FILE = 1_000_000
+
+
+def _stage_rows(
+    spark: SparkSession,
+    table: DeltaTable,
+    rows: DataFrame,
+    schema=None,
+    max_records_per_file: Optional[int] = None,
+    n_rows: Optional[int] = None,
+) -> list:
     """Write ``rows`` through the staged-write path (CHECK constraints,
-    per-file footer stats, partition layout) and return their Add actions."""
-    import uuid as _uuid
-
-    from .writer import _promote_staged_files, check_constraints, data_skipping_columns
-
+    per-file footer stats, partition layout, physical names on
+    column-mapped tables, parquet field ids under UniForm) and return their
+    Add actions. ``schema`` is the POST-commit table schema when the same
+    commit evolves it (MERGE schema evolution): the physical rename must use
+    the evolved mapping, or the evolved columns would be written under
+    unmapped names and read back NULL. ``n_rows``, when the caller knows
+    it, sets the number of write tasks (``MOR_ROWS_PER_FILE``)."""
     from .protocol import column_mapping as cm
+    from .protocol import identity as _idc
+    from .writer import _promote_staged_files, check_constraints, data_skipping_columns
 
     log = table.log
     pcols = table.metadata().partition_columns
-    schema = table.schema()
+    if schema is None:
+        schema = table.schema()
     cfg = table.metadata().configuration
+    # CHECK constraints apply to the rewritten content (UPDATE/MERGE can
+    # introduce violations; DELETE survivors pass trivially)
     check_constraints(rows, cfg, schema=schema)
     stats_cols = data_skipping_columns(cfg, schema.names)
-    from .protocol import identity as _idc
-
     _idn = set(_idc.specs(schema))
     if _idn and stats_cols is not None:
         stats_cols = stats_cols | _idn  # water marks read these footer stats
+    # column-mapped tables store PHYSICAL names in data files, partition
+    # dirs, and stats; the frame stays logical until this last hop
     if cm.is_mapped(cfg):
         rows = cm.to_physical_df(rows, schema)
         phys = cm.top_level_physical(schema)
         pcols = [phys[c] for c in pcols]
         if stats_cols is not None:
             stats_cols = {phys.get(c, c) for c in stats_cols}
+    elif table._uniform_enabled():
+        from .uniform.iceberg import attach_parquet_field_ids
+
+        rows = attach_parquet_field_ids(rows, schema)
+    if n_rows is not None:
+        rows = rows.coalesce(max(1, -(-n_rows // MOR_ROWS_PER_FILE)))
     staging = log.data_plane.stage_dir("commit")
     writer = rows.write.mode("overwrite")
     if pcols:
         writer = writer.partitionBy(*pcols)
+    if max_records_per_file:
+        writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
     writer.parquet(staging)
     return _promote_staged_files(
-        spark,
-        log,
-        staging,
-        pcols,
-        stats_columns=stats_cols,
+        spark, log, staging, pcols, stats_columns=stats_cols
     )
 
 
@@ -1013,10 +1020,10 @@ def update(
     ``assignments`` maps column name → SQL expression evaluated against the
     *pre-update* row (standard SQL UPDATE semantics: all right-hand sides see
     the old values). Results are cast back to the column's declared type so
-    the table schema is invariant (v0 has no schema evolution). Default is
-    copy-on-write (only files containing matches are rewritten); with
-    ``delta.enableDeletionVectors=true`` the update is merge-on-read — see
-    ``_update_merge_on_read``.
+    the table schema is invariant (v0 has no schema evolution). With
+    ``delta.enableDeletionVectors=true`` (the default for new tables) the
+    update is merge-on-read — see ``_update_merge_on_read``; otherwise it
+    is copy-on-write (only files containing matches are rewritten).
     """
     schema = table.schema()
     bad = set(assignments) - set(schema.names)
@@ -1119,189 +1126,199 @@ def _merge_merge_on_read(
     t: DataFrame,
     s: DataFrame,
     condition: str,
-    per_row: DataFrame,
-    n_matched: int,
+    all_adds: list[AddAction],
     when_matched_update: Optional[dict[str, str]],
     when_matched_delete: bool,
     when_not_matched_insert: bool,
     when_not_matched_by_source_delete: bool,
     extra_actions: Optional[list],
     reads: Optional[dict[str, Any]] = None,
-) -> dict[str, Any]:
+) -> Optional[dict[str, Any]]:
     """MERGE without rewriting unmatched target rows: matched (and, for
     full-sync, source-unmatched) positions get DV'd in place; only the
     updated versions and the inserts are written as new files.
 
     This turns MERGE cost from O(bytes in touched files) into O(bytes in
     changed rows) — the difference between an hourly 1M-row upsert
-    rewriting a 100 TB table's hot files and appending megabytes."""
+    rewriting a 100 TB table's hot files and appending megabytes.
+
+    The source ⟕ target join runs once and its source-sized result is
+    cached, already projected to what the statement writes: per row the
+    matched target row's position and, for matched rows the updated
+    values, for unmatched source rows the inserted ones (the projection
+    lets Catalyst read and broadcast only the target columns it uses). One
+    aggregate over it gives the positions per file, the per-file match
+    counts, the multi-match check and the insert count; the one staged
+    write reads it again. Returns None when the positions exceed
+    ``DV_MAX_POSITIONS`` (the caller rewrites instead)."""
     from .cdf import write_change_files
+    from .protocol import generated as _gen
     from .protocol import row_tracking as _rtg
 
-    snap = table._snapshot
     log = table.log
     schema = table.schema()
     cfg_m = table.metadata().configuration or {}
     rt_on = _rtg.enabled(cfg_m)
-    all_adds = snap.files()
     types = {f.name: f.dataType for f in schema.fields}
     on = F.expr(condition)
     track = cdf_enabled(table)
     change_parts: list[DataFrame] = []
 
-    # positions to kill: every matched target row (it is replaced or
-    # deleted), plus — under full-sync — every target row no source matches
-    pos = per_row.select(F.col("_file").alias("path"), F.col("_tid").alias("row_index"))
-    if when_not_matched_by_source_delete:
-        unmatched_t = t.join(s, on, "left_anti")
-        pos = pos.unionByName(
-            unmatched_t.select(
-                F.col("__file").alias("path"), F.col("__tid").alias("row_index")
-            )
-        )
-        if track:
-            change_parts.append(
-                unmatched_t.select(*schema.names).withColumn(
-                    CHANGE_TYPE_COL, F.lit("delete")
-                )
-            )
-    pos = pos.cache()
+    joined = s.join(t, on, "left" if when_not_matched_insert else "inner")
+    is_match = F.col("t.__file").isNotNull()
+    # the default update copies every column from the source; one the
+    # source lacks is an error only if some row matches
+    unassigned = [] if when_matched_update else sorted(set(schema.names) - set(s.columns))
+    if when_matched_delete:
+        values = {}
+    else:
+        assignments = when_matched_update or {
+            c: f"s.{c}" for c in schema.names if c not in unassigned
+        }
+        bad = set(assignments) - set(schema.names)
+        if bad:
+            raise DMLError(f"MERGE updates unknown columns: {sorted(bad)}")
+        values = {
+            c: F.expr(assignments[c]).cast(types[c]) if c in assignments else F.col(f"t.{c}")
+            for c in schema.names
+        }
+    id_assigned: dict = {}
+    if when_not_matched_insert:
+        ins_exprs, id_assigned = _insert_select_exprs(schema, set(s.columns), prefix="s.")
+        for c, e in zip(schema.names, ins_exprs):
+            values[c] = F.when(is_match, values[c]).otherwise(e) if c in values else e
+    mat_cols: list[str] = []
+    if rt_on and not when_matched_delete:
+        # updated rows keep their identity (materialized ids); inserted
+        # rows read NULL there and take the new file's baseRowId
+        mat_cols = list(_rtg.materialized_names(cfg_m))
+        values[mat_cols[0]] = F.when(is_match, F.col(f"t.{_rtg.ROW_ID_COL}"))
+        values[mat_cols[1]] = F.when(is_match, F.col(f"t.{_rtg.ROW_CV_COL}"))
+    pre_cols = [F.col(f"t.{c}").alias(f"__pre_{c}") for c in schema.names] if track else []
+    # underscored names: a table column may be called "path"
+    staged = joined.select(
+        F.col("t.__file").alias("__path"),
+        F.col("t.__tid").alias("__pos"),
+        is_match.alias("__matched"),
+        *[v.alias(c) for c, v in values.items()],
+        *pre_cols,
+    ).cache()
     try:
-        # same driver-materialization cap as DELETE/UPDATE: _dv_swap_actions
-        # collects every (path, row_index) pair — a full-sync MERGE against
-        # a mostly-unmatched huge target must take the rewrite path instead
-        if pos.count() > DV_MAX_POSITIONS:
-            return None  # caller falls back to copy-on-write
-        actions, per_file, n_tomb = _dv_swap_actions(log, all_adds, pos)
-        n_killed = sum(per_file.values())
-        n_unmatched_deleted = n_killed - n_matched
-
-        n_updated = n_deleted = 0
-        new_parts: list[DataFrame] = []
-        if n_matched:
-            inner = t.join(s, on, "inner")
-            if when_matched_delete:
-                n_deleted += n_matched
-                if track:
-                    change_parts.append(
-                        inner.select(*[F.col(f"t.{c}").alias(c) for c in schema.names])
-                        .withColumn(CHANGE_TYPE_COL, F.lit("delete"))
-                    )
-            else:
-                assignments = when_matched_update or {c: f"s.{c}" for c in schema.names}
-                bad = set(assignments) - set(schema.names)
-                if bad:
-                    raise DMLError(f"MERGE updates unknown columns: {sorted(bad)}")
-                upd_cols = [
-                    F.expr(assignments[c]).cast(types[c]).alias(c)
-                    if c in assignments
-                    else F.col(f"t.{c}").alias(c)
-                    for c in schema.names
-                ]
-                if rt_on:
-                    # updated rows keep their identity (materialized ids)
-                    mat_id_m, mat_cv_m = _rtg.materialized_names(cfg_m)
-                    upd_cols += [
-                        F.col(f"t.{_rtg.ROW_ID_COL}").alias(mat_id_m),
-                        F.col(f"t.{_rtg.ROW_CV_COL}").alias(mat_cv_m),
-                    ]
-                upd = inner.select(*upd_cols)
-                from .protocol import generated as _gen
-
-                upd = _gen.recompute(upd, schema)
-                new_parts.append(upd)
-                n_updated = n_matched
-                if track:
-                    change_parts.append(
-                        inner.select(*[F.col(f"t.{c}").alias(c) for c in schema.names])
-                        .withColumn(CHANGE_TYPE_COL, F.lit("update_preimage"))
-                    )
-                    change_parts.append(
-                        upd.select(*schema.names).withColumn(
-                            CHANGE_TYPE_COL, F.lit("update_postimage")
-                        )
-                    )
-        n_deleted += n_unmatched_deleted
-
-        n_inserted = 0
-        inserts = None
-        id_assigned: dict = {}
-        if when_not_matched_insert:
-            from .protocol import generated as _gen_i
-
-            ins_exprs, id_assigned = _insert_select_exprs(schema, set(s.columns))
-            # generated columns recompute on inserts too — the copy-on-write
-            # path validates the whole union; source-provided values must
-            # not persist unvalidated on this path either
-            inserts = _gen_i.recompute(
-                s.join(t, on, "left_anti").select(*ins_exprs), schema
-            ).cache()
-            n_inserted = inserts.count()
-            if n_inserted:
-                new_parts.append(inserts)
-                if track:
-                    change_parts.append(
-                        inserts.withColumn(CHANGE_TYPE_COL, F.lit("insert"))
-                    )
-
-        try:
-            if not per_file and not n_inserted:
-                return {
-                    "version": table.version,
-                    "numRemovedFiles": 0,
-                    "numAddedFiles": 0,
-                    "numTargetRowsUpdated": 0,
-                    "numTargetRowsDeleted": 0,
-                    "numTargetRowsInserted": 0,
-                }
-
-            new_adds: list = []
-            if new_parts:
-                new_rows = new_parts[0]
-                for p in new_parts[1:]:
-                    # inserts carry no materialized id columns (fresh rows
-                    # take the new file's baseRowId) — NULL-fill them
-                    new_rows = new_rows.unionByName(p, allowMissingColumns=True)
-                new_adds = _stage_new_rows(spark, table, new_rows)
-
-            if track and change_parts:
-                change_rows = change_parts[0]
-                for p in change_parts[1:]:
-                    change_rows = change_rows.unionByName(p)
-                actions = (
-                    write_change_files(
-                        spark, log, change_rows,
-                        table_schema=table.schema(),
-                        configuration=table.metadata().configuration,
-                    )
-                    + actions
+        # positions to kill: every matched target row (it is replaced or
+        # deleted), plus — under full-sync — every target row no source
+        # matches; source rows with no match group under a NULL path
+        keys = staged.select(
+            F.col("__path").alias("path"),
+            F.col("__pos").alias("row_index"),
+            F.col("__matched").alias("matched"),
+        )
+        if when_not_matched_by_source_delete:
+            unmatched_t = t.join(s, on, "left_anti")
+            keys = keys.unionByName(
+                unmatched_t.select(
+                    F.col("__file").alias("path"),
+                    F.col("__tid").alias("row_index"),
+                    F.lit(False).alias("matched"),
                 )
-
-            actions.extend(list(new_adds))
-            actions.extend(list(extra_actions or []))
-            metrics = {
-                "numRemovedFiles": str(n_tomb),
-                "numAddedFiles": str(len(new_adds)),
-                "numTargetRowsUpdated": str(n_updated),
-                "numTargetRowsDeleted": str(n_deleted),
-                "numTargetRowsInserted": str(n_inserted),
-                "numDeletionVectorsAdded": str(len(per_file) - n_tomb),
+            )
+            if track:
+                change_parts.append(
+                    unmatched_t.select(*schema.names).withColumn(
+                        CHANGE_TYPE_COL, F.lit("delete")
+                    )
+                )
+        rows = _positions_by_file(keys)
+        if rows is None:
+            return None
+        n_inserted = sum(r["n"] for r in rows if r["path"] is None)
+        rows = [r for r in rows if r["path"] is not None]
+        # matched and unmatched positions are disjoint, so a repeat within a
+        # file is a target row matched by two source rows
+        if any(len(set(r["positions"])) < r["n"] for r in rows):
+            raise DMLError(
+                "MERGE: a target row matches multiple source rows; "
+                "result would be non-deterministic"
+            )
+        n_matched = sum(r["n_matched"] for r in rows)
+        if n_matched and unassigned and not when_matched_delete:
+            raise DMLError(f"source lacks columns required for UPDATE: {unassigned}")
+        if not rows and not n_inserted:
+            return {
+                "version": table.version,
+                "numRemovedFiles": 0,
+                "numAddedFiles": 0,
+                "numTargetRowsUpdated": 0,
+                "numTargetRowsDeleted": 0,
+                "numTargetRowsInserted": 0,
             }
-            id_meta, id_guard = _identity_commit_extras(
-                table, id_assigned if n_inserted else {}, new_adds
+        actions, per_file, n_tomb = _dv_swap_actions(log, all_adds, rows)
+        n_deleted = sum(per_file.values()) - n_matched
+        n_updated = 0 if when_matched_delete else n_matched
+        if when_matched_delete:
+            n_deleted += n_matched
+
+        new_adds: list = []
+        if n_updated or n_inserted:
+            written = ~F.col("__matched") if when_matched_delete else F.lit(True)
+            new_rows = _gen.recompute(
+                staged.filter(written).select("__matched", *schema.names, *mat_cols), schema
             )
-            if id_meta is not None:
-                actions = [id_meta] + actions
-            version = _commit_dv_txn(
-                table, actions, "MERGE", {"predicate": condition}, metrics,
-                guard=id_guard, reads=reads,
+            new_adds = _stage_rows(
+                spark, table, new_rows.drop("__matched"), n_rows=n_updated + n_inserted
             )
-            return {"version": version, **{k: int(v) for k, v in metrics.items()}}
-        finally:
-            if inserts is not None:
-                inserts.unpersist()
+
+        if track:
+            if n_matched:
+                kind = "delete" if when_matched_delete else "update_preimage"
+                pre = staged.filter("__matched").select(
+                    *[F.col(f"__pre_{c}").alias(c) for c in schema.names]
+                )
+                change_parts.append(pre.withColumn(CHANGE_TYPE_COL, F.lit(kind)))
+            if n_updated:
+                post = new_rows.filter("__matched").select(*schema.names)
+                change_parts.append(
+                    post.withColumn(CHANGE_TYPE_COL, F.lit("update_postimage"))
+                )
+            if n_inserted:
+                inserted = new_rows.filter(~F.col("__matched")).select(*schema.names)
+                change_parts.append(inserted.withColumn(CHANGE_TYPE_COL, F.lit("insert")))
+
+        if track and change_parts:
+            change_rows = change_parts[0]
+            for p in change_parts[1:]:
+                change_rows = change_rows.unionByName(p)
+            actions = (
+                write_change_files(
+                    spark, log, change_rows,
+                    table_schema=schema,
+                    configuration=table.metadata().configuration,
+                )
+                + actions
+            )
+
+        actions.extend(list(new_adds))
+        actions.extend(list(extra_actions or []))
+        metrics = {
+            "numRemovedFiles": str(n_tomb),
+            "numAddedFiles": str(len(new_adds)),
+            "numTargetRowsUpdated": str(n_updated),
+            "numTargetRowsDeleted": str(n_deleted),
+            "numTargetRowsInserted": str(n_inserted),
+            "numDeletionVectorsAdded": str(len(per_file) - n_tomb),
+        }
+        id_meta, id_guard = _identity_commit_extras(
+            table, id_assigned if n_inserted else {}, new_adds
+        )
+        if id_meta is not None:
+            actions = [id_meta] + actions
+        version = _commit_dv_txn(
+            table, actions, "MERGE", {"predicate": condition}, metrics,
+            guard=id_guard, reads=reads,
+        )
+        return {"version": version, **{k: int(v) for k, v in metrics.items()}}
     finally:
-        pos.unpersist()
+        staged.unpersist()
+
 
 def merge(
     spark: SparkSession,
@@ -1315,7 +1332,12 @@ def merge(
     extra_actions: Optional[list] = None,
     schema_evolution: bool = False,
 ) -> dict[str, Any]:
-    """``MERGE INTO target t USING source s ON condition`` — copy-on-write.
+    """``MERGE INTO target t USING source s ON condition``. With
+    ``delta.enableDeletionVectors=true`` (the default for new tables) it is
+    merge-on-read — matched rows are marked in deletion vectors and only
+    updated and inserted rows are written (``_merge_merge_on_read``);
+    otherwise, or for schema-evolving merges, copy-on-write rewrites the
+    files holding matches.
 
     - ``condition`` references ``t.<col>`` / ``s.<col>`` (e.g.
       ``"t.doc_id = s.doc_id"``).
@@ -1327,13 +1349,13 @@ def merge(
     - ``when_not_matched_by_source_delete``: drop target rows no source row
       matches — with the insert+update defaults this makes the target an
       exact mirror of the source (full-sync). Every active file may hold
-      unmatched rows, so this clause rewrites the whole table; use it for
-      sync jobs, not incremental upserts.
+      unmatched rows, so under copy-on-write this clause rewrites the whole
+      table; use it for sync jobs, not incremental upserts.
 
     Each target row may match at most one source row — multiple matches make
     the result non-deterministic, so they raise (Delta protocol semantics).
-    Only target files containing matched rows are rewritten (all files when
-    ``when_not_matched_by_source_delete`` is set).
+    Copy-on-write rewrites only target files containing matched rows (all
+    files when ``when_not_matched_by_source_delete`` is set).
 
     ``schema_evolution=True`` (Delta's ``withSchemaEvolution()``): source
     columns absent from the target append to the table schema as nullable
@@ -1414,6 +1436,17 @@ def merge(
     s = source.alias("s")
     on = F.expr(condition)
 
+    if dv_enabled(table) and _mor_eligible(table, all_adds) and not evolved_fields:
+        mor = _merge_merge_on_read(
+            spark, table, t, s, condition, all_adds,
+            when_matched_update, when_matched_delete, when_not_matched_insert,
+            when_not_matched_by_source_delete, extra_actions, reads=reads,
+        )
+        if mor is not None:
+            return mor
+        # position count beyond DV_MAX_POSITIONS: fall through to the
+        # copy-on-write rewrite (same contract as DELETE/UPDATE)
+
     # --- which target files contain matches, and does any target row match
     # more than one source row?  One inner join (Catalyst/AQE pick broadcast
     # vs shuffle; the source is typically the small side), aggregated per
@@ -1436,17 +1469,6 @@ def merge(
             "MERGE: a target row matches multiple source rows; "
             "result would be non-deterministic"
         )
-    if dv_enabled(table) and _mor_eligible(table, all_adds) and not evolved_fields:
-        mor = _merge_merge_on_read(
-            spark, table, t, s, condition, per_row, n_matched,
-            when_matched_update, when_matched_delete, when_not_matched_insert,
-            when_not_matched_by_source_delete, extra_actions, reads=reads,
-        )
-        if mor is not None:
-            return mor
-        # position count beyond DV_MAX_POSITIONS: fall through to the
-        # copy-on-write rewrite (same contract as DELETE/UPDATE)
-
     if when_not_matched_by_source_delete:
         rewrite = all_adds  # unmatched rows can live in any file
     else:

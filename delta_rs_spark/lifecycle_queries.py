@@ -575,7 +575,8 @@ def q_widening_uniform_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = DeltaTable(uri)
     t.delete(spark, "doc_id % 9 = 3")  # merge-on-read: DV commit
     t = DeltaTable(uri)
-    t.enable_uniform()  # initial conversion incl. position-delete files
+    # initial conversion incl. position-delete files
+    t.enable_uniform(keep_deletion_vectors=True)
     iceberg_rows = sum(f["record_count"] for f in t.iceberg_files())
     iceberg_deleted = sum(d["record_count"] for d in read_delete_files(uri))
 

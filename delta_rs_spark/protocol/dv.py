@@ -41,6 +41,17 @@ import zlib
 from dataclasses import dataclass
 from typing import Any, Iterable, Optional
 
+# the table property that turns merge-on-read DML on; tables created by
+# ``write_deltalake`` get it set to "true" unless the caller says otherwise
+ENABLE_KEY = "delta.enableDeletionVectors"
+FEATURE_NAME = "deletionVectors"
+
+
+def enabled(configuration: Optional[dict]) -> bool:
+    """Does a table configuration turn deletion vectors on?"""
+    return str((configuration or {}).get(ENABLE_KEY, "")).lower() == "true"
+
+
 DV_MAGIC = 1681511377
 DV_FORMAT_VERSION = 1
 
@@ -475,3 +486,19 @@ def positions_df(spark, log, dv_adds, key_fn=None):
         pos.extend(p)
     pdf = pd.DataFrame({"_dv_path": pd.array(paths, dtype="string"), "_dv_pos": pd.array(pos, dtype="int64")})
     return spark.createDataFrame(pdf, schema="_dv_path STRING, _dv_pos BIGINT")
+
+
+def bitmap_words(positions: list[int]) -> list[int]:
+    """Deleted positions → a plain bitmap as signed 64-bit words: bit
+    ``p & 63`` of word ``p >> 6`` is set for each position, up to the last
+    one (the in-scan DV filter's literal, ``Snapshot._dv_keep_predicate``)."""
+    import numpy as np
+
+    if not positions:
+        return []
+    p = np.asarray(positions, dtype=np.uint64)
+    words = np.zeros(int(p.max() >> np.uint64(6)) + 1, dtype=np.uint64)
+    np.bitwise_or.at(
+        words, (p >> np.uint64(6)).astype(np.intp), np.uint64(1) << (p & np.uint64(63))
+    )
+    return words.view(np.int64).tolist()

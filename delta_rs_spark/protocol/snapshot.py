@@ -20,7 +20,7 @@ from __future__ import annotations
 
 from typing import Any, Optional, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -255,6 +255,15 @@ class Snapshot:
     FILE_LINEAGE_COL = "_drs_file"
     POS_LINEAGE_COL = "_drs_pos"
 
+    # deletion vectors up to this many bytes of plain bitmap (one bit per
+    # row, up to each file's last deleted position) are applied inside the
+    # scan; the bitmap is a plan literal shipped with every task, so larger
+    # ones take the positions anti join instead
+    DV_BITMAP_MAX_BYTES = 4 * 1024 * 1024
+    # scans up to this size read plain and DV'd files as one filtered scan
+    DV_SHARED_SCAN_MAX_FILES = 32
+    DV_SHARED_SCAN_MAX_ROWS = 1_000_000
+
     # a DV positions side small enough to broadcast, measured in BYTES from
     # the descriptors' sizeInBytes (parquet-compressed positions expand a few
     # × in memory — keep the cap near Spark's ~10MB broadcast heuristic);
@@ -293,10 +302,10 @@ class Snapshot:
         """DataFrame over an explicit subset of this snapshot's files.
 
         Used by to_df (after pruning) and by DML, which reads only the files
-        it must rewrite. Files carrying a deletion vector are anti-joined
-        against their deleted positions (``_metadata.row_index``, evaluated
-        inside the scan — no Python in the hot path); plain files keep the
-        bare-scan plan. ``with_lineage=True`` appends ``_drs_file`` (the
+        it must rewrite. Files carrying a deletion vector drop their deleted
+        positions inside the scan (a bitmap test on ``_metadata.row_index``,
+        see ``_dv_keep_predicate``); plain files keep the bare-scan plan.
+        ``with_lineage=True`` appends ``_drs_file`` (the
         add's log path) and ``_drs_pos`` (row index within the file) — the
         row identity DML and merge-on-read DELETE key on.
         ``with_row_ids=True`` (row-tracked tables) appends ``_row_id`` /
@@ -323,6 +332,21 @@ class Snapshot:
 
         dv_adds = [a for a in adds if a.deletion_vector]
         plain = [a for a in adds if not a.deletion_vector]
+        keep = None
+        if dv_adds:
+            # a small scan reads its plain files through the filtered scan
+            # too, each with an empty bitmap: the filter's per-row cost grows
+            # with the files it names, while a union of two scans costs a
+            # fixed ~90 ms of planning and scheduling
+            rows = [a.num_records for a in adds]
+            shared = (
+                len(adds) <= self.DV_SHARED_SCAN_MAX_FILES
+                and None not in rows
+                and sum(rows) <= self.DV_SHARED_SCAN_MAX_ROWS
+            )
+            keep = self._dv_keep_predicate(adds if shared else dv_adds)
+            if keep is not None and shared:
+                dv_adds, plain = list(adds), []
 
         mat_cols = [c for c in (mat_id, mat_cv) if c]
         parts: list[DataFrame] = []
@@ -331,10 +355,16 @@ class Snapshot:
                 self._scan(spark, plain, include_lineage=need_lineage, mat_cols=mat_cols)
             )
         if dv_adds:
-            df = self._scan(spark, dv_adds, include_lineage=True, mat_cols=mat_cols)
-            df = self._anti_join_deleted_positions(spark, df, dv_adds)
-            if not need_lineage:
-                df = df.drop(self.FILE_LINEAGE_COL, self.POS_LINEAGE_COL)
+            if keep is not None:
+                df = self._scan(
+                    spark, dv_adds, include_lineage=need_lineage,
+                    mat_cols=mat_cols, row_filter=keep,
+                )
+            else:
+                df = self._scan(spark, dv_adds, include_lineage=True, mat_cols=mat_cols)
+                df = self._anti_join_deleted_positions(spark, df, dv_adds)
+                if not need_lineage:
+                    df = df.drop(self.FILE_LINEAGE_COL, self.POS_LINEAGE_COL)
             parts.append(df)
 
         df = parts[0]
@@ -471,7 +501,10 @@ class Snapshot:
         adds: list[AddAction],
         include_lineage: bool,
         mat_cols: Sequence[str] = (),
+        row_filter: Optional[Column] = None,
     ) -> DataFrame:
+        """Scan ``adds``; ``row_filter`` (over the scan's ``_metadata``) is
+        applied on the file scan itself, before any projection."""
         table_schema = self.schema()
         pcols = self.metadata.partition_columns
         if not pcols:
@@ -482,28 +515,89 @@ class Snapshot:
                 scan_schema = self._with_mat_fields(
                     cm.physical_schema(table_schema), mat_cols
                 )
-                df = spark.read.schema(scan_schema).parquet(
-                    *[self._readable(a.path) for a in adds]
+                df = self._read(
+                    spark, scan_schema, [self._readable(a.path) for a in adds], row_filter
                 )
                 sel = cm.to_logical_exprs(table_schema) + [F.col(c) for c in mat_cols]
                 if include_lineage:
                     return df.select(*sel, *self._lineage_exprs())
                 return df.select(*sel)
-            df = spark.read.schema(
-                self._with_mat_fields(table_schema, mat_cols)
-            ).parquet(*[self._readable(a.path) for a in adds])
+            df = self._read(
+                spark,
+                self._with_mat_fields(table_schema, mat_cols),
+                [self._readable(a.path) for a in adds],
+                row_filter,
+            )
             cols = list(table_schema.names) + list(mat_cols)
             if include_lineage:
                 return df.select(*cols, *self._lineage_exprs())
             return df.select(*cols)
         return self._read_partitioned(
-            spark, adds, include_lineage=include_lineage, mat_cols=mat_cols
+            spark, adds, include_lineage=include_lineage, mat_cols=mat_cols,
+            row_filter=row_filter,
+        )
+
+    @staticmethod
+    def _read(
+        spark: SparkSession,
+        schema: T.StructType,
+        paths: list[str],
+        row_filter: Optional[Column],
+        base_path: Optional[str] = None,
+    ) -> DataFrame:
+        reader = spark.read.schema(schema)
+        if base_path is not None:
+            reader = reader.option("basePath", base_path)
+        df = reader.parquet(*paths)
+        return df if row_filter is None else df.filter(row_filter)
+
+    def _dv_keep_predicate(self, adds: list[AddAction]) -> Optional[Column]:
+        """Row filter over a scan of ``adds`` that keeps the rows their
+        deletion vectors do not mark (a file without one keeps every row),
+        or None when the anti join must serve.
+
+        Each file's positions become a plain bitmap of 64-bit words; all of
+        them travel as one JSON map literal (file name → words) that the
+        optimizer folds into a constant once. Per row the filter looks up
+        the file's words by ``_metadata.file_name`` and tests bit
+        ``row_index`` — a few codegen'd operations in the scan's own stage:
+        no extra job, no shuffle, no join. A scanned file missing from the
+        map fails the scan rather than resurrect its deleted rows. The
+        literal grows with the rows the deletes span, so bitmaps past
+        ``DV_BITMAP_MAX_BYTES`` (or two scanned files sharing a name) fall
+        back to the anti join. Built as one SQL expression: one call into
+        the JVM instead of one per operator."""
+        import json
+
+        from .dv import add_positions, bitmap_words
+
+        names = [self._readable(a.path).rsplit("/", 1)[-1] for a in adds]
+        if len(set(names)) < len(names):
+            return None
+        positions = [add_positions(self.log, a) if a.deletion_vector else [] for a in adds]
+        n_words = sum((max(p) >> 6) + 1 for p in positions if p)
+        if n_words * 8 > self.DV_BITMAP_MAX_BYTES:
+            return None
+        bitmaps = json.dumps(
+            {n: bitmap_words(p) for n, p in zip(names, positions)}, separators=(",", ":")
+        )
+        literal = "'" + bitmaps.replace("\\", "\\\\").replace("'", "\\'") + "'"
+        words = (
+            f"coalesce(from_json({literal}, 'map<string,array<bigint>>')"
+            "[_metadata.file_name], raise_error('deletion-vector scan read a "
+            "file it has no bitmap for'))"
+        )
+        pos = "_metadata.row_index"
+        return F.expr(
+            f"NOT coalesce(bit_get(get({words}, CAST(shiftright({pos}, 6) AS INT)), "
+            f"CAST({pos} % 64 AS INT)) = 1, false)"
         )
 
     def _anti_join_deleted_positions(
         self, spark: SparkSession, df: DataFrame, dv_adds: list[AddAction]
     ) -> DataFrame:
-        """Drop rows whose (file, row_index) appears in a deletion vector.
+        """Drop rows whose (file, row_index) appears in a deletion vector —
+        the path for bitmaps too large to inline (``_dv_keep_predicate``).
 
         The positions side is decoded from the adds' RoaringBitmap DVs
         (spec format — inline or .bin; the pre-round-3 parquet-dir format
@@ -536,6 +630,7 @@ class Snapshot:
         adds: list[AddAction],
         include_lineage: bool = False,
         mat_cols: Sequence[str] = (),
+        row_filter: Optional[Column] = None,
     ) -> DataFrame:
         """Attach partition columns from the log's partitionValues.
 
@@ -570,10 +665,9 @@ class Snapshot:
             # back to unions if any file's path doesn't encode it
             if all(f"/{phys[c]}=" in p for p in all_paths for c in pcols):
                 scan_schema = cm.physical_schema(schema) if mapped else schema
-                df = (
-                    spark.read.schema(scan_schema)
-                    .option("basePath", self.log.data_plane.scan_root)
-                    .parquet(*all_paths)
+                df = self._read(
+                    spark, scan_schema, all_paths, row_filter,
+                    base_path=self.log.data_plane.scan_root,
                 )
                 if mapped:
                     df = df.select(*cm.to_logical_exprs(schema), *lineage)
@@ -591,7 +685,7 @@ class Snapshot:
         )
         branches = []
         for key, paths in groups.items():
-            branch = spark.read.schema(scan_data_schema).parquet(*paths)
+            branch = self._read(spark, scan_data_schema, paths, row_filter)
             # lineage exprs read _metadata.* so they must be applied directly
             # on the scan; later selects reference them by alias only
             branch = branch.select(*data_sel, *lineage)

@@ -1024,7 +1024,13 @@ class DeltaTable:
             "vacuumProtocolCheck": ("reader", "writer"),
             "checkpointProtection": ("writer",),
         }
+        from .protocol import dv
+
         bumps_r, bumps_w = [], []
+        if dv.enabled(properties):
+            # reader-visible: the feature rides the property's commit, so
+            # the first DV commit changes no protocol
+            bumps_r.append(dv.FEATURE_NAME)
         for key, val in properties.items():
             if not key.startswith("delta.feature."):
                 continue
@@ -1169,17 +1175,38 @@ class DeltaTable:
 
     checkpoint_interval: int = 10  # reference lambda policy: every 10th version
 
-    def enable_uniform(self, format: str = "iceberg") -> int:
+    def enable_uniform(
+        self, format: str = "iceberg", keep_deletion_vectors: bool = False
+    ) -> int:
         """UniForm: mirror the Delta log as Apache Iceberg metadata under
         ``<table>/metadata/`` so Iceberg engines read the same parquet files
         (public ``delta.universalFormat.enabledFormats``; parity-plus — the
         reference predates UniForm). Sets the property and runs the first
-        conversion; afterwards every commit's post-hook syncs incrementally."""
+        conversion; afterwards every commit's post-hook syncs incrementally.
+
+        Deletion vectors follow Delta's IcebergCompat rule: the same commit
+        turns ``delta.enableDeletionVectors`` off, and a table with live
+        DVs is refused until ``reorg_purge`` materializes them.
+        ``keep_deletion_vectors=True`` keeps them instead, mirrored as
+        Iceberg v2 position-delete files — only for Iceberg readers that
+        apply position deletes."""
         if format != "iceberg":
             raise ValueError("only the iceberg universal format is supported")
+        from .protocol import dv
         from .uniform import iceberg as ub
 
-        v = self.set_properties({ub.ENABLE_KEY: "iceberg"})
+        props = {ub.ENABLE_KEY: "iceberg"}
+        if not keep_deletion_vectors:
+            if self._snapshot.files().dv_count():
+                raise ValueError(
+                    "table has live deletion vectors; run reorg_purge() to "
+                    "materialize them before enabling UniForm (or pass "
+                    "keep_deletion_vectors=True to mirror them as Iceberg "
+                    "position deletes)"
+                )
+            if dv.enabled(self.metadata().configuration):
+                props[dv.ENABLE_KEY] = "false"
+        v = self.set_properties(props)
         # the property commit's post-hook already ran the initial conversion
         # (best-effort, warning on failure). convert_snapshot is idempotent
         # per version (early-returns when the tree is current), so this call
@@ -1197,13 +1224,13 @@ class DeltaTable:
         return ub.read_file_list(self.table_uri)
 
     def _uniform_enabled(self) -> bool:
+        from .uniform import iceberg as ub
+
         try:
-            cfg = self.metadata().configuration or {}
+            cfg = self.metadata().configuration
         except Exception:
             return False
-        return "iceberg" in str(
-            cfg.get("delta.universalFormat.enabledFormats", "")
-        ).lower()
+        return ub.enabled(cfg)
 
     def _post_commit_hook(self, version: int) -> None:
         from .maintenance import maybe_checkpoint, write_version_checksum

@@ -51,6 +51,11 @@ DELTA_VERSION_PROP = "delta-version"
 NAME_MAPPING_PROP = "schema.name-mapping.default"
 
 
+def enabled(configuration: Optional[dict]) -> bool:
+    """Does a table configuration turn the Iceberg UniForm mirror on?"""
+    return "iceberg" in str((configuration or {}).get(ENABLE_KEY, "")).lower()
+
+
 class IcebergConversionError(Exception):
     """UniForm conversion failed (unsupported type, missing state, …)."""
 

@@ -544,9 +544,16 @@ def write_deltalake(
     }
 
     if not exists:
+        from .protocol import dv
         from .protocol import row_tracking as rt
+        from .uniform import iceberg as ub
 
         configuration = dict(configuration or {})
+        # new tables delete and update by deletion vector unless the caller
+        # opts out; UniForm's Iceberg mirror cannot carry them (IcebergCompat)
+        if dv.ENABLE_KEY not in configuration and not ub.enabled(configuration):
+            configuration[dv.ENABLE_KEY] = "true"
+        dv_on = dv.enabled(configuration)
         rt_on = rt.enabled(configuration)
         rt_actions: list = []
         cluster_on = bool(cluster_by)
@@ -627,6 +634,13 @@ def write_deltalake(
             # timestamp_ntz is reader-visible: reader 3 + feature in BOTH lists
             wf.append("timestampNtz")
             rf.append("timestampNtz")
+            min_r = max(min_r, 3)
+        if dv_on:
+            # reader-visible from version 0 (the spec's enablement rule): the
+            # first DV commit then carries no protocol change that would
+            # abort concurrent writers
+            wf.append(dv.FEATURE_NAME)
+            rf.append(dv.FEATURE_NAME)
             min_r = max(min_r, 3)
         if _schema_has_variant(declared_schema):
             # variant is reader-visible (public Delta variantType feature):

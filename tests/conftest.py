@@ -19,6 +19,27 @@ def spark():
 
 
 @pytest.fixture()
+def count_jobs(spark):
+    """``count_jobs(fn)`` → (fn's result, Spark jobs fn started), counted
+    through a job group on the status tracker."""
+    import uuid
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def run(fn):
+        group = f"count-jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(tracker.getJobIdsForGroup(group))
+
+    return run
+
+
+@pytest.fixture()
 def golden(request):
     """Path of a reference golden table (read-only fixture data)."""
 

@@ -330,7 +330,8 @@ def test_cdf_enable_bumps_protocol(spark, tmp_path, sf_dir):
 
     # enable later via SET TBLPROPERTIES: the enabling commit bumps
     uri2 = str(tmp_path / "later")
-    write_deltalake(spark, df, uri2)
+    # deletion vectors off, so the table starts at the legacy (1, 2)
+    write_deltalake(spark, df, uri2, configuration={"delta.enableDeletionVectors": "false"})
     t = DeltaTable(uri2)
     assert t.protocol_versions()[1] == 2
     t.set_properties({"delta.enableChangeDataFeed": "true"})

@@ -32,7 +32,8 @@ def _mk(spark, path, configuration=CFG, partition_by=None, rows=None):
 
 
 def test_create_mapped_table_reads_logical(spark, tmp_path):
-    t = _mk(spark, str(tmp_path))
+    # deletion vectors off: column mapping alone needs only (2, 5)
+    t = _mk(spark, str(tmp_path), configuration={**CFG, "delta.enableDeletionVectors": "false"})
     assert t.protocol_versions() == (2, 5)
     got = sorted((r.id, r.val, r.part) for r in t.to_df(spark).collect())
     assert got == [(1, "a", "x"), (2, "b", "y"), (3, "c", "x")]
@@ -110,7 +111,8 @@ def test_rename_requires_mapping(spark, tmp_path):
 
 
 def test_upgrade_existing_table(spark, tmp_path):
-    t = _mk(spark, str(tmp_path), configuration=None)
+    # deletion vectors off: the upgrade starts from the legacy (1, 2)
+    t = _mk(spark, str(tmp_path), configuration={"delta.enableDeletionVectors": "false"})
     t.set_column_mapping_mode("name")
     t = DeltaTable.for_path(str(tmp_path))
     assert t.protocol_versions() == (2, 5)

@@ -1,16 +1,20 @@
-"""Merge-on-read DELETE via deletion vectors.
+"""Merge-on-read DML via deletion vectors.
 
 The reference (delta-rs v0) predates the public Delta deletionVector
-feature; this engine adds it Spark-first: a DELETE under table property
-``delta.enableDeletionVectors=true`` finds the matching rows' (file,
-row_index) positions through the scan's ``_metadata`` columns (no UDF) and
-re-commits the same data files with SPEC-format descriptors — RoaringBitmap
-DVs per the public Delta protocol (``protocol/dv.py``: storageType u/i/p,
-z85 pathOrInlineDv, framed .bin files), so the table and its
-``deletionVectors`` feature token are foreign-readable. Readers anti-join
-positions (broadcast when small); OPTIMIZE materializes; stats fold
-subtracts cardinality; the pre-round-3 parquet-dir format still decodes
-(legacy fixture test below).
+feature; this engine adds it Spark-first, and tables created by
+``write_deltalake`` have it on (``delta.enableDeletionVectors=true``, reader
+3 / writer 7 with the ``deletionVectors`` feature from version 0) unless
+the caller sets the property to ``false``. DELETE, UPDATE and MERGE find
+the matching rows' (file, row_index) positions through the scan's
+``_metadata`` columns (no UDF) and re-commit the same data files with
+SPEC-format descriptors — RoaringBitmap DVs per the public Delta protocol
+(``protocol/dv.py``: storageType u/i/p, z85 pathOrInlineDv, framed .bin
+files), so the table and its ``deletionVectors`` feature token are
+foreign-readable. Readers drop the positions inside the scan with a bitmap
+test on ``_metadata.row_index`` (an anti join for bitmaps past
+``DV_BITMAP_MAX_BYTES``); OPTIMIZE materializes; stats fold subtracts
+cardinality; the pre-round-3 parquet-dir format still decodes (legacy
+fixture test below).
 """
 
 import pytest
@@ -21,17 +25,13 @@ from delta_rs_spark.writer import write_deltalake
 
 
 def _make_table(spark, path, enable_dv=True, enable_cdf=False, nfiles=4, rows=400):
-    cfg = {}
-    if enable_dv:
-        cfg["delta.enableDeletionVectors"] = "true"
+    cfg = {"delta.enableDeletionVectors": "true" if enable_dv else "false"}
     if enable_cdf:
         cfg["delta.enableChangeDataFeed"] = "true"
     df = spark.range(0, rows).selectExpr(
         "id", "id % 10 as k", "concat('v', id) as v"
     )
-    write_deltalake(
-        spark, df.repartition(nfiles), path, configuration=cfg or None
-    )
+    write_deltalake(spark, df.repartition(nfiles), path, configuration=cfg)
     return DeltaTable.for_path(path)
 
 
@@ -57,9 +57,30 @@ def test_dv_delete_keeps_files_and_hides_rows(spark, tmp_path):
     assert t2.column_min_max("id") is None
 
 
+def _enable_dv_like_older_builds(t):
+    """Turn the property on with a bare metaData commit — how builds that
+    bumped the protocol lazily, in the first DV commit, left a table."""
+    import dataclasses
+
+    meta = t.metadata()
+    txn = t.begin()
+    txn.add_action(
+        dataclasses.replace(
+            meta,
+            configuration={**meta.configuration, "delta.enableDeletionVectors": "true"},
+        )
+    )
+    txn.commit(operation="SET TBLPROPERTIES")
+    t.update()
+
+
 def test_dv_protocol_bump_and_time_travel(spark, tmp_path):
+    """A legacy (1, 2) table whose property was flipped without a protocol
+    change gets the reader 3 / writer 7 bump in its first DV commit."""
     path = str(tmp_path / "t")
-    t = _make_table(spark, path)
+    t = _make_table(spark, path, enable_dv=False)
+    assert t.protocol_versions() == (1, 2)
+    _enable_dv_like_older_builds(t)
     res = t.delete(spark, "k = 0")
     t2 = DeltaTable.for_path(path)
     assert t2.protocol_versions() == (3, 7)
@@ -502,17 +523,148 @@ def test_dv_stream_partitions_filter_positions(spark, tmp_path):
     assert 4 not in set(tbl.column("k").to_pylist())
 
 
-def test_dv_read_plan_broadcasts_positions(spark, tmp_path):
-    """The DV anti join must broadcast the (small) positions side — a
-    shuffled anti join on a 100 TB scan would move the table to move
-    kilobytes of positions."""
+def test_dv_read_plan_filters_positions_in_scan(spark, tmp_path):
+    """Deleted positions are dropped inside the scan: a filter on
+    ``_metadata.row_index`` in the scan's own stage — no join, no shuffle
+    and no BroadcastNestedLoopJoin, so a 100 TB scan never moves the table
+    to apply kilobytes of positions."""
     path = str(tmp_path / "t")
     t = _make_table(spark, path)
     t.delete(spark, "k = 2")
     t2 = DeltaTable.for_path(path)
-    plan = t2.to_df(spark)._jdf.queryExecution().executedPlan().toString()
+    df = t2.to_df(spark)
+    plan = df._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" not in plan
-    assert "Broadcast" in plan  # BroadcastHashJoin / BroadcastExchange
+    assert "Join" not in plan
+    assert "Exchange" not in plan
+    assert "row_index" in plan
+    assert df.count() == 360
+    assert df.filter("k = 2").count() == 0
+
+
+def test_dv_small_scan_reads_plain_files_in_the_same_scan(spark, tmp_path, monkeypatch):
+    """A small scan reads files without a DV through the filtered scan
+    too (one scan, no union); past ``DV_SHARED_SCAN_MAX_FILES`` they get
+    their own unfiltered scan. Both return the same rows."""
+    from delta_rs_spark.protocol.snapshot import Snapshot
+
+    path = str(tmp_path / "t")
+    t = _make_table(spark, path)
+    t.delete(spark, "k = 2")
+    write_deltalake(
+        spark, spark.range(400, 450).selectExpr("id", "id % 10 as k", "concat('v', id) as v"),
+        path, mode="append",
+    )
+    t2 = DeltaTable.for_path(path)
+    adds = t2.add_actions()
+    assert any(a.deletion_vector for a in adds) and not all(a.deletion_vector for a in adds)
+    want = [i for i in range(400) if i % 10 != 2] + list(range(400, 450))
+
+    def plan_and_ids():
+        df = t2.to_df(spark)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        return plan, sorted(r.id for r in df.collect())
+
+    plan, ids = plan_and_ids()
+    assert "Union" not in plan and ids == want
+    monkeypatch.setattr(Snapshot, "DV_SHARED_SCAN_MAX_FILES", len(adds) - 1)
+    plan, ids = plan_and_ids()
+    assert "Union" in plan and ids == want
+
+
+def test_dv_large_bitmap_falls_back_to_broadcast_anti_join(spark, tmp_path, monkeypatch):
+    """Past ``DV_BITMAP_MAX_BYTES`` of bitmap the positions are anti-joined
+    instead, and that join broadcasts the (small) positions side. At
+    exactly the bitmap's size the filter still runs in the scan."""
+    from delta_rs_spark.protocol.dv import add_positions
+    from delta_rs_spark.protocol.snapshot import Snapshot
+
+    path = str(tmp_path / "t")
+    t = _make_table(spark, path)
+    t.delete(spark, "k = 2")
+    t2 = DeltaTable.for_path(path)
+    dv_adds = [a for a in t2.add_actions() if a.deletion_vector]
+    bitmap_bytes = sum(8 * ((max(add_positions(t2.log, a)) >> 6) + 1) for a in dv_adds)
+
+    def plan():
+        return t2.to_df(spark)._jdf.queryExecution().executedPlan().toString()
+
+    monkeypatch.setattr(Snapshot, "DV_BITMAP_MAX_BYTES", bitmap_bytes)
+    assert "Join" not in plan()
+    monkeypatch.setattr(Snapshot, "DV_BITMAP_MAX_BYTES", bitmap_bytes - 1)
+    assert "BroadcastNestedLoopJoin" not in plan()
+    assert "Broadcast" in plan()  # BroadcastHashJoin / BroadcastExchange
+    assert t2.to_df(spark).count() == 360
+    assert t2.to_df(spark).filter("k = 2").count() == 0
+    assert sorted(r.id for r in t2.to_df(spark).collect()) == [
+        i for i in range(400) if i % 10 != 2
+    ]
+
+
+def test_new_tables_get_deletion_vectors_from_version_0(spark, tmp_path):
+    """Tables created with no DV property get it on, at reader 3 / writer 7
+    with ``deletionVectors`` in both feature lists; their first DV commit
+    then carries no protocol action. UniForm tables and an explicit
+    ``false`` opt out."""
+    import json
+    import os
+
+    path = str(tmp_path / "t")
+    df = spark.range(0, 40).selectExpr("id", "id % 10 as k")
+    write_deltalake(spark, df.repartition(2), path)
+    t = DeltaTable.for_path(path)
+    assert t.metadata().configuration["delta.enableDeletionVectors"] == "true"
+    assert t.protocol_versions() == (3, 7)
+    state = t.snapshot.state
+    assert "deletionVectors" in state.reader_features
+    assert "deletionVectors" in state.writer_features
+    res = t.delete(spark, "k = 1")
+    assert res["numDeletionVectorsAdded"] >= 1
+    log = os.path.join(path, "_delta_log", f"{res['version']:020d}.json")
+    with open(log) as fh:
+        assert not any("protocol" in json.loads(line) for line in fh)
+
+    off = str(tmp_path / "off")
+    write_deltalake(spark, df, off, configuration={"delta.enableDeletionVectors": "false"})
+    assert DeltaTable.for_path(off).protocol_versions() == (1, 2)
+    uni = str(tmp_path / "uni")
+    write_deltalake(
+        spark, df, uni,
+        configuration={"delta.universalFormat.enabledFormats": "iceberg"},
+    )
+    cfg = DeltaTable.for_path(uni).metadata().configuration
+    assert "delta.enableDeletionVectors" not in cfg
+
+
+def test_set_properties_enabling_dvs_bumps_protocol_in_same_commit(spark, tmp_path):
+    path = str(tmp_path / "t")
+    t = _make_table(spark, path, enable_dv=False)
+    v = t.set_properties({"delta.enableDeletionVectors": "true"})
+    t2 = DeltaTable.for_version(path, v)
+    assert t2.protocol_versions() == (3, 7)
+    assert "deletionVectors" in t2.snapshot.state.reader_features
+    res = t2.delete(spark, "k = 1")
+    assert res["numDeletionVectorsAdded"] >= 1
+    assert DeltaTable.for_path(path).protocol_versions() == (3, 7)
+
+
+def test_enable_uniform_turns_deletion_vectors_off(spark, tmp_path):
+    """IcebergCompat: UniForm commits the DV property off, and refuses a
+    table with live DVs until ``reorg_purge`` materializes them."""
+    path = str(tmp_path / "t")
+    t = _make_table(spark, path)
+    t.delete(spark, "k = 1")
+    t = DeltaTable.for_path(path)
+    with pytest.raises(ValueError, match="reorg_purge"):
+        t.enable_uniform()
+    t.reorg_purge(spark)
+    t = DeltaTable.for_path(path)
+    t.enable_uniform()
+    t = DeltaTable.for_path(path)
+    assert t.metadata().configuration["delta.enableDeletionVectors"] == "false"
+    res = t.delete(spark, "k = 2")
+    assert res["numAddedFiles"] > 0  # copy-on-write again
+    assert not any(a.deletion_vector for a in DeltaTable.for_path(path).add_actions())
 
 
 def test_dv_merge_does_not_resurrect_deleted_rows(spark, tmp_path):

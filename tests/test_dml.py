@@ -33,7 +33,19 @@ def doc_table(spark, tmp_path, docs):
     return DeltaTable(uri)
 
 
-def test_delete_basic(spark, doc_table, docs):
+@pytest.fixture()
+def cow_doc_table(spark, tmp_path, docs):
+    """``doc_table`` with deletion vectors off: DML rewrites files."""
+    uri = str(tmp_path / "docs")
+    write_deltalake(
+        spark, docs, uri, partition_by=["source"], max_records_per_file=200,
+        configuration={"delta.enableDeletionVectors": "false"},
+    )
+    return DeltaTable(uri)
+
+
+def test_delete_basic(spark, cow_doc_table, docs):
+    doc_table = cow_doc_table
     total = docs.count()
     to_delete = docs.filter("n_chars < 200").count()
     assert 0 < to_delete < total

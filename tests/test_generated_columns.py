@@ -23,7 +23,8 @@ def _mk(spark, path, **kw):
 
 
 def test_create_computes_and_annotates(spark, tmp_path):
-    t = _mk(spark, str(tmp_path))
+    # deletion vectors off: generated columns alone need only (1, 4)
+    t = _mk(spark, str(tmp_path), configuration={"delta.enableDeletionVectors": "false"})
     assert t.protocol_versions() == (1, 4)
     assert gen.expressions(t.schema()) == {"event_date": "CAST(ts AS DATE)"}
     rows = {r.id: str(r.event_date) for r in t.to_df(spark).collect()}
@@ -123,6 +124,7 @@ def test_generated_with_row_tracking_and_mapping(spark, tmp_path):
         configuration={
             "delta.enableRowTracking": "true",
             "delta.columnMapping.mode": "name",
+            "delta.enableDeletionVectors": "false",  # reader 2: no reader-visible feature
         },
     )
     assert t.protocol_versions() == (2, 7)

@@ -20,7 +20,8 @@ def multi_commit_table(spark, tmp_path, sf_dir):
     """Versions 0..6: creation + 5 appends + a delete (mixed action shapes)."""
     df = spark.read.parquet(os.path.join(sf_dir, "region.parquet"))
     uri = str(tmp_path / "t")
-    write_deltalake(spark, df, uri)
+    # copy-on-write, so the delete commits a remove + add
+    write_deltalake(spark, df, uri, configuration={"delta.enableDeletionVectors": "false"})
     for _ in range(5):
         write_deltalake(spark, df.limit(2), uri, mode="append")
     t = DeltaTable(uri)

@@ -31,7 +31,8 @@ def _mk(spark, path, n=10, configuration=CFG):
 
 
 def test_fresh_ids_and_protocol(spark, tmp_path):
-    t = _mk(spark, str(tmp_path))
+    # deletion vectors off: row tracking alone needs only (1, 7)
+    t = _mk(spark, str(tmp_path), configuration={**CFG, "delta.enableDeletionVectors": "false"})
     assert t.protocol_versions() == (1, 7)
     assert set(rt.FEATURES) <= set(t.snapshot.state.writer_features)
     ids = _ids(spark, t)
@@ -127,7 +128,8 @@ def test_checkpoint_roundtrips_domain_and_ids(spark, tmp_path):
 
 
 def test_enable_row_tracking_backfills_existing_rows(spark, tmp_path):
-    t = _mk(spark, str(tmp_path), configuration=None)
+    # deletion vectors off: the upgrade starts from the legacy (1, 2)
+    t = _mk(spark, str(tmp_path), configuration={"delta.enableDeletionVectors": "false"})
     assert t.protocol_versions() == (1, 2)
     t.enable_row_tracking()
     t = DeltaTable.for_path(str(tmp_path))
@@ -148,7 +150,8 @@ def test_set_properties_rejects_raw_flag(spark, tmp_path):
 def test_row_tracking_with_column_mapping(spark, tmp_path):
     t = _mk(
         spark, str(tmp_path),
-        configuration={**CFG, "delta.columnMapping.mode": "name"},
+        # deletion vectors off: reader 2, no reader-visible feature
+        configuration={**CFG, "delta.columnMapping.mode": "name", "delta.enableDeletionVectors": "false"},
     )
     assert t.protocol_versions() == (2, 7)
     wf = set(t.snapshot.state.writer_features)

@@ -175,14 +175,16 @@ def test_alter_table_add_columns_and_tblproperties(spark, tmp_path):
         r["key"]: r["value"]
         for r in sql(spark, f"SHOW TBLPROPERTIES delta.`{uri}`").collect()
     }
-    assert props == {"owner": "ml", "tier": "gold"}
+    # new tables carry the deletion-vector default in their configuration
+    dv = {"delta.enableDeletionVectors": "true"}
+    assert props == {"owner": "ml", "tier": "gold", **dv}
 
     sql(spark, f"ALTER TABLE delta.`{uri}` UNSET TBLPROPERTIES ('owner')")
     props = {
         r["key"]: r["value"]
         for r in sql(spark, f"SHOW TBLPROPERTIES delta.`{uri}`").collect()
     }
-    assert props == {"tier": "gold"}
+    assert props == {"tier": "gold", **dv}
 
 
 def test_alter_table_constraint_roundtrip(spark, tmp_path):

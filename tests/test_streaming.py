@@ -166,7 +166,12 @@ def test_stream_source_skip_change_commits_and_ignore_deletes(spark, tmp_path):
     from delta_rs_spark.streaming.source import DeltaStreamReader
 
     uri = str(tmp_path / "scc_tbl")
-    _mk_table(spark, uri, 0, 5)                       # v0: 5 rows
+    write_deltalake(                                   # v0: 5 rows, copy-on-write
+        spark,
+        spark.range(0, 5).select(F.col("id"), (F.col("id") % 3).alias("bucket")),
+        uri,
+        configuration={"delta.enableDeletionVectors": "false"},
+    )
     t = DeltaTable(uri)
     t.delete(spark, "id = 1")                          # v1: rewrite (remove+add)
     write_deltalake(

@@ -345,7 +345,9 @@ def test_ict_enabled_mid_table_bumps_protocol(spark, tmp_path):
     from delta_rs_spark.writer import write_deltalake
 
     uri = str(tmp_path / "mid")
-    write_deltalake(spark, spark.range(0, 5).selectExpr("id"), uri)
+    write_deltalake(
+        spark, spark.range(0, 5).selectExpr("id"), uri, configuration={"delta.enableDeletionVectors": "false"}
+    )
     t = DeltaTable(uri)
     assert t.protocol_versions() == (1, 2)
 

@@ -20,7 +20,8 @@ from delta_rs_spark.protocol.log import DeltaLog
 def v2_table(spark, tmp_path, sf_dir):
     df = spark.read.parquet(os.path.join(sf_dir, "region.parquet"))
     uri = str(tmp_path / "t")
-    write_deltalake(spark, df, uri)
+    # a legacy (1, 2) table: enabling v2 checkpoints makes the lists mandatory
+    write_deltalake(spark, df, uri, configuration={"delta.enableDeletionVectors": "false"})
     for _ in range(3):
         write_deltalake(spark, df.limit(2), uri, mode="append")
     t = DeltaTable(uri)

@@ -19,7 +19,8 @@ def lineitem(spark, sf_dir):
 
 def test_create_and_read_back(spark, tmp_path, lineitem):
     uri = str(tmp_path / "t")
-    t = write_deltalake(spark, lineitem, uri)
+    # deletion vectors off: the table keeps the legacy (1, 2) protocol
+    t = write_deltalake(spark, lineitem, uri, configuration={"delta.enableDeletionVectors": "false"})
     assert t.version == 0
     assert t.protocol_versions() == (1, 2)
     n = lineitem.count()
@@ -201,7 +202,11 @@ def test_log_json_conforms_to_delta_vocabulary(spark, tmp_path, lineitem):
     import json
 
     uri = str(tmp_path / "conform")
-    write_deltalake(spark, lineitem.limit(100), uri, partition_by=["l_returnflag"])
+    # deletion vectors off: a legacy protocol action carries no feature lists
+    write_deltalake(
+        spark, lineitem.limit(100), uri, partition_by=["l_returnflag"],
+        configuration={"delta.enableDeletionVectors": "false"},
+    )
 
     actions = []
     with open(os.path.join(uri, "_delta_log", "00000000000000000000.json")) as f:
