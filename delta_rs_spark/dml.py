@@ -569,21 +569,30 @@ def _positions_by_file(keys: DataFrame) -> Optional[list]:
     """One aggregate over ``keys`` (``path`` = lineage file, ``row_index``,
     and optionally a boolean ``matched``): per file, the row count ``n``,
     the positions, and — with ``matched`` — ``n_matched``, the rows that
-    flag counts. Returns the collected rows, or None when the positions
+    flag counts. Returns the per-file rows, or None when the positions
     exceed ``DV_MAX_POSITIONS`` (the caller falls back to copy-on-write).
-    A file past the cap ships no positions, so the driver never receives
-    more than the cap from one file."""
-    n = F.count(F.lit(1))
-    aggs = [
-        n.alias("n"),
-        F.when(n <= DV_MAX_POSITIONS, F.collect_list("row_index")).alias("positions"),
-    ]
-    if "matched" in keys.columns:
-        aggs.append(F.sum(F.col("matched").cast("long")).alias("n_matched"))
-    rows = keys.groupBy("path").agg(*aggs).collect()
-    if sum(r["n"] for r in rows if r["path"] is not None) > DV_MAX_POSITIONS:
-        return None
-    return rows
+    The table-wide total is taken in the same query, over the per-file
+    rows, so past the cap no positions reach the driver."""
+    per_file = keys.groupBy("path").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.collect_list("row_index").alias("positions"),
+        *(
+            [F.sum(F.col("matched").cast("long")).alias("n_matched")]
+            if "matched" in keys.columns
+            else []
+        ),
+    )
+    # rows without a file (a merge's inserts) carry no positions; one
+    # partition of per-file rows needs no second shuffle (and so no job)
+    # for the total
+    total = F.sum(F.when(F.col("path").isNotNull(), F.col("n")))
+    out = per_file.coalesce(1).agg(
+        F.when(
+            F.coalesce(total, F.lit(0)) <= DV_MAX_POSITIONS,
+            F.collect_list(F.struct(*per_file.columns)),
+        ).alias("files")
+    )
+    return out.collect()[0]["files"]
 
 
 def _dv_swap_actions(log, candidates: list[AddAction], per_file_rows: list) -> tuple[list, dict, int]:

@@ -575,8 +575,11 @@ def q_widening_uniform_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = DeltaTable(uri)
     t.delete(spark, "doc_id % 9 = 3")  # merge-on-read: DV commit
     t = DeltaTable(uri)
-    # initial conversion incl. position-delete files
-    t.enable_uniform(keep_deletion_vectors=True)
+    # UniForm keeping the table's deletion vectors: the initial conversion
+    # mirrors them as Iceberg position-delete files
+    t.set_properties(
+        {"delta.universalFormat.enabledFormats": "iceberg", "delta.enableDeletionVectors": "true"}
+    )
     iceberg_rows = sum(f["record_count"] for f in t.iceberg_files())
     iceberg_deleted = sum(d["record_count"] for d in read_delete_files(uri))
 

@@ -260,9 +260,12 @@ class Snapshot:
     # scan; the bitmap is a plan literal shipped with every task, so larger
     # ones take the positions anti join instead
     DV_BITMAP_MAX_BYTES = 4 * 1024 * 1024
-    # scans up to this size read plain and DV'd files as one filtered scan
-    DV_SHARED_SCAN_MAX_FILES = 32
-    DV_SHARED_SCAN_MAX_ROWS = 1_000_000
+    # and for scans of at most this many files: the filter finds a row's
+    # bitmap by a linear search of the scanned files' names, so its per-row
+    # cost grows with them. Against the anti join (4 cores, 1,000–2,400-row
+    # files): every file DV'd, 1.7× faster at 128 files, 1.4× slower at
+    # 1,024; one file DV'd, 11% faster at 84 files, 5% slower at 256
+    DV_IN_SCAN_MAX_FILES = 128
 
     # a DV positions side small enough to broadcast, measured in BYTES from
     # the descriptors' sizeInBytes (parquet-compressed positions expand a few
@@ -304,7 +307,8 @@ class Snapshot:
         Used by to_df (after pruning) and by DML, which reads only the files
         it must rewrite. Files carrying a deletion vector drop their deleted
         positions inside the scan (a bitmap test on ``_metadata.row_index``,
-        see ``_dv_keep_predicate``); plain files keep the bare-scan plan.
+        see ``_dv_keep_predicate``) that files without one share; with no
+        deletion vector in ``adds`` the scan is bare.
         ``with_lineage=True`` appends ``_drs_file`` (the
         add's log path) and ``_drs_pos`` (row index within the file) — the
         row identity DML and merge-on-read DELETE key on.
@@ -330,56 +334,37 @@ class Snapshot:
                 df = df.withColumn(rt.ROW_CV_COL, F.lit(None).cast("long"))
             return df.select(*(columns or df.columns))
 
-        dv_adds = [a for a in adds if a.deletion_vector]
-        plain = [a for a in adds if not a.deletion_vector]
-        keep = None
-        if dv_adds:
-            # a small scan reads its plain files through the filtered scan
-            # too, each with an empty bitmap: the filter's per-row cost grows
-            # with the files it names, while a union of two scans costs a
-            # fixed ~90 ms of planning and scheduling
-            rows = [a.num_records for a in adds]
-            shared = (
-                len(adds) <= self.DV_SHARED_SCAN_MAX_FILES
-                and None not in rows
-                and sum(rows) <= self.DV_SHARED_SCAN_MAX_ROWS
-            )
-            keep = self._dv_keep_predicate(adds if shared else dv_adds)
-            if keep is not None and shared:
-                dv_adds, plain = list(adds), []
-
         mat_cols = [c for c in (mat_id, mat_cv) if c]
-        parts: list[DataFrame] = []
-        if plain:
-            parts.append(
-                self._scan(spark, plain, include_lineage=need_lineage, mat_cols=mat_cols)
+        dv_adds = [a for a in adds if a.deletion_vector]
+        # files with and without a deletion vector share one filtered scan
+        # (a union of two scans costs more than the filter); past the
+        # filter's bounds the DV'd files anti-join their positions
+        keep = self._dv_keep_predicate(adds) if dv_adds else None
+        if keep is not None or not dv_adds:
+            df = self._scan(
+                spark, adds, include_lineage=need_lineage, mat_cols=mat_cols,
+                row_filter=keep,
             )
-        if dv_adds:
-            if keep is not None:
+        else:
+            df = self._scan(spark, dv_adds, include_lineage=True, mat_cols=mat_cols)
+            df = self._anti_join_deleted_positions(spark, df, dv_adds)
+            if not need_lineage:
+                df = df.drop(self.FILE_LINEAGE_COL, self.POS_LINEAGE_COL)
+            plain = [a for a in adds if not a.deletion_vector]
+            if plain:
                 df = self._scan(
-                    spark, dv_adds, include_lineage=need_lineage,
-                    mat_cols=mat_cols, row_filter=keep,
-                )
-            else:
-                df = self._scan(spark, dv_adds, include_lineage=True, mat_cols=mat_cols)
-                df = self._anti_join_deleted_positions(spark, df, dv_adds)
-                if not need_lineage:
-                    df = df.drop(self.FILE_LINEAGE_COL, self.POS_LINEAGE_COL)
-            parts.append(df)
+                    spark, plain, include_lineage=need_lineage, mat_cols=mat_cols
+                ).unionByName(df)
 
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-
+        # every scan yields the table's columns in order, then lineage when
+        # asked; only row ids need a final projection (each one costs a
+        # round of analysis, a fixed share of a point lookup)
         if with_row_ids:
             df = self._attach_row_ids(spark, df, adds, mat_id, mat_cv)
-
-        out_cols = list(table_schema.names)
-        if with_lineage:
-            out_cols += [self.FILE_LINEAGE_COL, self.POS_LINEAGE_COL]
-        if with_row_ids:
-            out_cols += [rt.ROW_ID_COL, rt.ROW_CV_COL]
-        df = df.select(*out_cols)
+            out_cols = list(table_schema.names)
+            if with_lineage:
+                out_cols += [self.FILE_LINEAGE_COL, self.POS_LINEAGE_COL]
+            df = df.select(*out_cols, rt.ROW_ID_COL, rt.ROW_CV_COL)
         if columns:
             df = df.select(*columns)
         return df
@@ -528,10 +513,10 @@ class Snapshot:
                 [self._readable(a.path) for a in adds],
                 row_filter,
             )
-            cols = list(table_schema.names) + list(mat_cols)
             if include_lineage:
+                cols = list(table_schema.names) + list(mat_cols)
                 return df.select(*cols, *self._lineage_exprs())
-            return df.select(*cols)
+            return df  # already the table's columns, then mat_cols
         return self._read_partitioned(
             spark, adds, include_lineage=include_lineage, mat_cols=mat_cols,
             row_filter=row_filter,
@@ -562,15 +547,18 @@ class Snapshot:
         the file's words by ``_metadata.file_name`` and tests bit
         ``row_index`` — a few codegen'd operations in the scan's own stage:
         no extra job, no shuffle, no join. A scanned file missing from the
-        map fails the scan rather than resurrect its deleted rows. The
-        literal grows with the rows the deletes span, so bitmaps past
-        ``DV_BITMAP_MAX_BYTES`` (or two scanned files sharing a name) fall
-        back to the anti join. Built as one SQL expression: one call into
-        the JVM instead of one per operator."""
+        map fails the scan rather than resurrect its deleted rows. The map
+        lookup is a linear search over the names and the literal grows with
+        the rows the deletes span, so more than ``DV_IN_SCAN_MAX_FILES``
+        files, bitmaps past ``DV_BITMAP_MAX_BYTES`` or two files sharing a
+        name fall back to the anti join. Built as one SQL expression: one
+        call into the JVM instead of one per operator."""
         import json
 
         from .dv import add_positions, bitmap_words
 
+        if len(adds) > self.DV_IN_SCAN_MAX_FILES:
+            return None
         names = [self._readable(a.path).rsplit("/", 1)[-1] for a in adds]
         if len(set(names)) < len(names):
             return None
@@ -672,7 +660,8 @@ class Snapshot:
                 if mapped:
                     df = df.select(*cm.to_logical_exprs(schema), *lineage)
                     return df
-                return df.select(*schema.names, *lineage) if lineage else df
+                # Spark puts discovered partition columns last
+                return df.select(*schema.names, *lineage)
 
         scan_data_schema = self._with_mat_fields(
             cm.physical_schema(data_schema) if mapped else data_schema, mat_cols

@@ -1025,7 +1025,22 @@ class DeltaTable:
             "checkpointProtection": ("writer",),
         }
         from .protocol import dv
+        from .uniform import iceberg as ub
 
+        if ub.enabled(properties) and dv.ENABLE_KEY not in properties:
+            # IcebergCompat: the Iceberg mirror is enabled with deletion
+            # vectors off, and only once live ones are materialized; setting
+            # both properties in one call keeps DVs, mirrored as Iceberg
+            # position deletes
+            if self._snapshot.files().dv_count():
+                raise ValueError(
+                    "table has live deletion vectors; run reorg_purge() to "
+                    "materialize them before enabling UniForm, or set "
+                    f"{dv.ENABLE_KEY}=true in the same call to mirror them "
+                    "as Iceberg position deletes"
+                )
+            if dv.enabled(self.metadata().configuration):
+                properties = {**properties, dv.ENABLE_KEY: "false"}
         bumps_r, bumps_w = [], []
         if dv.enabled(properties):
             # reader-visible: the feature rides the property's commit, so
@@ -1175,38 +1190,19 @@ class DeltaTable:
 
     checkpoint_interval: int = 10  # reference lambda policy: every 10th version
 
-    def enable_uniform(
-        self, format: str = "iceberg", keep_deletion_vectors: bool = False
-    ) -> int:
+    def enable_uniform(self, format: str = "iceberg") -> int:
         """UniForm: mirror the Delta log as Apache Iceberg metadata under
         ``<table>/metadata/`` so Iceberg engines read the same parquet files
         (public ``delta.universalFormat.enabledFormats``; parity-plus — the
         reference predates UniForm). Sets the property and runs the first
         conversion; afterwards every commit's post-hook syncs incrementally.
-
-        Deletion vectors follow Delta's IcebergCompat rule: the same commit
-        turns ``delta.enableDeletionVectors`` off, and a table with live
-        DVs is refused until ``reorg_purge`` materializes them.
-        ``keep_deletion_vectors=True`` keeps them instead, mirrored as
-        Iceberg v2 position-delete files — only for Iceberg readers that
-        apply position deletes."""
+        Deletion vectors follow ``set_properties``' IcebergCompat rule: the
+        same commit turns them off, and live ones must be purged first."""
         if format != "iceberg":
             raise ValueError("only the iceberg universal format is supported")
-        from .protocol import dv
         from .uniform import iceberg as ub
 
-        props = {ub.ENABLE_KEY: "iceberg"}
-        if not keep_deletion_vectors:
-            if self._snapshot.files().dv_count():
-                raise ValueError(
-                    "table has live deletion vectors; run reorg_purge() to "
-                    "materialize them before enabling UniForm (or pass "
-                    "keep_deletion_vectors=True to mirror them as Iceberg "
-                    "position deletes)"
-                )
-            if dv.enabled(self.metadata().configuration):
-                props[dv.ENABLE_KEY] = "false"
-        v = self.set_properties(props)
+        v = self.set_properties({ub.ENABLE_KEY: "iceberg"})
         # the property commit's post-hook already ran the initial conversion
         # (best-effort, warning on failure). convert_snapshot is idempotent
         # per version (early-returns when the tree is current), so this call

@@ -542,10 +542,11 @@ def test_dv_read_plan_filters_positions_in_scan(spark, tmp_path):
     assert df.filter("k = 2").count() == 0
 
 
-def test_dv_small_scan_reads_plain_files_in_the_same_scan(spark, tmp_path, monkeypatch):
-    """A small scan reads files without a DV through the filtered scan
-    too (one scan, no union); past ``DV_SHARED_SCAN_MAX_FILES`` they get
-    their own unfiltered scan. Both return the same rows."""
+def test_dv_many_files_fall_back_to_broadcast_anti_join(spark, tmp_path, monkeypatch):
+    """Up to ``DV_IN_SCAN_MAX_FILES`` scanned files, files with and without
+    a DV share one filtered scan (no union, no join); past it the DV'd
+    files anti-join their positions and the plain ones get their own
+    scan. Both sides return the same rows."""
     from delta_rs_spark.protocol.snapshot import Snapshot
 
     path = str(tmp_path / "t")
@@ -565,10 +566,13 @@ def test_dv_small_scan_reads_plain_files_in_the_same_scan(spark, tmp_path, monke
         plan = df._jdf.queryExecution().executedPlan().toString()
         return plan, sorted(r.id for r in df.collect())
 
+    monkeypatch.setattr(Snapshot, "DV_IN_SCAN_MAX_FILES", len(adds))
     plan, ids = plan_and_ids()
-    assert "Union" not in plan and ids == want
-    monkeypatch.setattr(Snapshot, "DV_SHARED_SCAN_MAX_FILES", len(adds) - 1)
+    assert "Join" not in plan and "Union" not in plan and "row_index" in plan
+    assert ids == want
+    monkeypatch.setattr(Snapshot, "DV_IN_SCAN_MAX_FILES", len(adds) - 1)
     plan, ids = plan_and_ids()
+    assert "BroadcastNestedLoopJoin" not in plan and "Broadcast" in plan
     assert "Union" in plan and ids == want
 
 
@@ -665,6 +669,35 @@ def test_enable_uniform_turns_deletion_vectors_off(spark, tmp_path):
     res = t.delete(spark, "k = 2")
     assert res["numAddedFiles"] > 0  # copy-on-write again
     assert not any(a.deletion_vector for a in DeltaTable.for_path(path).add_actions())
+
+
+def test_sql_uniform_property_follows_the_same_rule(spark, tmp_path):
+    """The SQL route to UniForm (ALTER TABLE SET TBLPROPERTIES) goes
+    through ``set_properties`` and so follows the same IcebergCompat rule;
+    setting both properties keeps the deletion vectors."""
+    from delta_rs_spark.sql import sql as dsql
+
+    def alter(path, props):
+        kv = ", ".join(f"'{k}'='{v}'" for k, v in props.items())
+        dsql(spark, f"ALTER TABLE delta.`{path}` SET TBLPROPERTIES ({kv})")
+
+    uniform = {"delta.universalFormat.enabledFormats": "iceberg"}
+    path = str(tmp_path / "t")
+    _make_table(spark, path).delete(spark, "k = 1")
+    with pytest.raises(ValueError, match="reorg_purge"):
+        alter(path, uniform)
+    DeltaTable.for_path(path).reorg_purge(spark)
+    alter(path, uniform)
+    cfg = DeltaTable.for_path(path).metadata().configuration
+    assert cfg["delta.enableDeletionVectors"] == "false"
+    assert cfg["delta.universalFormat.enabledFormats"] == "iceberg"
+
+    kept = str(tmp_path / "kept")
+    _make_table(spark, kept).delete(spark, "k = 1")
+    alter(kept, {**uniform, "delta.enableDeletionVectors": "true"})
+    t = DeltaTable.for_path(kept)
+    assert t.metadata().configuration["delta.enableDeletionVectors"] == "true"
+    assert t.delete(spark, "k = 2")["numDeletionVectorsAdded"] >= 1
 
 
 def test_dv_merge_does_not_resurrect_deleted_rows(spark, tmp_path):

@@ -602,6 +602,41 @@ def test_merge_mor_falls_back_to_cow_over_position_cap(spark, tmp_path, monkeypa
     assert not any(a.deletion_vector for a in t2.snapshot.files())
 
 
+def test_mor_delete_over_total_cap_ships_no_positions(spark, tmp_path, monkeypatch):
+    """The position cap bounds the table-wide total before anything reaches
+    the driver: a DELETE whose every file stays under DV_MAX_POSITIONS but
+    whose total exceeds it collects no positions and rewrites instead."""
+    import delta_rs_spark.dml as dml_mod
+
+    uri = str(tmp_path / "t")
+    write_deltalake(
+        spark,
+        spark.range(0, 400).selectExpr("id", "id % 10 AS k").repartitionByRange(4, "id"),
+        uri,
+    )
+    assert len(DeltaTable(uri).add_actions()) == 4
+    # 4 files × 50 matching rows: each under the cap, the 200 total over it
+    monkeypatch.setattr(dml_mod, "DV_MAX_POSITIONS", 120)
+    collected = []
+    frame_cls = type(spark.range(1))
+    real_collect = frame_cls.collect
+
+    def spy(self):
+        rows = real_collect(self)
+        collected.extend(r for r in rows if "files" in r.asDict())
+        return rows
+
+    monkeypatch.setattr(frame_cls, "collect", spy)
+    res = DeltaTable(uri).delete(spark, "k < 5")
+    assert collected and all(r["files"] is None for r in collected)
+    assert res["numDeletedRows"] == 200
+    t2 = DeltaTable(uri)
+    assert not any(a.deletion_vector for a in t2.snapshot.files())
+    assert sorted(r.id for r in t2.to_df(spark).collect()) == [
+        i for i in range(400) if i % 10 >= 5
+    ]
+
+
 def test_mor_update_preserves_row_ids(spark, tmp_path):
     """Merge-on-read UPDATE must keep each updated row's _row_id (values
     change, identity does not) — same contract as copy-on-write."""

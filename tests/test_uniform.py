@@ -639,6 +639,15 @@ def test_post_enable_writes_carry_parquet_field_ids(spark, tmp_path, events):
         assert md.get(b"PARQUET:field_id") == expect[name], name
 
 
+# UniForm that keeps the table's deletion vectors, mirrored as Iceberg
+# position deletes: both properties in one call (IcebergCompat otherwise
+# turns DVs off)
+_UNIFORM_KEEPING_DVS = {
+    "delta.universalFormat.enabledFormats": "iceberg",
+    "delta.enableDeletionVectors": "true",
+}
+
+
 def _dv_table(spark, tmp_path, events):
     uri = str(tmp_path / "t")
     write_deltalake(
@@ -658,7 +667,7 @@ def test_dv_delete_emits_iceberg_position_deletes(spark, tmp_path, events):
     from delta_rs_spark.uniform import read_delete_files
 
     uri, t = _dv_table(spark, tmp_path, events)
-    t.enable_uniform(keep_deletion_vectors=True)
+    t.set_properties(_UNIFORM_KEEPING_DVS)
     t.delete(spark, "r_regionkey IN (1, 3)")  # MoR: DV commit, no rewrite
     t.update()
     assert any(a.deletion_vector for a in t.add_actions())  # really MoR
@@ -687,7 +696,7 @@ def test_dv_swap_purges_stale_position_deletes(spark, tmp_path, events):
     from delta_rs_spark.uniform import read_delete_files
 
     uri, t = _dv_table(spark, tmp_path, events)
-    t.enable_uniform(keep_deletion_vectors=True)
+    t.set_properties(_UNIFORM_KEEPING_DVS)
     t.delete(spark, "r_regionkey = 1")
     t = DeltaTable(uri)
     t.delete(spark, "r_regionkey = 3")
@@ -707,7 +716,7 @@ def test_convert_iceberg_with_deletes_to_delta(spark, tmp_path, events):
     from delta_rs_spark.uniform import convert_iceberg_to_delta
 
     uri, t = _dv_table(spark, tmp_path, events)
-    t.enable_uniform(keep_deletion_vectors=True)
+    t.set_properties(_UNIFORM_KEEPING_DVS)
     t.delete(spark, "r_regionkey IN (0, 2)")
     t.update()
     expected = sorted(r["r_regionkey"] for r in t.to_df(spark).collect())
@@ -892,7 +901,7 @@ def test_reorg_purge_syncs_iceberg_deletes_away(spark, tmp_path, events):
     from delta_rs_spark.uniform import read_delete_files
 
     uri, t = _dv_table(spark, tmp_path, events)
-    t.enable_uniform(keep_deletion_vectors=True)
+    t.set_properties(_UNIFORM_KEEPING_DVS)
     t.delete(spark, "r_regionkey IN (1, 3)")  # MoR: DV commit
     t = DeltaTable(uri)
     assert len(read_delete_files(uri)) == 1
