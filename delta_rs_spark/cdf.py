@@ -280,18 +280,23 @@ def write_change_files(
     change_df: DataFrame,
     table_schema=None,
     configuration=None,
+    n_rows=None,
 ) -> list[CdcAction]:
     """Stage ``change_df`` (table columns + _change_type) as parquet and move
     it under ``_change_data/``; returns the cdc actions to commit. Executors
     write; the driver only renames. Column-mapped tables write change files
-    under physical names (same rule as data files)."""
-    import os
+    under physical names (same rule as data files). ``n_rows``, when the
+    caller knows it, sets the write tasks as for data files
+    (``writer.write_tasks``)."""
     import uuid
 
     from .protocol import column_mapping as cm
+    from .writer import write_tasks
 
     if table_schema is not None and cm.is_mapped(configuration):
         change_df = cm.to_physical_df(change_df, table_schema)
+    if n_rows is not None:
+        change_df = change_df.coalesce(write_tasks(n_rows))
 
     staging = log.data_plane.stage_dir("cdc")
     change_df.write.mode("overwrite").parquet(staging)

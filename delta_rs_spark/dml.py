@@ -56,6 +56,7 @@ from .protocol.actions import AddAction, RemoveAction
 from .protocol.stats import SkipTuple
 from .table import DeltaTable
 from .transactions import DeltaTransaction
+from .writer import check_constraints, stage_rows
 
 
 class DMLError(Exception):
@@ -326,6 +327,8 @@ def _stage_and_swap(
     identity_assigned: Optional[dict] = None,
     reads: Optional[dict[str, Any]] = None,
     schema_override=None,
+    n_rows: Optional[int] = None,
+    n_change_rows: Optional[int] = None,
 ) -> dict[str, Any]:
     """Write ``new_rows`` through the staged-write path and commit
     Remove(removed) + Add(staged) (+ cdc change files, when given) as one
@@ -333,12 +336,17 @@ def _stage_and_swap(
     same commit evolves it (MERGE schema evolution) — the physical rename
     for column-mapped tables must use the evolved mapping or the evolved
     columns' data would be written under unmapped names and read back
-    NULL."""
+    NULL. ``n_rows`` / ``n_change_rows``, when the caller knows them, size
+    the data and change files (``writer.stage_rows``)."""
     log = table.log
     schema = schema_override if schema_override is not None else table.schema()
     cfg = table.metadata().configuration
-    adds = _stage_rows(
-        spark, table, new_rows, schema=schema, max_records_per_file=max_records_per_file
+    # CHECK constraints apply to the rewritten content (UPDATE/MERGE can
+    # introduce violations; DELETE survivors pass trivially)
+    check_constraints(new_rows, cfg, schema=schema)
+    adds = stage_rows(
+        spark, log, new_rows, schema, cfg, table.metadata().partition_columns,
+        n_rows=n_rows, max_records_per_file=max_records_per_file,
     )
 
     cdc_actions: list = []
@@ -346,7 +354,8 @@ def _stage_and_swap(
         from .cdf import write_change_files
 
         cdc_actions = write_change_files(
-            spark, log, change_rows, table_schema=schema, configuration=cfg
+            spark, log, change_rows, table_schema=schema,
+            configuration=cfg, n_rows=n_change_rows,
         )
 
     now_ms = int(time.time() * 1000)
@@ -549,6 +558,7 @@ def _delete_merge_on_read(
                 spark, log, change_rows,
                 table_schema=table.schema(),
                 configuration=table.metadata().configuration,
+                n_rows=n_deleted,
             )
             + actions
         )
@@ -846,6 +856,8 @@ def delete(
         {"numDeletedRows": n_deleted, "numCopiedRows": n_copied if n_copied is not None else ""},
         change_rows=change_rows,
         reads=reads,
+        n_rows=n_copied,
+        n_change_rows=n_deleted,
     )
 
 
@@ -921,7 +933,11 @@ def _update_merge_on_read(
                 "numUpdatedRows": 0,
             }
 
-        new_adds = _stage_rows(spark, table, updated_rows, n_rows=n_updated)
+        check_constraints(updated_rows, cfg, schema=schema)
+        new_adds = stage_rows(
+            spark, log, updated_rows, schema, cfg,
+            table.metadata().partition_columns, n_rows=n_updated,
+        )
 
         if cdf_enabled(table):
             pre = matched_df.select(*schema.names).withColumn(
@@ -933,8 +949,7 @@ def _update_merge_on_read(
             actions = (
                 write_change_files(
                     spark, log, pre.unionByName(post),
-                    table_schema=schema,
-                    configuration=table.metadata().configuration,
+                    table_schema=schema, configuration=cfg, n_rows=2 * n_updated,
                 )
                 + actions
             )
@@ -952,70 +967,6 @@ def _update_merge_on_read(
         return {"version": version, **{k: int(v) for k, v in metrics.items()}}
     finally:
         matched_df.unpersist()
-
-
-# merge-on-read writes only changed rows, whose count the positions
-# aggregate already gave: one write task per this many rows, so a small
-# upsert adds one file instead of one per source partition
-MOR_ROWS_PER_FILE = 1_000_000
-
-
-def _stage_rows(
-    spark: SparkSession,
-    table: DeltaTable,
-    rows: DataFrame,
-    schema=None,
-    max_records_per_file: Optional[int] = None,
-    n_rows: Optional[int] = None,
-) -> list:
-    """Write ``rows`` through the staged-write path (CHECK constraints,
-    per-file footer stats, partition layout, physical names on
-    column-mapped tables, parquet field ids under UniForm) and return their
-    Add actions. ``schema`` is the POST-commit table schema when the same
-    commit evolves it (MERGE schema evolution): the physical rename must use
-    the evolved mapping, or the evolved columns would be written under
-    unmapped names and read back NULL. ``n_rows``, when the caller knows
-    it, sets the number of write tasks (``MOR_ROWS_PER_FILE``)."""
-    from .protocol import column_mapping as cm
-    from .protocol import identity as _idc
-    from .writer import _promote_staged_files, check_constraints, data_skipping_columns
-
-    log = table.log
-    pcols = table.metadata().partition_columns
-    if schema is None:
-        schema = table.schema()
-    cfg = table.metadata().configuration
-    # CHECK constraints apply to the rewritten content (UPDATE/MERGE can
-    # introduce violations; DELETE survivors pass trivially)
-    check_constraints(rows, cfg, schema=schema)
-    stats_cols = data_skipping_columns(cfg, schema.names)
-    _idn = set(_idc.specs(schema))
-    if _idn and stats_cols is not None:
-        stats_cols = stats_cols | _idn  # water marks read these footer stats
-    # column-mapped tables store PHYSICAL names in data files, partition
-    # dirs, and stats; the frame stays logical until this last hop
-    if cm.is_mapped(cfg):
-        rows = cm.to_physical_df(rows, schema)
-        phys = cm.top_level_physical(schema)
-        pcols = [phys[c] for c in pcols]
-        if stats_cols is not None:
-            stats_cols = {phys.get(c, c) for c in stats_cols}
-    elif table._uniform_enabled():
-        from .uniform.iceberg import attach_parquet_field_ids
-
-        rows = attach_parquet_field_ids(rows, schema)
-    if n_rows is not None:
-        rows = rows.coalesce(max(1, -(-n_rows // MOR_ROWS_PER_FILE)))
-    staging = log.data_plane.stage_dir("commit")
-    writer = rows.write.mode("overwrite")
-    if pcols:
-        writer = writer.partitionBy(*pcols)
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
-    writer.parquet(staging)
-    return _promote_staged_files(
-        spark, log, staging, pcols, stats_columns=stats_cols
-    )
 
 
 def update(
@@ -1112,6 +1063,8 @@ def update(
         )
         change_rows = pre.unionByName(post)
 
+    # every row of the matched files is rewritten (DV-net counts)
+    totals = [a.logical_records for a in matched]
     return _stage_and_swap(
         spark,
         table,
@@ -1122,6 +1075,8 @@ def update(
         {"numUpdatedRows": n_updated},
         change_rows=change_rows,
         reads=reads,
+        n_rows=sum(totals) if None not in totals else None,
+        n_change_rows=2 * n_updated,
     )
 
 
@@ -1272,8 +1227,11 @@ def _merge_merge_on_read(
             new_rows = _gen.recompute(
                 staged.filter(written).select("__matched", *schema.names, *mat_cols), schema
             )
-            new_adds = _stage_rows(
-                spark, table, new_rows.drop("__matched"), n_rows=n_updated + n_inserted
+            new_rows_out = new_rows.drop("__matched")
+            check_constraints(new_rows_out, cfg_m, schema=schema)
+            new_adds = stage_rows(
+                spark, log, new_rows_out, schema, cfg_m,
+                table.metadata().partition_columns, n_rows=n_updated + n_inserted,
             )
 
         if track:
@@ -1299,8 +1257,9 @@ def _merge_merge_on_read(
             actions = (
                 write_change_files(
                     spark, log, change_rows,
-                    table_schema=schema,
-                    configuration=table.metadata().configuration,
+                    table_schema=schema, configuration=cfg_m,
+                    # every killed position, plus post-images and inserts
+                    n_rows=sum(per_file.values()) + n_updated + n_inserted,
                 )
                 + actions
             )
@@ -1660,6 +1619,8 @@ def merge(
             )
         )
 
+    # rewritten files keep their live rows, less the deleted ones
+    totals = [a.logical_records for a in rewrite]
     try:
         new_rows = _genm.recompute(new_rows, schema)
         return _stage_and_swap(
@@ -1681,6 +1642,10 @@ def merge(
             # evolved commits must stage under the EVOLVED mapping: the new
             # columns' physical names exist only in evo_schema
             schema_override=evo_schema,
+            n_rows=(
+                sum(totals) - n_deleted + n_inserted if None not in totals else None
+            ),
+            n_change_rows=n_deleted + 2 * n_updated + n_inserted,
         )
     finally:
         if inserts is not None:

@@ -4,15 +4,19 @@ Flow (Spark equivalent of the reference's writer+transaction,
 ``rust/src/writer.rs:60-140`` and ``rust/src/delta.rs:1234-1298``):
 
 1. Executors write parquet via ``df.write.partitionBy(...)`` into a hidden
-   staging dir inside the table (``.tmp-commit-<uuid>/``) — full cluster
-   parallelism, Spark controls file sizing (``maxRecordsPerFile``).
+   staging dir inside the table (``.tmp-commit-<uuid>/``) — one function,
+   :func:`stage_rows`, for appends, overwrites and DML rewrites. A write
+   whose row count is known (pyarrow/pandas input, DML rewrites, change
+   files) runs ``ceil(rows / ROWS_PER_FILE)`` tasks, so a small write adds
+   one file per partition value, as the reference's writer does; a Spark
+   DataFrame of unknown size keeps its own partitioning.
 2. Per-file stats (numRecords/min/max/nullCount) come from the **parquet
-   footers** of the staged files — a distributed metadata-only pass, not a
-   second data scan. At 100 TB this matters: footers are KBs per file.
-3. Staged files are moved into place with fresh unique names
-   (``part-00000-<uuid>-c000.snappy.parquet``, hive partition dirs kept) —
-   renames on a filesystem; an object-store backend would instead write
-   directly with unique names (seam documented in protocol/storage.py).
+   footers** of the staged files, read on a driver thread pool — no second
+   data scan and no Spark job; footers are KBs per file.
+3. Staged files are published under fresh unique names
+   (``part-00000-<uuid>-c000.snappy.parquet``, hive partition dirs kept)
+   through the table's data plane (``protocol/dataio.py``): a rename on a
+   local filesystem, a server-side copy or an upload on object stores.
 4. The driver commits Add (+Remove for overwrite) actions through the
    optimistic-concurrency loop.
 
@@ -193,22 +197,24 @@ def write_deltalake(
     columns are filled with typed NULLs. ``"overwrite"`` (with
     ``mode='overwrite'`` only) replaces the schema wholesale.
     """
+    n_rows: Optional[int] = None
     if not isinstance(df, DataFrame):
         # migration ergonomics: the reference's writer surface takes pandas /
-        # pyarrow input — accept both and lift into Spark (driver-sized data
-        # by definition; big data arrives as a Spark DataFrame)
+        # pyarrow input — accept both and lift into Spark straight from
+        # Arrow, keeping the Arrow types (a pandas round trip turns a
+        # nullable int into double and narrows decimals to their values)
         import pandas as _pd
         import pyarrow as _pa
 
-        if isinstance(df, _pa.Table):
-            df = spark.createDataFrame(df.to_pandas())
-        elif isinstance(df, _pd.DataFrame):
-            df = spark.createDataFrame(df)
-        else:
+        if isinstance(df, _pd.DataFrame):
+            df = _pa.Table.from_pandas(df, preserve_index=False)
+        if not isinstance(df, _pa.Table):
             raise TypeError(
                 f"df must be a Spark DataFrame, pandas DataFrame, or pyarrow "
                 f"Table, got {type(df).__name__}"
             )
+        n_rows = df.num_rows
+        df = spark.createDataFrame(df)
 
     mode = mode.lower()
     if mode not in SAVE_MODES:
@@ -445,91 +451,35 @@ def write_deltalake(
             if new_meta is not None
             else table.schema()
         )
-        map_cfg = table.metadata().configuration
+        cfg_for_write = table.metadata().configuration
     else:
-        map_cfg = configuration or {}
+        cfg_for_write = configuration = dict(configuration or {})
         mapped_schema = declared_schema
-    mapping_on = cm.is_mapped(map_cfg)
+    mapping_on = cm.is_mapped(cfg_for_write)
     if mapping_on and not exists:
         mapped_schema, max_id = cm.assign_mapping(declared_schema)
-        configuration = dict(configuration or {})
         configuration[cm.MAX_ID_KEY] = str(max_id)
-    stage_df, stage_partition_by = df, list(partition_by or [])
-    if mapping_on:
-        stage_df = cm.to_physical_df(df, mapped_schema)
-        _phys = cm.top_level_physical(mapped_schema)
-        stage_partition_by = [_phys[c] for c in stage_partition_by]
+    # partitionValues and stats keys are physical names on mapped tables
+    # (dynamic overwrite and the identity water marks read them)
+    name_map = cm.top_level_physical(mapped_schema) if mapping_on else None
+    stage_partition_by = [
+        name_map[c] if name_map else c for c in partition_by or []
+    ]
 
-    # ---- 1. stage the data with Spark -------------------------------------
-    # optimizeWrite (public Delta property): one pre-write shuffle keyed on
-    # the partition columns, so each partition value is written by one task
-    # — a 1000-task job appending to 50 partitions produces 50 files, not
-    # 50,000. The small-files problem is cheaper to prevent at write time
-    # than to repair with OPTIMIZE later. No-op for unpartitioned tables
-    # (file count there is already bounded by input parallelism).
-    cfg_for_write = table.metadata().configuration if exists else configuration
-    if (
-        stage_partition_by
-        and str((cfg_for_write or {}).get("delta.autoOptimize.optimizeWrite", ""))
-        .lower()
-        == "true"
-    ):
-        stage_df = stage_df.repartition(*stage_partition_by)
-    if (
-        exists
-        and table._uniform_enabled()
-        and not cm.is_mapped(table.metadata().configuration)
-    ):
-        # UniForm: stamp Iceberg field ids into the parquet footers so the
-        # files are id-resolvable without the name mapping. Schema-evolving
-        # commits stamp against the POST-commit schema (new_meta) — stamping
-        # the old one would leave the evolved columns id-less, which Iceberg
-        # readers treat as absent
-        from .uniform.iceberg import attach_parquet_field_ids
-
-        # mapped_schema already holds the post-commit schema on this path
-        stage_df = attach_parquet_field_ids(stage_df, mapped_schema)
-    staging_dir = log.data_plane.stage_dir("commit")
-    writer = stage_df.write.mode("overwrite")
-    if stage_partition_by:
-        writer = writer.partitionBy(*stage_partition_by)
-    if max_records_per_file:
-        writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
-    writer.parquet(staging_dir)
-
-    # ---- 2+3. stats from footers, move into place ----------------------------
-    # property semantics: the first N columns of the TABLE schema (not the
-    # incoming frame's column order)
-    if exists:
-        effective_cfg = table.metadata().configuration
-        schema_order = table.schema().names
-    else:
-        effective_cfg, schema_order = configuration, df.schema.names
-    stats_cols = data_skipping_columns(effective_cfg, schema_order)
-    _id_specs_all = idc.specs(
-        table.schema() if exists else declared_schema
-    )
-    if _id_specs_all and stats_cols is not None:
-        # water marks (this write's update AND a later SYNC IDENTITY over
-        # explicit inserts) read the identity columns' footer min/max —
-        # always collect them even when dataSkippingNumIndexedCols excludes
-        stats_cols = stats_cols | set(_id_specs_all)
-    if mapping_on and stats_cols is not None:
-        stats_cols = {_phys.get(c, c) for c in stats_cols}
-    adds = _promote_staged_files(
+    # ---- 1-3. stage with Spark, stats from footers, move into place -------
+    adds = stage_rows(
         spark,
         log,
-        staging_dir,
-        stage_partition_by,
-        stats_columns=stats_cols,
+        df,
+        mapped_schema,
+        cfg_for_write,
+        partition_by,
+        n_rows=n_rows,
+        max_records_per_file=max_records_per_file,
     )
     id_marks: dict[str, int] = {}
     if id_assigned:
-        id_marks = idc.advanced_water_marks(
-            id_assigned,
-            adds,
-            name_map=cm.top_level_physical(mapped_schema) if mapping_on else None,
-        )
+        id_marks = idc.advanced_water_marks(id_assigned, adds, name_map=name_map)
 
     # ---- 4. commit -------------------------------------------------------------
     params = {
@@ -1014,6 +964,72 @@ def data_skipping_columns(
     if n < 0 or n >= len(schema_names):
         return None
     return set(schema_names[:n])
+
+
+# one write task per this many rows when the writer knows the row count
+# (pyarrow/pandas input, DML rewrites, change files): a write under a
+# million rows adds one file per partition value instead of one per input
+# partition
+ROWS_PER_FILE = 1_000_000
+
+
+def write_tasks(n_rows: int) -> int:
+    """Write tasks for ``n_rows`` known rows: ``ceil(n_rows / ROWS_PER_FILE)``."""
+    return max(1, -(-n_rows // ROWS_PER_FILE))
+
+
+def stage_rows(
+    spark: SparkSession,
+    log: DeltaLog,
+    rows: DataFrame,
+    schema,
+    configuration: Optional[dict],
+    partition_by: Sequence[str],
+    n_rows: Optional[int] = None,
+    max_records_per_file: Optional[int] = None,
+) -> list[AddAction]:
+    """Write ``rows`` (logical column names) as new data files of the table
+    and return their Add actions, with stats from the staged footers.
+
+    ``schema`` and ``configuration`` are the table's as of the commit the
+    files join — the evolved schema when that commit evolves it, so evolved
+    columns get their physical names and field ids. Column-mapped tables
+    write physical names; UniForm tables stamp Iceberg field ids. Stats
+    cover the first ``delta.dataSkippingNumIndexedCols`` columns plus the
+    identity columns, whose water marks read them. ``optimizeWrite``
+    shuffles on the partition columns; otherwise ``n_rows``, when the
+    caller knows it, sets ``write_tasks(n_rows)`` tasks."""
+    from .protocol import identity as idc
+    from .uniform import iceberg as ub
+
+    cfg = configuration or {}
+    pcols = list(partition_by or [])
+    stats_cols = data_skipping_columns(cfg, schema.names)
+    id_cols = set(idc.specs(schema))
+    if id_cols and stats_cols is not None:
+        stats_cols |= id_cols
+    if cm.is_mapped(cfg):
+        rows = cm.to_physical_df(rows, schema)
+        phys = cm.top_level_physical(schema)
+        pcols = [phys[c] for c in pcols]
+        if stats_cols is not None:
+            stats_cols = {phys.get(c, c) for c in stats_cols}
+    elif ub.enabled(cfg):
+        rows = ub.attach_parquet_field_ids(rows, schema)
+    # optimizeWrite (public Delta property): each partition value is
+    # written by one task, whatever the input's partitioning
+    if pcols and str(cfg.get("delta.autoOptimize.optimizeWrite", "")).lower() == "true":
+        rows = rows.repartition(*pcols)
+    elif n_rows is not None:
+        rows = rows.coalesce(write_tasks(n_rows))
+    staging = log.data_plane.stage_dir("commit")
+    writer = rows.write.mode("overwrite")
+    if pcols:
+        writer = writer.partitionBy(*pcols)
+    if max_records_per_file:
+        writer = writer.option("maxRecordsPerFile", str(max_records_per_file))
+    writer.parquet(staging)
+    return _promote_staged_files(spark, log, staging, pcols, stats_columns=stats_cols)
 
 
 def _promote_staged_files(

@@ -14,6 +14,9 @@ import os
 import uuid
 from pathlib import Path
 
+import pyarrow as pa
+
+import delta_rs_spark as drs
 from delta_rs_spark.protocol.actions import AddAction, MetaDataAction, ProtocolAction
 from delta_rs_spark.protocol.log import DeltaLog
 from delta_rs_spark.protocol.snapshot import Snapshot
@@ -65,3 +68,22 @@ def test_tracer_installs_traces_a_time_travel_and_uninstalls(spark, tmp_path):
     metrics = tracer.layer_metrics({0}, 1, 1.0)
     assert metrics["protocol.log.list_ms"][0] > 0
     assert metrics["protocol.log.read_commit_ms"][0] > 0
+
+
+def test_tracer_counts_one_file_for_a_small_pyarrow_append(spark, tmp_path):
+    """The per-layer count behind the one-file-per-small-write rule, under
+    the names the tracer binds: a 1,000-row pyarrow append publishes one
+    data file."""
+    root = str(tmp_path / "t")
+    drs.write_deltalake(spark, pa.table({"id": pa.array([0], pa.int64())}), root)
+    rows = pa.table({"id": pa.array(range(1, 1001), pa.int64())})
+    tracer = _tracing().Tracer()
+    tracer.install(spark)
+    try:
+        tracer.op = 0
+        drs.write_deltalake(spark, rows, root, mode="append")
+        tracer.op = None
+    finally:
+        tracer.uninstall()
+    assert tracer.counts["writer.files_written"] == 1
+    assert [s[1] for s in tracer.spans].count("writer.write_deltalake") == 1
