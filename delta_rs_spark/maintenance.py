@@ -2,8 +2,11 @@
 
 Checkpoint layout follows the Delta protocol (one struct column per action
 type, JSON `stats` carried through; reference writer
-``rust/src/checkpoints.rs:118-248``) plus `partitionValues_parsed` — a typed
-struct of the partition columns (``rust/src/checkpoints.rs:251-307``).
+``rust/src/checkpoints.rs:118-248``). Under
+``delta.checkpoint.writeStatsAsStruct`` adds also carry `stats_parsed` and
+`partitionValues_parsed` — a typed struct of the partition columns
+(``rust/src/checkpoints.rs:251-307``). Checkpoint parquet is written for
+the one reader that loads it whole (see ``_parquet_bytes``).
 Vacuum matches ``rust/src/delta.rs:881-969``: 168-hour retention floor,
 dry-run mode, hidden-path predicate.
 """
@@ -112,29 +115,19 @@ def create_checkpoint(
 
 def _file_action_columns(snap):
     """The snapshot's removes then adds as checkpoint rows (a ``remove`` and
-    an ``add`` struct column), read from its Arrow state. Adds carry
-    ``partitionValues_parsed`` — the typed partition values — and, under
-    ``delta.checkpoint.writeStatsAsStruct``, ``stats_parsed``;
+    an ``add`` struct column), read from its Arrow state. Under
+    ``delta.checkpoint.writeStatsAsStruct`` adds also carry ``stats_parsed``
+    and ``partitionValues_parsed`` — the typed partition values;
     ``writeStatsAsJson=false`` drops the ``stats`` JSON column."""
     import pyarrow as pa
     import pyarrow.compute as pc
 
     from .protocol import column_mapping as _cmap
 
-    schema = snap.schema()
-    pcols = snap.metadata.partition_columns
-    # partitionValues (and _parsed) are keyed by PHYSICAL name when column
-    # mapping is active — same keys the add actions carry
-    if snap.mapping_mode() != "none":
-        _p = _cmap.top_level_physical(schema)
-        ptypes = {_p[f.name]: f.dataType for f in schema.fields if f.name in pcols}
-        pcols = [_p[c] for c in pcols]
-    else:
-        ptypes = {f.name: f.dataType for f in schema.fields if f.name in pcols}
     # public checkpoint stats properties: writeStatsAsJson (default true)
     # keeps the `stats` JSON column; writeStatsAsStruct additionally writes
-    # `stats_parsed` as a typed struct — engines that prune from checkpoints
-    # directly read the struct column without 400k JSON parses
+    # `stats_parsed` and `partitionValues_parsed` as typed structs — engines
+    # that prune from checkpoints directly read them without JSON parses
     cfg = snap.metadata.configuration or {}
     stats_as_json = (
         str(cfg.get("delta.checkpoint.writeStatsAsJson", "true")).lower() != "false"
@@ -146,13 +139,23 @@ def _file_action_columns(snap):
     adds = snap.state.live_files()
     add_tbl = adds.table()
     cols = dict(zip(add_tbl.column_names, add_tbl.columns))
-    if pcols:
+    pcols = snap.metadata.partition_columns
+    if stats_as_struct and pcols:
+        schema = snap.schema()
+        # partitionValues_parsed is keyed by PHYSICAL name when column
+        # mapping is active — same keys the add actions carry
+        if snap.mapping_mode() != "none":
+            _p = _cmap.top_level_physical(schema)
+            ptypes = {_p[f.name]: f.dataType for f in schema.fields if f.name in pcols}
+            pcols = [_p[c] for c in pcols]
+        else:
+            ptypes = {f.name: f.dataType for f in schema.fields if f.name in pcols}
         pv = add_tbl["partitionValues"]
         cols["partitionValues_parsed"] = pa.StructArray.from_arrays(
             [
                 pa.array(
                     [
-                        _parsed_partition_value(v, ptypes[c])
+                        partition_value_to_typed(v, ptypes[c])
                         for v in pc.map_lookup(pv, c, "first").to_pylist()
                     ]
                 )
@@ -164,9 +167,9 @@ def _file_action_columns(snap):
         cols["stats_parsed"] = adds.stats().struct(add_tbl["stats"].is_valid())
     if not stats_as_json:
         del cols["stats"]
-    add = _struct_column(cols, len(adds))
+    add = _struct_column(cols)
     rm_tbl = snap.state.tombstones.select().table()
-    remove = _struct_column(dict(zip(rm_tbl.column_names, rm_tbl.columns)), rm_tbl.num_rows)
+    remove = _struct_column(dict(zip(rm_tbl.column_names, rm_tbl.columns)))
     n_rm, n_add = len(remove), len(add)
     return pa.table(
         {
@@ -176,29 +179,89 @@ def _file_action_columns(snap):
     )
 
 
-def _struct_column(cols: dict, n: int):
-    """One action struct column; fields null on every row are left out
-    (readers treat an absent optional field as null)."""
+def _struct_column(cols: dict):
+    """One action struct column of the named child columns."""
     import pyarrow as pa
 
-    cols = {k: c for k, c in cols.items() if k == "path" or c.null_count < n}
     arrays = [c.combine_chunks() if isinstance(c, pa.ChunkedArray) else c for c in cols.values()]
-    if n == 0:  # from_arrays cannot infer a length from zero-row children
-        return pa.array([], pa.struct([(k, a.type) for k, a in zip(cols, arrays)]))
     return pa.StructArray.from_arrays(arrays, names=list(cols))
 
 
 def _parquet_bytes(t) -> bytes:
-    """One checkpoint/sidecar parquet file; columns null on every row of
-    ``t`` are left out."""
+    """One checkpoint/sidecar/manifest parquet file, written for a reader
+    that loads it whole (``snapshot.read_checkpoint_actions``):
+
+    - columns and struct fields, at any depth, that are null on every row
+      of ``t`` are left out (readers read an absent field as null);
+    - a leaf column is dictionary-encoded only where its values repeat —
+      at most one distinct value per two non-null ones (partition values,
+      modification times, DV storage types); unique paths, stats JSON and
+      inline DV bitmaps are written PLAIN;
+    - no min/max statistics and no stored Arrow schema: a part is one row
+      group that is never skipped, and the parquet schema reads back as
+      the same Arrow types.
+    """
     import io
 
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
-    t = t.select([i for i, c in enumerate(t.columns) if c.null_count < t.num_rows])
+    names, columns = [], []
+    for name, col in zip(t.column_names, t.columns):
+        col = _drop_null_fields(col.combine_chunks())
+        if col is not None:
+            names.append(name)
+            columns.append(col)
+    t = pa.Table.from_arrays(columns, names=names)
+    dictionary = [path for name, col in zip(names, columns) for path in _repeating(name, col)]
     buf = io.BytesIO()
-    pq.write_table(t, buf, compression="zstd")
+    pq.write_table(
+        t,
+        buf,
+        compression="zstd",
+        use_dictionary=dictionary,
+        write_statistics=False,
+        store_schema=False,
+    )
     return buf.getvalue()
+
+
+def _drop_null_fields(arr):
+    """``arr`` without its struct fields, at any depth, that are null on
+    every row; None when ``arr`` itself holds no non-null value."""
+    import pyarrow as pa
+
+    if pa.types.is_struct(arr.type):
+        kids = [(f.name, _drop_null_fields(c)) for f, c in zip(arr.type, arr.flatten())]
+        kids = [(k, c) for k, c in kids if c is not None]
+        if not kids:
+            return None
+        return pa.StructArray.from_arrays(
+            [c for _, c in kids], names=[k for k, _ in kids], mask=arr.is_null()
+        )
+    return arr if arr.null_count < len(arr) else None
+
+
+def _repeating(name: str, arr):
+    """Parquet paths of the leaf columns under ``arr`` whose values repeat:
+    at most one distinct value per two non-null ones."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    if pa.types.is_struct(arr.type):
+        for f, child in zip(arr.type, arr.flatten()):
+            yield from _repeating(f"{name}.{f.name}", child)
+    elif pa.types.is_map(arr.type):
+        # keys/items ignore a slice's offset; the offsets bound its entries
+        lo, hi = arr.offsets[0].as_py(), arr.offsets[-1].as_py()
+        yield from _repeating(f"{name}.key_value.key", arr.keys.slice(lo, hi - lo))
+        yield from _repeating(f"{name}.key_value.value", arr.items.slice(lo, hi - lo))
+    elif pa.types.is_list(arr.type):
+        yield from _repeating(f"{name}.list.element", arr.flatten())
+    else:
+        n = len(arr) - arr.null_count
+        if n and 2 * pc.count_distinct(arr).as_py() <= n:
+            yield name
 
 
 def _create_v2_checkpoint(table, singletons, files, limit: int) -> CheckPoint:
@@ -235,12 +298,6 @@ def _create_v2_checkpoint(table, singletons, files, limit: int) -> CheckPoint:
     log.backend.put_obj(log.checkpoint_paths(cp)[0], _parquet_bytes(manifest))
     log.put_last_checkpoint(cp)
     return cp
-
-
-def _parsed_partition_value(value: Optional[str], dtype):
-    v = partition_value_to_typed(value, dtype)
-    # pyarrow infers fine for primitives; datetimes/dates pass through
-    return v
 
 
 def _drop_empty_dicts(node):

@@ -198,6 +198,7 @@ def write_deltalake(
     ``mode='overwrite'`` only) replaces the schema wholesale.
     """
     n_rows: Optional[int] = None
+    naive_ts: list[str] = []
     if not isinstance(df, DataFrame):
         # migration ergonomics: the reference's writer surface takes pandas /
         # pyarrow input — accept both and lift into Spark straight from
@@ -214,6 +215,11 @@ def write_deltalake(
                 f"Table, got {type(df).__name__}"
             )
         n_rows = df.num_rows
+        # Spark types a naive Arrow timestamp as `timestamp`; remember the
+        # columns so an NTZ table can take them as `timestamp_ntz`
+        naive_ts = [
+            f.name for f in df.schema if _pa.types.is_timestamp(f.type) and f.type.tz is None
+        ]
         df = spark.createDataFrame(df)
 
     mode = mode.lower()
@@ -280,8 +286,12 @@ def write_deltalake(
                 UserWarning,
                 stacklevel=2,
             )
+    if exists and naive_ts:
+        # a column the table already stores as `timestamp` keeps that type
+        stored = {f.name: f.dataType.typeName() for f in table.schema().fields}
+        naive_ts = [c for c in naive_ts if stored.get(c) != "timestamp"]
     df = _normalize_timestamps(
-        df, table.metadata().configuration if exists else configuration
+        df, table.metadata().configuration if exists else configuration, naive_ts
     )
 
     from .protocol import generated as gen
@@ -804,23 +814,27 @@ def ntz_enabled(configuration: Optional[dict]) -> bool:
     ).lower() in ("supported", "enabled", "true")
 
 
-def _normalize_timestamps(df: DataFrame, configuration: Optional[dict] = None) -> DataFrame:
+def _normalize_timestamps(
+    df: DataFrame, configuration: Optional[dict] = None, naive: Sequence[str] = ()
+) -> DataFrame:
     """Cast TIMESTAMP_NTZ columns to TIMESTAMP (Delta v0 has only the
     latter) — unless the table opts into the ``timestampNtz`` feature, in
-    which case the type is kept and stored as ``timestamp_ntz``.
+    which case the type is kept and stored as ``timestamp_ntz``, and the
+    ``naive`` columns (naive timestamps of in-memory input, which Spark
+    types as TIMESTAMP) become TIMESTAMP_NTZ.
 
-    The cast is value-preserving because the engine pins the session
+    The casts are value-preserving because the engine pins the session
     timezone to UTC (session.py); wall-clock instants round-trip exactly.
     """
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
     if ntz_enabled(configuration):
-        return df
-    ntz_cols = [f.name for f in df.schema.fields if isinstance(f.dataType, T.TimestampNTZType)]
-    for c in ntz_cols:
-        df = df.withColumn(c, F.col(c).cast(T.TimestampType()))
-    return df
+        cast, to = list(naive), T.TimestampNTZType()
+    else:
+        cast = [f.name for f in df.schema.fields if isinstance(f.dataType, T.TimestampNTZType)]
+        to = T.TimestampType()
+    return df.withColumns({c: F.col(c).cast(to) for c in cast}) if cast else df
 
 
 def _merge_schema(
@@ -945,8 +959,15 @@ def _check_schema(table: DeltaTable, df: DataFrame) -> None:
     existing = {f.name: bare_type(f.dataType) for f in table.schema().fields}
     incoming = {f.name: bare_type(f.dataType) for f in df.schema.fields}
     if existing != incoming:
+        differ = [
+            f"{c}: write {incoming[c].simpleString() if c in incoming else '(missing)'}"
+            f", table {existing[c].simpleString() if c in existing else '(missing)'}"
+            for c in sorted(set(existing) | set(incoming))
+            if existing.get(c) != incoming.get(c)
+        ]
         raise SchemaMismatchError(
-            f"write schema {sorted(incoming)} does not match table schema {sorted(existing)}"
+            f"write schema {sorted(incoming)} does not match table schema"
+            f" {sorted(existing)}: {'; '.join(differ)}"
         )
 
 

@@ -1495,3 +1495,161 @@ def test_generate_symlink_manifest_unpartitioned_and_sql(spark, tmp_path):
     assert out.numManifestsWritten == "1"  # _one_row stringifies metrics
     mpath = _os.path.join(uri, "_symlink_format_manifest", "manifest")
     assert set(open(mpath).read().split()) == set(DeltaTable(uri).file_uris())
+
+
+# ---- checkpoint layout --------------------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def lean_table(spark, tmp_path_factory):
+    """A table of 350 files (7 partition values × 50 write tasks) whose
+    delete left deletion vectors on most of them, checkpointed at its
+    latest version."""
+    uri = str(tmp_path_factory.mktemp("lean") / "t")
+    df = spark.range(0, 30000).selectExpr("id", "id % 7 AS p", "id * 2 AS v")
+    write_deltalake(spark, df.repartition(50), uri, partition_by=["p"])
+    DeltaTable(uri).delete(spark, "id % 97 = 0")
+    DeltaTable(uri).create_checkpoint()
+    return uri
+
+
+def _checkpoint_path(uri: str) -> str:
+    log = DeltaLog(uri)
+    return log.checkpoint_paths(log.read_last_checkpoint())[0]
+
+
+def _column_chunks(path: str) -> dict:
+    import pyarrow.parquet as pq
+
+    md = pq.ParquetFile(path).metadata
+    return {
+        rg.column(i).path_in_schema: rg.column(i)
+        for rg in (md.row_group(r) for r in range(md.num_row_groups))
+        for i in range(rg.num_columns)
+    }
+
+
+def _write_old_layout(path: str) -> None:
+    """Rewrite a checkpoint the way earlier builds wrote it: add/remove
+    fields null on every row left out only at the action level (the DV
+    struct keeps its all-null fields), a typed ``partitionValues_parsed``,
+    and pyarrow's data-file defaults — a dictionary on every column,
+    min/max statistics and a stored Arrow schema."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from delta_rs_spark.protocol.state import ADD_SCHEMA, REMOVE_SCHEMA, _conform
+
+    t = pq.read_table(path)
+    cols = {}
+    for name, col in zip(t.column_names, t.columns):
+        arr = col.combine_chunks()
+        if name in ("add", "remove"):
+            schema = ADD_SCHEMA if name == "add" else REMOVE_SCHEMA
+            full = _conform(arr, pa.struct(list(schema)))
+            fields = [
+                (f, c)
+                for f, c in zip(schema, full.flatten())
+                if f.name == "path" or c.null_count < len(c)
+            ]
+            if name == "add":
+                pv = pc.map_lookup(full.field("partitionValues"), "p", "first")
+                parsed = pa.StructArray.from_arrays([pc.cast(pv, pa.int64())], names=["p"])
+                fields.append((pa.field("partitionValues_parsed", parsed.type), parsed))
+            arr = pa.StructArray.from_arrays(
+                [c for _, c in fields], fields=[f for f, _ in fields], mask=arr.is_null()
+            )
+        cols[name] = arr
+    pq.write_table(pa.table(cols), path, compression="zstd")
+
+
+def test_checkpoint_layout_is_lean(spark, lean_table, tmp_path):
+    """Checkpoint parquet carries no statistics, no stored Arrow schema, a
+    dictionary only on columns whose values repeat, no all-null nested
+    field, and ``partitionValues_parsed`` only under writeStatsAsStruct."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    path = _checkpoint_path(lean_table)
+    assert b"ARROW:schema" not in (pq.ParquetFile(path).metadata.metadata or {})
+    chunks = _column_chunks(path)
+    assert not [p for p, c in chunks.items() if c.is_stats_set]
+    assert not chunks["add.path"].has_dictionary_page
+    assert not chunks["add.stats"].has_dictionary_page
+    assert not chunks["add.deletionVector.pathOrInlineDv"].has_dictionary_page
+    assert chunks["add.partitionValues.key_value.key"].has_dictionary_page
+    assert chunks["add.partitionValues.key_value.value"].has_dictionary_page
+    assert chunks["add.deletionVector.storageType"].has_dictionary_page
+    assert not [p for p in chunks if p.startswith("add.deletionVector.paths")]
+    assert not [p for p in chunks if "partitionValues_parsed" in p]
+
+    # at most 80% of the same checkpoint in the earlier layout
+    old_path = str(tmp_path / "old.checkpoint.parquet")
+    shutil.copy(path, old_path)
+    _write_old_layout(old_path)
+    assert os.path.getsize(path) <= 0.8 * os.path.getsize(old_path)
+
+    uri = str(tmp_path / "struct")
+    shutil.copytree(lean_table, uri)
+    t = DeltaTable(uri)
+    t.set_properties({"delta.checkpoint.writeStatsAsStruct": "true"})
+    DeltaTable(uri).create_checkpoint()
+    chunks = _column_chunks(_checkpoint_path(uri))
+    assert "add.partitionValues_parsed.p" in chunks
+    assert [p for p in chunks if p.startswith("add.stats_parsed.")]
+
+
+def test_old_and_new_checkpoints_load_alike(spark, lean_table, tmp_path):
+    """A checkpoint in the earlier layout and one in the current layout of
+    the same table load to the same files, partition values, stats, DV
+    descriptors and row count; Spark reads the current layout too."""
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    from delta_rs_spark.protocol.snapshot import read_checkpoint_actions
+
+    old_uri = str(tmp_path / "old")
+    shutil.copytree(lean_table, old_uri)
+    _write_old_layout(_checkpoint_path(old_uri))
+    old_chunks = _column_chunks(_checkpoint_path(old_uri))
+    assert "add.partitionValues_parsed.p" in old_chunks
+    assert "add.deletionVector.maxRowIndex" in old_chunks
+    assert old_chunks["add.path"].has_dictionary_page and old_chunks["add.path"].is_stats_set
+    assert b"ARROW:schema" in pq.ParquetFile(_checkpoint_path(old_uri)).metadata.metadata
+
+    new, old = DeltaTable(lean_table), DeltaTable(old_uri)
+    # both loads decode their checkpoint, which holds every live file
+    for t in (new, old):
+        cp = t.log.read_last_checkpoint()
+        assert cp.version == t.version
+        assert read_checkpoint_actions(t.log, cp).adds.num_rows == 350
+
+    def view(t):
+        adds = t.add_actions()
+        return (
+            [a.path for a in adds],
+            [a.partition_values for a in adds],
+            [a.stats for a in adds],
+            [a.deletion_vector for a in adds],
+        )
+
+    assert view(new) == view(old)
+    assert sum(dv is not None for dv in view(new)[3]) > 100
+    assert new.count_rows() == old.count_rows() == 30000 - len(range(0, 30000, 97))
+
+    rows = (
+        spark.read.parquet(_checkpoint_path(lean_table))
+        .where("add IS NOT NULL")
+        .select("add.path", "add.deletionVector")
+        .collect()
+    )
+
+    def descriptor(dv):
+        return None if dv is None else {k: v for k, v in dv.asDict().items() if v is not None}
+
+    assert {r.path: descriptor(r.deletionVector) for r in rows} == {
+        a.path: a.deletion_vector for a in new.add_actions()
+    }

@@ -87,3 +87,44 @@ def test_tracer_counts_one_file_for_a_small_pyarrow_append(spark, tmp_path):
         tracer.uninstall()
     assert tracer.counts["writer.files_written"] == 1
     assert [s[1] for s in tracer.spans].count("writer.write_deltalake") == 1
+
+
+def test_tracer_counts_checkpoint_bytes_and_cold_open_gets(spark, tmp_path):
+    """The per-layer counts behind the checkpoint layout: a traced
+    ``create_checkpoint`` puts exactly the checkpoint parquet and
+    ``_last_checkpoint``, and a traced cold open GETs exactly the
+    checkpoint and the commits after it."""
+    root = str(tmp_path / "t")
+    rows = pa.table({"id": pa.array(range(20), pa.int64()), "p": [str(i % 4) for i in range(20)]})
+    drs.write_deltalake(spark, rows, root, partition_by=["p"])
+    drs.write_deltalake(spark, rows, root, mode="append")
+    table = DeltaTable(root)
+    tracer = _tracing().Tracer()
+    tracer.install(spark)
+    try:
+        tracer.op = 0
+        cp = table.create_checkpoint()
+        tracer.op = None
+    finally:
+        tracer.uninstall()
+    log = table.log
+    (cp_path,) = log.checkpoint_paths(cp)
+    cp_size = os.path.getsize(cp_path)
+    assert tracer.counts["maintenance.checkpoints"] == 1
+    assert tracer.counts["maintenance.checkpoint_bytes"] == cp_size + os.path.getsize(
+        log.last_checkpoint_path()
+    )
+
+    for _ in range(2):
+        drs.write_deltalake(spark, rows, root, mode="append")
+    tail = [os.path.getsize(log.commit_path(v)) for v in (cp.version + 1, cp.version + 2)]
+    tracer = _tracing().Tracer()
+    tracer.install(spark)
+    try:
+        tracer.op = 0
+        assert DeltaTable(root).version == cp.version + 2
+        tracer.op = None
+    finally:
+        tracer.uninstall()
+    assert tracer.counts["protocol.storage.get_calls"] == 3
+    assert tracer.counts["protocol.storage.get_bytes"] == cp_size + sum(tail)

@@ -745,6 +745,82 @@ def test_timestamp_ntz_feature(spark, tmp_path):
     assert pa_rows == got
 
 
+
+def test_in_memory_naive_timestamps_append_to_ntz_table(spark, tmp_path):
+    """pyarrow and pandas naive timestamps append to a timestampNtz table
+    as timestamp_ntz, keeping their wall clock; created with the opt-in,
+    the table stores them as timestamp_ntz, without it as timestamp."""
+    import datetime as dt
+
+    import pandas as pd
+    import pyarrow as pa
+
+    def rows(ids, stamps):
+        return pa.table(
+            {"id": pa.array(ids, pa.int64()), "ts": pa.array(stamps, pa.timestamp("us"))}
+        )
+
+    first = [dt.datetime(2024, 5, 1, 12, 30), dt.datetime(2024, 5, 2, 8, 0)]
+    uri = str(tmp_path / "ntz")
+    t = write_deltalake(
+        spark, rows([1, 2], first), uri, configuration={"delta.feature.timestampNtz": "supported"}
+    )
+    assert t.schema()["ts"].dataType.typeName() == "timestamp_ntz"
+    write_deltalake(spark, rows([3], [dt.datetime(2024, 6, 1, 23, 59, 1)]), uri, mode="append")
+    pdf = pd.DataFrame({"id": [4], "ts": [pd.Timestamp("2024-07-01 01:02:03.000004")]})
+    write_deltalake(spark, pdf, uri, mode="append")
+    t = DeltaTable(uri)
+    assert t.schema()["ts"].dataType.typeName() == "timestamp_ntz"
+    assert sorted((r["id"], r["ts"]) for r in t.to_df(spark).collect()) == [
+        (1, first[0]),
+        (2, first[1]),
+        (3, dt.datetime(2024, 6, 1, 23, 59, 1)),
+        (4, dt.datetime(2024, 7, 1, 1, 2, 3, 4)),
+    ]
+
+    # a column an NTZ table stores as `timestamp` keeps taking naive input
+    mixed = str(tmp_path / "mixed")
+    at = pa.array([dt.datetime(2024, 5, 1)], pa.timestamp("us", tz="UTC"))
+    write_deltalake(
+        spark,
+        rows([1], first[:1]).append_column("at", at),
+        mixed,
+        configuration={"delta.feature.timestampNtz": "supported"},
+    )
+    naive_at = at.cast(pa.timestamp("us"))
+    write_deltalake(spark, rows([2], first[1:]).append_column("at", naive_at), mixed, mode="append")
+    t = DeltaTable(mixed)
+    types = [t.schema()[c].dataType.typeName() for c in ("ts", "at")]
+    assert types == ["timestamp_ntz", "timestamp"]
+    assert t.count_rows() == 2
+
+    plain = str(tmp_path / "plain")
+    write_deltalake(spark, rows([1], first[:1]), plain)
+    write_deltalake(spark, rows([2], first[1:]), plain, mode="append")
+    t = DeltaTable(plain)
+    assert t.schema()["ts"].dataType.typeName() == "timestamp"
+    # a naive value lands as that wall clock in the UTC session
+    got = sorted(r[0] for r in t.to_df(spark).selectExpr("CAST(ts AS STRING)").collect())
+    assert got == ["2024-05-01 12:30:00", "2024-05-02 08:00:00"]
+
+
+def test_schema_mismatch_names_the_differing_types(spark, tmp_path):
+    import pyarrow as pa
+
+    uri = str(tmp_path / "t")
+    write_deltalake(spark, pa.table({"id": pa.array([1], pa.int64()), "s": ["a"]}), uri)
+    with pytest.raises(SchemaMismatchError) as err:
+        write_deltalake(
+            spark,
+            pa.table({"id": pa.array([2], pa.int32()), "s": ["b"], "x": [1.5]}),
+            uri,
+            mode="append",
+        )
+    msg = str(err.value)
+    assert "id: write int, table bigint" in msg
+    assert "x: write double, table (missing)" in msg
+    assert "s:" not in msg
+
 def test_checkpoint_interval_property(spark, tmp_path, sf_dir):
     """delta.checkpointInterval overrides the every-10-commits default."""
     from delta_rs_spark import DeltaTable, write_deltalake
