@@ -291,7 +291,7 @@ def write_change_files(
     import uuid
 
     from .protocol import column_mapping as cm
-    from .writer import write_tasks
+    from .writer import PARQUET_SUFFIX, parquet_writer, write_tasks
 
     if table_schema is not None and cm.is_mapped(configuration):
         change_df = cm.to_physical_df(change_df, table_schema)
@@ -299,11 +299,11 @@ def write_change_files(
         change_df = change_df.coalesce(write_tasks(n_rows))
 
     staging = log.data_plane.stage_dir("cdc")
-    change_df.write.mode("overwrite").parquet(staging)
+    parquet_writer(change_df).parquet(staging)
 
     actions: list[CdcAction] = []
     for i, src in enumerate(sorted(log.data_plane.staged_files(staging))):
-        rel = f"_change_data/cdc-{i:05d}-{uuid.uuid4()}.snappy.parquet"
+        rel = f"_change_data/cdc-{i:05d}-{uuid.uuid4()}{PARQUET_SUFFIX}"
         size, _ = log.data_plane.publish_file(src, rel)
         actions.append(CdcAction(path=rel, size=size))
     log.data_plane.cleanup_stage(staging)

@@ -18,6 +18,8 @@ import os
 import time
 from typing import Optional
 
+import pyarrow as pa
+
 from .protocol.log import CheckPoint
 from .protocol.schema import partition_value_to_typed
 
@@ -59,9 +61,7 @@ def create_checkpoint(
 
     The add/remove columns are written from the snapshot's Arrow state
     (``protocol/state.py``) without building an action object per file;
-    parquet is zstd-compressed."""
-    import pyarrow as pa
-
+    parquet takes ``writer.PARQUET_CODEC``."""
     snap = table.snapshot
     state = snap.state
     meta = snap.metadata
@@ -206,6 +206,8 @@ def _parquet_bytes(t) -> bytes:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from .writer import PARQUET_CODEC
+
     names, columns = [], []
     for name, col in zip(t.column_names, t.columns):
         col = _drop_null_fields(col.combine_chunks())
@@ -218,7 +220,7 @@ def _parquet_bytes(t) -> bytes:
     pq.write_table(
         t,
         buf,
-        compression="zstd",
+        compression=PARQUET_CODEC,
         use_dictionary=dictionary,
         write_statistics=False,
         store_schema=False,
@@ -301,8 +303,9 @@ def _create_v2_checkpoint(table, singletons, files, limit: int) -> CheckPoint:
 
 
 def _drop_empty_dicts(node):
-    """Remove {}-valued entries recursively: parquet cannot write zero-field
-    structs, and our reader defaults absent maps back to {}."""
+    """Remove {}-valued entries recursively: an empty map is then null,
+    which ``_parquet_bytes`` leaves out when every row has it null, and our
+    reader defaults absent maps back to {}."""
     if isinstance(node, dict):
         out = {}
         for k, v in node.items():
@@ -316,25 +319,52 @@ def _drop_empty_dicts(node):
     return node
 
 
+_STR_MAP = pa.map_(pa.string(), pa.string())
+_STR_LIST = pa.list_(pa.string())
+# the singleton action columns of the Delta protocol's checkpoint schema;
+# every field an action's ``to_json_dict`` writes has its type here
+_SINGLETON_TYPES = {
+    "txn": pa.struct(
+        [("appId", pa.string()), ("version", pa.int64()), ("lastUpdated", pa.int64())]
+    ),
+    "metaData": pa.struct(
+        [
+            ("id", pa.string()),
+            ("name", pa.string()),
+            ("description", pa.string()),
+            ("format", pa.struct([("provider", pa.string()), ("options", _STR_MAP)])),
+            ("schemaString", pa.string()),
+            ("partitionColumns", _STR_LIST),
+            ("createdTime", pa.int64()),
+            ("configuration", _STR_MAP),
+        ]
+    ),
+    "protocol": pa.struct(
+        [
+            ("minReaderVersion", pa.int32()),
+            ("minWriterVersion", pa.int32()),
+            ("readerFeatures", _STR_LIST),
+            ("writerFeatures", _STR_LIST),
+        ]
+    ),
+    "domainMetadata": pa.struct(
+        [("domain", pa.string()), ("configuration", pa.string()), ("removed", pa.bool_())]
+    ),
+    "checkpointMetadata": pa.struct([("version", pa.int64())]),
+    "sidecar": pa.struct(
+        [("path", pa.string()), ("sizeInBytes", pa.int64()), ("modificationTime", pa.int64())]
+    ),
+}
+
+
 def _rows_to_struct_columns(rows: list[dict]) -> dict:
     """Sparse row dicts of the singleton actions → one pyarrow struct
-    array per action column."""
-    import pyarrow as pa
-
-    cols = [
-        "txn",
-        "metaData",
-        "protocol",
-        "domainMetadata",
-        "checkpointMetadata",
-        "sidecar",
-    ]
+    array per action column, typed as ``_SINGLETON_TYPES`` says."""
     out = {}
-    for col in cols:
+    for col, typ in _SINGLETON_TYPES.items():
         values = [r.get(col) for r in rows]
-        if all(v is None for v in values):
-            continue
-        out[col] = pa.array(values)
+        if any(v is not None for v in values):
+            out[col] = pa.array(values, type=typ)
     return out
 
 
@@ -369,7 +399,7 @@ def _string_zorder_quantizer(table, spark, c: str, bits: int):
     if not boundaries:
         return F.lit(0).cast("long")
     b_lit = F.lit([str(b) for b in boundaries])
-    return F.coalesce(
+    rank = F.coalesce(
         F.aggregate(
             b_lit,
             F.lit(0).cast("long"),
@@ -378,6 +408,10 @@ def _string_zorder_quantizer(table, spark, c: str, bits: int):
         ),
         F.lit(0).cast("long"),
     )
+    # spread the ranks 0..len(boundaries) over all n_buckets: a column with
+    # fewer distinct values than buckets would otherwise leave its top bit
+    # planes zero, and the curve would never split on it first
+    return F.floor(rank * (n_buckets - 1) / len(boundaries)).cast("long")
 
 
 def _zorder_column(table, cols: list[str], bits: int = 16, spark=None):
@@ -518,7 +552,7 @@ def optimize(
     from .protocol.actions import RemoveAction
     from .protocol.schema import schema_string_to_spark
     from .transactions import DeltaTransaction
-    from .writer import _promote_staged_files
+    from .writer import _promote_staged_files, parquet_writer
 
     from .protocol import column_mapping as _cm
 
@@ -644,7 +678,7 @@ def optimize(
             df = df.coalesce(n_out)
         if _mapped:
             df = _cm.to_physical_df(df, data_schema)
-        df.write.mode("overwrite").parquet(out_dir)
+        parquet_writer(df).parquet(out_dir)
 
     # rewrites AND promotion share one cleanup scope: a failed rewrite job
     # must not strand the staging dir (on the native plane it lives inside

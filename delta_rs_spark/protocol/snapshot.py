@@ -779,9 +779,15 @@ def _singleton_actions(table) -> list[Action]:
 
 
 def _fix_meta(d: dict) -> dict:
-    if d.get("format") and not isinstance(d["format"], dict):
-        d = dict(d)
-        d["format"] = dict(d["format"])
+    """A checkpoint's metaData row with dict ``configuration`` and
+    ``format.options``: Arrow returns a map as (key, value) pairs, and
+    checkpoints written before these columns were typed as maps hold
+    them as structs."""
+    d = dict(d)
+    fmt = dict(d.get("format") or {})
+    fmt["options"] = dict(fmt.get("options") or {})
+    d["format"] = fmt
+    d["configuration"] = dict(d.get("configuration") or {})
     return d
 
 

@@ -517,6 +517,8 @@ def _write_position_delete_file(
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from ..writer import PARQUET_CODEC
+
     positions = sorted(positions)
     schema = pa.schema(
         [
@@ -539,7 +541,7 @@ def _write_position_delete_file(
         schema=schema,
     )
     buf = _io.BytesIO()
-    pq.write_table(t, buf)
+    pq.write_table(t, buf, compression=PARQUET_CODEC)
     data = buf.getvalue()
     path = tree.put(f"deletes/{_uuid.uuid4()}-deletes.parquet", data)
     return path, len(positions), len(data)

@@ -14,7 +14,7 @@ Flow (Spark equivalent of the reference's writer+transaction,
    footers** of the staged files, read on a driver thread pool — no second
    data scan and no Spark job; footers are KBs per file.
 3. Staged files are published under fresh unique names
-   (``part-00000-<uuid>-c000.snappy.parquet``, hive partition dirs kept)
+   (``part-00000-<uuid>-c000.zstd.parquet``, hive partition dirs kept)
    through the table's data plane (``protocol/dataio.py``): a rename on a
    local filesystem, a server-side copy or an upload on object stores.
 4. The driver commits Add (+Remove for overwrite) actions through the
@@ -987,6 +987,19 @@ def data_skipping_columns(
     return set(schema_names[:n])
 
 
+# the codec of every parquet file the engine writes: data, OPTIMIZE and
+# change files through Spark (``parquet_writer``), checkpoints and Iceberg
+# position deletes through pyarrow. A file's footer names its codec, so
+# files written with another one stay readable beside these.
+PARQUET_CODEC = "zstd"
+PARQUET_SUFFIX = f".{PARQUET_CODEC}.parquet"
+
+
+def parquet_writer(df: DataFrame):
+    """``df``'s writer for a staging dir: overwrite, ``PARQUET_CODEC``."""
+    return df.write.mode("overwrite").option("compression", PARQUET_CODEC)
+
+
 # one write task per this many rows when the writer knows the row count
 # (pyarrow/pandas input, DML rewrites, change files): a write under a
 # million rows adds one file per partition value instead of one per input
@@ -1044,7 +1057,7 @@ def stage_rows(
     elif n_rows is not None:
         rows = rows.coalesce(write_tasks(n_rows))
     staging = log.data_plane.stage_dir("commit")
-    writer = rows.write.mode("overwrite")
+    writer = parquet_writer(rows)
     if pcols:
         writer = writer.partitionBy(*pcols)
     if max_records_per_file:
@@ -1085,7 +1098,7 @@ def _promote_staged_files(
         rel = _rel_inside(src, staging_dir)
         part_dir = os.path.dirname(rel)
         partition_values = _parse_partition_path(part_dir)
-        fname = f"part-{i:05d}-{uuid.uuid4()}-c000.snappy.parquet"
+        fname = f"part-{i:05d}-{uuid.uuid4()}-c000{PARQUET_SUFFIX}"
         final_rel = (os.path.join(part_dir, fname) if part_dir else fname).replace(
             os.sep, "/"
         )

@@ -1529,12 +1529,23 @@ def _column_chunks(path: str) -> dict:
     }
 
 
+def _inferred(v):
+    """A singleton action value as earlier builds passed it to ``pa.array``:
+    no null fields and no empty dicts, string maps as dicts."""
+    if isinstance(v, dict):
+        v = {k: _inferred(x) for k, x in v.items() if x is not None}
+        return {k: x for k, x in v.items() if x != {}}
+    return v
+
+
 def _write_old_layout(path: str) -> None:
     """Rewrite a checkpoint the way earlier builds wrote it: add/remove
     fields null on every row left out only at the action level (the DV
     struct keeps its all-null fields), a typed ``partitionValues_parsed``,
-    and pyarrow's data-file defaults — a dictionary on every column,
-    min/max statistics and a stored Arrow schema."""
+    singleton actions typed by inference from dicts (a string map is a
+    struct of its keys, an empty list is ``list<null>``, versions are
+    int64), and pyarrow's data-file defaults — a dictionary on every
+    column, min/max statistics and a stored Arrow schema."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
@@ -1560,8 +1571,35 @@ def _write_old_layout(path: str) -> None:
             arr = pa.StructArray.from_arrays(
                 [c for _, c in fields], fields=[f for f, _ in fields], mask=arr.is_null()
             )
+        elif name in ("metaData", "protocol"):
+            rows = arr.to_pylist()
+            for d in rows:
+                if d is not None and name == "metaData":
+                    d["configuration"] = dict(d.get("configuration") or [])
+                    d["format"]["options"] = dict(d["format"].get("options") or [])
+            arr = pa.array([None if d is None else _inferred(d) for d in rows])
         cols[name] = arr
     pq.write_table(pa.table(cols), path, compression="zstd")
+
+
+def _assert_spec_singleton_types(path: str, partitioned: bool) -> None:
+    """metaData and protocol columns carry the Delta protocol's checkpoint
+    types: string maps as ``map<string,string>`` (an empty one, like these
+    tables' ``format.options``, is left out), ``partitionColumns`` as
+    ``list<string>`` (also when empty), versions as int32."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    schema = pq.read_schema(path)
+    meta, proto = schema.field("metaData").type, schema.field("protocol").type
+    m = meta.field("configuration").type
+    assert pa.types.is_map(m) and m.key_type == m.item_type == pa.string()
+    assert meta.field("format").type.get_field_index("options") == -1
+    assert meta.field("partitionColumns").type.value_type == pa.string()
+    assert proto.field("minReaderVersion").type == proto.field("minWriterVersion").type == pa.int32()
+    cols = pq.read_table(path, columns=["metaData"]).column("metaData").combine_chunks()
+    (parts,) = [d["partitionColumns"] for d in cols.to_pylist() if d is not None]
+    assert parts == (["p"] if partitioned else [])
 
 
 def test_checkpoint_layout_is_lean(spark, lean_table, tmp_path):
@@ -1605,10 +1643,13 @@ def test_old_and_new_checkpoints_load_alike(spark, lean_table, tmp_path):
     """A checkpoint in the earlier layout and one in the current layout of
     the same table load to the same files, partition values, stats, DV
     descriptors and row count; Spark reads the current layout too."""
+    import io
     import shutil
 
+    import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from delta_rs_spark.maintenance import _parquet_bytes, _rows_to_struct_columns
     from delta_rs_spark.protocol.snapshot import read_checkpoint_actions
 
     old_uri = str(tmp_path / "old")
@@ -1619,8 +1660,20 @@ def test_old_and_new_checkpoints_load_alike(spark, lean_table, tmp_path):
     assert "add.deletionVector.maxRowIndex" in old_chunks
     assert old_chunks["add.path"].has_dictionary_page and old_chunks["add.path"].is_stats_set
     assert b"ARROW:schema" in pq.ParquetFile(_checkpoint_path(old_uri)).metadata.metadata
+    old_meta = pq.read_schema(_checkpoint_path(old_uri)).field("metaData").type
+    assert pa.types.is_struct(old_meta.field("configuration").type)
+    _assert_spec_singleton_types(_checkpoint_path(lean_table), partitioned=True)
 
     new, old = DeltaTable(lean_table), DeltaTable(old_uri)
+    assert new.metadata() == old.metadata()
+    assert new.metadata().configuration == {"delta.enableDeletionVectors": "true"}
+
+    def protocol(t):
+        s = t.snapshot.state
+        return s.min_reader_version, s.min_writer_version, s.reader_features, s.writer_features
+
+    assert protocol(new) == protocol(old)
+    assert protocol(new)[:3] == (3, 7, ["deletionVectors"])
     # both loads decode their checkpoint, which holds every live file
     for t in (new, old):
         cp = t.log.read_last_checkpoint()
@@ -1653,3 +1706,24 @@ def test_old_and_new_checkpoints_load_alike(spark, lean_table, tmp_path):
     assert {r.path: descriptor(r.deletionVector) for r in rows} == {
         a.path: a.deletion_vector for a in new.add_actions()
     }
+
+    # format options, when a table has any, are a string map too
+    meta = {"id": "m", "format": {"provider": "parquet", "options": {"k": "v"}}}
+    blob = _parquet_bytes(pa.table(_rows_to_struct_columns([{"metaData": meta}])))
+    options = pq.read_schema(io.BytesIO(blob)).field("metaData").type.field("format").type
+    assert options.field("options").type.item_type == pa.string()
+    assert pa.types.is_map(options.field("options").type)
+
+    # an unpartitioned table: the earlier layout's partitionColumns is
+    # list<null>, the current one list<string>; both load alike
+    plain = str(tmp_path / "plain")
+    write_deltalake(spark, spark.range(3), plain)
+    DeltaTable(plain).create_checkpoint()
+    _assert_spec_singleton_types(_checkpoint_path(plain), partitioned=False)
+    plain_old = str(tmp_path / "plain_old")
+    shutil.copytree(plain, plain_old)
+    _write_old_layout(_checkpoint_path(plain_old))
+    old_meta = pq.read_schema(_checkpoint_path(plain_old)).field("metaData").type
+    assert pa.types.is_null(old_meta.field("partitionColumns").type.value_type)
+    assert DeltaTable(plain).metadata() == DeltaTable(plain_old).metadata()
+    assert DeltaTable(plain_old).metadata().partition_columns == []

@@ -681,6 +681,8 @@ def test_dv_delete_emits_iceberg_position_deletes(spark, tmp_path, events):
     s = pq.read_schema(d["path"])
     assert dict(s.field("file_path").metadata)[b"PARQUET:field_id"] == b"2147483546"
     assert dict(s.field("pos").metadata)[b"PARQUET:field_id"] == b"2147483545"
+    md = pq.ParquetFile(d["path"]).metadata
+    assert {md.row_group(0).column(i).compression for i in range(2)} == {"ZSTD"}
     tab = pq.read_table(d["path"])
     poss = tab.column("pos").to_pylist()
     assert poss == sorted(poss) and len(poss) == 2
