@@ -119,7 +119,6 @@ def _file_action_columns(snap):
     ``delta.checkpoint.writeStatsAsStruct`` adds also carry ``stats_parsed``
     and ``partitionValues_parsed`` — the typed partition values;
     ``writeStatsAsJson=false`` drops the ``stats`` JSON column."""
-    import pyarrow as pa
     import pyarrow.compute as pc
 
     from .protocol import column_mapping as _cmap
@@ -181,7 +180,6 @@ def _file_action_columns(snap):
 
 def _struct_column(cols: dict):
     """One action struct column of the named child columns."""
-    import pyarrow as pa
 
     arrays = [c.combine_chunks() if isinstance(c, pa.ChunkedArray) else c for c in cols.values()]
     return pa.StructArray.from_arrays(arrays, names=list(cols))
@@ -203,7 +201,6 @@ def _parquet_bytes(t) -> bytes:
     """
     import io
 
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
     from .writer import PARQUET_CODEC
@@ -231,7 +228,6 @@ def _parquet_bytes(t) -> bytes:
 def _drop_null_fields(arr):
     """``arr`` without its struct fields, at any depth, that are null on
     every row; None when ``arr`` itself holds no non-null value."""
-    import pyarrow as pa
 
     if pa.types.is_struct(arr.type):
         kids = [(f.name, _drop_null_fields(c)) for f, c in zip(arr.type, arr.flatten())]
@@ -247,7 +243,6 @@ def _drop_null_fields(arr):
 def _repeating(name: str, arr):
     """Parquet paths of the leaf columns under ``arr`` whose values repeat:
     at most one distinct value per two non-null ones."""
-    import pyarrow as pa
     import pyarrow.compute as pc
 
     if pa.types.is_struct(arr.type):
@@ -272,7 +267,6 @@ def _create_v2_checkpoint(table, singletons, files, limit: int) -> CheckPoint:
     one ``checkpointMetadata`` row, and one ``sidecar`` row per chunk."""
     import uuid as _uuid
 
-    import pyarrow as pa
 
     log = table.log
     version = table.snapshot.version
@@ -1281,7 +1275,6 @@ def cleanup_expired_logs(table, retention_ms: Optional[int] = None) -> list[str]
         referenced: set[str] = set()
         import io as _io
 
-        import pyarrow as _pa
         import pyarrow.parquet as _pq
 
         for mpath in surviving_v2:
@@ -1294,7 +1287,7 @@ def cleanup_expired_logs(table, retention_ms: Optional[int] = None) -> list[str]
                 return deleted
             try:
                 t = _pq.read_table(_io.BytesIO(raw), columns=["sidecar"])
-            except (KeyError, _pa.lib.ArrowInvalid):
+            except (KeyError, pa.lib.ArrowInvalid):
                 continue  # manifest genuinely has no sidecar column
             except Exception:
                 return deleted  # unparseable manifest: same conservatism

@@ -24,13 +24,26 @@ from typing import Any, Optional, Sequence
 DV_FEATURE_NAME = "deltaRsSpark.deletionVectors"
 
 
+def string_map(m: dict) -> dict[str, Optional[str]]:
+    """A caller's map as the protocol's string→string map: ``True`` is
+    ``"true"``, ``5`` is ``"5"``; nulls stay null. Table properties may be
+    given as Python values; the log and the checkpoint's typed map column
+    hold strings only, as the stored configuration read back does."""
+    return {
+        k: v if v is None or isinstance(v, str)
+        else ("true" if v else "false") if isinstance(v, bool)
+        else str(v)
+        for k, v in m.items()
+    }
+
+
 @dataclass
 class Format:
     provider: str = "parquet"
     options: dict[str, str] = field(default_factory=dict)
 
     def to_json_dict(self) -> dict[str, Any]:
-        return {"provider": self.provider, "options": self.options}
+        return {"provider": self.provider, "options": string_map(self.options)}
 
     @classmethod
     def from_json_dict(cls, d: dict[str, Any]) -> "Format":
@@ -233,7 +246,7 @@ class MetaDataAction:
             "format": self.format.to_json_dict(),
             "schemaString": self.schema_string,
             "partitionColumns": self.partition_columns,
-            "configuration": self.configuration,
+            "configuration": string_map(self.configuration),
         }
         if self.name is not None:
             d["name"] = self.name

@@ -39,6 +39,7 @@ from .protocol.actions import (
     MetaDataAction,
     ProtocolAction,
     RemoveAction,
+    string_map,
 )
 from .protocol import column_mapping as cm
 from .protocol.log import DeltaLog
@@ -245,6 +246,9 @@ def write_deltalake(
             "replace_where; the predicate already scopes the overwrite"
         )
 
+    # table properties are protocol strings from here on: a caller's True
+    # or 5 is stored as "true" / "5", as every reader of the log expects
+    configuration = string_map(configuration or {})
     log = DeltaLog(table_uri)
     exists = log.backend.exists(log.log_dir) and log.latest_version() is not None
 
@@ -258,22 +262,13 @@ def write_deltalake(
         # CONFLICTING request hid that contract from callers (VERDICT r9
         # missing #4) — warn with the exact divergent keys. Re-passing the
         # stored values (streaming sinks re-send their creation config on
-        # every micro-batch append) stays silent.
+        # every micro-batch append) stays silent: both sides are str→str
+        # by now, so a passed True matches a stored "true".
         stored_cfg = table.metadata().configuration or {}
-
-        def _cfg_str(v):
-            # the stored config is str→str; normalize the caller's value the
-            # way the protocol spells it (booleans lowercase) so a sink
-            # re-passing {"...": True} against stored "true" stays silent
-            # instead of warning on every micro-batch append (ADVICE r10)
-            if isinstance(v, bool):
-                return "true" if v else "false"
-            return v if v is None or isinstance(v, str) else str(v)
-
         divergent = {
             k: (stored_cfg.get(k), v)
             for k, v in configuration.items()
-            if stored_cfg.get(k) != _cfg_str(v)
+            if stored_cfg.get(k) != v
         }
         if divergent:
             import warnings

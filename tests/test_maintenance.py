@@ -1727,3 +1727,56 @@ def test_old_and_new_checkpoints_load_alike(spark, lean_table, tmp_path):
     assert pa.types.is_null(old_meta.field("partitionColumns").type.value_type)
     assert DeltaTable(plain).metadata() == DeltaTable(plain_old).metadata()
     assert DeltaTable(plain_old).metadata().partition_columns == []
+
+
+def test_python_valued_properties_checkpoint_as_strings(spark, tmp_path):
+    """Table properties passed as Python values are stored as protocol
+    strings, in the commit and in the checkpoint's string map, so the
+    automatic checkpoint after a commit takes them. A log from an older
+    build whose metaData holds a bare ``true`` checkpoints too."""
+    import json
+    import shutil
+    import warnings
+
+    import pyarrow.parquet as pq
+
+    uri = str(tmp_path / "t")
+    cfg = {"delta.checkpointInterval": 2, "delta.enableChangeDataFeed": True}
+    with warnings.catch_warnings():
+        # a sink re-passing its creation config matches the stored strings
+        warnings.simplefilter("error")
+        for i in range(5):
+            write_deltalake(spark, spark.range(i, i + 1), uri, configuration=cfg)
+    want = {
+        "delta.checkpointInterval": "2",
+        "delta.enableChangeDataFeed": "true",
+        "delta.enableDeletionVectors": "true",
+    }
+    log = DeltaLog(uri)
+    with open(os.path.join(log.log_dir, f"{0:020d}.json")) as f:
+        commit_meta = [json.loads(line) for line in f if '"metaData"' in line]
+    assert commit_meta[0]["metaData"]["configuration"] == want
+    assert log.read_last_checkpoint().version == 4
+    t = DeltaTable(uri)
+    assert t.version == 4 and t.metadata().configuration == want
+    assert t.to_df(spark).count() == 5
+    rows = pq.read_table(_checkpoint_path(uri), columns=["metaData"]).column(0).to_pylist()
+    assert [dict(r["configuration"]) for r in rows if r] == [want]
+
+    # an older build wrote the caller's True into the commit as-is
+    old = str(tmp_path / "old")
+    shutil.copytree(uri, old)
+    old_log = DeltaLog(old)
+    for name in os.listdir(old_log.log_dir):
+        if "checkpoint" in name:
+            os.remove(os.path.join(old_log.log_dir, name))
+    v0 = os.path.join(old_log.log_dir, f"{0:020d}.json")
+    with open(v0) as f:
+        text = f.read()
+    with open(v0, "w") as f:
+        f.write(
+            text.replace('"delta.enableChangeDataFeed":"true"', '"delta.enableChangeDataFeed":true')
+        )
+    assert DeltaTable(old).metadata().configuration["delta.enableChangeDataFeed"] is True
+    DeltaTable(old).create_checkpoint()
+    assert DeltaTable(old).metadata().configuration == want
