@@ -141,7 +141,7 @@ def file_action_table(column, schema: pa.Schema) -> pa.Table:
     if "stats" in schema.names and has_parsed and table["stats"].null_count:
         parsed = arr.field("stats_parsed").to_pylist()
         stats = [
-            s if s is not None or p is None else json.dumps(p, default=str)
+            s if s is not None or p is None else json.dumps(p, default=str, separators=(",", ":"))
             for s, p in zip(table["stats"].to_pylist(), parsed)
         ]
         table = table.set_column(

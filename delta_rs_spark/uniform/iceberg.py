@@ -1535,7 +1535,7 @@ def convert_iceberg_to_delta(
     from ..protocol.schema import spark_to_schema_string
     from ..protocol.storage import parse_table_uri
     from ..table import DeltaTable
-    from ..writer import TableAlreadyExistsError
+    from ..writer import TableAlreadyExistsError, _stats_json
 
     root, backend = parse_table_uri(table_root)
     log = DeltaLog(table_root)
@@ -1658,12 +1658,6 @@ def convert_iceberg_to_delta(
                     maxs[fld["name"]] = hi
                 if fid in nullc:
                     nulls[fld["name"]] = nullc[fid]
-            stats = {
-                "numRecords": dfile["record_count"],
-                "minValues": mins,
-                "maxValues": maxs,
-                "nullCount": nulls,
-            }
             pvals = {
                 c: _partition_string(
                     (dfile.get("partition") or {}).get(c), schema[c].dataType
@@ -1677,7 +1671,7 @@ def convert_iceberg_to_delta(
                     partition_values=pvals,
                     modification_time=now_ms,
                     data_change=True,
-                    stats=json.dumps(stats),
+                    stats=_stats_json(dfile["record_count"], mins, maxs, nulls),
                 )
             )
     if not adds:

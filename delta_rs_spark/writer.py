@@ -5,14 +5,17 @@ Flow (Spark equivalent of the reference's writer+transaction,
 
 1. Executors write parquet via ``df.write.partitionBy(...)`` into a hidden
    staging dir inside the table (``.tmp-commit-<uuid>/``) — one function,
-   :func:`stage_rows`, for appends, overwrites and DML rewrites. A write
+   :func:`stage_rows`, for appends, overwrites and DML rewrites, through
+   one writer, :func:`parquet_writer` (``PARQUET_CODEC``, Parquet v2 data
+   pages: delta-encoded keys and dates instead of PLAIN). A write
    whose row count is known (pyarrow/pandas input, DML rewrites, change
    files) runs ``ceil(rows / ROWS_PER_FILE)`` tasks, so a small write adds
    one file per partition value, as the reference's writer does; a Spark
    DataFrame of unknown size keeps its own partitioning.
 2. Per-file stats (numRecords/min/max/nullCount) come from the **parquet
    footers** of the staged files, read on a driver thread pool — no second
-   data scan and no Spark job; footers are KBs per file.
+   data scan and no Spark job; footers are KBs per file. They reach the
+   log as compact, strict JSON (:func:`_stats_json`).
 3. Staged files are published under fresh unique names
    (``part-00000-<uuid>-c000.zstd.parquet``, hive partition dirs kept)
    through the table's data plane (``protocol/dataio.py``): a rename on a
@@ -988,11 +991,23 @@ def data_skipping_columns(
 # files written with another one stay readable beside these.
 PARQUET_CODEC = "zstd"
 PARQUET_SUFFIX = f".{PARQUET_CODEC}.parquet"
+# the data page version of every file Spark writes for the engine: v2 pages
+# keep the dictionary where values repeat and fall back to
+# DELTA_BINARY_PACKED (ints, dates, timestamps) or DELTA_BYTE_ARRAY
+# (strings) where v1 falls back to PLAIN. Readers need v2 page support
+# (Spark 3.3+, pyarrow, DuckDB); each page header names its version, so
+# v1 files from older builds read beside these.
+PARQUET_WRITER_VERSION = "v2"
 
 
 def parquet_writer(df: DataFrame):
-    """``df``'s writer for a staging dir: overwrite, ``PARQUET_CODEC``."""
-    return df.write.mode("overwrite").option("compression", PARQUET_CODEC)
+    """``df``'s writer for a staging dir: overwrite, ``PARQUET_CODEC``,
+    ``PARQUET_WRITER_VERSION`` pages."""
+    return (
+        df.write.mode("overwrite")
+        .option("compression", PARQUET_CODEC)
+        .option("parquet.writer.version", PARQUET_WRITER_VERSION)
+    )
 
 
 # one write task per this many rows when the writer knows the row count
@@ -1190,8 +1205,6 @@ def _spark_fallback_stats(
     fallback when a staged file's footer carries a logical type the local
     pyarrow can't parse (VARIANT). min/max/nullCount cover atomic
     non-binary, non-variant columns; numRecords always present."""
-    import json
-
     from pyspark.sql import functions as F
     from pyspark.sql import types as _T
 
@@ -1239,27 +1252,18 @@ def _spark_fallback_stats(
             if lo is not None:
                 mins[c] = _json_safe(lo)
                 maxs[c] = _json_safe(hi)
-        out[local] = json.dumps(
-            {"numRecords": r["__n"], "minValues": mins, "maxValues": maxs,
-             "nullCount": nulls},
-            default=str,
-        )
+        out[local] = _stats_json(r["__n"], mins, maxs, nulls)
     # a zero-row file produces no group — it was still scanned, so its
     # absence from the aggregation IS the zero count
     for p in paths:
         if p not in out:
-            out[p] = json.dumps(
-                {"numRecords": 0, "minValues": {}, "maxValues": {},
-                 "nullCount": {}}
-            )
+            out[p] = _stats_json(0, {}, {}, {})
     return out
 
 
 def _footer_stats_json(
     path: str, stats_columns: Optional[set[str]] = None
 ) -> Optional[str]:
-    import json
-
     import pyarrow.parquet as pq
 
     try:
@@ -1341,9 +1345,30 @@ def _footer_stats_json(
             mins[name] = _json_safe(cmin)
             maxs[name] = _json_safe(cmax)
 
+    return _stats_json(num_records, mins, maxs, nulls)
+
+
+def _stats_json(num_records: int, mins: dict, maxs: dict, nulls: dict) -> str:
+    """Delta stats JSON as the log writes it: compact, and strict JSON —
+    a column whose min or max is NaN or ±inf keeps its null count but no
+    bounds, since no JSON number spells them (and a NaN bound would prune
+    wrongly besides)."""
+    import json
+    import math
+
+    for c in [
+        c
+        for bounds in (mins, maxs)
+        for c, v in bounds.items()
+        if isinstance(v, float) and not math.isfinite(v)
+    ]:
+        mins.pop(c, None)
+        maxs.pop(c, None)
     return json.dumps(
         {"numRecords": num_records, "minValues": mins, "maxValues": maxs, "nullCount": nulls},
         default=str,
+        separators=(",", ":"),
+        allow_nan=False,
     )
 
 
@@ -1357,8 +1382,6 @@ def _json_safe(v):
         return str(v)
     if isinstance(v, bytes):
         return v.decode("utf-8", errors="replace")
-    if isinstance(v, float):
-        return v
     return v
 
 
