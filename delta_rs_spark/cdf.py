@@ -187,7 +187,7 @@ def load_cdf(
                     pairs.append(F.lit(_os.path.basename(a.path)))
                     pairs.append(F.lit(v))
                 return [
-                    spark.read.schema(_cdc_read_schema).parquet(*paths).select(
+                    snap._read(spark, _cdc_read_schema, paths, None).select(
                         *_cdc_sel,
                         CHANGE_TYPE_COL,
                         F.element_at(F.create_map(*pairs), fname)
@@ -208,7 +208,7 @@ def load_cdf(
         for v, adds_v in sorted(by_version.items()):
             if is_cdc:
                 paths = [snap._readable(a.path) for a in adds_v]
-                df = spark.read.schema(_cdc_read_schema).parquet(*paths).select(
+                df = snap._read(spark, _cdc_read_schema, paths, None).select(
                     *_cdc_sel, CHANGE_TYPE_COL
                 )
             else:

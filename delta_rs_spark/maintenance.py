@@ -635,7 +635,6 @@ def optimize(
             f"{c}={'__HIVE_DEFAULT_PARTITION__' if v is None else v}" for c, v in key
         )
         out_dir = os.path.join(staging_root, part_dir) if part_dir else staging_root
-        uris = [table.snapshot._readable(f.path) for f in files]
         n_out = max(1, math.ceil(sum(f.size for f in files) / target_file_size))
         if _rt_on:
             from pyspark.sql import functions as F
@@ -650,15 +649,11 @@ def optimize(
                 F.col(_rt_mod.ROW_ID_COL).alias(_mat_id),
                 F.col(_rt_mod.ROW_CV_COL).alias(_mat_cv),
             )
-        elif any(f.deletion_vector for f in files):
-            # DV-aware read: the rewrite drops deleted rows for good
-            df = table.snapshot.df_for_adds(spark, files, columns=list(data_schema.names))
-        elif _mapped:
-            # files store physical names; process logically, write physically
-            df = spark.read.schema(_cm.physical_schema(data_schema)).parquet(*uris)
-            df = df.select(*_cm.to_logical_exprs(data_schema))
         else:
-            df = spark.read.schema(data_schema).parquet(*uris)
+            # DV-aware read (the rewrite drops deleted rows for good), and
+            # logical under column mapping: processed logically, written
+            # physically
+            df = table.snapshot.df_for_adds(spark, files, columns=list(data_schema.names))
         if zorder_by:
             df = (
                 df.withColumn("_z", zcol)

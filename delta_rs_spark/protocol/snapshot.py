@@ -18,6 +18,8 @@ that iterate actions (DML, the writer, CDF, DataFrame construction).
 
 from __future__ import annotations
 
+import json
+import threading
 from typing import Any, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -45,6 +47,35 @@ from .state import (
     file_action_table,
 )
 from .stats import SkipTuple, prune_files
+
+
+# Spark lists the files one read names on the driver up to this many paths
+# and starts a listing job above it; ``Snapshot._read`` raises it per local
+# read, under the lock so concurrent reads restore it in order
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+_LISTING_LOCK = threading.Lock()
+
+# partition column types a basePath scan parses from a Hive directory the
+# way ``partition_value_to_typed`` parses the logged string, in every session
+_HIVE_TYPES = (T.StringType, T.BooleanType, T.ByteType, T.ShortType, T.IntegerType,
+               T.LongType, T.DateType)
+
+# characters Spark's Hive partition writer escapes as %XX
+# (``ExternalCatalogUtils.escapePathName``)
+_HIVE_ESCAPED = frozenset('"#%\'*/:=?\\\x7f{[]^') | {chr(c) for c in range(1, 32)}
+
+
+def _hive_escape(s: Optional[str]) -> str:
+    """A Hive directory's spelling of a column name or logged value."""
+    if s is None or s == "":
+        return "__HIVE_DEFAULT_PARTITION__"
+    return "".join(f"%{ord(ch):02X}" if ch in _HIVE_ESCAPED else ch for ch in s)
+
+
+def _sql_json(obj: Any) -> str:
+    """``obj`` as compact JSON in a SQL string literal."""
+    text = json.dumps(obj, separators=(",", ":"))
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 class UnsupportedFeatureError(DeltaTableError):
@@ -286,10 +317,9 @@ class Snapshot:
 
         File-level pruning (partition filters + stats skipping) happens here,
         *before* plan construction — Spark never lists or opens pruned files.
-        Partition columns are attached from the log's partitionValues (the
-        parquet files do not store them), grouped so each distinct partition
-        tuple is one scan branch; row-level residual filtering is left to
-        Catalyst.
+        The kept files are one parquet scan (``_scan``) whose partition
+        columns carry the log's partitionValues (the parquet files do not
+        store them); row-level residual filtering is left to Catalyst.
         """
         adds = self.files(partition_filters=partition_filters, skip_predicates=skip_predicates)
         return self.df_for_adds(spark, adds, columns=columns, with_row_ids=with_row_ids)
@@ -305,10 +335,12 @@ class Snapshot:
         """DataFrame over an explicit subset of this snapshot's files.
 
         Used by to_df (after pruning) and by DML, which reads only the files
-        it must rewrite. Files carrying a deletion vector drop their deleted
-        positions inside the scan (a bitmap test on ``_metadata.row_index``,
-        see ``_dv_keep_predicate``) that files without one share; with no
-        deletion vector in ``adds`` the scan is bare.
+        it must rewrite. ``adds`` are one parquet scan (``_scan``), plus a
+        second one where the anti join below serves. Files carrying a
+        deletion vector drop their deleted positions inside the scan (a
+        bitmap test on ``_metadata.row_index``, see ``_dv_keep_predicate``)
+        that files without one share; with no deletion vector in ``adds``
+        the scan is bare.
         ``with_lineage=True`` appends ``_drs_file`` (the
         add's log path) and ``_drs_pos`` (row index within the file) — the
         row identity DML and merge-on-read DELETE key on.
@@ -360,75 +392,76 @@ class Snapshot:
         # asked; only row ids need a final projection (each one costs a
         # round of analysis, a fixed share of a point lookup)
         if with_row_ids:
-            df = self._attach_row_ids(spark, df, adds, mat_id, mat_cv)
+            # the materialized column when the file carries one (rewritten
+            # files), else the add's baseRowId + row_index /
+            # defaultRowCommitVersion (fresh files)
+            df = self._attach_file_values(spark, df, adds, {
+                "_rt_base": (T.LongType(), [a.base_row_id for a in adds]),
+                "_rt_cv": (T.LongType(), [a.default_row_commit_version for a in adds]),
+            })
+            null = F.lit(None).cast("long")
             out_cols = list(table_schema.names)
             if with_lineage:
                 out_cols += [self.FILE_LINEAGE_COL, self.POS_LINEAGE_COL]
-            df = df.select(*out_cols, rt.ROW_ID_COL, rt.ROW_CV_COL)
+            df = df.select(
+                *out_cols,
+                F.coalesce(F.col(mat_id) if mat_id else null,
+                           F.col("_rt_base") + F.col(self.POS_LINEAGE_COL)).alias(rt.ROW_ID_COL),
+                F.coalesce(F.col(mat_cv) if mat_cv else null, F.col("_rt_cv")).alias(rt.ROW_CV_COL),
+            )
         if columns:
             df = df.select(*columns)
         return df
 
-    # above this many files the per-file (baseRowId, commitVersion) lookup
-    # switches from a literal map to a broadcast join — a 100k-entry literal
-    # map would bloat the plan the same way the union-branch cap does
-    ROW_ID_MAP_MAX_FILES = 1000
+    # above this many files a per-file value lookup (partition values, row
+    # ids) switches from a literal map to a broadcast join: the map is a
+    # plan literal searched linearly per row
+    FILE_MAP_MAX_FILES = 1000
 
-    def _attach_row_ids(
+    def _attach_file_values(
         self, spark: SparkSession, df: DataFrame, adds: list[AddAction],
-        mat_id: str | None, mat_cv: str | None,
+        columns: dict[str, tuple[T.DataType, list]],
     ) -> DataFrame:
-        """Append ``_row_id`` / ``_row_commit_version``: the materialized
-        column when the file carries one (rewritten files), else the add's
-        baseRowId + row_index / defaultRowCommitVersion (fresh files)."""
-        from . import row_tracking as rt
-
-        FILE, POS = self.FILE_LINEAGE_COL, self.POS_LINEAGE_COL
-        # keyed by what the lineage column evaluates to — equals a.path for
-        # log-relative adds but differs for absolute (shallow-clone) adds
-        base_items = [
-            (self._lineage_key(a), a.base_row_id)
-            for a in adds
-            if a.base_row_id is not None
-        ]
-        cv_items = [
-            (self._lineage_key(a), a.default_row_commit_version)
-            for a in adds
-            if a.default_row_commit_version is not None
-        ]
-        if len(adds) <= self.ROW_ID_MAP_MAX_FILES:
-            def map_col(items):
-                if not items:
-                    return F.lit(None).cast("long")
-                m = F.create_map(
-                    *[x for p, v in items for x in (F.lit(p), F.lit(v))]
-                )
-                return F.element_at(m, F.col(FILE))
-
-            base, cv = map_col(base_items), map_col(cv_items)
-        else:
+        """Append one column per ``columns`` entry (name → (type, one
+        Python value per add)): the value of the file each row was read
+        from, found by the lineage column ``_drs_file``. Up to
+        ``FILE_MAP_MAX_FILES`` files a map literal (file → index) picks
+        from one ``lit()`` array per column, one element per distinct
+        value row, and a file missing from it fails the scan; above that
+        a broadcast join against a per-file table serves."""
+        names = list(columns)
+        rows = list(zip(*(values for _, values in columns.values())))
+        keys = [self._lineage_key(a) for a in adds]
+        if len(adds) > self.FILE_MAP_MAX_FILES:
             lookup = spark.createDataFrame(
-                [
-                    (
-                        self._lineage_key(a),
-                        a.base_row_id,
-                        a.default_row_commit_version,
-                    )
-                    for a in adds
-                ],
-                "_rt_path string, _rt_base long, _rt_cv long",
+                [(k, *r) for k, r in zip(keys, rows)],
+                T.StructType(
+                    [T.StructField("_drs_key", T.StringType())]
+                    + [T.StructField(n, columns[n][0]) for n in names]
+                ),
             )
-            df = df.join(
-                F.broadcast(lookup), df[FILE] == lookup["_rt_path"], "left"
-            ).drop("_rt_path")
-            base, cv = F.col("_rt_base"), F.col("_rt_cv")
+            return df.join(
+                F.broadcast(lookup), df[self.FILE_LINEAGE_COL] == lookup["_drs_key"], "left"
+            ).drop("_drs_key")
+        def lit(value, dtype):
+            # a datetime lit() is an instant, which a cast to timestamp_ntz
+            # reads in the session time zone; the wall-clock string is not
+            if isinstance(dtype, T.TimestampNTZType) and value is not None:
+                value = str(value)
+            return F.lit(value)
 
-        mat_id_col = F.col(mat_id) if mat_id else F.lit(None).cast("long")
-        mat_cv_col = F.col(mat_cv) if mat_cv else F.lit(None).cast("long")
-        df = df.withColumn(
-            rt.ROW_ID_COL, F.coalesce(mat_id_col, base + F.col(POS))
-        ).withColumn(rt.ROW_CV_COL, F.coalesce(mat_cv_col, cv))
-        return df.drop(*(c for c in (mat_id, mat_cv, "_rt_base", "_rt_cv") if c))
+        distinct = list(dict.fromkeys(rows))
+        index = {r: i + 1 for i, r in enumerate(distinct)}
+        pick = F.expr(
+            f"coalesce(from_json({_sql_json({k: index[r] for k, r in zip(keys, rows)})}, "
+            f"'map<string,int>')[{self.FILE_LINEAGE_COL}], "
+            "raise_error('scan read a file it has no partition or row-id values for'))"
+        )
+        return df.withColumns({
+            n: F.element_at(F.array(*[lit(r[j], columns[n][0]) for r in distinct]), pick)
+            .cast(columns[n][0])
+            for j, n in enumerate(names)
+        })
 
     def _lineage_exprs(self) -> list:
         """Relative file path + row index from the scan's ``_metadata``.
@@ -468,18 +501,6 @@ class Snapshot:
             return "file:" + uri
         return uri
 
-    @staticmethod
-    def _with_mat_fields(schema: T.StructType, mat_cols: Sequence[str]) -> T.StructType:
-        """Extend a read schema with the row-tracking materialized columns
-        (nullable longs): files written before a rewrite don't have them and
-        read NULL through the explicit schema — exactly what coalesce needs."""
-        extra = [
-            T.StructField(c, T.LongType(), True)
-            for c in mat_cols
-            if c not in schema.names
-        ]
-        return T.StructType(list(schema.fields) + extra) if extra else schema
-
     def _scan(
         self,
         spark: SparkSession,
@@ -488,39 +509,82 @@ class Snapshot:
         mat_cols: Sequence[str] = (),
         row_filter: Optional[Column] = None,
     ) -> DataFrame:
-        """Scan ``adds``; ``row_filter`` (over the scan's ``_metadata``) is
-        applied on the file scan itself, before any projection."""
-        table_schema = self.schema()
+        """One parquet scan of ``adds``: the table's columns, then
+        ``mat_cols``, then lineage when asked. ``row_filter`` (over the
+        scan's ``_metadata``) is applied on the file scan itself.
+
+        Partition columns carry the log's partitionValues. When the files
+        sit at the Hive paths of those values (``_hive_layout``), Spark
+        derives them from the paths of a ``basePath`` scan; otherwise the
+        scan reads the data columns and each file's values are attached by
+        its lineage key (``_attach_file_values``). Either way only the
+        listed files are read: ``basePath`` names where partition
+        directories start, not what to list."""
+        schema = self.schema()
         pcols = self.metadata.partition_columns
-        if not pcols:
-            if self.mapping_mode() != "none":
-                # data files carry PHYSICAL column names: scan physically,
-                # rename logical via positional struct casts (pure codegen);
-                # materialized row-id columns are physical by definition
-                scan_schema = self._with_mat_fields(
-                    cm.physical_schema(table_schema), mat_cols
-                )
-                df = self._read(
-                    spark, scan_schema, [self._readable(a.path) for a in adds], row_filter
-                )
-                sel = cm.to_logical_exprs(table_schema) + [F.col(c) for c in mat_cols]
-                if include_lineage:
-                    return df.select(*sel, *self._lineage_exprs())
-                return df.select(*sel)
-            df = self._read(
-                spark,
-                self._with_mat_fields(table_schema, mat_cols),
-                [self._readable(a.path) for a in adds],
-                row_filter,
-            )
-            if include_lineage:
-                cols = list(table_schema.names) + list(mat_cols)
-                return df.select(*cols, *self._lineage_exprs())
-            return df  # already the table's columns, then mat_cols
-        return self._read_partitioned(
-            spark, adds, include_lineage=include_lineage, mat_cols=mat_cols,
-            row_filter=row_filter,
+        mapped = self.mapping_mode() != "none"
+        # with column mapping, partitionValues keys AND the Hive path dirs
+        # use physical names; the emitted DataFrame stays logical
+        phys = cm.top_level_physical(schema) if mapped else {c: c for c in schema.names}
+        paths = [self._readable(a.path) for a in adds]
+        hive = (
+            bool(pcols)
+            and all(isinstance(schema[c].dataType, _HIVE_TYPES) for c in pcols)
+            and self._hive_layout(adds, paths, phys)
         )
+        scan_schema = schema if hive or not pcols else self.data_schema()
+        read_schema = cm.physical_schema(scan_schema) if mapped else scan_schema
+        # row-tracking materialized columns: files written before a rewrite
+        # lack them and read NULL, which the row-id coalesce needs
+        read_schema = T.StructType(read_schema.fields + [
+            T.StructField(c, T.LongType()) for c in mat_cols if c not in read_schema.names
+        ])
+        df = self._read(
+            spark, read_schema, paths, row_filter,
+            base_path=self.log.data_plane.scan_root if hive else None,
+        )
+        sel = (cm.to_logical_exprs(scan_schema) if mapped else list(scan_schema.names)) + [
+            F.col(c) for c in mat_cols
+        ]
+        lineage = self._lineage_exprs() if include_lineage else []
+        if not pcols and not mapped and not lineage:
+            return df  # already the table's columns, then mat_cols
+        # lineage exprs read _metadata.* so they are applied on the scan
+        if hive or not pcols:
+            return df.select(*sel, *lineage)
+        # the per-file values are found by the lineage file column
+        df = df.select(*sel, *(lineage or self._lineage_exprs()))
+        df = self._attach_file_values(spark, df, adds, {
+            c: (
+                schema[c].dataType,
+                [partition_value_to_typed(a.partition_values.get(phys[c]), schema[c].dataType)
+                 for a in adds],
+            )
+            for c in pcols
+        })
+        lineage_names = [self.FILE_LINEAGE_COL, self.POS_LINEAGE_COL] if lineage else []
+        return df.select(*schema.names, *mat_cols, *lineage_names)
+
+    def _hive_layout(
+        self, adds: list[AddAction], paths: list[str], phys: dict[str, str]
+    ) -> bool:
+        """Whether every file lies directly in the Hive directories of its
+        logged partitionValues under the scan root, so that a ``basePath``
+        scan derives exactly those values. Shallow-clone files under
+        another table's root do not."""
+        pcols = self.metadata.partition_columns
+        root = self.log.data_plane.scan_root.rstrip("/") + "/"
+        prefixes: dict[tuple, str] = {}
+        for a, path in zip(adds, paths):
+            key = tuple(a.partition_values.get(phys[c]) for c in pcols)
+            prefix = prefixes.get(key)
+            if prefix is None:
+                prefix = prefixes[key] = root + "".join(
+                    f"{_hive_escape(phys[c])}={_hive_escape(v)}/" for c, v in zip(pcols, key)
+                )
+            if not path.startswith(prefix) or "/" in path[len(prefix):]:
+                return False
+        return True
 
     @staticmethod
     def _read(
@@ -530,10 +594,25 @@ class Snapshot:
         row_filter: Optional[Column],
         base_path: Optional[str] = None,
     ) -> DataFrame:
+        """One parquet scan of exactly ``paths`` — every read of logged
+        files goes through here. Spark lists the named files as the
+        DataFrame is built; local paths are listed on the driver (the
+        path count above which Spark starts a listing job is raised past
+        ``len(paths)`` for the build, then restored), while remote URIs
+        keep Spark's parallel listing, as each file is a round trip."""
         reader = spark.read.schema(schema)
         if base_path is not None:
             reader = reader.option("basePath", base_path)
-        df = reader.parquet(*paths)
+        if any("://" in p and not p.startswith("file:") for p in paths):
+            df = reader.parquet(*paths)
+        else:
+            with _LISTING_LOCK:
+                threshold = spark.conf.get(_LISTING_THRESHOLD)
+                spark.conf.set(_LISTING_THRESHOLD, str(max(len(paths), int(threshold))))
+                try:
+                    df = reader.parquet(*paths)
+                finally:
+                    spark.conf.set(_LISTING_THRESHOLD, threshold)
         return df if row_filter is None else df.filter(row_filter)
 
     def _dv_keep_predicate(self, adds: list[AddAction]) -> Optional[Column]:
@@ -553,8 +632,6 @@ class Snapshot:
         files, bitmaps past ``DV_BITMAP_MAX_BYTES`` or two files sharing a
         name fall back to the anti join. Built as one SQL expression: one
         call into the JVM instead of one per operator."""
-        import json
-
         from .dv import add_positions, bitmap_words
 
         if len(adds) > self.DV_IN_SCAN_MAX_FILES:
@@ -566,10 +643,7 @@ class Snapshot:
         n_words = sum((max(p) >> 6) + 1 for p in positions if p)
         if n_words * 8 > self.DV_BITMAP_MAX_BYTES:
             return None
-        bitmaps = json.dumps(
-            {n: bitmap_words(p) for n, p in zip(names, positions)}, separators=(",", ":")
-        )
-        literal = "'" + bitmaps.replace("\\", "\\\\").replace("'", "\\'") + "'"
+        literal = _sql_json({n: bitmap_words(p) for n, p in zip(names, positions)})
         words = (
             f"coalesce(from_json({literal}, 'map<string,array<bigint>>')"
             "[_metadata.file_name], raise_error('deletion-vector scan read a "
@@ -606,86 +680,6 @@ class Snapshot:
             F.col(self.POS_LINEAGE_COL) == F.col("_dv_pos")
         )
         return df.join(pos, cond, "left_anti")
-
-    # above this many distinct partition tuples, a lit()-union plan becomes a
-    # liability (a 10k-branch union stalls analysis); switch to one basePath
-    # scan where Spark derives partition columns from the Hive paths
-    MAX_UNION_BRANCHES = 64
-
-    def _read_partitioned(
-        self,
-        spark: SparkSession,
-        adds: list[AddAction],
-        include_lineage: bool = False,
-        mat_cols: Sequence[str] = (),
-        row_filter: Optional[Column] = None,
-    ) -> DataFrame:
-        """Attach partition columns from the log's partitionValues.
-
-        Small group count (the common case after pruning): one union branch
-        per distinct partition tuple with typed ``lit()`` columns — exact,
-        no path parsing, works even for non-Hive layouts. Large group count
-        (full scan of a heavily partitioned table): a single
-        ``basePath`` scan over exactly the log's file list — one scan node,
-        no plan explosion; Spark types the partition columns from our
-        schema. Only the listed files are read either way — basePath only
-        controls partition-column derivation, not file discovery.
-        """
-        schema = self.schema()
-        data_schema = self.data_schema()
-        pcols = self.metadata.partition_columns
-        ptypes = {f.name: f.dataType for f in schema.fields if f.name in pcols}
-        lineage = self._lineage_exprs() if include_lineage else []
-
-        mapped = self.mapping_mode() != "none"
-        # with column mapping, partitionValues keys AND the Hive path dirs
-        # use physical names; the emitted DataFrame stays logical
-        phys = cm.top_level_physical(schema) if mapped else {c: c for c in schema.names}
-
-        groups: dict[tuple, list[str]] = {}
-        for a in adds:
-            key = tuple(a.partition_values.get(phys[c]) for c in pcols)
-            groups.setdefault(key, []).append(self._readable(a.path))
-
-        if len(groups) > self.MAX_UNION_BRANCHES and not mat_cols:
-            all_paths = [p for paths in groups.values() for p in paths]
-            # basePath derivation requires the Hive key=value layout; fall
-            # back to unions if any file's path doesn't encode it
-            if all(f"/{phys[c]}=" in p for p in all_paths for c in pcols):
-                scan_schema = cm.physical_schema(schema) if mapped else schema
-                df = self._read(
-                    spark, scan_schema, all_paths, row_filter,
-                    base_path=self.log.data_plane.scan_root,
-                )
-                if mapped:
-                    df = df.select(*cm.to_logical_exprs(schema), *lineage)
-                    return df
-                # Spark puts discovered partition columns last
-                return df.select(*schema.names, *lineage)
-
-        scan_data_schema = self._with_mat_fields(
-            cm.physical_schema(data_schema) if mapped else data_schema, mat_cols
-        )
-        data_sel = (
-            cm.to_logical_exprs(data_schema) if mapped else list(data_schema.names)
-        ) + [F.col(c) for c in mat_cols]
-        lineage_names = (
-            [self.FILE_LINEAGE_COL, self.POS_LINEAGE_COL] if include_lineage else []
-        )
-        branches = []
-        for key, paths in groups.items():
-            branch = self._read(spark, scan_data_schema, paths, row_filter)
-            # lineage exprs read _metadata.* so they must be applied directly
-            # on the scan; later selects reference them by alias only
-            branch = branch.select(*data_sel, *lineage)
-            for cname, sval in zip(pcols, key):
-                typed = partition_value_to_typed(sval, ptypes[cname])
-                branch = branch.withColumn(cname, F.lit(typed).cast(ptypes[cname]))
-            branches.append(branch.select(*schema.names, *mat_cols, *lineage_names))
-        df = branches[0]
-        for b in branches[1:]:
-            df = df.unionByName(b)
-        return df
 
     # ---- misc ------------------------------------------------------------
     def min_reader_version(self) -> int:

@@ -507,6 +507,28 @@ def test_shallow_clone_at_version(spark, tmp_path, sf_dir):
     assert clone.to_df(spark).count() == 40
 
 
+def test_shallow_clone_of_many_partitions_reads_like_its_source(spark, tmp_path):
+    """A shallow clone's adds are absolute paths under the source's root,
+    so a read of the clone must not take them for Hive files under its own
+    root — at any partition count."""
+    import pyarrow as pa
+
+    from delta_rs_spark import DeltaTable, write_deltalake
+
+    rows = pa.table({"id": list(range(700)), "p": [i % 70 for i in range(700)]})
+    src_uri = str(tmp_path / "src")
+    write_deltalake(spark, rows, src_uri, partition_by=["p"])
+    src = DeltaTable(src_uri)
+    want = sorted(map(tuple, src.to_df(spark).select("id", "p").collect()))
+    assert len(want) == 700
+
+    clone = src.shallow_clone(str(tmp_path / "clone"))
+    full = clone.to_df(spark).select("id", "p")
+    assert sorted(map(tuple, full.collect())) == want
+    one = clone.to_df(spark, partition_filters=[("p", "=", "7")]).select("id", "p")
+    assert sorted(map(tuple, one.collect())) == [r for r in want if r[1] == 7]
+
+
 def test_vacuum_reaps_aged_change_files(spark, tmp_path, sf_dir):
     """Change files age out of retention like data files (the reference's
     hidden-path predicate deliberately does NOT protect _change_data,

@@ -159,11 +159,10 @@ def test_null_partition_values(spark, tmp_path):
     assert back.count() == 3
 
 
-def test_many_partition_read_uses_basepath(spark, tmp_path):
-    """A table with more distinct partitions than MAX_UNION_BRANCHES reads
-    through the single basePath scan and returns identical data to the
-    union path."""
-    from delta_rs_spark.protocol.snapshot import Snapshot
+def test_partitioned_read_matches_logged_files(spark, tmp_path):
+    """A 100-partition read is one scan whose rows are exactly each logged
+    file's rows, read with pyarrow, plus that file's ``partitionValues``."""
+    import pyarrow.parquet as pq
 
     df = spark.range(200).select(
         F.col("id"), (F.col("id") % 100).alias("bucket"), (F.col("id") * 2.0).alias("v")
@@ -172,27 +171,24 @@ def test_many_partition_read_uses_basepath(spark, tmp_path):
     write_deltalake(spark, df, uri, partition_by=["bucket"])
 
     t = DeltaTable(uri)
-    assert len({a.partition_values["bucket"] for a in t.add_actions()}) == 100
+    adds = t.add_actions()
+    assert len({a.partition_values["bucket"] for a in adds}) == 100
 
-    fast = t.to_df(spark)
-    assert fast.count() == 200
-    assert dict(fast.dtypes)["bucket"] == "bigint"
-    # plan is ONE scan, not a 100-branch union
-    plan = fast._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Scan parquet") == 1
+    want = []
+    for a in adds:
+        part = pq.read_table(os.path.join(uri, a.path)).to_pydict()
+        bucket = int(a.partition_values["bucket"])
+        want += [(i, bucket, v) for i, v in zip(part["id"], part["v"])]
 
-    # force the union path and compare values exactly
-    orig = Snapshot.MAX_UNION_BRANCHES
-    Snapshot.MAX_UNION_BRANCHES = 10_000
-    try:
-        slow = DeltaTable(uri).to_df(spark)
-        assert sorted(map(tuple, fast.collect())) == sorted(map(tuple, slow.collect()))
-    finally:
-        Snapshot.MAX_UNION_BRANCHES = orig
+    full = t.to_df(spark)
+    assert dict(full.dtypes)["bucket"] == "bigint"
+    assert full._jdf.queryExecution().executedPlan().toString().count("Scan parquet") == 1
+    assert sorted(map(tuple, full.select("id", "bucket", "v").collect())) == sorted(want)
 
-    # partition pruning still happens before the plan: one partition -> union path
     one = t.to_df(spark, partition_filters=[("bucket", "=", "7")])
-    assert one.count() == 2
+    assert sorted(map(tuple, one.select("id", "bucket", "v").collect())) == sorted(
+        r for r in want if r[1] == 7
+    )
 
 
 def test_log_json_conforms_to_delta_vocabulary(spark, tmp_path, lineitem):
