@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .protocol.actions import AddAction, CdcAction, RemoveAction
+from .protocol.dv import descriptor_positions, file_reader
 
 CHANGE_TYPE_COL = "_change_type"
 COMMIT_VERSION_COL = "_commit_version"
@@ -120,6 +121,7 @@ def load_cdf(
         adds_v = [a for a in actions if isinstance(a, AddAction) and a.data_change]
         removes_v = [a for a in actions if isinstance(a, RemoveAction) and a.data_change]
         dv_swap_paths: set[str] = set()
+        read = file_reader(log)  # one GET per DV file of this commit's decodes
         for a in adds_v:
             if a.deletion_vector is not None:
                 dv_swap_paths.add(a.path)
@@ -127,12 +129,10 @@ def load_cdf(
                 # newly-dead rows of this commit = positions in the new DV
                 # that the prior DV (carried on the matching remove) did not
                 # already hold; decoded driver-side, bounded by cardinality
-                from .protocol.dv import descriptor_positions
-
-                new_pos = set(descriptor_positions(log, a.deletion_vector, a.path))
+                new_pos = set(descriptor_positions(log, a.deletion_vector, a.path, read))
                 if old is not None and old.deletion_vector:
                     new_pos -= set(
-                        descriptor_positions(log, old.deletion_vector, a.path)
+                        descriptor_positions(log, old.deletion_vector, a.path, read)
                     )
                 if new_pos:
                     dv_delete_groups.setdefault(v, []).append((a, sorted(new_pos)))

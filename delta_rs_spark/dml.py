@@ -623,7 +623,7 @@ def _dv_swap_actions(log, candidates: list[AddAction], per_file_rows: list) -> t
     Returns (actions, per_file match counts, tombstoned-file count)."""
     import dataclasses
 
-    from .protocol.dv import build_descriptors, descriptor_positions
+    from .protocol.dv import add_positions, build_descriptors, file_reader
 
     if not per_file_rows:
         return [], {}, 0
@@ -650,10 +650,13 @@ def _dv_swap_actions(log, candidates: list[AddAction], per_file_rows: list) -> t
     n_tombstoned = 0
     merged: dict[str, list[int]] = {}
     swap_adds: list[AddAction] = []
+    # the scan that found the positions memoized each candidate's DV; the
+    # rest share one read per DV file
+    read = file_reader(log)
     for old in (a for a in candidates if a.path in matched_adds):
         combined = set(new_positions[old.path])
         if old.deletion_vector:
-            combined.update(descriptor_positions(log, old.deletion_vector, old.path))
+            combined.update(add_positions(log, old, read))
         actions.append(
             RemoveAction(
                 path=old.path,

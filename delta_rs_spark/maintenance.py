@@ -193,8 +193,8 @@ def _parquet_bytes(t) -> bytes:
       of ``t`` are left out (readers read an absent field as null);
     - a leaf column is dictionary-encoded only where its values repeat —
       at most one distinct value per two non-null ones (partition values,
-      modification times, DV storage types); unique paths, stats JSON and
-      inline DV bitmaps are written PLAIN;
+      modification times, DV storage types, the DV file a commit's
+      descriptors share); unique paths and stats JSON are written PLAIN;
     - no min/max statistics and no stored Arrow schema: a part is one row
       group that is never skipped, and the parquet schema reads back as
       the same Arrow types.

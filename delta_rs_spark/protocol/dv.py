@@ -12,34 +12,44 @@ tables written by this engine are readable by any conformant Delta reader:
   its frame's dataSize field, ``sizeInBytes`` is the dataSize value;
 - ``storageType "u"``: pathOrInlineDv = ``<prefix><z85(uuid)>``; the file
   lives at ``<tableRoot>/<prefix>/deletion_vector_<uuid>.bin``;
-- ``storageType "i"``: pathOrInlineDv = z85 of the framed-less ``data``
-  (magic + bitmap) — no file at all, ideal for point deletes;
+- ``storageType "i"``: pathOrInlineDv = z85 of the frameless ``data``
+  (magic + bitmap), no file;
 - ``storageType "p"``: absolute file path.
+
+The engine writes "u" only: every DV of a commit goes, as binary, to the
+commit's one .bin file, so the log holds a ~100 B descriptor per add and
+remove instead of restating the bitmap as Z85 text in the add, in the
+remove that retires it and in every checkpoint between. It reads all
+three: "i" comes from older builds of this engine and from other writers,
+"p" from shallow clones. Descriptors decoded together share one
+``file_reader``, which GETs each .bin once.
 
 Bitmap serialization is the published RoaringFormatSpec: the 64-bit
 "portable" layout (8-byte LE bucket count, then per bucket a 4-byte LE
-high key + a standard 32-bit roaring bitmap). The writer emits the
-no-run-container format (cookie 12346) with array or bitset containers;
-the reader additionally understands run containers (cookie 12347) so DV
-files produced by other engines decode too.
+high key + a standard 32-bit roaring bitmap). Each 16-bit container is
+written as a run, array or bitset container, whichever is smallest (a
+contiguous 300-row delete is one 4-byte run, not 600 bytes of array);
+the bitmap takes the run cookie (12347) when any container is a run and
+the no-run cookie (12346) otherwise. The reader takes both.
 
 The legacy descriptor this engine wrote before round 3
 (``{storageType: "d", paths: [...position-parquet dirs]}``) remains
 readable — see ``is_legacy`` — but is never written anymore.
 
-Everything here is driver-or-executor pure Python over bounded data:
+Everything here is driver-or-executor Python over bounded data:
 deletion vectors are kilobytes-to-megabytes by design (sparse deletes);
 bulk deletes take the copy-on-write path instead (see ``dml.py``).
 """
 
 from __future__ import annotations
 
-import os
 import struct
 import uuid as _uuid
 import zlib
 from dataclasses import dataclass
-from typing import Any, Iterable, Optional
+from typing import Any, Callable, Iterable, Optional
+
+import numpy as np
 
 # the table property that turns merge-on-read DML on; tables created by
 # ``write_deltalake`` get it set to "true" unless the caller says otherwise
@@ -55,13 +65,11 @@ def enabled(configuration: Optional[dict]) -> bool:
 DV_MAGIC = 1681511377
 DV_FORMAT_VERSION = 1
 
-# inline descriptors avoid a file round-trip for point deletes; past this
-# many bytes of bitmap the DV goes to a .bin file
-INLINE_MAX_BYTES = 1024
-
 _SERIAL_COOKIE_NO_RUN = 12346
 _SERIAL_COOKIE_RUN = 12347
 _ARRAY_TO_BITSET_THRESHOLD = 4096
+# a bitmap with run containers has an offset header from this many on
+_NO_OFFSET_THRESHOLD = 4
 
 # ---------------------------------------------------------------------------
 # Z85 (the base85 variant the Delta spec mandates for pathOrInlineDv)
@@ -105,54 +113,67 @@ def z85_decode(text: str) -> bytes:
 # ---------------------------------------------------------------------------
 
 def serialize_roaring64(positions: Iterable[int]) -> bytes:
-    """Sorted-unique positions → portable 64-bit roaring bytes (no-run
-    format: every container is an array (<4096 values) or a 8KB bitset)."""
-    buckets: dict[int, list[int]] = {}
-    for p in sorted(set(positions)):
-        if p < 0:
-            raise ValueError(f"negative row position {p}")
-        buckets.setdefault(p >> 32, []).append(p & 0xFFFFFFFF)
-
-    out = bytearray(struct.pack("<Q", len(buckets)))
-    for high in sorted(buckets):
+    """Row positions (any order, repeats allowed) → portable 64-bit roaring
+    bytes, each container in its smallest layout (see
+    ``_serialize_roaring32``)."""
+    p = np.unique(np.fromiter(positions, dtype=np.int64))
+    if p.size and p[0] < 0:
+        raise ValueError(f"negative row position {int(p[0])}")
+    highs, starts = np.unique(p >> 32, return_index=True)
+    out = bytearray(struct.pack("<Q", len(highs)))
+    for high, lo, hi in zip(highs.tolist(), starts.tolist(), [*starts[1:].tolist(), p.size]):
         out += struct.pack("<I", high)
-        out += _serialize_roaring32(buckets[high])
+        out += _serialize_roaring32((p[lo:hi] & 0xFFFFFFFF).astype(np.uint32))
     return bytes(out)
 
 
-def _serialize_roaring32(values: list[int]) -> bytes:
-    containers: dict[int, list[int]] = {}
-    for v in values:  # already sorted
-        containers.setdefault(v >> 16, []).append(v & 0xFFFF)
+def _serialize_roaring32(values: np.ndarray) -> bytes:
+    """Sorted unique uint32 values → one standard 32-bit roaring bitmap.
 
-    keys = sorted(containers)
-    out = bytearray(struct.pack("<I", _SERIAL_COOKIE_NO_RUN))
-    out += struct.pack("<I", len(keys))
-    for k in keys:
-        out += struct.pack("<HH", k, len(containers[k]) - 1)
-    # offsets (from the start of the 32-bit serialization): the layout is
-    # cookie(4) + size(4) + descriptive header (4 per container) + offset
-    # header (4 per container), so container data begins at 8 + 8k
-    data_start = 4 + 4 + 4 * len(keys) + 4 * len(keys)
-    offsets, pos = [], data_start
-    blobs = []
-    for k in keys:
-        vals = containers[k]
+    Each 16-bit container takes a run layout (``<n_runs> (<start>
+    <length-1>)*``, 2 + 4 per run bytes) where that is smaller than its
+    array (2 per value, up to 4096 values) or 8 KB bitset, as Roaring's
+    ``runOptimize`` does. With any run container the header is the run
+    cookie carrying the container count, then a run-flag bitset, and the
+    offset header only at 4 or more containers; without, the no-run cookie
+    and count, and offsets always (RoaringFormatSpec)."""
+    keys, starts = np.unique(values >> 16, return_index=True)
+    ends = [*starts[1:].tolist(), values.size]
+    headers, blobs, runs = bytearray(), [], bytearray((len(keys) + 7) // 8)
+    for i, (key, lo, hi) in enumerate(zip(keys.tolist(), starts.tolist(), ends)):
+        lows = (values[lo:hi] & 0xFFFF).astype("<u2")
+        card = hi - lo
+        headers += struct.pack("<HH", key, card - 1)
+        breaks = np.flatnonzero(np.diff(lows) != 1) + 1
+        run_starts = lows[np.r_[0, breaks]]
+        run_ends = lows[np.r_[breaks - 1, card - 1]]
         # roaring spec boundary: cardinality <= 4096 is an ARRAY container
-        # (the reader side and every external reader use the same rule; a
-        # bitset at exactly 4096 would be misdecoded as an array)
-        if len(vals) <= _ARRAY_TO_BITSET_THRESHOLD:
-            blob = struct.pack(f"<{len(vals)}H", *vals)
+        # (a bitset at exactly 4096 would be misdecoded as an array)
+        plain = 2 * card if card <= _ARRAY_TO_BITSET_THRESHOLD else 8192
+        if 2 + 4 * run_starts.size < plain:
+            runs[i // 8] |= 1 << (i % 8)
+            pairs = np.column_stack([run_starts, run_ends - run_starts]).astype("<u2")
+            blobs.append(struct.pack("<H", run_starts.size) + pairs.tobytes())
+        elif card <= _ARRAY_TO_BITSET_THRESHOLD:
+            blobs.append(lows.tobytes())
         else:
-            bits = bytearray(8192)
-            for v in vals:
-                bits[v >> 3] |= 1 << (v & 7)
-            blob = bytes(bits)
-        offsets.append(pos)
-        blobs.append(blob)
-        pos += len(blob)
-    for off in offsets:
-        out += struct.pack("<I", off)
+            bits = np.zeros(1 << 16, dtype=bool)
+            bits[lows] = True
+            blobs.append(np.packbits(bits, bitorder="little").tobytes())
+
+    n = len(keys)
+    if any(runs):
+        out = bytearray(struct.pack("<I", _SERIAL_COOKIE_RUN | (n - 1) << 16)) + runs + headers
+        with_offsets = n >= _NO_OFFSET_THRESHOLD
+    else:
+        out = bytearray(struct.pack("<II", _SERIAL_COOKIE_NO_RUN, n)) + headers
+        with_offsets = True
+    if with_offsets:
+        # each container's byte position from the start of this bitmap
+        pos = len(out) + 4 * n
+        for blob in blobs:
+            out += struct.pack("<I", pos)
+            pos += len(blob)
     for blob in blobs:
         out += blob
     return bytes(out)
@@ -184,7 +205,7 @@ def _deserialize_roaring32(data: bytes) -> tuple[list[int], int]:
         n_run_bytes = (n_containers + 7) // 8
         run_flags = data[pos : pos + n_run_bytes]
         pos += n_run_bytes
-        has_offsets = n_containers >= 4
+        has_offsets = n_containers >= _NO_OFFSET_THRESHOLD
     elif cookie == _SERIAL_COOKIE_NO_RUN:
         (n_containers,) = struct.unpack_from("<I", data, 4)
         pos = 8
@@ -236,7 +257,7 @@ class DvBlob:
     """One serialized DV and where it sits in its (future) file."""
 
     data: bytes  # magic + roaring64
-    offset: Optional[int]  # position of the dataSize field; None for inline
+    offset: int  # position of the frame's dataSize field in the file
     cardinality: int
 
 
@@ -326,47 +347,28 @@ def build_descriptors(
     per_file_positions: dict[str, list[int]],
 ) -> tuple[dict[str, dict[str, Any]], Optional[tuple[str, bytes]]]:
     """Per-(add path) position lists → per-path spec descriptors, plus the
-    one shared .bin file to publish (or None if everything inlined).
+    one .bin file to publish (None when there is no DV to write).
 
-    Small bitmaps inline (storageType "i"); the rest share a single
-    uuid-named file (storageType "u") with per-DV offsets.
+    Every DV goes to the commit's one uuid-named file (storageType "u")
+    at its own offset: the log carries only the descriptor, and the bitmap
+    is written once, as binary, not restated as Z85 text in the add, the
+    remove that retires it and every checkpoint in between.
     """
-    inline: dict[str, dict[str, Any]] = {}
-    filed: list[tuple[str, list[int]]] = []
-    for path, positions in per_file_positions.items():
-        data = struct.pack("<I", DV_MAGIC) + serialize_roaring64(positions)
-        if len(data) <= INLINE_MAX_BYTES:
-            inline[path] = {
-                "storageType": "i",
-                "pathOrInlineDv": z85_encode(_pad4(data)),
-                "sizeInBytes": len(data),
-                "cardinality": len(set(positions)),
-            }
-        else:
-            filed.append((path, positions))
-
-    if not filed:
-        return inline, None
-
-    file_body, blobs = frame_dv_file([p for _, p in filed])
+    if not per_file_positions:
+        return {}, None
+    file_body, blobs = frame_dv_file(list(per_file_positions.values()))
     encoded_uuid, rel_name = make_descriptor_uuid()
-    descriptors = dict(inline)
-    for (path, _), blob in zip(filed, blobs):
-        descriptors[path] = {
+    descriptors = {
+        path: {
             "storageType": "u",
             "pathOrInlineDv": encoded_uuid,
             "offset": blob.offset,
             "sizeInBytes": len(blob.data),
             "cardinality": blob.cardinality,
         }
+        for path, blob in zip(per_file_positions, blobs)
+    }
     return descriptors, (rel_name, file_body)
-
-
-def _pad4(data: bytes) -> bytes:
-    """Z85 needs 4-byte alignment; trailing zero padding is harmless — the
-    roaring deserializer stops at its own length fields."""
-    pad = (-len(data)) % 4
-    return data + b"\x00" * pad
 
 
 # ---------------------------------------------------------------------------
@@ -384,8 +386,39 @@ def referenced_rel_paths(descriptor: dict[str, Any]) -> tuple[list[str], list[st
     return [], []
 
 
-def descriptor_positions(log, descriptor: dict[str, Any], add_path: str) -> list[int]:
-    """Sorted deleted row positions for one add, either format.
+def file_reader(log) -> Callable[[str], bytes]:
+    """``get_file_bytes`` for ``decode_descriptor`` over a table's storage
+    that GETs each DV file once: a commit files all its DVs in one .bin,
+    so decoding a set of descriptors through one reader costs one GET per
+    distinct file, not one per descriptor."""
+    files: dict[str, bytes] = {}
+
+    def get_bytes(rel_or_abs: str) -> bytes:
+        if rel_or_abs in files:
+            return files[rel_or_abs]
+        if "://" in rel_or_abs:
+            # absolute URI (a shallow clone's source DV, possibly a
+            # different scheme than this table): resolve its own backend
+            from .storage import parse_table_uri
+
+            normalized, backend = parse_table_uri(rel_or_abs)
+            data = backend.get_obj(normalized)
+        elif rel_or_abs.startswith("/"):
+            with open(rel_or_abs, "rb") as fh:
+                data = fh.read()
+        else:
+            data = log.backend.get_obj(log.backend.join(log.table_root, rel_or_abs))
+        files[rel_or_abs] = data
+        return data
+
+    return get_bytes
+
+
+def descriptor_positions(
+    log, descriptor: dict[str, Any], add_path: str, read: Optional[Callable[[str], bytes]] = None
+) -> list[int]:
+    """Sorted deleted row positions for one add, either format. ``read``
+    is a ``file_reader`` shared by the descriptors decoded together.
 
     Bounded driver-side work by design: a DV holds the sparse-delete
     positions of ONE file (kilobytes to low megabytes — the same in-memory
@@ -404,21 +437,7 @@ def descriptor_positions(log, descriptor: dict[str, Any], add_path: str) -> list
                 if p == add_path or p.rsplit("/", 1)[-1] == basename:
                     out.add(ri)
         return sorted(out)
-
-    def get_bytes(rel_or_abs: str) -> bytes:
-        if "://" in rel_or_abs:
-            # absolute URI (a shallow clone's source DV, possibly a
-            # different scheme than this table): resolve its own backend
-            from .storage import parse_table_uri
-
-            normalized, backend = parse_table_uri(rel_or_abs)
-            return backend.get_obj(normalized)
-        if rel_or_abs.startswith("/"):
-            with open(rel_or_abs, "rb") as fh:
-                return fh.read()
-        return log.backend.get_obj(log.backend.join(log.table_root, rel_or_abs))
-
-    return decode_descriptor(descriptor, get_bytes)
+    return decode_descriptor(descriptor, read or file_reader(log))
 
 
 def descriptor_positions_for_root(
@@ -439,31 +458,27 @@ def descriptor_positions_for_root(
             f"executor-side decode supports spec descriptors only, got "
             f"storageType={descriptor.get('storageType')!r}"
         )
+    from .log import DeltaLog
 
-    def get_bytes(rel_or_abs: str) -> bytes:
-        from .storage import parse_table_uri
-
-        if "://" in rel_or_abs:
-            normalized, backend = parse_table_uri(rel_or_abs)
-            return backend.get_obj(normalized)
-        if rel_or_abs.startswith("/"):
-            with open(rel_or_abs, "rb") as fh:
-                return fh.read()
-        root, backend = parse_table_uri(table_root)
-        return backend.get_obj(backend.join(root, rel_or_abs))
-
-    return decode_descriptor(descriptor, get_bytes)
+    return decode_descriptor(descriptor, file_reader(DeltaLog(table_root)))
 
 
-def add_positions(log, add) -> list[int]:
+def add_positions(log, add, read: Optional[Callable[[str], bytes]] = None) -> list[int]:
     """Memoized ``descriptor_positions`` for an AddAction (stats-style
     per-instance cache: pruning/scan/CDF may ask repeatedly)."""
     cached = add.__dict__.get("_dv_positions_cache")
     if cached is not None:
         return cached
-    positions = descriptor_positions(log, add.deletion_vector, add.path)
+    positions = descriptor_positions(log, add.deletion_vector, add.path, read)
     add.__dict__["_dv_positions_cache"] = positions
     return positions
+
+
+def adds_positions(log, adds) -> list[list[int]]:
+    """``add_positions`` of each add (none for an add without a DV),
+    reading each DV file once."""
+    read = file_reader(log)
+    return [add_positions(log, a, read) if a.deletion_vector else [] for a in adds]
 
 
 def positions_df(spark, log, dv_adds, key_fn=None):
@@ -479,8 +494,7 @@ def positions_df(spark, log, dv_adds, key_fn=None):
 
     paths: list[str] = []
     pos: list[int] = []
-    for a in dv_adds:
-        p = add_positions(log, a)
+    for a, p in zip(dv_adds, adds_positions(log, dv_adds)):
         key = key_fn(a) if key_fn is not None else a.path
         paths.extend([key] * len(p))
         pos.extend(p)
@@ -492,8 +506,6 @@ def bitmap_words(positions: list[int]) -> list[int]:
     """Deleted positions → a plain bitmap as signed 64-bit words: bit
     ``p & 63`` of word ``p >> 6`` is set for each position, up to the last
     one (the in-scan DV filter's literal, ``Snapshot._dv_keep_predicate``)."""
-    import numpy as np
-
     if not positions:
         return []
     p = np.asarray(positions, dtype=np.uint64)

@@ -133,14 +133,19 @@ class Snapshot:
             loaded = cp.version
             break
 
+        # the latest load folds the commits the listing saw: probing past
+        # the last one would end every open with a failed GET
+        target = version
+        if target is None:
+            target = max(listing.versions[-1] if listing.versions else -1, loaded)
         v = loaded + 1
         # log-compaction files covering [s, e] fold in place of the commits
         # they reconcile — on object stores that's 1 GET instead of e-s+1
         comps: dict[int, int] = {}
         for s, e in listing.compactions:
-            if version is None or e <= version:  # one that overshoots is unusable
+            if e <= target:  # one that overshoots is unusable
                 comps[s] = max(comps.get(s, -1), e)
-        while version is None or v <= version:
+        while v <= target:
             end = comps.get(v)
             if end is not None and end > v:
                 actions = log.try_read_compaction(v, end)
@@ -632,14 +637,14 @@ class Snapshot:
         files, bitmaps past ``DV_BITMAP_MAX_BYTES`` or two files sharing a
         name fall back to the anti join. Built as one SQL expression: one
         call into the JVM instead of one per operator."""
-        from .dv import add_positions, bitmap_words
+        from .dv import adds_positions, bitmap_words
 
         if len(adds) > self.DV_IN_SCAN_MAX_FILES:
             return None
         names = [self._readable(a.path).rsplit("/", 1)[-1] for a in adds]
         if len(set(names)) < len(names):
             return None
-        positions = [add_positions(self.log, a) if a.deletion_vector else [] for a in adds]
+        positions = adds_positions(self.log, adds)
         n_words = sum((max(p) >> 6) + 1 for p in positions if p)
         if n_words * 8 > self.DV_BITMAP_MAX_BYTES:
             return None
@@ -659,10 +664,11 @@ class Snapshot:
         self, spark: SparkSession, df: DataFrame, dv_adds: list[AddAction]
     ) -> DataFrame:
         """Drop rows whose (file, row_index) appears in a deletion vector —
-        the path for bitmaps too large to inline (``_dv_keep_predicate``).
+        the path for bitmaps too large for the in-scan filter
+        (``_dv_keep_predicate``).
 
         The positions side is decoded from the adds' RoaringBitmap DVs
-        (spec format — inline or .bin; the pre-round-3 parquet-dir format
+        (spec format — .bin or inline; the pre-round-3 parquet-dir format
         decodes through the same seam) into ONE Arrow-backed literal frame:
         the identical per-file bitmap materialization every Delta reader
         performs, bounded by the descriptors' cardinality. When the total

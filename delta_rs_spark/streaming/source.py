@@ -274,9 +274,10 @@ class DeltaStreamReader(DataSourceStreamReader):
         ignoreChanges gate — in CDF mode deletes ARE the payload."""
         from ..protocol.actions import AddAction, CdcAction, RemoveAction
 
-        from ..protocol.dv import descriptor_positions
+        from ..protocol.dv import descriptor_positions, file_reader
 
         absolute = log.readable
+        read = file_reader(log)
 
         cdc = [a for a in actions if isinstance(a, CdcAction)]
         if cdc:
@@ -304,10 +305,10 @@ class DeltaStreamReader(DataSourceStreamReader):
                 # matching remove); decoded driver-side at planning time
                 dv_swap_paths.add(a.path)
                 old = next((r for r in removes_v if r.path == a.path), None)
-                newly = set(descriptor_positions(log, a.deletion_vector, a.path))
+                newly = set(descriptor_positions(log, a.deletion_vector, a.path, read))
                 if old is not None and old.deletion_vector:
                     newly -= set(
-                        descriptor_positions(log, old.deletion_vector, a.path)
+                        descriptor_positions(log, old.deletion_vector, a.path, read)
                     )
                 if newly:
                     parts.append(
@@ -347,7 +348,7 @@ class DeltaStreamReader(DataSourceStreamReader):
                     commit_version=v,
                     # prior DV: rows already dead at removal stay deleted
                     dv_positions=(
-                        descriptor_positions(log, dv, r.path) if dv else None
+                        descriptor_positions(log, dv, r.path, read) if dv else None
                     ),
                 )
             )

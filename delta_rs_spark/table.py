@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from .protocol.actions import AddAction, MetaDataAction
+from .protocol.dv import add_positions, file_reader
 from .protocol.log import DeltaLog
 from .protocol.partitions import FilterTuple
 from .protocol.snapshot import NotATableError, Snapshot
@@ -217,12 +218,11 @@ class DeltaTable:
         full_schema = self.pyarrow_schema()
         pcols = self.metadata().partition_columns
         pieces = []
+        read = file_reader(self.log)
         for a in adds:
             tbl = pq.read_table(snap._local(a.path))
             if a.deletion_vector:
-                from .protocol.dv import add_positions
-
-                dead = set(add_positions(self.log, a))
+                dead = set(add_positions(self.log, a, read))
                 if dead:
                     keep = [i for i in range(tbl.num_rows) if i not in dead]
                     tbl = tbl.take(pa.array(keep, type=pa.int64()))

@@ -598,12 +598,14 @@ def _delete_entries_for_adds(
 ) -> list[dict]:
     """Position-delete entries for every DV-carrying add (bounded by DV
     cardinality — the same rows a Delta reader anti-joins)."""
-    from ..protocol.dv import add_positions
+    from ..protocol.dv import add_positions, file_reader
 
+    log = table.snapshot.log
+    read = file_reader(log)
     out = []
     for a in adds:
         if getattr(a, "deletion_vector", None):
-            positions = add_positions(table.snapshot.log, a)
+            positions = add_positions(log, a, read)
             if positions:
                 out.append(
                     _position_delete_entry(

@@ -174,12 +174,13 @@ def test_mocked_abfss_mor_delete(spark):
         assert t2.to_df(spark).count() == 180
         assert t2.to_df(spark).filter("k = 4").count() == 0
         # data files live in the fake blob store; DV descriptors are spec
-        # format (tiny ones inline, larger ones a deletion_vector_*.bin blob)
+        # format, every DV in the commit's deletion_vector_*.bin blob
         assert sum(1 for k in fake.blobs if k.endswith(".parquet")) >= 2
         dv_descs = [
             a.deletion_vector for a in t2.add_actions() if a.deletion_vector
         ]
-        assert dv_descs and all(d["storageType"] in ("u", "i") for d in dv_descs)
+        assert dv_descs and all(d["storageType"] == "u" for d in dv_descs)
+        assert any("deletion_vector_" in k for k in fake.blobs)
     finally:
         from delta_rs_spark.protocol.storage import _BACKEND_FACTORIES
 

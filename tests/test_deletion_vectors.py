@@ -8,19 +8,30 @@ the caller sets the property to ``false``. DELETE, UPDATE and MERGE find
 the matching rows' (file, row_index) positions through the scan's
 ``_metadata`` columns (no UDF) and re-commit the same data files with
 SPEC-format descriptors — RoaringBitmap DVs per the public Delta protocol
-(``protocol/dv.py``: storageType u/i/p, z85 pathOrInlineDv, framed .bin
-files), so the table and its ``deletionVectors`` feature token are
-foreign-readable. Readers drop the positions inside the scan with a bitmap
-test on ``_metadata.row_index`` (an anti join for bitmaps past
+(``protocol/dv.py``: every DV in the commit's framed .bin file, storageType
+"u"; inline "i" and absolute "p" descriptors read), so the table and its
+``deletionVectors`` feature token are foreign-readable. Readers drop the
+positions inside the scan with a bitmap test on ``_metadata.row_index``
+(an anti join for bitmaps past
 ``DV_BITMAP_MAX_BYTES``); OPTIMIZE materializes; stats fold subtracts
 cardinality; the pre-round-3 parquet-dir format still decodes (legacy
 fixture test below).
 """
 
+import dataclasses
+import json
+import os
+import struct
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
 from delta_rs_spark import DeltaTable
+from delta_rs_spark.protocol import dv
+from delta_rs_spark.protocol.actions import RemoveAction
+from delta_rs_spark.protocol.storage import LocalFileBackend
+from delta_rs_spark.transactions import DeltaTransaction
 from delta_rs_spark.writer import write_deltalake
 
 
@@ -246,18 +257,61 @@ def test_dv_checkpoint_roundtrip(spark, tmp_path):
     assert t3.to_df(spark).count() == 360
 
 
+def _inline_descriptor(positions: list[int]) -> dict:
+    """A storageType "i" descriptor as older builds of this engine and
+    other writers commit it: Z85 of the DV magic and bitmap, zero-padded to
+    a multiple of 4 bytes. The engine itself writes only "u"."""
+    data = struct.pack("<I", dv.DV_MAGIC) + dv.serialize_roaring64(positions)
+    return {
+        "storageType": "i",
+        "pathOrInlineDv": dv.z85_encode(data + b"\0" * (-len(data) % 4)),
+        "sizeInBytes": len(data),
+        "cardinality": len(set(positions)),
+    }
+
+
+def _commit_inline_dv(t, add, positions: list[int]) -> dict:
+    """Swap ``add`` for itself with an inline DV of ``positions``, by hand;
+    returns the descriptor."""
+    descriptor = _inline_descriptor(positions)
+    now = int(time.time() * 1000)
+    txn = DeltaTransaction(t)
+    txn.add_actions([
+        RemoveAction(
+            path=add.path, deletion_timestamp=now, data_change=True,
+            extended_file_metadata=True, partition_values=add.partition_values,
+            size=add.size,
+        ),
+        dataclasses.replace(add, deletion_vector=descriptor, modification_time=now),
+    ])
+    txn.commit("DELETE")
+    return descriptor
+
+
+def _logged_descriptors(path: str) -> list[tuple[str, dict]]:
+    """(action kind, deletionVector) of every add and remove in the log."""
+    out = []
+    log_dir = os.path.join(path, "_delta_log")
+    for name in sorted(os.listdir(log_dir)):
+        if not name.endswith(".json"):
+            continue
+        with open(os.path.join(log_dir, name)) as fh:
+            for line in fh:
+                for kind, action in json.loads(line).items():
+                    if kind in ("add", "remove") and action.get("deletionVector"):
+                        out.append((kind, action["deletionVector"]))
+    return out
+
+
 def test_dv_checkpoint_mixed_descriptor_shapes(spark, tmp_path):
     """Inline ("i") and filed ("u") descriptors in ONE checkpoint: pyarrow
     unifies them into a superset struct with None-filled gaps (offset only
     exists for "u"), and the decode must strip those back out — offset=None
-    on an inline descriptor used to poison DV reads after a checkpoint."""
-    import os
-
-    from delta_rs_spark.writer import write_deltalake
-
+    on an inline descriptor used to poison DV reads after a checkpoint. The
+    engine writes only "u", so the inline one is committed by hand."""
     path = str(tmp_path / "t")
     t = _make_table(spark, path, rows=40000)  # 10k rows x 4 files
-    t.delete(spark, "k = 1")  # 4k positions/file -> filed "u" descriptors
+    t.delete(spark, "k = 1")  # 1k positions/file -> filed "u" descriptors
     write_deltalake(
         spark,
         spark.range(100000, 100100).selectExpr("id", "id % 10 as k", "concat('v', id) as v").coalesce(1),
@@ -265,7 +319,9 @@ def test_dv_checkpoint_mixed_descriptor_shapes(spark, tmp_path):
         mode="append",
     )
     t2 = DeltaTable.for_path(path)
-    t2.delete(spark, "id >= 100000 and id % 2 = 0")  # 50 positions -> inline "i"
+    (new_add,) = [a for a in t2.add_actions() if not a.deletion_vector]
+    # the even ids of the appended file: 50 positions inline
+    _commit_inline_dv(t2, new_add, list(range(0, 100, 2)))
     t3 = DeltaTable.for_path(path)
     kinds = {
         a.deletion_vector["storageType"]
@@ -274,6 +330,7 @@ def test_dv_checkpoint_mixed_descriptor_shapes(spark, tmp_path):
     }
     assert kinds == {"u", "i"}
     expected = 40000 + 100 - 4000 - 50
+    assert t3.to_df(spark).count() == expected
 
     t3.create_checkpoint()
     t4 = DeltaTable.for_path(path)  # checkpoint + empty tail
@@ -320,8 +377,7 @@ def test_dv_vacuum_reaps_orphaned_position_files(spark, tmp_path):
     import time
 
     path = str(tmp_path / "t")
-    # big enough that per-file bitmaps exceed the inline threshold and a
-    # shared deletion_vector_<uuid>.bin is written (storageType "u")
+    # the delete's DVs share one deletion_vector_<uuid>.bin (storageType "u")
     t = _make_table(spark, path, rows=40000)
     t.delete(spark, "k = 1")
     t2 = DeltaTable.for_path(path)
@@ -805,3 +861,84 @@ def test_dv_update_cdf_synthesizes_delete_plus_insert(spark, tmp_path):
     # postimages carry the updated value; preimages the original
     assert all(r.v == "upd" for r in inserts)
     assert all(r.v != "upd" for r in deletes)
+
+
+def test_dml_over_inline_dv_files_the_union(spark, tmp_path):
+    """A delete over a file whose DV is inline (older builds, other
+    writers) writes the union of old and new positions as a "u" descriptor
+    in the commit's .bin, and its remove restates the inline descriptor
+    exactly."""
+    path = str(tmp_path / "t")
+    t = _make_table(spark, path, nfiles=1, rows=100)
+    inline = _commit_inline_dv(t, t.add_actions()[0], [0, 1, 2])
+    t2 = DeltaTable.for_path(path)
+    assert t2.count_rows() == t2.to_df(spark).count() == 97
+    assert t2.to_pyarrow_table().num_rows == 97
+
+    t2.delete(spark, "id >= 95")
+    logged = _logged_descriptors(path)
+    assert logged[-2:] == [("remove", inline), logged[-1]]
+    kind, new = logged[-1]
+    assert kind == "add" and new["storageType"] == "u" and new["cardinality"] == 8
+    t3 = DeltaTable.for_path(path)
+    assert t3.to_df(spark).count() == 92
+    assert sorted(r.id for r in t3.to_df(spark).collect()) == list(range(3, 95))
+
+
+def test_engine_dml_writes_no_inline_dv(spark, tmp_path):
+    """Every DV a delete, update or merge writes, down to a single row, is
+    filed in the commit's .bin ("u"): no add or remove in the log carries
+    an inline bitmap, and each commit writes one .bin."""
+    path = str(tmp_path / "t")
+    t = _make_table(spark, path)
+    t.delete(spark, "id = 7")
+    DeltaTable.for_path(path).update_where(spark, "id = 8", {"v": "'u8'"})
+    src = spark.createDataFrame([(9, 0, "m9"), (999, 0, "new")], "id LONG, k LONG, v STRING")
+    DeltaTable.for_path(path).merge(spark, src, "t.id = s.id")
+    DeltaTable.for_path(path).delete(spark, "k = 3")
+    logged = _logged_descriptors(path)
+    assert {k for k, _ in logged} == {"add", "remove"}
+    assert {d["storageType"] for _, d in logged} == {"u"}
+    assert len({d["pathOrInlineDv"] for _, d in logged}) == 4
+    assert len([f for f in os.listdir(path) if f.startswith("deletion_vector_")]) == 4
+    out = DeltaTable.for_path(path).to_df(spark)
+    assert out.count() == 400 - 1 + 1 - 40  # id 7, merge insert 999, k = 3
+    assert out.filter("id = 8").first().v == "u8"
+
+
+def test_dv_decodes_read_each_dv_file_once(spark, tmp_path, monkeypatch):
+    """A delete over 9 files files their 9 DVs in one .bin; a scan (in-scan
+    filter and anti join), a pyarrow read, the change feed and a second
+    delete each GET that file once, not once per DV."""
+    from delta_rs_spark.protocol.snapshot import Snapshot
+
+    path = str(tmp_path / "t")
+    t = _make_table(spark, path, nfiles=9, rows=900)
+    assert len(t.files()) == 9
+    res = t.delete(spark, "k = 1")
+    assert res["numDeletionVectorsAdded"] == 9
+    (dv_file,) = [f for f in os.listdir(path) if f.startswith("deletion_vector_")]
+
+    gets: list[str] = []
+    orig = LocalFileBackend.get_obj
+
+    def counted(self, p):
+        gets.append(p.rsplit("/", 1)[-1])
+        return orig(self, p)
+
+    monkeypatch.setattr(LocalFileBackend, "get_obj", counted)
+
+    def dv_gets(fn):
+        gets.clear()
+        fn()
+        return gets.count(dv_file)
+
+    assert dv_gets(lambda: DeltaTable.for_path(path).to_df(spark).count()) == 1
+    monkeypatch.setattr(Snapshot, "DV_IN_SCAN_MAX_FILES", 0)  # anti join
+    assert dv_gets(lambda: DeltaTable.for_path(path).to_df(spark).count()) == 1
+    assert dv_gets(lambda: DeltaTable.for_path(path).to_pyarrow_table()) == 1
+    assert dv_gets(
+        lambda: DeltaTable.for_path(path).load_cdf(spark, starting_version=res["version"]).count()
+    ) == 1
+    assert dv_gets(lambda: DeltaTable.for_path(path).delete(spark, "k = 2")) == 1
+    assert DeltaTable.for_path(path).to_df(spark).count() == 720

@@ -98,17 +98,20 @@ def test_uuid_path_derivation_roundtrip():
     assert dv.dv_file_rel_path(f"ab/{enc}") == f"ab/deletion_vector_{u}.bin"
 
 
-def test_build_descriptors_inlines_small_and_files_large():
+def test_build_descriptors_files_small_and_large():
+    """A 3-position DV and a 20k-position DV share the commit's one .bin,
+    each at its own offset; no descriptor carries its bitmap."""
     per_file = {
-        "part-a.parquet": [1, 5, 7],  # tiny -> inline
-        "part-b.parquet": list(range(0, 60000, 3)),  # 20k positions -> file
+        "part-a.parquet": [1, 5, 7],
+        "part-b.parquet": list(range(0, 60000, 3)),
     }
     descriptors, file_out = dv.build_descriptors(per_file)
     a, b = descriptors["part-a.parquet"], descriptors["part-b.parquet"]
-    assert a["storageType"] == "i"
-    assert a["cardinality"] == 3
-    assert b["storageType"] == "u"
-    assert b["cardinality"] == 20000
+    assert a["storageType"] == b["storageType"] == "u"
+    assert a["pathOrInlineDv"] == b["pathOrInlineDv"]
+    assert len(a["pathOrInlineDv"]) == 20
+    assert a["offset"] == 1 and b["offset"] > a["offset"]
+    assert (a["cardinality"], b["cardinality"]) == (3, 20000)
     assert file_out is not None
     rel_name, body = file_out
     assert rel_name == dv.dv_file_rel_path(b["pathOrInlineDv"])
@@ -118,10 +121,12 @@ def test_build_descriptors_inlines_small_and_files_large():
     assert dv.decode_descriptor(b, store.__getitem__) == list(range(0, 60000, 3))
 
 
-def test_build_descriptors_all_inline_writes_no_file():
+def test_build_descriptors_writes_a_file_only_for_dvs():
+    assert dv.build_descriptors({}) == ({}, None)
     descriptors, file_out = dv.build_descriptors({"p": [2, 4]})
-    assert file_out is None
-    assert descriptors["p"]["storageType"] == "i"
+    assert file_out is not None
+    assert descriptors["p"]["storageType"] == "u"
+    assert dv.decode_descriptor(descriptors["p"], {file_out[0]: file_out[1]}.__getitem__) == [2, 4]
 
 
 def test_legacy_descriptor_detection():
@@ -140,12 +145,14 @@ def test_roaring_array_bitset_boundary_at_4096():
         serialize_roaring64,
     )
 
+    # every other value: one run per value, so never a run container
     for card in (4095, 4096, 4097):
-        pos = list(range(card))
+        pos = list(range(0, 2 * card, 2))
         assert deserialize_roaring64(serialize_roaring64(pos)) == pos
     # exact-4096 serializes as an array: 2 bytes per value, not an 8KB bitset
-    data = serialize_roaring64(list(range(4096)))
+    data = serialize_roaring64(list(range(0, 8192, 2)))
     assert len(data) < 8500
+    assert len(serialize_roaring64(list(range(0, 8194, 2)))) > 8192
 
 
 def test_roaring_offset_header_points_at_container_data():
@@ -155,14 +162,121 @@ def test_roaring_offset_header_points_at_container_data():
 
     from delta_rs_spark.protocol.dv import serialize_roaring64
 
-    # two containers in one high-32 bucket: 100-value array + 50-value array
-    pos = list(range(100)) + [65536 + i for i in range(50)]
+    # two containers in one high-32 bucket: 100-value array + 50-value
+    # array (every other value, so no run container is smaller)
+    pos = list(range(0, 200, 2)) + [65536 + 2 * i for i in range(50)]
     r32 = serialize_roaring64(pos)[12:]  # skip bucket count + high key
-    _cookie, k = struct.unpack_from("<II", r32, 0)
-    assert k == 2
+    cookie, k = struct.unpack_from("<II", r32, 0)
+    assert (cookie, k) == (12346, 2)
     offsets = [struct.unpack_from("<I", r32, 8 + 4 * k + 4 * i)[0] for i in range(k)]
     data_start = 8 + 8 * k
     assert offsets == [data_start, data_start + 200]  # 100 uint16 = 200 bytes
     # and the bytes AT the first offset are the first container's values
     vals = struct.unpack_from("<5H", r32, offsets[0])
-    assert list(vals) == [0, 1, 2, 3, 4]
+    assert list(vals) == [0, 2, 4, 6, 8]
+
+
+def test_roaring_run_layout_header_and_offsets():
+    """With a run container the header is the run cookie carrying the
+    container count, a run-flag bitset, the descriptive header, and an
+    offset header only at 4 or more containers; each offset points at its
+    container's data."""
+    from delta_rs_spark.protocol.dv import deserialize_roaring64, serialize_roaring64
+
+    # runs in containers 0, 1 and 2; container 3 is a 5-value array
+    pos = (
+        list(range(100))
+        + list(range(65536, 65586))
+        + [131072 + i for i in (0, 1, 2, 3, 10, 11)]
+        + [196608 + 2 * i for i in range(5)]
+    )
+    r32 = serialize_roaring64(pos)[12:]
+    assert deserialize_roaring64(serialize_roaring64(pos)) == pos
+    (cookie,) = struct.unpack_from("<I", r32, 0)
+    assert cookie & 0xFFFF == 12347 and (cookie >> 16) + 1 == 4
+    assert r32[4] == 0b0111  # run flags: containers 0-2
+    headers = [struct.unpack_from("<HH", r32, 5 + 4 * i) for i in range(4)]
+    assert headers == [(0, 99), (1, 49), (2, 5), (3, 4)]
+    offsets = [struct.unpack_from("<I", r32, 21 + 4 * i)[0] for i in range(4)]
+    # run data: a count, then (start, length - 1) per run
+    assert offsets[0] == 37 and struct.unpack_from("<HHH", r32, 37) == (1, 0, 99)
+    assert struct.unpack_from("<HHH", r32, offsets[1]) == (1, 0, 49)
+    assert struct.unpack_from("<HHHHH", r32, offsets[2]) == (2, 0, 3, 10, 1)
+    assert struct.unpack_from("<5H", r32, offsets[3]) == (0, 2, 4, 6, 8)
+    assert offsets[3] + 10 == len(r32)
+
+    # fewer than 4 containers: no offset header, data right after the headers
+    r32 = serialize_roaring64(list(range(100)) + list(range(65536, 65586)))[12:]
+    assert struct.unpack_from("<I", r32, 0)[0] == 12347 | (1 << 16)
+    assert struct.unpack_from("<HHH", r32, 4 + 1 + 8) == (1, 0, 99)
+    assert len(r32) == 4 + 1 + 8 + 2 * 6
+
+
+def test_contiguous_delete_is_one_run():
+    """300 contiguous deleted rows are one 4-byte run: the bitmap is 27 B
+    (31 B with the DV magic) where the array layout of 300 values takes
+    628 B."""
+    assert len(dv.serialize_roaring64(range(300))) <= 32
+    assert len(dv.serialize_roaring64(range(0, 600, 2))) == 628
+
+
+def _java_roaring_read(jvm, r32: bytes) -> tuple[list[int], bytes]:
+    """``org.roaringbitmap.RoaringBitmap`` (Spark's bundled jar) reading
+    32-bit roaring bytes: its values, and its own serialization of them
+    after ``runOptimize``. Values cross py4j as one little-endian byte[]."""
+    import numpy as np
+
+    nio = jvm.java.nio
+    rb = jvm.org.roaringbitmap.RoaringBitmap()
+    rb.deserialize(nio.ByteBuffer.wrap(r32))
+    buf = nio.ByteBuffer.allocate(4 * rb.getCardinality())
+    buf.order(nio.ByteOrder.LITTLE_ENDIAN)
+    buf.asIntBuffer().put(rb.toArray())
+    values = np.frombuffer(bytes(buf.array()), "<u4").tolist()
+    rb.runOptimize()
+    out = nio.ByteBuffer.allocate(rb.serializedSizeInBytes())
+    rb.serialize(out)
+    return values, bytes(out.array())
+
+
+def test_roaring_bytes_read_by_spark_roaringbitmap(spark):
+    """Spark's RoaringBitmap reads every bitmap the engine writes: array,
+    bitset and run containers, 1 to 7 containers (the run layout has an
+    offset header from 4), each exactly, and re-serializes it byte for
+    byte the same after its own ``runOptimize``, so each container is in
+    the layout the reference library would choose."""
+    import random
+
+    rng = random.Random(7)
+    cases = [
+        list(range(300)),  # one run
+        list(range(0, 600, 2)),  # array
+        list(range(0, 20000, 3)),  # bitset
+        [1, 2, 3, 70000, 70002, 140000, 200000, 200001],  # 4 containers, some runs
+        [5, 65536 * 5 + 7, 65536 * 9 + 11, 65536 * 12 + 1],  # 4 arrays, no run
+    ]
+    while len(cases) < 60:
+        pos: set[int] = set()
+        for _ in range(rng.randint(0, 4)):
+            start = rng.randrange(0, 65536 * 7)
+            pos.update(range(start, start + rng.randint(1, 9000)))
+        pos.update(rng.sample(range(65536 * 7), rng.randint(0, 6000)))
+        pos.update(rng.sample(range(2**31), rng.randint(0, 3)))
+        if pos:
+            cases.append(sorted(pos))
+    seen = {"run": 0, "array": 0, "bitset": 0, "4+": 0}
+    for pos in cases:
+        r64 = dv.serialize_roaring64(pos)
+        assert struct.unpack_from("<QI", r64, 0) == (1, 0)  # one 32-bit bucket
+        r32 = r64[12:]
+        values, java_bytes = _java_roaring_read(spark._jvm, r32)
+        assert values == pos
+        assert java_bytes == r32
+        lows = {}
+        for p in pos:
+            lows.setdefault(p >> 16, []).append(p)
+        seen["4+"] += len(lows) >= 4
+        seen["run"] += struct.unpack_from("<I", r32, 0)[0] & 0xFFFF == 12347
+        seen["array"] += any(len(v) <= 4096 and v[-1] - v[0] + 1 > len(v) for v in lows.values())
+        seen["bitset"] += any(len(v) > 4096 for v in lows.values())
+    assert min(seen.values()) >= 3, seen

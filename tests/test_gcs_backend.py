@@ -253,14 +253,13 @@ def test_mocked_gs_mor_delete_lifecycle(spark):
         t2 = DeltaTable(uri)
         assert t2.to_df(spark).count() == 180
         assert t2.to_df(spark).filter("k = 4").count() == 0
-        # spec descriptors: tiny DVs inline ("i"), larger ones a shared
+        # spec descriptors: every DV in the commit's shared
         # deletion_vector_<uuid>.bin object in the fake bucket
         dv_descs = [
             a.deletion_vector for a in t2.add_actions() if a.deletion_vector
         ]
-        assert dv_descs and all(d["storageType"] in ("u", "i") for d in dv_descs)
-        if any(d["storageType"] == "u" for d in dv_descs):
-            assert any("deletion_vector_" in k for k in fake.objects)
+        assert dv_descs and all(d["storageType"] == "u" for d in dv_descs)
+        assert any("deletion_vector_" in k for k in fake.objects)
     finally:
         from delta_rs_spark.protocol.storage import _BACKEND_FACTORIES
 

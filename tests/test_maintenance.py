@@ -1370,7 +1370,7 @@ def test_deep_clone_reencodes_p_dvs_vacuum_safe(spark, tmp_path):
         configuration={"delta.enableDeletionVectors": "true"},
     )
     t = DeltaTable(base)
-    t.delete(spark, "id % 6 = 0")  # 10k positions: past the inline cap -> 'u'
+    t.delete(spark, "id % 6 = 0")  # 10k positions in a .bin: 'u'
     t.update()
     assert any(
         (a.deletion_vector or {}).get("storageType") == "u"
@@ -1626,8 +1626,9 @@ def _assert_spec_singleton_types(path: str, partitioned: bool) -> None:
 
 def test_checkpoint_layout_is_lean(spark, lean_table, tmp_path):
     """Checkpoint parquet carries no statistics, no stored Arrow schema, a
-    dictionary only on columns whose values repeat, no all-null nested
-    field, and ``partitionValues_parsed`` only under writeStatsAsStruct."""
+    dictionary only on columns whose values repeat (the delete's DVs share
+    one file, so ``pathOrInlineDv`` repeats), no all-null nested field, and
+    ``partitionValues_parsed`` only under writeStatsAsStruct."""
     import shutil
 
     import pyarrow.parquet as pq
@@ -1638,7 +1639,8 @@ def test_checkpoint_layout_is_lean(spark, lean_table, tmp_path):
     assert not [p for p, c in chunks.items() if c.is_stats_set]
     assert not chunks["add.path"].has_dictionary_page
     assert not chunks["add.stats"].has_dictionary_page
-    assert not chunks["add.deletionVector.pathOrInlineDv"].has_dictionary_page
+    assert chunks["add.deletionVector.pathOrInlineDv"].has_dictionary_page
+    assert not chunks["add.deletionVector.offset"].has_dictionary_page
     assert chunks["add.partitionValues.key_value.key"].has_dictionary_page
     assert chunks["add.partitionValues.key_value.value"].has_dictionary_page
     assert chunks["add.deletionVector.storageType"].has_dictionary_page

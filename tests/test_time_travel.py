@@ -429,3 +429,43 @@ def test_sql_timestamp_as_of_loads_only_its_version(spark, tmp_path, snapshot_lo
     query = f"SELECT count(*) AS n FROM delta.`{root}` TIMESTAMP AS OF '{at1}'"
     assert sql(spark, query).collect()[0]["n"] == 20
     assert snapshot_loads == [1]
+
+
+@pytest.fixture()
+def failed_gets(monkeypatch):
+    """Paths of the GETs that found no object."""
+    failed: list[str] = []
+    orig = LocalFileBackend.get_obj
+
+    def counted(self, path):
+        try:
+            return orig(self, path)
+        except FileNotFoundError:
+            failed.append(path)
+            raise
+
+    monkeypatch.setattr(LocalFileBackend, "get_obj", counted)
+    return failed
+
+
+def test_open_makes_no_get_past_its_listing(tmp_path, failed_gets):
+    """A latest open folds the commits its listing saw and probes for no
+    later one: no GET of an open fails, with or without a checkpoint or a
+    compaction file. A refresh still probes for the next commit, which is
+    how it finds new ones."""
+    root = str(tmp_path / "t")
+    t = _create(root, interval=50)
+    _append(t, 9)
+    failed_gets.clear()
+    assert DeltaTable.for_path(root).version == 9  # commits only
+    _append(t, 51)  # checkpoint at 50, tail 51..60
+    DeltaTable.for_path(root).compact_log(51, 55)
+    failed_gets.clear()
+    opened = DeltaTable.for_path(root)
+    assert opened.version == 60 and len(opened.files()) == 60
+    assert DeltaTable.for_version(root, 58).version == 58
+    assert DeltaTable.for_path(root).version == 60
+    assert failed_gets == []
+
+    opened.update()
+    assert [p.rsplit("/", 1)[-1] for p in failed_gets] == [f"{61:020d}.json"]

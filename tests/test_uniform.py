@@ -725,7 +725,10 @@ def test_convert_iceberg_with_deletes_to_delta(spark, tmp_path, events):
     shutil.rmtree(os.path.join(uri, "_delta_log"))
 
     t2 = convert_iceberg_to_delta(spark, uri)
-    assert any(a.deletion_vector for a in t2.add_actions())
+    dvs = [a.deletion_vector for a in t2.add_actions() if a.deletion_vector]
+    # one-row position deletes too go to the conversion's one .bin
+    assert dvs and {d["storageType"] for d in dvs} == {"u"}
+    assert len({d["pathOrInlineDv"] for d in dvs}) == 1
     assert "deletionVectors" in (t2.snapshot.state.reader_features or [])
     got = sorted(r["r_regionkey"] for r in t2.to_df(spark).collect())
     assert got == expected
