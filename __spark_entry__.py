@@ -6,8 +6,8 @@ The driver's verify runs ``entry(spark)`` as a smoke check, runs each
 value-hash → CORRECTNESS_r{N}.json).
 
 The real implementations live in ``delta_rs_spark.queries`` (relational
-surface) and ``delta_rs_spark.operators`` (pipeline operators); this module
-is a thin adapter.
+surface) and ``delta_rs_spark.lifecycle_queries`` (table-lifecycle rows);
+this module is a thin adapter.
 """
 
 from __future__ import annotations

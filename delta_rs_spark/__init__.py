@@ -7,8 +7,9 @@ checkpoints, vacuum — the capabilities of delta-rs v0 re-expressed for Spark.
 Layer 2 (data plane, Spark): the snapshot's file list becomes one DataFrame;
 every relational operator (joins, windows, aggregation, SQL) is Catalyst's.
 
-Plus `operators/`: the large-scale training-data pipeline toolkit
-(dedup, similarity search, text analysis, multimodal plumbing).
+Plus `operators/`: DataFrame operators for training-data pipelines (dedup,
+similarity top-k, text and corpus statistics, sampling), outside the
+certified catalog.
 """
 
 from .cdf import cdf_enabled, load_cdf

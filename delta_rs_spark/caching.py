@@ -5,9 +5,9 @@ aggregate feeding two consumers) with ``MEMORY_AND_DISK``. The persist is
 the right plan choice, but the query function returns a *lazy* DataFrame —
 the cache is populated only when the caller materializes it, so the query
 cannot unpersist before returning. Without a release point, a long-lived
-session running the 118-query catalog (the driver's certification loop,
-``bench.py``) accumulates every query's pinned lineage for the session
-lifetime: unbounded executor-memory pressure and "already cached" warnings.
+session running the whole catalog (the driver's certification loop)
+accumulates every query's pinned lineage for the session lifetime:
+unbounded executor-memory pressure and "already cached" warnings.
 
 The contract here: every persist inside a catalog query goes through
 :func:`persist_tracked`, and the ``@query`` wrapper calls

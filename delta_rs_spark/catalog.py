@@ -1,92 +1,68 @@
-"""Full query catalog: importing this module registers both the relational
-surface (queries.py) and the pipeline operators (pipeline_queries.py).
+"""Full query catalog: importing this module registers the relational
+surface (queries.py) and the table-lifecycle rows (lifecycle_queries.py).
 
 Registration order matters: the driver certifies the first 50 names returned
-by ``queries()``. The window rotates per round so no surface's driver signal
-goes stale: rounds 1-2 certified the 50 relational queries, round 3 rotated
-in the LLM-pipeline surface, round 4 the queued + new concurrency/companion
-rows, and round 5 rotates the relational surface back in alongside the new
-IVF/incremental certifications. ``_ROTATION`` lists the current window
-explicitly; everything else keeps its original registration order after it.
+by ``queries()``. The window rotates per round so no row's driver signal
+goes stale. ``_ROTATION`` lists the current window explicitly; everything
+else keeps its original registration order after it.
 """
 
 from . import lifecycle_queries as _lifecycle_queries  # noqa: F401  (registers)
-from . import pipeline_queries as _pipeline_queries  # noqa: F401  (registers)
-from .queries import QUERIES, headline_queries, oracle_sql, queries
+from .queries import QUERIES, oracle_sql, queries
 
-# Round-12 window (stalest-first, VERDICT r11 items #2-3): (1) the two rows
-# whose CODE this optimization round touches — text_gopher_rules and
-# corpus_bpe_encode_arrow (promoted to the timed bench and optimized,
-# VERDICT r11 #3) — plus multimodal_features, the highest-priority
-# r11-code-touched row VERDICT #2 wants driver-re-certified (its
-# frame_sample residual was measured this round and deliberately left
-# alone: the kernel does 100k payloads -> 507k frames in ~0.1 s, so the
-# take-based copies are immaterial); (2) all 47 rows whose last driver-green round
-# is 9 (the text.* family, the BPE train/encode chain, the exact-dedup and
-# semantic-keeplist rows, the PQ exact/codes/search family, sampling/split
-# rows and the q_* analytics block) — the freshness gate
-# (tests/test_rotation_freshness.py) forces them in the moment
-# CORRECTNESS_r12 lands. 47 + 3 = exactly 50. The remaining r11-code-touched
-# rows VERDICT #2 wanted re-certified (dedup_simhash, similarity_knn_graph,
-# similarity_lsh_buckets, dedup_embedding_cosine, dedup_clusters,
-# similarity_index_drift) are r10-green — not yet freshness-due — and the
-# 47 forced slots leave no window room; they carry this round's builder
-# full-catalog oracle-sweep receipt instead and are first in line for r13.
+# Stalest-first by last exact-green round, ties in registration order.
 _ROTATION = [
-    # -- (1) code touched in round 12 ------------------------------------------
-    "text_gopher_rules",
-    "corpus_bpe_encode_arrow",
-    "multimodal_features",
-    # -- (2) last certified round 9 (47 rows, freshness-forced) ---------------
-    "corpus_bpe_encode",
-    "corpus_bpe_pairs",
-    "corpus_bpe_train",
-    "corpus_dup_rate_by_source",
-    "corpus_top_ngrams",
-    "dedup_exact",
-    "dedup_keeplist",
-    "dedup_keeplist_longest",
-    "dedup_minhash_verified",
-    "dedup_ngram_jaccard",
-    "dedup_semantic_clustered",
-    "dedup_semantic_index_lifecycle",
-    "dedup_semantic_keeplist",
-    "events_variant_props",
-    "profile_lineitem_columns",
-    "q_cube_status_priority",
-    "q_customer_value_deciles",
-    "q_daily_revenue_ma7",
-    "q_events_funnel",
-    "q_events_pivot",
-    "q_events_retention",
-    "q_events_value_stats",
-    "q_part_cooccurrence",
-    "q_union_except",
-    "sample_source_mixture",
-    "sample_token_budget",
-    "similarity_ivfpq_exact",
-    "similarity_ivfpq_residual",
-    "similarity_pq_codes",
-    "similarity_pq_exact",
-    "similarity_pq_index_search",
-    "split_grouped_by_source",
-    "split_train_val_test",
-    "text_char_entropy",
-    "text_chunking",
-    "text_contamination",
-    "text_contamination_bloom",
-    "text_fingerprint",
-    "text_lang_mismatch",
-    "text_line_dedup",
-    "text_normalize",
-    "text_pii_redact",
-    "text_repetition",
-    "text_sequence_packing",
-    "text_substring_dedup",
-    "text_tfidf_topk",
-    "text_token_count",
+    "cdf_changes_window",
+    "clone_lifecycle",
+    "q_zorder_pruned_scan",
+    "features_lifecycle",
+    "stream_events_hourly",
+    "stream_user_totals",
+    "widening_uniform_lifecycle",
+    "stream_hourly_watermark",
+    "stream_delta_sink_pipeline",
+    "stream_dedup_events",
+    "stream_stream_join",
+    "concurrent_lifecycle",
+    "q1_pricing_summary",
+    "q3_shipping_priority",
+    "q5_nation_revenue",
+    "q6_forecast_revenue",
+    "q10_returned_items",
+    "q_minmax_agg",
+    "q_filter_sort_project",
+    "q_semi_join",
+    "q_anti_join",
+    "q_outer_join_nulls",
+    "q_self_join_parts",
+    "q_window_topk_orders",
+    "q_window_running_revenue",
+    "q_window_lag_events",
+    "q_rollup_status",
+    "q_set_ops",
+    "q_scalar_subquery",
+    "q4_order_priority",
+    "q7_nation_volume",
+    "q12_priority_class",
+    "q14_promo_revenue",
+    "q18_large_orders",
+    "q19_disjunctive_revenue",
+    "q22_idle_customers",
+    "q15_top_supplier",
+    "q16_supplier_part_counts",
+    "q20_promo_volume_suppliers",
+    "q21_returned_not_accepted",
+    "q_events_hourly",
+    "q_events_json_props",
+    "q_events_sessions",
+    "q_string_functions",
+    "q_date_functions",
+    "q_percentiles",
+    "q2_min_cost_supplier",
+    "q8_market_share",
+    "q9_product_profit",
+    "q11_important_parts",
 ]
-
 
 # the driver certifies exactly this many names off the front of queries()
 WINDOW = 50
@@ -96,9 +72,9 @@ def _apply_rotation() -> None:
     # A typo or a renamed query in _ROTATION would silently shrink the
     # certification window and promote an arbitrary registration-order row
     # into it, defeating the rotation promise test_rotation_freshness.py
-    # enforces — fail loudly at import instead (ADVICE r9). Real exceptions,
+    # enforces — fail loudly at import instead. Real exceptions,
     # not asserts: `python -O` strips asserts, and a stripped guard is the
-    # exact silent-shrink failure mode it exists to prevent (ADVICE r10).
+    # exact silent-shrink failure mode it exists to prevent.
     unknown = [n for n in _ROTATION if n not in QUERIES]
     if unknown:
         raise RuntimeError(
@@ -121,4 +97,4 @@ def _apply_rotation() -> None:
 
 _apply_rotation()
 
-__all__ = ["QUERIES", "queries", "oracle_sql", "headline_queries"]
+__all__ = ["QUERIES", "queries", "oracle_sql"]

@@ -1,10 +1,9 @@
-"""Reusable JVM-side expression helpers (the engine's "function library").
+"""Reusable JVM-side expression helpers.
 
 The reference has no scalar-function surface of its own (SURVEY.md §2.F:
-delegated entirely to embedding engines); this package collects the
-whole-stage-codegen building blocks our operators are written with, exported
-for users composing their own pipelines. Everything here stays inside
-Catalyst — no Python UDFs.
+delegated entirely to embedding engines); this package holds the exact
+decimal-sum helpers the certified relational queries are written with.
+Everything here stays inside Catalyst — no Python UDFs.
 """
 
 from __future__ import annotations
@@ -12,41 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-__all__ = [
-    "dot",
-    "l2_norm",
-    "cosine_similarity",
-    "sum_dec",
-    "sum_dec_sql",
-    "shingles",
-    "unit_vector",
-]
-
-
-def dot(a, b) -> Column:
-    """Dot product of two array<numeric> columns, fully codegen'd
-    (zip_with + aggregate — no UDF, no explode)."""
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
-
-
-def l2_norm(v) -> Column:
-    """Euclidean norm of an array<numeric> column."""
-    return F.sqrt(F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x))
-
-
-def unit_vector(v, norm: Column | None = None) -> Column:
-    """L2-normalized copy of an array<numeric> column. Pass a precomputed
-    ``norm`` column when available — a norm expression inlined into the
-    per-element lambda would be re-evaluated for every element (O(d²))."""
-    n = F.sqrt(F.aggregate(v, F.lit(0.0), lambda acc, x: acc + x * x)) if norm is None else norm
-    # zip against an array_repeat of the norm: array_repeat evaluates the
-    # norm expression once per row, not once per element
-    return F.zip_with(v, F.array_repeat(n, F.size(v)), lambda x, m: x / m)
-
-
-def cosine_similarity(a, b) -> Column:
-    """Cosine similarity of two array<numeric> columns."""
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
+__all__ = ["sum_dec", "sum_dec_sql"]
 
 
 def sum_dec(col, alias: str, scale: int = 6) -> Column:
@@ -106,11 +71,10 @@ def sum_dec_sql(expr: str, alias: str, scale: int = 6) -> str:
     form), but as one SQL string: a query assembled as a single
     ``spark.sql(...)`` call pays ONE parse+analysis instead of one Catalyst
     analysis per chained DataFrame call — measured ~10x cheaper DataFrame
-    construction for the headline relational queries, which the bench's
-    timed region re-pays on every run. ``expr`` is the SQL text of the
-    input expression; write literal arithmetic in the Column form's
-    rendered order (e.g. ``l_tax + 1``, not ``1 + l_tax``) when plan-text
-    parity matters.
+    construction for the headline relational queries. ``expr`` is the SQL
+    text of the input expression; write literal arithmetic in the Column
+    form's rendered order (e.g. ``l_tax + 1``, not ``1 + l_tax``) when
+    plan-text parity matters.
     """
     p10 = float(10**scale)
     # (expr) is wrapped everywhere it feeds arithmetic: an additive input
@@ -140,22 +104,3 @@ def sum_dec_sql(expr: str, alias: str, scale: int = 6) -> str:
         f" ELSE {fast} END"
     )
     return f"CAST(SUM({quant}) AS DOUBLE) AS {alias}"
-
-
-def shingles(text, n: int = 3) -> Column:
-    """Distinct word n-gram shingles of a string column as array<string>,
-    built inside codegen (split → sequence → slice/concat_ws → distinct).
-    Texts with fewer than ``n`` words yield an empty array (a bare
-    ``sequence(0, size - n)`` would descend and produce invalid slices).
-    Surrounding/repeated whitespace is insignificant: empty tokens from
-    the split are dropped, so ``' a b c'`` and ``'a b c'`` shingle
-    identically."""
-    words = F.filter(F.split(F.lower(text), r"\s+"), lambda w: w != "")
-    return F.when(F.size(words) >= n,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), F.size(words) - n),
-                lambda i: F.concat_ws(" ", F.slice(words, i + 1, n)),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))

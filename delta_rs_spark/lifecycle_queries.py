@@ -1000,848 +1000,3 @@ def q_concurrent_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("final_version", F.lit(t.version).cast("long"))
         .orderBy("doc_id")
     )
-
-
-@query(
-    "incremental_rollup_lifecycle",
-    """
-    WITH src AS (
-      SELECT event_id, event_type,
-             CAST(round(value * 100) AS BIGINT) AS value_m
-      FROM events WHERE event_id % 3 IN (0, 1)
-    ),
-    live AS (
-      SELECT event_type,
-             CASE WHEN event_type = 'click' THEN value_m + 7
-                  ELSE value_m END AS value_m
-      FROM src WHERE event_id % 5 <> 0
-    )
-    SELECT event_type,
-           COUNT(*) AS n_rows,
-           CAST(SUM(value_m) AS BIGINT) AS sum_value_m
-    FROM live
-    GROUP BY event_type
-    ORDER BY event_type
-    """,
-)
-def q_incremental_rollup_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental materialized rollup certified end to end against the full
-    recompute: seed a CDF-enabled events table → BOOTSTRAP the rollup →
-    append a second batch (v1) → DELETE (v2) → UPDATE a measure (v3) →
-    one incremental refresh folding v1..v3's change feed into the rollup
-    via signed partial aggregates + MERGE. The oracle recomputes the final
-    grouped counts/sums from the source parquet, so a refresh that loses a
-    delete's −1, double-counts an update's pre/post pair, or misses a new
-    group hash-mismatches. Work in the refresh is ∝ the three commits'
-    changed rows, never table size — the property that makes hourly
-    maintenance of a 100 TB rollup feasible. The measure is a fixed-point
-    BIGINT (round(value·100)): counter semantics at scale, and the signed
-    ± folding stays exact where a double sum would drift from the
-    recompute."""
-    from . import DeltaTable
-    from .operators.incremental import incremental_rollup
-    from .writer import write_deltalake
-
-    src_uri = _workdir("incroll-src", sf_dir)
-    agg_uri = _workdir("incroll-agg", sf_dir)
-    events = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        F.round(F.col("value") * 100).cast("long").alias("value_m"),
-    )
-    write_deltalake(
-        spark,
-        events.filter(F.col("event_id") % 3 == 0).repartition(4),
-        src_uri,
-        configuration={
-            "delta.enableChangeDataFeed": "true",
-            "delta.enableDeletionVectors": "true",
-        },
-    )
-    # bootstrap at v0 so the second refresh exercises the INCREMENTAL path
-    incremental_rollup(
-        spark,
-        DeltaTable(src_uri),
-        agg_uri,
-        group_cols=["event_type"],
-        sum_cols=["value_m"],
-    )
-    write_deltalake(  # v1: append batch 2
-        spark,
-        events.filter(F.col("event_id") % 3 == 1),
-        src_uri,
-        mode="append",
-    )
-    t = DeltaTable(src_uri)
-    t.delete(spark, "event_id % 5 = 0")  # v2: merge-on-read delete
-    t = DeltaTable(src_uri)
-    t.update_where(spark, "event_type = 'click'", {"value_m": "value_m + 7"})  # v3
-    res = incremental_rollup(
-        spark,
-        DeltaTable(src_uri),
-        agg_uri,
-        group_cols=["event_type"],
-        sum_cols=["value_m"],
-    )
-    assert not res["bootstrapped"], "second refresh must be incremental"
-    return DeltaTable(agg_uri).to_df(spark).orderBy("event_type")
-
-
-@query(
-    "dedup_index_lifecycle",
-    """
-    WITH b1 AS (
-      SELECT md5(text) AS key_hash, CAST(MIN(doc_id) AS BIGINT) AS doc_id
-      FROM documents WHERE doc_id % 2 = 0 GROUP BY text
-    ),
-    b2all AS (
-      SELECT md5(text) AS key_hash, doc_id
-      FROM documents WHERE doc_id % 2 = 1
-      UNION ALL
-      SELECT md5('UPDATED-' || CAST(doc_id AS VARCHAR)) AS key_hash, doc_id
-      FROM documents WHERE doc_id % 10 = 3
-    ),
-    b2 AS (
-      SELECT key_hash, CAST(MIN(doc_id) AS BIGINT) AS doc_id
-      FROM b2all
-      WHERE key_hash NOT IN (SELECT key_hash FROM b1)
-      GROUP BY key_hash
-    )
-    SELECT key_hash, doc_id FROM b1
-    UNION ALL
-    SELECT key_hash, doc_id FROM b2
-    ORDER BY key_hash
-    """,
-)
-def q_dedup_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental exact-dedup index certified end to end against the full
-    recompute: seed a CDF-enabled corpus with the EVEN doc_ids → build the
-    index → append the odd doc_ids (v1) → UPDATE some documents' text to a
-    unique sentinel (v2) → one incremental refresh. First-seen semantics:
-    a hash already indexed from batch 1 keeps its batch-1 doc_id even if
-    batch 2 carries a smaller one, new hashes take the MIN doc_id within
-    the refresh window, and an UPDATE's postimage introduces new content
-    exactly like an insert (the old hash stays — the index grows one-way).
-    The oracle reconstructs precisely that fold from the source parquet,
-    so a refresh that misses postimages, re-adds an indexed hash, or
-    collapses the anti-join the wrong way hash-mismatches."""
-    from . import DeltaTable
-    from .operators.dedup import update_dedup_index
-    from .writer import write_deltalake
-
-    src_uri = _workdir("dedupidx-src", sf_dir)
-    idx_uri = _workdir("dedupidx-idx", sf_dir)
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    write_deltalake(
-        spark,
-        docs.filter(F.col("doc_id") % 2 == 0).repartition(4),
-        src_uri,
-        configuration={
-            "delta.enableChangeDataFeed": "true",
-            "delta.enableDeletionVectors": "true",
-        },
-    )
-    update_dedup_index(spark, DeltaTable(src_uri), idx_uri, key_cols=["text"])
-    write_deltalake(  # v1: the odd half, first-seen now split across batches
-        spark,
-        docs.filter(F.col("doc_id") % 2 == 1),
-        src_uri,
-        mode="append",
-    )
-    t = DeltaTable(src_uri)
-    t.update_where(  # v2: updated content enters the index via postimages
-        spark,
-        "doc_id % 10 = 3",
-        {"text": "concat('UPDATED-', cast(doc_id AS string))"},
-    )
-    res = update_dedup_index(spark, DeltaTable(src_uri), idx_uri, key_cols=["text"])
-    assert res["processed_versions"] == 2, "refresh must cover v1..v2 only"
-    return DeltaTable(idx_uri).to_df(spark).orderBy("key_hash")
-
-
-# ---------------------------------------------------------------------------
-# Persisted PQ ANN index: build / CDF-incremental maintenance / search
-# ---------------------------------------------------------------------------
-
-def _pq_index_oracle() -> str:
-    """Oracle for the incremental-index lifecycle: `pq_codes` semantics
-    (the already-certified md5-codebook encode, see
-    similarity.pq_codes_oracle_sql) over the corpus AS THE DML LEFT IT —
-    survivors of the merge-on-read DELETE, with the UPDATE's negated
-    vectors. A refresh that misses a postimage re-encode, resurrects a
-    deleted vector, or double-applies a window diverges from this."""
-    from .operators import similarity
-
-    final_corpus = (
-        "(SELECT vec_id, CASE WHEN vec_id % 7 = 2 "
-        "THEN list_transform(embedding, x -> -x) ELSE embedding END AS embedding "
-        "FROM embeddings WHERE vec_id % 5 <> 0)"
-    )
-    return similarity.pq_codes_oracle_sql(table=final_corpus)
-
-
-@query("similarity_pq_index_lifecycle", _pq_index_oracle())
-def q_pq_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The build-once / maintain-incrementally ANN index certified end to
-    end: seed a CDF-enabled embeddings corpus with the EVEN vec_ids →
-    bootstrap the index (md5 codebooks serialized into the index table's
-    configuration — engine-reproducible, the same trained-vs-derived split
-    as similarity_pq_codes; IVF tier ON, so the table is PARTITIONED BY
-    list_id with the trained centroids stored alongside) → append the odd
-    half (v1) → merge-on-read DELETE every vec_id % 5 = 0 (v2, a DV
-    commit) → UPDATE vec_id % 7 = 2 to the negated vector (v3, postimages
-    must RE-ENCODE — and a re-encoded vector can change its nearest list,
-    so the MERGE must move its row ACROSS partitions) → ONE incremental
-    refresh folding the whole v1..v3 window. The refresh reads the change
-    feed, nets each id to its latest change, MERGEs upserted codes and
-    merge-deletes vanished ids — so the final index table must equal the
-    one-shot encode of the corpus as the DML left it, row for row, code
-    for code against the chained-literal DuckDB oracle (list_id dropped:
-    trained centroids are data-dependent; the codes are the certified
-    content, and the partition mechanics are pinned by the exhaustive
-    probing row similarity_ivfpq_index_search + tests/test_pq_index.py)."""
-    from . import DeltaTable
-    from .operators import similarity
-    from .writer import write_deltalake
-
-    src_uri = _workdir("pqidx-src", sf_dir)
-    idx_uri = _workdir("pqidx-idx", sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    write_deltalake(
-        spark,
-        emb.filter(F.col("vec_id") % 2 == 0).repartition(4),
-        src_uri,
-        configuration={
-            "delta.enableChangeDataFeed": "true",
-            "delta.enableDeletionVectors": "true",
-        },
-    )
-    books = similarity.pq_random_codebooks(16, 4, 16)
-    similarity.update_pq_index(
-        spark, DeltaTable(src_uri), idx_uri, books=books, n_list=8
-    )
-    write_deltalake(  # v1: the odd half
-        spark,
-        emb.filter(F.col("vec_id") % 2 == 1),
-        src_uri,
-        mode="append",
-    )
-    t = DeltaTable(src_uri)
-    t.delete(spark, "vec_id % 5 = 0")  # v2: MoR delete (DV commit)
-    t.update()
-    t.update_where(  # v3: postimages must re-encode through the codebooks
-        spark,
-        "vec_id % 7 = 2",
-        {"embedding": "transform(embedding, x -> -x)"},
-    )
-    res = similarity.update_pq_index(spark, DeltaTable(src_uri), idx_uri)
-    assert res["processed_versions"] == 3, "refresh must cover v1..v3 only"
-    return DeltaTable(idx_uri).to_df(spark).drop("list_id").orderBy("vec_id")
-
-
-def _brute_force_topk_oracle() -> str:
-    """The SAME brute-force oracle every exact ANN companion shares
-    (pipeline_queries._BRUTE_FORCE_TOPK_ORACLE); fetched via import so the
-    two rows can never drift apart."""
-    from .pipeline_queries import _BRUTE_FORCE_TOPK_ORACLE
-
-    return _BRUTE_FORCE_TOPK_ORACLE
-
-
-@query("similarity_pq_index_search", _brute_force_topk_oracle())
-def q_pq_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Search over the PERSISTED index certified exactly: build the index
-    table once (md5 codebooks — engine-reproducible), then search it at an
-    exhaustive oversample, so the ADC screen keeps every candidate and the
-    output — codebooks read back from table configuration, code-column ADC
-    scan, survivor-only float fetch, exact rerank — must equal brute force
-    row for row against the same oracle the other exact companions share.
-    At the production oversample the search's recall equals pq_topk's (the
-    semantics are identical; pinned by equivalence in tests/test_recall.py)."""
-    from . import DeltaTable
-    from .operators import similarity
-    from .writer import write_deltalake
-
-    src_uri = _workdir("pqsearch-src", sf_dir)
-    idx_uri = _workdir("pqsearch-idx", sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    write_deltalake(
-        spark,
-        emb,
-        src_uri,
-        configuration={"delta.enableChangeDataFeed": "true"},
-    )
-    books = similarity.pq_random_codebooks(16, 4, 16)
-    similarity.update_pq_index(spark, DeltaTable(src_uri), idx_uri, books=books)
-    return similarity.pq_index_search(
-        spark,
-        idx_uri,
-        emb,
-        emb.filter(F.col("vec_id") < 5),
-        k=10,
-        oversample=1_000_000,
-    )
-
-
-@query("similarity_ivfpq_index_search", _brute_force_topk_oracle())
-def q_ivfpq_index_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Probing search over the IVF-PARTITIONED persisted index, certified
-    exactly: the index is partitioned by list_id (trained centroids stored
-    in configuration), the search assigns each query its probed lists and
-    pushes the union into the snapshot's PARTITION FILTERS — the unprobed
-    lists' files are pruned in the Delta log before any plan exists. At
-    n_probe = n_list every partition passes and the exhaustive oversample
-    keeps every ADC candidate, so the full pipeline — partition-filter
-    construction, pruned scan, list_id equi-join, ADC lookups, survivor
-    float fetch, exact rerank — must equal brute force row for row. A
-    partition filter that drops a list, a list assignment mismatch between
-    build and probe, or an id lost in the cross-partition plumbing flips
-    this row red; the pruning itself (fewer files read at n_probe <
-    n_list) is pinned in tests/test_pq_index.py."""
-    from . import DeltaTable
-    from .operators import similarity
-    from .writer import write_deltalake
-
-    src_uri = _workdir("ivfpqsearch-src", sf_dir)
-    idx_uri = _workdir("ivfpqsearch-idx", sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    write_deltalake(
-        spark,
-        emb,
-        src_uri,
-        configuration={"delta.enableChangeDataFeed": "true"},
-    )
-    books = similarity.pq_random_codebooks(16, 4, 16)
-    similarity.update_pq_index(
-        spark, DeltaTable(src_uri), idx_uri, books=books, n_list=8
-    )
-    return similarity.pq_index_search(
-        spark,
-        idx_uri,
-        emb,
-        emb.filter(F.col("vec_id") < 5),
-        k=10,
-        n_probe=8,
-        oversample=1_000_000,
-    )
-
-
-def _index_drift_oracle() -> str:
-    """Oracle for the drift metric: `quantization_mse_df` recomputed by
-    DuckDB from the same md5-codebook literals, over (a) the corpus the
-    index was created on — which must equal the baseline the creation
-    commit persisted into table configuration, certifying the config
-    round-trip — and (b) a negated corpus standing in for distribution
-    drift. Distances round at 1e-9 before the min, the sum is exact
-    DECIMAL, one final round — so a subspace slip, a dropped zero-norm
-    filter, or a baseline stored from the wrong corpus is a hash
-    mismatch."""
-    from .operators import similarity
-
-    negated = (
-        "(SELECT vec_id, list_transform(embedding, x -> -x) AS embedding "
-        "FROM embeddings)"
-    )
-    same = similarity.quantization_mse_oracle_sql(table="embeddings")
-    drifted = similarity.quantization_mse_oracle_sql(table=negated)
-    return f"""
-    WITH s AS ({same}), d AS ({drifted})
-    SELECT s.mse AS baseline_mse, s.mse AS same_mse, d.mse AS drifted_mse
-    FROM s, d
-    """
-
-
-@query("similarity_index_drift", _index_drift_oracle())
-def q_similarity_index_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The codebook-drift rebuild trigger certified exactly (VERDICT r7
-    #5): create a persisted PQ index (md5 books — engine-reproducible) and
-    return the three drift-metric values a monitoring caller would read:
-
-    - ``baseline_mse``: read back from the index CONFIGURATION
-      (deltars.pq.mse0) — persisted by the creation commit, so the oracle
-      equality certifies that what creation measured and stored IS the
-      independent recompute over the creation corpus;
-    - ``same_mse``: `quantization_mse_df` over the unchanged corpus — must
-      equal the baseline (drift ratio exactly 1.0 when nothing drifted);
-    - ``drifted_mse``: the same metric over a negated corpus (a stand-in
-      for distribution drift: the unit vectors move to the octants the
-      codebooks never trained on).
-
-    All three are deterministic (rounded per-subspace distances, exact
-    DECIMAL sums), so the row hashes against a full DuckDB recompute — the
-    metric itself is certified, not a pinned measurement. The directional
-    claim (trained books + drifted corpus ⇒ ratio > 1) is pinned in
-    tests/test_pq_index.py."""
-    from . import DeltaTable
-    from .operators import similarity
-    from .writer import write_deltalake
-
-    src_uri = _workdir("drift-src", sf_dir)
-    idx_uri = _workdir("drift-idx", sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    write_deltalake(
-        spark,
-        emb,
-        src_uri,
-        configuration={"delta.enableChangeDataFeed": "true"},
-    )
-    books = similarity.pq_random_codebooks(16, 4, 16)
-    similarity.update_pq_index(spark, DeltaTable(src_uri), idx_uri, books=books)
-    stored = float(
-        DeltaTable(idx_uri).metadata().configuration[similarity._PQ_MSE_KEY]
-    )
-    negated = emb.select(
-        "vec_id", F.transform("embedding", lambda x: -x).alias("embedding")
-    )
-    same = similarity.quantization_mse_df(emb, books).select(
-        F.col("mse").alias("same_mse")
-    )
-    drifted = similarity.quantization_mse_df(negated, books).select(
-        F.col("mse").alias("drifted_mse")
-    )
-    return (
-        spark.range(1)
-        .select(F.lit(stored).alias("baseline_mse"))
-        .crossJoin(same)
-        .crossJoin(drifted)
-    )
-
-
-def _semantic_index_oracle() -> str:
-    """Oracle for the semantic-dedup index lifecycle: the corpus-wide exact
-    cosine pair set (round-4, the `blocked_exact_pairs` scoring contract)
-    over the corpus AS THE DML LEFT IT — valid because the row creates the
-    index with n_probe = n_list, where every pair shares every list and the
-    incremental pair table provably equals the exhaustive pair set. A
-    refresh that misses a changed id's pairs, resurrects a deleted
-    vector's pairs, or fails to re-verify a re-embedded postimage diverges
-    from this."""
-    final = (
-        "(SELECT vec_id, CASE WHEN vec_id % 7 = 2 "
-        "THEN list_transform(embedding, x -> -x) ELSE embedding END AS embedding "
-        "FROM embeddings WHERE vec_id % 5 <> 0)"
-    )
-    cos = (
-        "round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), "
-        "CAST(b.embedding AS DOUBLE[])), 4)"
-    )
-    return f"""
-    SELECT a.vec_id AS id_a, b.vec_id AS id_b, {cos} AS cosine
-    FROM {final} a JOIN {final} b ON a.vec_id < b.vec_id
-    WHERE {cos} >= 0.4
-    ORDER BY id_a, id_b
-    """
-
-
-@query("dedup_semantic_index_lifecycle", _semantic_index_oracle())
-def q_semantic_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The persisted SEMANTIC-DEDUP index certified end to end (round 8 —
-    the PQ-index design applied to SemDeDup's expensive half): seed a
-    CDF-enabled embeddings corpus with the EVEN vec_ids → bootstrap the
-    two-table index (IVF-partitioned probe assignments with centroids/
-    threshold/n_probe as configuration invariants + the verified near-dup
-    PAIR table) → append the odd half (v1) → merge-on-read DELETE every
-    vec_id % 5 = 0 (v2 — their pairs must vanish) → UPDATE vec_id % 7 = 2
-    to negated vectors (v3 — postimages re-assign lists AND re-verify
-    every pair they participate in) → ONE incremental refresh folding the
-    whole window. Created at n_probe = n_list, where the pair table
-    provably equals the corpus-wide exact pair set — so the final table
-    must hash-equal the all-pairs round-4 cosine oracle over the corpus as
-    the DML left it. Work per refresh is ∝ changed ids × probed-list
-    sizes (the candidate read is Delta partition pruning on list_id);
-    partial-probe semantics and the crash/replay idempotency net live in
-    tests/test_semantic_index.py."""
-    from . import DeltaTable
-    from .operators import dedup
-    from .writer import write_deltalake
-
-    src_uri = _workdir("semidx-src", sf_dir)
-    idx_uri = _workdir("semidx-idx", sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    write_deltalake(
-        spark,
-        emb.filter(F.col("vec_id") % 2 == 0).repartition(4),
-        src_uri,
-        configuration={
-            "delta.enableChangeDataFeed": "true",
-            "delta.enableDeletionVectors": "true",
-        },
-    )
-    dedup.update_semantic_index(
-        spark, DeltaTable(src_uri), idx_uri, threshold=0.4, n_list=4, n_probe=4
-    )
-    write_deltalake(  # v1: the odd half
-        spark,
-        emb.filter(F.col("vec_id") % 2 == 1),
-        src_uri,
-        mode="append",
-    )
-    t = DeltaTable(src_uri)
-    t.delete(spark, "vec_id % 5 = 0")  # v2: MoR delete (DV commit)
-    t.update()
-    t.update_where(  # v3: postimages re-assign AND re-verify
-        spark,
-        "vec_id % 7 = 2",
-        {"embedding": "transform(embedding, x -> -x)"},
-    )
-    res = dedup.update_semantic_index(spark, DeltaTable(src_uri), idx_uri)
-    assert res["processed_versions"] == 3, "refresh must cover v1..v3 only"
-    return (
-        DeltaTable(f"{idx_uri}/pairs")
-        .to_df(spark)
-        .select("id_a", "id_b", "cosine")
-        .orderBy("id_a", "id_b")
-    )
-
-
-def _semantic_collapsed_oracle() -> str:
-    """Oracle for the COLLAPSED semantic-index lifecycle: the recursive-CTE
-    SemDeDup keeplist (the same reachability form as
-    `dedup.semantic_keeplist_oracle_sql`) over the corpus as the DML left
-    it — seeded embeddings plus a 300-copy byte-identical boilerplate
-    cluster of vec 0's vector, minus the %5 delete, with the %7=2
-    negation applied (negated copies stay byte-identical to EACH OTHER,
-    splitting the cluster into two exact groups). The index stores only
-    group keepers; equality with the full-graph keeplist IS the quotient
-    proof, hashed."""
-    final = """(
-      SELECT vec_id,
-             CASE WHEN vec_id % 7 = 2
-                  THEN list_transform(embedding, x -> -x)
-                  ELSE embedding END AS embedding
-      FROM (
-        SELECT vec_id, embedding FROM embeddings
-        UNION ALL
-        SELECT 100000 + r.i AS vec_id,
-               (SELECT embedding FROM embeddings WHERE vec_id = 0) AS embedding
-        FROM range(300) r(i)
-      )
-      WHERE vec_id % 5 <> 0
-    )"""
-    cos = (
-        "round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), "
-        "CAST(b.embedding AS DOUBLE[])), 4)"
-    )
-    return f"""
-    WITH RECURSIVE pairs AS (
-      SELECT a.vec_id AS u, b.vec_id AS v
-      FROM {final} a JOIN {final} b ON a.vec_id < b.vec_id
-      WHERE {cos} >= 0.4
-    ), und AS (
-      SELECT u, v FROM pairs UNION ALL SELECT v, u FROM pairs
-    ), reach AS (
-      SELECT u AS node, u AS r FROM und
-      UNION
-      SELECT und.u AS node, reach.r
-      FROM und JOIN reach ON und.v = reach.node
-    ), comp AS (
-      SELECT node, min(r) AS cluster_id FROM reach GROUP BY node
-    ), losers AS (
-      SELECT node AS vec_id FROM comp WHERE node <> cluster_id
-    )
-    SELECT vec_id FROM {final}
-    WHERE vec_id NOT IN (SELECT vec_id FROM losers)
-    ORDER BY vec_id
-    """
-
-
-@query("dedup_semantic_index_collapsed", _semantic_collapsed_oracle())
-def q_semantic_index_collapsed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The collapse_exact SEMANTIC index certified end to end (round 10 —
-    VERDICT r9 missing #2): seed a CDF corpus with the full embeddings
-    table PLUS a 300-copy byte-identical boilerplate cluster (vec 0's
-    vector at ids 100000+) → bootstrap with ``collapse_exact=True`` at
-    n_probe = n_list, so assignments and pairs hold only each exact-dup
-    GROUP KEEPER (the cluster costs ONE indexed vector, not Θ(c²) pairs —
-    the uncollapsed pressure at this shape is pinned to fire the cap in
-    tests/test_semantic_index.py) → delete every vec_id % 5 = 0 (v1 —
-    kills the cluster's keeper 0, promoting the smallest surviving copy)
-    → negate vec_id % 7 = 2 (v2 — splits the cluster: negated copies form
-    a SECOND exact group, byte-identical to each other) → ONE incremental
-    refresh folding the window → derive the keeplist through the
-    groups-table re-expansion. The hashed contract: the keeper-level
-    index expands to EXACTLY the recursive-CTE keeplist over the full
-    pair graph — the quotient proof as a driver row."""
-    from . import DeltaTable
-    from .operators import dedup
-    from .writer import write_deltalake
-
-    src_uri = _workdir("semcol-src", sf_dir)
-    idx_uri = _workdir("semcol-idx", sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    v0 = emb.filter(F.col("vec_id") == 0).select(
-        F.col("embedding").alias("_v0")
-    )
-    copies = (
-        spark.range(300)
-        .select((F.col("id") + 100000).alias("vec_id"))
-        .crossJoin(F.broadcast(v0))
-        .select("vec_id", F.col("_v0").alias("embedding"))
-    )
-    write_deltalake(
-        spark,
-        emb.unionByName(copies).repartition(4),
-        src_uri,
-        configuration={
-            "delta.enableChangeDataFeed": "true",
-            "delta.enableDeletionVectors": "true",
-        },
-    )
-    dedup.update_semantic_index(
-        spark,
-        DeltaTable(src_uri),
-        idx_uri,
-        threshold=0.4,
-        n_list=4,
-        n_probe=4,
-        collapse_exact=True,
-    )
-    t = DeltaTable(src_uri)
-    t.delete(spark, "vec_id % 5 = 0")  # v1: MoR delete — keeper 0 dies
-    t.update()
-    t.update_where(  # v2: negation splits the exact-dup cluster in two
-        spark,
-        "vec_id % 7 = 2",
-        {"embedding": "transform(embedding, x -> -x)"},
-    )
-    res = dedup.update_semantic_index(spark, DeltaTable(src_uri), idx_uri)
-    assert res["collapse"] is True, "collapse marker must survive refresh"
-    assert res["processed_versions"] == 2, "refresh must cover v1..v2 only"
-    live = DeltaTable(src_uri).to_df(spark).select("vec_id", "embedding")
-    return dedup.semantic_keeplist_from_index(
-        spark, idx_uri, live
-    ).orderBy("vec_id")
-
-
-@query("stream_ann_index_pipeline", _brute_force_topk_oracle())
-def q_stream_ann_index_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming ANN ingestion certified end-to-end (round 8): seed a
-    source Delta table of embeddings in TWO append commits, tail it with
-    ``delta_stream``, and land every micro-batch through
-    `IndexMaintainingSink` — the foreachBatch wrapper that composes the
-    exactly-once corpus append (epoch txn watermark) with an incremental
-    PQ-index refresh (corpus-version watermark) in the same call. The
-    certified result searches the PERSISTED index the stream built
-    (exhaustive oversample + probe-all over the IVF tier trained at
-    first-batch creation), so one row covers stream offsets → sink commit
-    protocol → CDF-incremental index maintenance → partition-filtered
-    search ≡ the brute-force oracle. Micro-batch boundaries can't change
-    the outcome: appends are disjoint and the refresh folds whatever
-    window each batch leaves.
-
-    Round 11: the sink now trains its OWN codebooks (``books=None`` under
-    the ``n_list`` IVF tier), so the index the stream builds carries the
-    IVFADC residual DEFAULT (`deltars.pq.residual=true`, asserted below)
-    — the certified streaming row drives exactly what default-knob users
-    get (VERDICT r10 #3). The brute-force oracle is unchanged because it
-    is encoding-agnostic at these knobs: exhaustive oversample reranks
-    every probed candidate exactly, so raw and residual indexes return
-    the identical top-k."""
-    import uuid as _uuid
-
-    from .operators import similarity
-    from .streaming.sink import IndexMaintainingSink
-    from .streaming.source import DeltaStreamDataSource
-    from .table import DeltaTable
-    from .writer import write_deltalake
-
-    src = _workdir("stream_ann_src", sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    write_deltalake(spark, emb.filter(F.col("vec_id") % 2 == 0), src)
-    write_deltalake(
-        spark, emb.filter(F.col("vec_id") % 2 == 1), src, mode="append"
-    )
-
-    spark.dataSource.register(DeltaStreamDataSource)
-
-    def _attempt(i: int) -> DataFrame:
-        # fresh corpus replica + index per attempt (fresh checkpoint ⇒
-        # epoch ids restart at 0, same caveat as stream_delta_sink_pipeline)
-        dst = _workdir("stream_ann_dst", sf_dir)
-        idx = _workdir("stream_ann_idx", sf_dir)
-        sink = IndexMaintainingSink(
-            dst,
-            idx,
-            app_id=f"certq_{_uuid.uuid4().hex[:8]}",
-            # books=None: the first refresh trains codebooks from its own
-            # batch under the IVF tier — the residual-DEFAULT resolution
-            n_list=4,
-        )
-        q = (
-            spark.readStream.format("delta_stream")
-            .option("path", src)
-            .option("startingVersion", "0")
-            .load()
-            .select("vec_id", "embedding")
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(src, f"_ckpt{i}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain_or_timeout(q, "stream_ann_index_pipeline")
-        marker = (
-            DeltaTable(idx)
-            .metadata()
-            .configuration.get(similarity._PQ_RESIDUAL_KEY)
-        )
-        assert marker == "true", (
-            f"stream-built index must carry the residual default, got {marker!r}"
-        )
-        corpus = DeltaTable(dst).to_df(spark)
-        return similarity.pq_index_search(
-            spark,
-            idx,
-            corpus,
-            corpus.filter(F.col("vec_id") < 5),
-            k=10,
-            n_probe=4,
-            oversample=1_000_000,
-        )
-
-    return _stream_attempts("stream_ann_index_pipeline", _attempt)
-
-
-def _semantic_stream_oracle() -> str:
-    """Oracle for the streaming SEMANTIC-DEDUP pipeline: the recursive-CTE
-    SemDeDup keeplist (the same reachability form as the batch collapsed
-    row `dedup_semantic_index_collapsed`) over the corpus the STREAM lands
-    — the full embeddings table plus a 300-copy byte-identical boilerplate
-    cluster of vec 0's vector arriving in the second commit. Valid because
-    the sink creates the index at n_probe = n_list, where the keeper-level
-    pair table provably equals the exhaustive keeper pair set and the
-    groups re-expansion is the exact quotient; micro-batch boundaries
-    cannot move the result (appends are disjoint, each refresh folds
-    whatever CDF window its batch leaves)."""
-    final = """(
-      SELECT vec_id, embedding FROM embeddings
-      UNION ALL
-      SELECT 100000 + r.i AS vec_id,
-             (SELECT embedding FROM embeddings WHERE vec_id = 0) AS embedding
-      FROM range(300) r(i)
-    )"""
-    cos = (
-        "round(list_cosine_similarity(CAST(a.embedding AS DOUBLE[]), "
-        "CAST(b.embedding AS DOUBLE[])), 4)"
-    )
-    return f"""
-    WITH RECURSIVE pairs AS (
-      SELECT a.vec_id AS u, b.vec_id AS v
-      FROM {final} a JOIN {final} b ON a.vec_id < b.vec_id
-      WHERE {cos} >= 0.4
-    ), und AS (
-      SELECT u, v FROM pairs UNION ALL SELECT v, u FROM pairs
-    ), reach AS (
-      SELECT u AS node, u AS r FROM und
-      UNION
-      SELECT und.u AS node, reach.r
-      FROM und JOIN reach ON und.v = reach.node
-    ), comp AS (
-      SELECT node, min(r) AS cluster_id FROM reach GROUP BY node
-    ), losers AS (
-      SELECT node AS vec_id FROM comp WHERE node <> cluster_id
-    )
-    SELECT vec_id FROM {final}
-    WHERE vec_id NOT IN (SELECT vec_id FROM losers)
-    ORDER BY vec_id
-    """
-
-
-@query("stream_semantic_index_pipeline", _semantic_stream_oracle())
-def q_stream_semantic_index_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming SEMANTIC-DEDUP ingestion certified end-to-end (round 11 —
-    the dedup twin of `stream_ann_index_pipeline`): seed a source Delta
-    table in TWO append commits — the embeddings table, then a 300-copy
-    byte-identical boilerplate cluster of vec 0's vector (ids 100000+,
-    exactly how duplicate-heavy web data arrives) — tail it with
-    ``delta_stream``, and land every micro-batch through
-    `SemanticIndexMaintainingSink` with ``collapse_exact=True``: the
-    exactly-once corpus append (epoch txn watermark) composes with an
-    incremental semantic-index refresh (corpus-version watermark on the
-    pairs table) in the same foreachBatch call, and the arriving clone
-    cluster is absorbed as ONE group keeper — asserted structurally (no
-    clone id is ever assigned or paired; the keeper-level candidate
-    pressure stays under a reps-sized ``max_list_candidates`` cap that
-    never sees the Θ(c²) clique the uncollapsed path materializes — the
-    cap-blow contrast itself is pinned in
-    tests/test_streaming.py::test_semantic_index_sink_composes_and_collapses).
-    The certified result re-expands the keeper-level index through the
-    groups table into the full keeplist — hashed against the
-    recursive-CTE reachability oracle over the complete pair graph, so one
-    row covers stream offsets → sink commit protocol → CDF-incremental
-    collapse maintenance → the quotient proof, streamed."""
-    import uuid as _uuid
-
-    from .operators import dedup
-    from .streaming.sink import SemanticIndexMaintainingSink
-    from .streaming.source import DeltaStreamDataSource
-    from .table import DeltaTable
-    from .writer import write_deltalake
-
-    src = _workdir("stream_sem_src", sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    v0 = emb.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("_v0"))
-    clones = (
-        spark.range(300)
-        .select((F.col("id") + 100000).alias("vec_id"))
-        .crossJoin(F.broadcast(v0))
-        .select("vec_id", F.col("_v0").alias("embedding"))
-    )
-    write_deltalake(spark, emb, src)
-    write_deltalake(spark, clones.repartition(2), src, mode="append")
-    n = emb.count()
-
-    spark.dataSource.register(DeltaStreamDataSource)
-
-    def _attempt(i: int) -> DataFrame:
-        # fresh corpus replica + index per attempt (fresh checkpoint ⇒
-        # epoch ids restart at 0, same caveat as stream_ann_index_pipeline)
-        dst = _workdir("stream_sem_dst", sf_dir)
-        idx = _workdir("stream_sem_idx", sf_dir)
-        sink = SemanticIndexMaintainingSink(
-            dst,
-            idx,
-            app_id=f"certq_{_uuid.uuid4().hex[:8]}",
-            threshold=0.4,
-            n_list=4,
-            n_probe=4,
-            collapse_exact=True,
-            # keeper-level pressure is ≤ reps² per probed list at exhaustive
-            # probe (reps = n distinct vectors; the clone cluster costs ONE
-            # keeper) — 2n² never fires collapsed, while the uncollapsed
-            # single-batch bootstrap at (n+300)² would exceed it at sf0.1
-            max_list_candidates=2 * n * n,
-        )
-        q = (
-            spark.readStream.format("delta_stream")
-            .option("path", src)
-            .option("startingVersion", "0")
-            .load()
-            .select("vec_id", "embedding")
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", os.path.join(src, f"_ckpt{i}"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        _drain_or_timeout(q, "stream_semantic_index_pipeline")
-        assert sink.last_refresh is not None, "stream landed no batch"
-        assert sink.last_refresh["collapse"] is True
-        # the ADVICE-r10 contract: every refresh return (no-op included)
-        # carries the collapse work metrics
-        assert sink.last_refresh["rep_upserts"] >= 0
-        # absorption, structurally: clone ids (100000+) never enter the
-        # keeper-level tables — their group's keeper is vec 0
-        assigned_max = (
-            DeltaTable(f"{idx}/assignments")
-            .to_df(spark)
-            .agg(F.max("vec_id").alias("m"))
-            .collect()[0]["m"]
-        )
-        assert assigned_max is not None and assigned_max < 100000, (
-            f"clone ids leaked into assignments (max {assigned_max})"
-        )
-        live = DeltaTable(dst).to_df(spark).select("vec_id", "embedding")
-        return dedup.semantic_keeplist_from_index(spark, idx, live).orderBy(
-            "vec_id"
-        )
-
-    return _stream_attempts("stream_semantic_index_pipeline", _attempt)

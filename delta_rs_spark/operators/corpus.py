@@ -260,40 +260,6 @@ def contamination_rates_bloom(
     )
 
 
-def vocab_stats(
-    df: DataFrame, by: str = "source", text_col: str = "text"
-) -> DataFrame:
-    """Per-group vocabulary health: total/distinct/hapax word tokens and
-    type-token ratio — the corpus-level gauges (Heaps-law position, hapax
-    mass) that flag boilerplate floods or tokenizer-hostile sources before
-    training. Two chained hash aggregations, both map-side combinable: the
-    word-frequency shuffle carries (group, word) partial counts, the final
-    shuffle one row per (group, word) — never raw text."""
-    words = df.select(
-        by, F.explode(F.split(F.lower(F.col(text_col)), r"\s+")).alias("w")
-    ).filter(F.col("w") != "")
-    freq = words.groupBy(by, "w").agg(F.count(F.lit(1)).alias("cnt"))
-    return (
-        freq.groupBy(by)
-        .agg(
-            F.sum("cnt").alias("total_tokens"),
-            F.count(F.lit(1)).alias("distinct_tokens"),
-            F.sum(F.when(F.col("cnt") == 1, 1).otherwise(0))
-            .cast("long")
-            .alias("hapax_tokens"),
-        )
-        .withColumn(
-            "type_token_ratio",
-            F.round(
-                F.col("distinct_tokens").cast("double")
-                / F.col("total_tokens").cast("double"),
-                6,
-            ),
-        )
-        .orderBy(by)
-    )
-
-
 def unigram_lm_scores(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
@@ -472,29 +438,6 @@ SELECT doc_id,
              + ln(nr + v) - ln(nt + v), 6) AS avg_logratio
 FROM tf JOIN cw USING (w) CROSS JOIN scalars
 GROUP BY doc_id, nr, nt, v
-ORDER BY doc_id
-"""
-
-
-def unigram_lm_oracle_sql(table: str = "documents") -> str:
-    """DuckDB recomputation of ``unigram_lm_scores`` (same tokenization,
-    same DECIMAL(25,9) per-term quantization, same op order in the final
-    expression so float results agree to the rounded 6 decimals)."""
-    return rf"""
-WITH words AS (
-  SELECT doc_id,
-         unnest(list_filter(string_split_regex(lower(text), '\s+'), w -> w <> '')) AS w
-  FROM {table}
-),
-tf AS (SELECT doc_id, w, count(*) AS tf FROM words GROUP BY 1, 2),
-cw AS (SELECT w, CAST(SUM(tf) AS BIGINT) AS c FROM tf GROUP BY 1),
-tot AS (SELECT CAST(SUM(c) AS BIGINT) AS n FROM cw)
-SELECT doc_id,
-       CAST(SUM(tf) AS BIGINT) AS n_tokens,
-       round(CAST(SUM(CAST(tf * ln(c) AS DECIMAL(25,9))) AS DOUBLE) / SUM(tf)
-             - ln(n), 6) AS avg_logprob
-FROM tf JOIN cw USING (w) CROSS JOIN tot
-GROUP BY doc_id, n
 ORDER BY doc_id
 """
 
@@ -787,27 +730,6 @@ def bpe_pair_counts(
     )
 
 
-def bpe_pair_counts_oracle_sql(table: str = "documents", top_k: int = 50) -> str:
-    """DuckDB recomputation of :func:`bpe_pair_counts`."""
-    return rf"""
-WITH words AS (
-  SELECT unnest(list_filter(string_split_regex(lower(text), '\s+'),
-                            w -> w <> '')) AS w
-  FROM {table}
-),
-pairs AS (
-  SELECT unnest(list_transform(range(1, length(w)),
-                               i -> substr(w, i, 1) || ' ' || substr(w, i+1, 1)))
-         AS pair
-  FROM words WHERE length(w) >= 2
-)
-SELECT pair, COUNT(*) AS cnt
-FROM pairs GROUP BY pair
-ORDER BY cnt DESC, pair
-LIMIT {top_k}
-"""
-
-
 # ---------------------------------------------------------------------------
 # BPE tokenizer: full training loop + corpus encoding
 # ---------------------------------------------------------------------------
@@ -1007,112 +929,6 @@ def bpe_encode(
         .cast("long")
         .alias("n_tokens"),
         tokens_str.alias("tokens_str"),
-    )
-
-
-def _bpe_oracle_ctes(n_merges: int, table: str, text_col: str) -> str:
-    """Shared chained-CTE prefix: word-frequency vocab, then per round a
-    pair census (pK), a 1-row winner (wK: max count, lexicographic tie on
-    the wrapped pair key), and the merged vocab (vK) via the same
-    boundary-safe replace the Spark side compiles."""
-    sarr = (
-        "list_transform(string_split(substr(syms, 2, length(syms) - 2),"
-        " chr(2) || chr(1)), s -> chr(1) || s || chr(2))"
-    )
-    ctes = [
-        f"""words AS (
-      SELECT w, COUNT(*) AS cnt FROM (
-        SELECT unnest(list_filter(string_split_regex(lower({text_col}), '\\s+'),
-                                  x -> x <> '')) AS w
-        FROM {table}
-      ) GROUP BY w
-    )""",
-        """v0 AS MATERIALIZED (
-      SELECT array_to_string(list_transform(range(1, length(w) + 1),
-                    i -> chr(1) || substr(w, i, 1) || chr(2)), '') AS syms,
-             cnt
-      FROM words
-    )""",
-    ]
-    for k in range(1, n_merges + 1):
-        ctes.append(f"""p{k} AS (
-      SELECT pair, SUM(cnt) AS pcnt FROM (
-        SELECT unnest(list_transform(range(1, len(sarr)),
-                                     i -> sarr[i] || sarr[i + 1])) AS pair,
-               cnt
-        FROM (SELECT {sarr} AS sarr, cnt FROM v{k - 1})
-      ) GROUP BY pair
-    )""")
-        ctes.append(
-            f"w{k} AS MATERIALIZED (SELECT pair, pcnt FROM p{k}"
-            f" ORDER BY pcnt DESC, pair LIMIT 1)"
-        )
-        ctes.append(f"""v{k} AS MATERIALIZED (
-      SELECT replace(syms, (SELECT pair FROM w{k}),
-                     replace((SELECT pair FROM w{k}), chr(2) || chr(1), '')) AS syms,
-             cnt
-      FROM v{k - 1}
-    )""")
-    return ",\n    ".join(ctes)
-
-
-def bpe_train_oracle_sql(
-    n_merges: int = 8, table: str = "documents", text_col: str = "text"
-) -> str:
-    """DuckDB recompute of the full training loop: n_merges chained census
-    -> winner -> replace layers, emitting (step, left, right, cnt)."""
-    selects = []
-    for k in range(1, n_merges + 1):
-        left = "substr(string_split(pair, chr(2) || chr(1))[1], 2)"
-        part2 = "string_split(pair, chr(2) || chr(1))[2]"
-        right = f"substr({part2}, 1, length({part2}) - 1)"
-        selects.append(
-            f"SELECT {k} AS step, {left} AS left, {right} AS right,"
-            f" CAST(pcnt AS BIGINT) AS cnt FROM w{k}"
-        )
-    return (
-        "WITH "
-        + _bpe_oracle_ctes(n_merges, table, text_col)
-        + "\n    "
-        + "\n    UNION ALL ".join(selects)
-        + "\n    ORDER BY step"
-    )
-
-
-def bpe_encode_oracle_sql(
-    n_merges: int = 8,
-    table: str = "documents",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> str:
-    """DuckDB recompute of train-then-encode: the same chained training
-    CTEs pick the winners, then every document's wrapped symbol string
-    takes the same replace chain and marker strip."""
-    s = (
-        f"array_to_string(list_transform("
-        f"list_filter(string_split_regex(lower({text_col}), '\\s+'), x -> x <> ''),"
-        f" w -> array_to_string(list_transform(range(1, length(w) + 1),"
-        f" i -> chr(1) || substr(w, i, 1) || chr(2)), '')), chr(3))"
-    )
-    for k in range(1, n_merges + 1):
-        s = (
-            f"replace({s}, (SELECT pair FROM w{k}),"
-            f" replace((SELECT pair FROM w{k}), chr(2) || chr(1), ''))"
-        )
-    toks = (
-        f"trim(replace(replace(replace({s}, chr(2), ''), chr(3), ''),"
-        f" chr(1), ' '))"
-    )
-    return (
-        "WITH "
-        + _bpe_oracle_ctes(n_merges, table, text_col)
-        + f"""
-    SELECT {id_col},
-           CAST(CASE WHEN t = '' THEN 0 ELSE len(string_split(t, ' ')) END
-                AS BIGINT) AS n_tokens,
-           t AS tokens_str
-    FROM (SELECT {id_col}, COALESCE({toks}, '') AS t FROM {table})
-    ORDER BY {id_col}"""
     )
 
 

@@ -115,18 +115,6 @@ def extract_features(df: DataFrame) -> DataFrame:
     return df.select("doc_id", "payload").mapInPandas(batches, FEATURE_SCHEMA)
 
 
-MULTIMODAL_ORACLE_SQL = """
-WITH payloads AS (
-  SELECT doc_id, encode(text) AS payload FROM documents
-)
-SELECT doc_id,
-       octet_length(payload) AS n_bytes,
-       octet_length(payload) % 640 + 1 AS fake_width,
-       (octet_length(payload) * 7) % 480 + 1 AS fake_height
-FROM payloads ORDER BY doc_id
-"""
-
-
 RESIZED_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),

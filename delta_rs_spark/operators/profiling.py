@@ -123,54 +123,6 @@ def rolling_zscore(
     )
 
 
-def rolling_zscore_oracle_sql(
-    table: str = "events",
-    window_rows: int = 100,
-    min_rows: int = 30,
-    threshold: float = 3.0,
-) -> str:
-    """DuckDB recomputation of ``rolling_zscore`` — same decimal-exact
-    window sums, same derivation expression, same rounding."""
-    return f"""
-WITH cums AS (
-  SELECT event_id, ts, event_type, value,
-         SUM(CAST(value AS DECIMAL(25,6))) OVER wc AS cum_v,
-         SUM(CAST(value AS DECIMAL(25,6)) * CAST(value AS DECIMAL(25,6)))
-             OVER wc AS cum_v2,
-         row_number() OVER w AS rn
-  FROM {table}
-  WINDOW w AS (PARTITION BY event_type ORDER BY ts, event_id),
-         wc AS (PARTITION BY event_type ORDER BY ts, event_id
-                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-),
-rolled AS (
-  SELECT event_id, ts, event_type, value,
-         cum_v - coalesce(lag(cum_v, {window_rows}) OVER w, 0) AS sum_v,
-         cum_v2 - coalesce(lag(cum_v2, {window_rows}) OVER w, 0) AS sum_v2,
-         least(rn, {window_rows}) AS n
-  FROM cums
-  WINDOW w AS (PARTITION BY event_type ORDER BY ts, event_id)
-),
-scored AS (
-  SELECT event_id, ts, event_type, value,
-         CASE WHEN n >= {min_rows}
-                   AND sqrt(greatest(0.0,
-                       (CAST(sum_v2 AS DOUBLE) - n * (CAST(sum_v AS DOUBLE) / n)
-                            * (CAST(sum_v AS DOUBLE) / n)) / (n - 1))) > 0
-              THEN round((value - CAST(sum_v AS DOUBLE) / n)
-                   / sqrt(greatest(0.0,
-                       (CAST(sum_v2 AS DOUBLE) - n * (CAST(sum_v AS DOUBLE) / n)
-                            * (CAST(sum_v AS DOUBLE) / n)) / (n - 1))), 4)
-         END AS zscore
-  FROM rolled
-)
-SELECT ts, event_id, event_type, value, zscore,
-       coalesce(abs(zscore) > {threshold}, false) AS is_anomaly
-FROM scored
-ORDER BY event_type, ts, event_id
-"""
-
-
 def column_profile(df: DataFrame, cols: list[str]) -> DataFrame:
     """One row per column: count / nulls / exact distinct / min / max (doubles).
 

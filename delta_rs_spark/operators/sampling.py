@@ -136,37 +136,6 @@ def mixture_sample(
     return df.filter(bucket < thr)
 
 
-def token_budget_sample(
-    df: DataFrame,
-    budget_tokens: int,
-    by: str = "source",
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """Keep documents per group, in deterministic id order, until a token
-    budget fills — the mixture-weighting primitive when targets are TOKEN
-    counts (what training actually consumes), not document counts.
-
-    Tokens are the ceil(chars/4) BPE proxy (same as ``text.token_count``).
-    The running total is a per-group window cumsum: one range shuffle, and
-    each group's scan is sequential by construction — budget admission is
-    inherently order-dependent. At 100 TB, pre-thin with the hash-bucket
-    ``mixture_sample`` first so the windowed pass sees only candidates near
-    the budget boundary, not the whole corpus."""
-    toks = F.ceil(F.length(F.col(text_col)) / 4.0).cast("long")
-    w = (
-        Window.partitionBy(by)
-        .orderBy(id_col)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return (
-        df.select(id_col, by, toks.alias("doc_tokens"))
-        .withColumn("cum_tokens", F.sum("doc_tokens").over(w))
-        .filter(F.col("cum_tokens") <= budget_tokens)
-        .orderBy(by, id_col)
-    )
-
-
 def global_shuffle_shards(
     df: DataFrame,
     num_shards: int = 8,
@@ -208,25 +177,3 @@ def global_shuffle_shards(
     return out.withColumn("pos", F.row_number().over(w)).select(
         "shard", "pos", id_col
     )
-
-
-def global_shuffle_oracle_sql(
-    table: str = "documents",
-    num_shards: int = 8,
-    id_col: str = "doc_id",
-    salt: str = "",
-) -> str:
-    """DuckDB recomputation of ``global_shuffle_shards`` (same md5 bucket,
-    same within-shard order)."""
-    bucket = f"CAST(('0x' || substr(hx, 1, 8)) AS UBIGINT) % {num_shards}"
-    return f"""
-WITH h AS (
-  SELECT {id_col}, md5(CAST({id_col} AS VARCHAR) || '{salt}') AS hx FROM {table}
-)
-SELECT CAST({bucket} AS INTEGER) AS shard,
-       CAST(row_number() OVER (PARTITION BY {bucket} ORDER BY hx, {id_col})
-            AS INTEGER) AS pos,
-       {id_col}
-FROM h
-ORDER BY shard, pos
-"""

@@ -13,17 +13,8 @@ The index ladder, as a 100 TB engine needs:
   MLlib k-means execution shape), then probe the ``n_probe`` nearest lists
   per query and rerank exactly inside them. Work per query scales with
   n·n_probe/n_list instead of n².
-- ``quantized_topk`` / ``pq_topk``: scan-compression tiers — int8 scalar
-  quantization (4x fewer candidate-scan bytes) and product quantization
-  (m-byte codes + ADC table lookups), both with an exact rerank.
-- ``ivf_pq_topk``: the production composition — IVF prunes WHICH vectors
-  are scanned, PQ compresses HOW MUCH each scan costs.
-- ``update_pq_index`` / ``pq_index_search``: the build-once / search-many
-  split — the PQ index persisted as a self-describing Delta table
-  (codebooks in table configuration), maintained incrementally from the
-  corpus change feed (work ∝ changes), searched without ever re-encoding:
-  the code columns are the only corpus-sized scan and float vectors are
-  fetched just for the rerank survivors.
+- ``quantized_topk``: scan compression — int8 scalar quantization (4x
+  fewer candidate-scan bytes) with an exact rerank.
 - Pair enumeration for dedup: ``blocked_exact_pairs`` (exact corpus-wide
   GEMM, honest Θ(n²)) and ``clustered_exact_pairs`` (k-means partition,
   exact pairs within clusters — the low-threshold path that survives
@@ -102,7 +93,7 @@ def _two_phase_topk(scored: DataFrame, k: int) -> DataFrame:
 
 
 def _screened_topk(scored: DataFrame, cosine_expr, k: int, keep: int) -> DataFrame:
-    """Shared tail of the screen-then-rerank operators (int8, PQ, IVF-PQ):
+    """Tail of the screen-then-rerank operator (`quantized_topk`):
     keep the top ``keep`` candidates per query by the approximate
     ``qscore`` (two-phase windows — no reducer sees O(corpus) rows for one
     query), then rank the survivors by the EXACT ``cosine_expr`` (rounded
@@ -179,7 +170,6 @@ def _hyperplane_signs(n_planes: int, dim: int) -> list[list[int]]:
     return planes
 
 
-
 def _unit(df: DataFrame, prefix: str) -> DataFrame:
     """L2-normalize `{prefix}_v` (dropping zero vectors) so cosine == dot."""
     return df.filter(F.col(f"{prefix}_norm") > 0).withColumn(
@@ -190,6 +180,12 @@ def _unit(df: DataFrame, prefix: str) -> DataFrame:
 
 def _dot(va, vb):
     return F.aggregate(F.zip_with(va, vb, lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x)
+
+
+def _flit(x: float) -> str:
+    """Shortest-repr double literal in SQL text (parses to Literal(x,
+    DoubleType) — `repr` round-trips doubles exactly)."""
+    return repr(float(x)) + "D"
 
 
 def _assign_lists(
@@ -206,9 +202,9 @@ def _assign_lists(
     """
     # SQL-text dot array (round 12): the Column form built n_list
     # aggregate(zip_with(...)) trees with dim literals each through py4j —
-    # pure driver construction chatter re-paid per call (same fix and
-    # equivalence argument as _l2_argmin_sql; identical arithmetic in
-    # identical order, so the doubles are bit-equal)
+    # pure driver construction chatter re-paid per call; one parsed SQL
+    # string does identical arithmetic in identical order, so the doubles
+    # are bit-equal)
     dots = F.expr(
         "array("
         + ", ".join(
@@ -368,8 +364,8 @@ def _lsh_bucket_tables(
     independent sign-LSH hash table per plane set. Buckets are computed in
     one codegen pass (the plane matrix is a driver literal, no shuffle)."""
     # SQL-text build (round 12): n_tables·n_planes aggregate(zip_with(...))
-    # sign-dot trees were assembled through py4j per call — the same
-    # construction-cost class as _l2_argmin_sql. The dot is the identical
+    # sign-dot trees were assembled through py4j per call — pure driver
+    # construction cost. The dot is the identical
     # fold (zip_with multiply, left fold from 0.0D), so every bucket bit —
     # and the SQL oracle's signed-chain recomputation — is unchanged.
     all_planes = _hyperplane_signs(n_planes * n_tables, dim)
@@ -393,69 +389,6 @@ def _lsh_bucket_tables(
             "table", "bucket"
         ),
     )
-
-
-def lsh_bucket_assignments(
-    df: DataFrame,
-    n_planes: int = 8,
-    n_tables: int = 2,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """The DETERMINISTIC core of the LSH path, exposed for exact-oracle
-    certification: every vector's (table, bucket) assignment through the
-    same ``_lsh_bucket_tables`` codegen expression ``lsh_topk`` uses.
-
-    The top-k result is approximate by design (rows-only check + recall
-    floor), but the bucket assignment is pure deterministic arithmetic —
-    md5-derived ±1 hyperplanes folded left-to-right in IEEE doubles — so an
-    independent engine evaluating the same literal sign matrix in the same
-    addition order reproduces every bucket bit exactly. This pins the part
-    of the approximate path where a silent bug (wrong plane slice, sign
-    flip, bit-order change) would degrade recall without failing any
-    rows-only check."""
-    b = _lsh_bucket_tables(
-        df.select(id_col, vec_col), n_planes, n_tables, dim, vec_col
-    )
-    return b.select(
-        F.col(id_col),
-        F.col("table").cast("int").alias("lsh_table"),
-        F.col("bucket").cast("long").alias("bucket"),
-    ).orderBy(id_col, "lsh_table")
-
-
-def lsh_bucket_assignments_oracle_sql(
-    table: str = "embeddings",
-    n_planes: int = 8,
-    n_tables: int = 2,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> str:
-    """DuckDB recomputation of ``lsh_bucket_assignments``: the identical
-    md5-derived sign matrix (same helper) inlined as literal +/- terms in
-    the same left-to-right addition order, so each plane's dot product is
-    the same IEEE double and each bucket bit matches exactly."""
-    planes = _hyperplane_signs(n_planes * n_tables, dim)
-    selects = []
-    for t in range(n_tables):
-        bits = []
-        for i, signs in enumerate(planes[t * n_planes : (t + 1) * n_planes]):
-            chain = " + ".join(
-                f"({'' if s > 0 else '-'}CAST({vec_col}[{d + 1}] AS DOUBLE))"
-                for d, s in enumerate(signs)
-            )
-            bits.append(
-                f"CASE WHEN ({chain}) >= 0 THEN CAST({1 << i} AS BIGINT) "
-                "ELSE CAST(0 AS BIGINT) END"
-            )
-        bucket = " + ".join(bits)
-        selects.append(
-            f"SELECT {id_col}, CAST({t} AS INT) AS lsh_table,\n"
-            f"       ({bucket}) AS bucket\nFROM {table}"
-        )
-    return "\nUNION ALL\n".join(selects) + f"\nORDER BY {id_col}, lsh_table"
 
 
 def lsh_topk(
@@ -562,8 +495,8 @@ def lsh_bucketed_pairs(
     r, b = _band_params(threshold, target_miss)
     planes = _hyperplane_signs(r * b, dim)
     # SQL-text literal matrix (round 12): up to max_planes F.lit(list)
-    # py4j calls otherwise — same construction fix as _l2_argmin_sql,
-    # identical literal values
+    # py4j calls otherwise — one parsed SQL string instead, identical
+    # literal values
     planes_col = F.expr(
         "array("
         + ", ".join(
@@ -1027,1667 +960,3 @@ def random_projection(
         )
         cols.append(F.expr(f"round(({terms}) * {scale!r}, 4)").alias(f"rp{j:02d}"))
     return df.select(*cols)
-
-
-def random_projection_oracle_sql(
-    table: str = "embeddings",
-    in_dim: int = 64,
-    out_dim: int = 16,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> str:
-    """DuckDB recomputation of ``random_projection`` — same literal matrix
-    (generated by the same helper), same left-to-right addition chain."""
-    signs = _rp_signs(in_dim, out_dim, seed)
-    scale = 1.0 / math.sqrt(out_dim)
-    sel = [id_col]
-    for j, row in enumerate(signs):
-        terms = " + ".join(
-            f"({'' if c > 0 else '-'}CAST({vec_col}[{i + 1}] AS DOUBLE))"
-            for i, c in enumerate(row)
-        )
-        sel.append(f"round(({terms}) * {scale!r}, 4) AS rp{j:02d}")
-    cols = ",\n       ".join(sel)
-    return f"SELECT {cols}\nFROM {table}\nORDER BY {id_col}"
-
-
-# ---------------------------------------------------------------------------
-# Product quantization (PQ / ADC)
-# ---------------------------------------------------------------------------
-
-def _cents_df(spark, cents: list[list[float]]):
-    """The IVF centroid table as a tiny broadcastable frame (n_list rows —
-    driver-held KB-MB by the sqrt rule). Used wherever a per-row centroid
-    VECTOR is needed (residual encode/score); plain list ASSIGNMENT stays
-    the literal-codegen `_assign_lists` path (no join at all)."""
-    return spark.createDataFrame(
-        [(i, [float(x) for x in c]) for i, c in enumerate(cents)],
-        "list_id int, _cent array<double>",
-    )
-
-
-def _attach_residual(df: DataFrame, cents: list[list[float]], prefix: str) -> DataFrame:
-    """Replace ``{prefix}_v`` with its coarse-quantizer RESIDUAL
-    (unit vector − assigned list's centroid) — the IVFADC decomposition
-    (Jégou et al. 2011 §IV): u = cent[l(u)] + r(u), so codebooks trained
-    and codes assigned on r quantize only the WITHIN-list variation the
-    coarse tier can't express. ``df`` must already carry ``list_id`` (one
-    row per vector, n_probe=1 assignment) and a unit-normalized
-    ``{prefix}_v``. One broadcast join against the n_list-row centroid
-    frame; the subtraction is codegen."""
-    return (
-        df.join(F.broadcast(_cents_df(df.sparkSession, cents)), "list_id")
-        .withColumn(
-            f"{prefix}_v",
-            F.zip_with(f"{prefix}_v", "_cent", lambda a, b: a - b),
-        )
-        .drop("_cent")
-    )
-
-
-def _flit(x: float) -> str:
-    """Shortest-repr double literal in SQL text (parses to Literal(x,
-    DoubleType) — `repr` round-trips doubles exactly)."""
-    return repr(float(x)) + "D"
-
-
-def _l2_argmin_sql(
-    cents: list[list[float]], vec_sql: str, round_digits: int | None = None
-) -> str:
-    """SQL-text twin of :func:`_l2_argmin_expr` (round 12, guide §1.2/§4).
-
-    Two measured problems with the Column form at m=16/k=16 (the
-    update_pq_index refresh path, 12-24 s per streaming micro-batch):
-
-    - CONSTRUCTION: 256 ``aggregate(zip_with(...))`` Column objects built
-      through py4j — 7-8 s of driver chatter per call, re-paid on every
-      refresh. One parsed SQL string per code column removes it (the same
-      fix as round 11's single-statement relational queries).
-    - EXECUTION: the struct-sort argmin referenced the whole k-distance
-      array INSIDE the ``transform`` lambda, and subexpression elimination
-      does not reach through higher-order functions — every code column
-      evaluated its k aggregates k times (k² per subspace). The argmin is
-      now ``array_position(dists, array_min(dists)) - 1``: dists evaluates
-      once (plain Project-level CSE applies), min and first-match replace
-      the sort.
-
-    Equivalence to the struct-sort form (bit-exact, all inputs): distances
-    are sums of squares left-folded from +0.0D — finite, never -0.0 — and
-    rounding preserves that; ``array_min`` returns the smallest element's
-    exact bits, ``array_position`` finds its FIRST occurrence, i.e. the
-    smallest code on rounded ties — the identical tie-break the
-    (dist, idx) struct sort applied. Even the degenerate all-NaN case
-    agrees (Spark orders/equates NaN consistently in both forms → code 0).
-    Pinned against the Column form in tests/test_pq_index.py."""
-    parts = []
-    for c in cents:
-        arr = "array(" + ", ".join(_flit(x) for x in c) + ")"
-        d = (
-            f"aggregate(zip_with({vec_sql}, {arr},"
-            f" (a, b) -> (a - b) * (a - b)), 0.0D, (acc, x) -> acc + x)"
-        )
-        parts.append(
-            f"round({d}, {round_digits})" if round_digits is not None else d
-        )
-    dists = "array(" + ", ".join(parts) + ")"
-    return (
-        f"CAST(array_position({dists}, array_min({dists})) - 1 AS INT)"
-    )
-
-
-def _l2_argmin_expr(cents: list[list[float]], vec, round_digits: int | None = None):
-    """Codegen argmin over literal centroids: array of squared-L2
-    distances, struct-sorted (dist, idx) ascending, first index — ties
-    break to the smallest code, the same rule the SQL oracle evaluates.
-    ``round_digits`` quantizes each distance first (the certified-codes
-    path: cross-engine double noise is ~1e-15, so rounding at 1e-9 makes
-    the argmin engine-invariant without ever flipping a real winner).
-
-    Round 12: the hot paths (`pq_codes`, `train_pq_codebooks`) build the
-    SQL-text twin `_l2_argmin_sql` instead (construction + execution cost,
-    see its docstring); this Column form is kept as the reference
-    implementation the equivalence test pins against."""
-    def _d(c):
-        d = F.aggregate(
-            F.zip_with(vec, F.array(*[F.lit(float(x)) for x in c]),
-                       lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        return F.round(d, round_digits) if round_digits is not None else d
-
-    dists = F.array(*[_d(c) for c in cents])
-    n = len(cents)
-    return F.element_at(
-        F.array_sort(
-            F.transform(
-                F.sequence(F.lit(0), F.lit(n - 1)),
-                lambda i: F.struct(
-                    F.element_at(dists, i + 1).alias("d"),
-                    i.alias("code"),
-                ),
-            )
-        ),
-        1,
-    )["code"]
-
-
-def pq_random_codebooks(m: int, sub_dim: int, k_codes: int, seed: int = 7) -> list[list[list[float]]]:
-    """Data-INDEPENDENT codebooks from md5 (uniform in ±1/√(m·sub_dim), the
-    scale of unit-vector subcoordinates) — worse recall than trained
-    codebooks, but reproducible from constants alone, which is what lets a
-    SQL oracle certify the encode/ADC machinery exactly (the same
-    trained-vs-derived split as `lsh_bucket_assignments`)."""
-    amp = 1.0 / (m * sub_dim) ** 0.5
-    return [
-        [
-            [
-                (int(hashlib.md5(f"pq:{seed}:{j}:{c}:{s}".encode()).hexdigest()[:8], 16)
-                 / float(1 << 32) * 2.0 - 1.0) * amp
-                for s in range(sub_dim)
-            ]
-            for c in range(k_codes)
-        ]
-        for j in range(m)
-    ]
-
-
-def train_pq_codebooks(
-    corpus: DataFrame,
-    m: int = 16,
-    k_codes: int = 16,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int | None = None,
-    cents: list[list[float]] | None = None,
-) -> list[list[list[float]]]:
-    """Per-subspace L2 k-means codebooks over the unit-normalized corpus —
-    the PQ trainer (Jégou et al. 2011, "Product Quantization for Nearest
-    Neighbor Search"). m · k_codes · (dim/m) doubles live on the driver
-    (KB), like the IVF centroids.
-
-    With ``cents`` (IVF coarse centroids), codebooks train on each
-    vector's coarse-quantizer RESIDUAL instead (u − cent[l(u)], the IVFADC
-    form): on clustered corpora the unit vectors' variance is dominated by
-    BETWEEN-cluster structure the coarse tier already encodes, so raw-form
-    codebooks spend their k_codes cells on it and can no longer rank
-    WITHIN a list — measured at n=20k/25 clusters: probe-ratio-0.125
-    recall 0.70 raw vs ≥0.9 residual at the same m=8/k=16 knobs (raising
-    raw k_codes to 64 also restores 0.92, but the argmin expression — and
-    its codegen compile time — grows linearly with k_codes; residuals keep
-    the cheap books). Residual books only make sense consumed by a
-    residual scorer (`ivf_pq_topk(residual=True)` / a
-    ``deltars.pq.residual`` index).
-
-    ALL m subspaces train in ONE distributed pass per Lloyd iteration:
-    every row evaluates its m codegen argmins at once, one posexplode
-    fans the vector into (subspace, code, coord) groups, and one
-    DECIMAL-mean aggregation updates every codebook — iters + 2 bounded
-    jobs total, independent of m. (The naive per-subspace loop would scan
-    the corpus m · iters times — 16x the I/O at the default m, which at
-    100 TB is the difference between one pass and sixteen.) Seeds are the
-    k_codes corpus vectors with the smallest xxhash64(id), sliced per
-    subspace — identical to training each subspace independently, since
-    slicing commutes with the seed ordering; empty cells keep their seed,
-    same as `train_ivf_centroids`.
-
-    EAGER-BUILD CONTRACT: unless ``dim`` is supplied, one bounded job reads
-    a single row to size the subspaces."""
-    # persisted for the trainer's lifetime (same rationale and release
-    # discipline as train_ivf_centroids): the dim sniff, the seed scan and
-    # every Lloyd iteration read this projection — for residual books it
-    # includes the n_list·dim assignment + residual attach, the most
-    # expensive per-row expression in the module
-    c = _unit(_with_norm(corpus, id_col, vec_col, "c"), "c")
-    if cents is not None:
-        c = _attach_residual(_assign_lists(c, cents, "c", 1), cents, "c")
-    c = c.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        return _train_pq_codebooks_from(c, m, k_codes, iters, dim)
-    finally:
-        c.unpersist()
-
-
-def _train_pq_codebooks_from(
-    c: DataFrame, m: int, k_codes: int, iters: int, dim: int | None
-) -> list[list[list[float]]]:
-    if dim is None:
-        row = c.select("c_v").first()
-        if row is None:
-            raise ValueError(
-                "cannot train PQ codebooks: corpus has no finite nonzero"
-                " vectors"
-            )
-        dim = len(row[0])
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m {m}")
-    sub = dim // m
-    seeds = (
-        c.orderBy(F.xxhash64(F.col("c_id")), F.col("c_id"))
-        .limit(k_codes)
-        .select("c_v")
-        .collect()
-    )
-    if not seeds:  # explicit-dim call on an empty corpus skips the sniff
-        raise ValueError(
-            "cannot train PQ codebooks: corpus has no finite nonzero vectors"
-        )
-    books = [
-        [list(r.c_v[j * sub : (j + 1) * sub]) for r in seeds] for j in range(m)
-    ]
-    for _ in range(iters):
-        # SQL-text argmin: same construction/execution rationale as
-        # pq_codes (see _l2_argmin_sql) — the trainer rebuilds this
-        # expression every iteration
-        codes = F.expr(
-            "array("
-            + ", ".join(
-                _l2_argmin_sql(books[j], f"slice(c_v, {j * sub + 1}, {sub})")
-                for j in range(m)
-            )
-            + ")"
-        )
-        means = (
-            # codes are projected BEFORE the posexplode select: combining a
-            # generator with the struct-sort argmin in one projection makes
-            # Spark's Generate rewrite re-analyze the lambda and drop the
-            # struct field aliases (FIELD_NOT_FOUND on `code`)
-            c.select(codes.alias("_codes"), "c_v")
-            .select("_codes", F.posexplode("c_v").alias("pos", "val"))
-            .select(
-                (F.col("pos") / sub).cast("int").alias("j"),
-                F.pmod(F.col("pos"), F.lit(sub)).alias("s"),
-                F.element_at("_codes", (F.col("pos") / sub).cast("int") + 1).alias(
-                    "code"
-                ),
-                "val",
-            )
-            .groupBy("j", "code", "s")
-            # order-insensitive mean, same determinism contract as
-            # train_ivf_centroids
-            .agg(
-                (
-                    F.sum(F.col("val").cast("decimal(25,12)"))
-                    / F.count(F.lit(1))
-                )
-                .cast("double")
-                .alias("m")
-            )
-            .groupBy("j", "code")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("s", "m"))), lambda x: x.m
-                ).alias("cent")
-            )
-            .collect()
-        )
-        for row in means:
-            books[row.j][row.code] = list(row.cent)
-    return books
-
-
-def pq_codes(
-    corpus: DataFrame,
-    books: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int | None = 9,
-    cents: list[list[float]] | None = None,
-    emit_list_id: bool = False,
-) -> DataFrame:
-    """(id, code_0..code_{m-1}) — each unit vector's per-subspace L2-argmin
-    codeword, entirely in codegen (the m·k_codes centroid literals fold
-    into the plan like the LSH sign matrix). At scale these m small ints
-    are what you PERSIST next to (or instead of) the float vector: the
-    whole corpus scans at m bytes/vector during candidate generation.
-
-    With ``cents`` the encoded vector is the coarse-quantizer RESIDUAL
-    (see `train_pq_codebooks`) — ``books`` must then be residual-trained
-    under the SAME centroids, the invariant the persisted index's
-    ``deltars.pq.residual`` configuration pins. ``emit_list_id`` (requires
-    ``cents``) also returns the assignment the residual was taken against:
-    a persisted index MUST partition by THIS list_id, not a re-derived
-    one — assignment is norm-invariant in exact arithmetic, but a
-    floating-point near-tie between two centroid dots can resolve
-    differently over raw-norm vs unit vectors, persisting a code whose
-    residual centroid differs from the partition whose q·cent[l] term the
-    search adds (ADVICE r9)."""
-    m = len(books)
-    sub = len(books[0][0])
-    if emit_list_id and cents is None:
-        raise ValueError("emit_list_id=True requires cents")
-    c = _unit(_with_norm(corpus, id_col, vec_col, "c"), "c")
-    if cents is not None:
-        c = _attach_residual(_assign_lists(c, cents, "c", 1), cents, "c")
-    # SQL-text argmin (see _l2_argmin_sql): one parse instead of 256 py4j
-    # Column builds, and dists evaluated once per code instead of k times
-    return c.select(
-        F.col("c_id").alias(id_col),
-        *(["list_id"] if emit_list_id else []),
-        *[
-            F.expr(
-                _l2_argmin_sql(
-                    books[j], f"slice(c_v, {j * sub + 1}, {sub})", round_digits
-                )
-            ).alias(f"code_{j}")
-            for j in range(m)
-        ],
-    )
-
-
-def pq_codes_oracle_sql(
-    m: int = 16,
-    k_codes: int = 16,
-    seed: int = 7,
-    dim: int = 64,
-    table: str = "embeddings",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 9,
-) -> str:
-    """DuckDB recompute of `pq_codes` over the md5-derived codebooks: the
-    identical centroid literals, the identical left-to-right addition
-    order, distances rounded at the same digit, first-index argmin — so a
-    subspace-slice off-by-one, a sign flip, or a tie-break divergence in
-    the codegen path is a hard hash mismatch (the same certification shape
-    as `lsh_bucket_assignments_oracle_sql`)."""
-    sub = dim // m
-    books = pq_random_codebooks(m, sub, k_codes, seed)
-    sumsq = " + ".join(
-        f"(CAST({vec_col}[{i + 1}] AS DOUBLE) * CAST({vec_col}[{i + 1}] AS DOUBLE))"
-        for i in range(dim)
-    )
-    code_cols = []
-    dist_lists = []
-    for j in range(m):
-        dists = []
-        for c in range(k_codes):
-            terms = " + ".join(
-                f"((v[{j * sub + s + 1}] - ({books[j][c][s]!r})) * "
-                f"(v[{j * sub + s + 1}] - ({books[j][c][s]!r})))"
-                for s in range(sub)
-            )
-            dists.append(f"round({terms}, {round_digits})")
-        dist_lists.append(f"[{', '.join(dists)}] AS d{j}")
-        code_cols.append(
-            f"CAST(list_position(d{j}, list_min(d{j})) - 1 AS INT) AS code_{j}"
-        )
-    return f"""
-    WITH n AS (
-      SELECT {id_col}, {vec_col}, sqrt({sumsq}) AS nrm FROM {table}
-    ),
-    u AS (
-      SELECT {id_col},
-             list_transform({vec_col}, x -> CAST(x AS DOUBLE) / nrm) AS v
-      FROM n WHERE nrm > 0
-    ),
-    d AS (
-      SELECT {id_col}, {', '.join(dist_lists)} FROM u
-    )
-    SELECT {id_col}, {', '.join(code_cols)}
-    FROM d ORDER BY {id_col}
-    """
-
-
-def _auto_pool_oversample(scanned: int, k: int) -> int:
-    """Oversample that keeps the exact-rerank pool a constant FRACTION of
-    the scanned candidates (pool = k·oversample ≈ scanned/6) instead of a
-    constant COUNT — the scale contract the fixed default broke: at a fixed
-    oversample the pool shrinks relative to a growing corpus and recall
-    decays with data size (measured 0.94 → 0.74 from sf0.01 → sf0.1 at
-    oversample 8; the pool-fraction rule holds ≥ 0.94 at both). Floor 8
-    preserves the small-corpus behavior the recall ladder was measured at.
-
-    The flip side of the fraction rule: the exact rerank does Θ(scanned/6)
-    float work per query. For IVF-tiered callers scanned is the probed
-    slice (n·n_probe/n_list) and the rerank shrinks with the probe; for a
-    FLAT scan (pq_topk, an unpartitioned index) scanned = n and the rerank
-    is Θ(n) per query — see pq_topk's docstring for why that makes flat PQ
-    a compression tier rather than a scale path."""
-    import math
-
-    return max(8, math.ceil(scanned / (k * 6)))
-
-
-def pq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    m: int = 16,
-    k_codes: int = 16,
-    oversample: int | None = None,
-    iters: int = 2,
-    books: list[list[list[float]]] | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_rows: int | None = None,
-) -> DataFrame:
-    """Approximate top-k via product quantization with asymmetric distance
-    computation (ADC) + exact rerank.
-
-    The third rung of the scan-compression ladder (float32 -> int8 ->
-    PQ codes): the corpus is represented by m codewords (m bytes at
-    k_codes <= 256) instead of 4·dim bytes — 16x fewer candidate-scan
-    bytes at the default m=16, dim=64 (and the ratio grows with dim:
-    a 1024-dim corpus at m=16 scans 256x fewer bytes). Each query precomputes its m × k_codes table of
-    subspace dot products against the codebooks (a literal-arithmetic
-    codegen map over the BROADCAST query side); scoring a corpus vector is
-    then m table lookups, no float vector read at all. The top
-    k·oversample ADC candidates per query take an exact float rerank —
-    identical scoring expression to `cosine_topk`, so precision of the
-    emitted cosines is exact and recall tunes with ``oversample`` (floor
-    pinned in tests/test_recall.py; at oversample >= corpus/k the screen
-    is exhaustive and the output provably equals brute force — the
-    certified companion `similarity_pq_exact`).
-
-    Codebooks: pass ``books`` (e.g. md5-derived via `pq_random_codebooks`
-    for engine-reproducibility, or precomputed) or let the operator train
-    per-subspace Lloyd codebooks (`train_pq_codebooks` — bounded driver
-    jobs, deterministic).
-
-    ``oversample`` defaults to corpus-size-aware (`_auto_pool_oversample`
-    over the full scan — flat PQ scans every vector per query): the rerank
-    pool stays a constant fraction of the corpus, so recall no longer
-    decays as the data grows past a fixed pool. OWN THE ARITHMETIC of that
-    rule: with scanned = n, the pool is ≈ n/6 candidates per query, so the
-    exact-rerank tier does Θ(n) float dot products per query — the
-    pool-fraction rule buys scale-stable recall by conceding that flat
-    PQ's END-TO-END cost stays linear in the corpus, eroding the
-    16-bytes-per-vector scan advantage the compression tier leads with.
-    Flat PQ is therefore a COMPRESSION tier, not a scale path: it cuts
-    scan bytes ~16×, never the asymptotics. The scale path is `ivf_pq_topk`
-    (scanned = n·n_probe/n_list, so the same rule keeps the rerank a
-    fraction of the PROBED slice) — the same routing its docstring states.
-    Pass ``n_rows`` (a Delta source's log-level ``numRecords`` sum, a
-    prior count — same hint contract as `blocked_exact_pairs`) to keep the
-    build fully lazy; without it, deriving the default runs ONE bounded
-    count job. An explicit ``oversample`` skips both."""
-    if oversample is None:
-        n = n_rows if n_rows is not None else corpus.count()
-        oversample = _auto_pool_oversample(n, k)
-    if books is None:
-        books = train_pq_codebooks(
-            corpus, m=m, k_codes=k_codes, iters=iters, id_col=id_col, vec_col=vec_col
-        )
-    m = len(books)
-    k_codes = len(books[0])
-    sub = len(books[0][0])
-
-    c = _unit(_with_norm(corpus, id_col, vec_col, "c"), "c")
-    cc = c.select(
-        "c_id",
-        "c_v",
-        *[
-            F.expr(
-                _l2_argmin_sql(books[j], f"slice(c_v, {j * sub + 1}, {sub})")
-            ).alias(f"_code_{j}")
-            for j in range(m)
-        ],
-    )
-    q = _unit(_with_norm(queries, id_col, vec_col, "q"), "q")
-    # flat m·k_codes ADC table: entry j·k_codes + c = dot(q_sub_j, book_j_c)
-    qq = q.withColumn("_adc", _adc_table(books, "q_v"))
-
-    scored = (
-        cc.crossJoin(F.broadcast(qq))
-        .filter(F.col("q_id") != F.col("c_id"))
-        .withColumn("qscore", _adc_score(m, k_codes, lambda j: F.col(f"_code_{j}")))
-    )
-
-    return _screened_topk(scored, _dot(F.col("q_v"), F.col("c_v")), k, k * oversample)
-
-
-def ivf_pq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    n_list: int | None = None,
-    n_probe: int | None = None,
-    m: int = 16,
-    k_codes: int = 16,
-    oversample: int | None = None,
-    iters: int = 2,
-    books: list[list[list[float]]] | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_rows: int | None = None,
-    residual: bool | None = None,
-) -> DataFrame:
-    """IVF-PQ: the production composition (FAISS's IVFPQ shape) of the two
-    index tiers — an IVF coarse quantizer prunes WHICH vectors are
-    scanned (each query probes its ``n_probe`` nearest of ``n_list``
-    inverted lists: a bucketed equi-join, never a corpus-wide scan), and
-    PQ codes compress HOW MUCH each scanned vector costs (m bytes + m ADC
-    table lookups instead of a 4·dim-byte float read and dim multiplies).
-    The top k·oversample ADC candidates take the exact rerank, identical
-    scoring to `cosine_topk`.
-
-    ``residual=True`` switches the PQ stage to the IVFADC residual form
-    (Jégou et al. 2011 §IV): codes quantize u − cent[l(u)] and the ADC
-    score adds the exact q·cent[l] term per probed list (u = cent + r ⟹
-    q·u = q·cent + q·r, with q·cent computed exactly — one broadcast join
-    of the QUERY-probe frame against the n_list-row centroid table — and
-    q·r the usual ADC table sum). On clustered corpora the raw form's
-    codebooks saturate on between-cluster structure and within-list
-    ranking degrades with growth (measured n=2k → 20k at probe ratio
-    0.125: recall 0.9+ → 0.70); the residual form holds the floor at the
-    same cheap m/k_codes knobs (tests/test_clustered_recall.py pins both
-    sides at both sizes). Explicit ``residual=True`` ``books`` must be
-    residual-trained under the SAME ``cents`` (`train_pq_codebooks
-    (cents=...)`). At ``n_probe = n_list`` and exhaustive oversample the
-    output still provably equals brute force — the exact rerank is
-    encoding-agnostic (certified row ``similarity_ivfpq_residual``).
-
-    ``residual=None`` (the default) resolves to the IVFADC form whenever
-    the operator trains its OWN codebooks (``books is None``) — the
-    default-knob path ships the encoding the two-size ladder proved
-    scale-stable, not the raw form it measured decaying (round 10; the
-    raw default was VERDICT r9's #1 finding). With EXPLICIT ``books`` the
-    default resolves to raw, because books carry their training domain:
-    every pre-r10 caller trained raw books, and silently scoring raw
-    books as residuals would corrupt the ADC ranking. Pass
-    ``residual=True`` alongside residual-trained books to opt in.
-
-    Why the composition is what survives 100 TB: standalone PQ still scans
-    every vector per query (cheaply, but linearly) — its recall-vs-
-    oversample knob also degrades as the corpus grows past the candidate
-    pool. IVF-PQ's scanned pool is n·n_probe/n_list. At ``n_probe =
-    n_list`` AND an exhaustive oversample the output provably equals brute
-    force (the certified companion `similarity_ivfpq_exact`).
-
-    AUTO-SCALED DEFAULTS (corpus-size-aware; the fixed r6 defaults decayed
-    0.88 → 0.74 recall from sf0.01 → sf0.1 because the k·oversample rerank
-    pool stayed constant while the scanned pool grew 10×). When left None:
-
-    - ``n_list = max(8, ceil(sqrt(n)))`` — the FAISS-shape square-root
-      rule: list COUNT and list SIZE both grow ∝ √n, so neither the
-      centroid table (driver-held, must stay KB-MB) nor the per-list join
-      partition becomes the bottleneck at 100× or 100,000× (a linear
-      n/const rule keeps lists small but explodes the list count — 160M
-      lists at 10¹¹ vectors — while a fixed n_list explodes list sizes);
-    - ``n_probe = max(6, ceil(0.75 · n_list))`` — the probe RATIO, not the
-      probe count, is what recall tracks on weakly-clustered data (measured
-      at sf0.01: ratio 0.75 holds recall 0.88-0.92 across n_list 8/16/32
-      while a fixed n_probe=6 collapses 0.88 → 0.60 → 0.40; the composed
-      sqrt-rule defaults measure 0.92 at BOTH sf0.01 and sf0.1). 0.75 is
-      the honest calibration for THIS near-uniform synthetic corpus: real
-      embedding corpora cluster, concentrating true neighbors into few
-      lists, and support far smaller ratios at the same recall — pass an
-      explicit ``n_probe`` there;
-    - ``oversample = _auto_pool_oversample(scanned, k)`` with
-      ``scanned = n·n_probe/n_list`` — rerank pool a constant fraction of
-      what the probe actually scans.
-
-    ``n_rows`` is the same lazy-build hint as `pq_topk` /
-    `blocked_exact_pairs`; deriving defaults without it runs ONE bounded
-    count job, and passing every knob explicitly skips the count entirely.
-
-    Corpus vectors stay RAW for the rerank (norm-invariant list
-    assignment, exactly as `ivf_topk`); PQ encode and the query ADC tables
-    use the unit form, matching the codebooks' training domain.
-    """
-    import math
-
-    if residual is None:
-        # default: IVFADC residual when we train the books ourselves; raw
-        # when the caller's books carry their own (historically raw)
-        # training domain — see the docstring
-        residual = books is None
-    if n_list is None or n_probe is None or oversample is None:
-        n = n_rows if n_rows is not None else corpus.count()
-        if n_list is None:
-            n_list = max(8, math.ceil(math.sqrt(n)))
-        if n_probe is None:
-            n_probe = max(6, math.ceil(0.75 * n_list))
-        if oversample is None:
-            oversample = _auto_pool_oversample(
-                math.ceil(n * n_probe / n_list), k
-            )
-    cents = train_ivf_centroids(corpus, n_list, iters, id_col, vec_col)
-    if books is None:
-        books = train_pq_codebooks(
-            corpus,
-            m=m,
-            k_codes=k_codes,
-            iters=iters,
-            id_col=id_col,
-            vec_col=vec_col,
-            cents=cents if residual else None,
-        )
-    m = len(books)
-    k_codes = len(books[0])
-    sub = len(books[0][0])
-
-    c = _assign_lists(_with_norm(corpus, id_col, vec_col, "c"), cents, "c", 1)
-    cu_sql = "transform(c_v, x -> x / c_norm)"
-    if residual:
-        c = c.join(F.broadcast(_cents_df(corpus.sparkSession, cents)), "list_id")
-        enc_sql = f"zip_with({cu_sql}, _cent, (a, b) -> a - b)"
-    else:
-        enc_sql = cu_sql
-    cc = c.select(
-        "list_id",
-        "c_id",
-        "c_v",
-        "c_norm",
-        *[
-            F.expr(
-                _l2_argmin_sql(books[j], f"slice({enc_sql}, {j * sub + 1}, {sub})")
-            ).alias(f"_code_{j}")
-            for j in range(m)
-        ],
-    )
-    q = _assign_lists(_with_norm(queries, id_col, vec_col, "q"), cents, "q", n_probe)
-    qu = F.transform("q_v", lambda x: x / F.col("q_norm"))
-    qq = q.withColumn("_adc", _adc_table(books, "transform(q_v, x -> x / q_norm)"))
-    if residual:
-        # the exact q·cent[l] half of the IVFADC score — query-side only
-        # (|queries|·n_probe rows joined against n_list centroid rows)
-        qq = (
-            qq.join(F.broadcast(_cents_df(queries.sparkSession, cents)), "list_id")
-            .withColumn("_qdotc", _dot(qu, F.col("_cent")))
-            .drop("_cent")
-        )
-
-    # each corpus vector lives in exactly one list, so (query, neighbor)
-    # pairs are already unique across the probe join — no dedup shuffle
-    score = _adc_score(m, k_codes, lambda j: F.col(f"_code_{j}"))
-    if residual:
-        score = score + F.col("_qdotc")
-    scored = (
-        qq.join(cc, "list_id")
-        .filter(F.col("q_id") != F.col("c_id"))
-        .withColumn("qscore", score)
-    )
-
-    return _screened_topk(
-        scored,
-        _cosine(F.col("q_v"), F.col("c_v"), F.col("q_norm"), F.col("c_norm")),
-        k,
-        k * oversample,
-    )
-
-
-# ---------------------------------------------------------------------------
-# Persisted PQ index: build once / maintain incrementally via CDF / search
-# many. At 100 TB nothing retrains or re-encodes per query — the index is a
-# Delta TABLE of m-byte codes (the only corpus-sized thing a search scans),
-# self-describing (codebooks serialized into table configuration), kept
-# current by change-data-feed refreshes whose work is ∝ what changed.
-# ---------------------------------------------------------------------------
-
-_PQ_BOOKS_KEY = "deltars.pq.codebooks"
-_PQ_CENTS_KEY = "deltars.pq.centroids"
-_PQ_MSE_KEY = "deltars.pq.mse0"
-_PQ_RESIDUAL_KEY = "deltars.pq.residual"
-
-
-def _quantization_mse_col(books: list[list[list[float]]], unit_vec) -> "F.Column":
-    """Per-row PQ quantization error: Σ_j min_c ||u_j − book_j_c||² over the
-    UNIT vector's subspace slices — exactly the squared reconstruction error
-    of the code the encoder assigns (encode picks the argmin, so min
-    distance ≡ assigned-codeword distance; no join against stored codes
-    needed). Each subspace distance is rounded at 1e-9 (the same
-    engine-invariance quantization as the certified-codes path) and the
-    caller averages as DECIMAL, so the corpus mean is deterministic under
-    any partitioning and SQL-oracle-expressible."""
-    # SQL-text build (round 12): the Column form built m·k_codes
-    # aggregate(zip_with(...)) trees through py4j — the same construction
-    # cost class as _l2_argmin_sql (see its docstring); identical arithmetic
-    # in identical order, so the doubles are bit-equal. ``unit_vec`` is the
-    # SQL text of the unit-vector column (call sites pass plain names).
-    m = len(books)
-    sub = len(books[0][0])
-    mins = []
-    for j in range(m):
-        sl = f"slice({unit_vec}, {j * sub + 1}, {sub})"
-        dists = ", ".join(
-            f"round(aggregate(zip_with({sl},"
-            " array(" + ", ".join(_flit(x) for x in c) + "),"
-            " (a, b) -> (a - b) * (a - b)), 0.0D, (acc, x) -> acc + x), 9)"
-            for c in books[j]
-        )
-        mins.append(f"array_min(array({dists}))")
-    return F.expr("(" + " + ".join(mins) + ")")
-
-
-def quantization_mse_df(
-    df: DataFrame,
-    books: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cents: list[list[float]] | None = None,
-) -> DataFrame:
-    """One-row frame ``(mse double)``: mean PQ quantization error of
-    ``df``'s vectors under ``books``. The mean is an exact DECIMAL sum
-    divided by the count, rounded at 1e-9 — order-insensitive,
-    repartition-invariant, and recomputable bit-for-bit by a SQL engine
-    (`quantization_mse_oracle_sql`), the same certification shape as the
-    encode path. One distributed pass; nothing corpus-sized leaves the
-    executors. With ``cents`` the error is measured on the coarse-quantizer
-    residual — the domain residual-trained books actually reconstruct, so
-    a residual index's drift ratio compares like with like."""
-    u = _unit(_with_norm(df, id_col, vec_col, "c"), "c")
-    if cents is not None:
-        u = _attach_residual(_assign_lists(u, cents, "c", 1), cents, "c")
-    err = _quantization_mse_col(books, "c_v")
-    return u.agg(
-        F.round(
-            F.sum(err.cast("decimal(38,18)")).cast("double") / F.count(F.lit(1)),
-            9,
-        ).alias("mse")
-    )
-
-
-def _quantization_mse(
-    df: DataFrame, books, id_col: str, vec_col: str, cents=None
-) -> float:
-    row = quantization_mse_df(df, books, id_col, vec_col, cents).collect()[0]
-    return float(row["mse"]) if row["mse"] is not None else 0.0
-
-
-def quantization_mse_oracle_sql(
-    m: int = 16,
-    k_codes: int = 16,
-    seed: int = 7,
-    dim: int = 64,
-    table: str = "embeddings",
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_digits: int = 9,
-) -> str:
-    """DuckDB recompute of `quantization_mse_df` over the md5-derived
-    codebooks: identical centroid literals, identical left-to-right
-    addition order, per-subspace distances rounded at the same digit
-    BEFORE the min (so cross-engine double noise ~1e-15 can't leak into
-    the sum), exact DECIMAL summation, one final round — the drift
-    metric's independent certification, same shape as
-    `pq_codes_oracle_sql`."""
-    sub = dim // m
-    books = pq_random_codebooks(m, sub, k_codes, seed)
-    sumsq = " + ".join(
-        f"(CAST({vec_col}[{i + 1}] AS DOUBLE) * CAST({vec_col}[{i + 1}] AS DOUBLE))"
-        for i in range(dim)
-    )
-    dist_lists = []
-    for j in range(m):
-        dists = []
-        for c in range(k_codes):
-            terms = " + ".join(
-                f"((v[{j * sub + s + 1}] - ({books[j][c][s]!r})) * "
-                f"(v[{j * sub + s + 1}] - ({books[j][c][s]!r})))"
-                for s in range(sub)
-            )
-            dists.append(f"round({terms}, {round_digits})")
-        dist_lists.append(f"[{', '.join(dists)}] AS d{j}")
-    err = " + ".join(f"list_min(d{j})" for j in range(m))
-    return f"""
-    WITH n AS (
-      SELECT {id_col}, {vec_col}, sqrt({sumsq}) AS nrm FROM {table}
-    ),
-    u AS (
-      SELECT {id_col},
-             list_transform({vec_col}, x -> CAST(x AS DOUBLE) / nrm) AS v
-      FROM n WHERE nrm > 0
-    ),
-    d AS (
-      SELECT {', '.join(dist_lists)} FROM u
-    )
-    SELECT round(
-      CAST(SUM(CAST(({err}) AS DECIMAL(38,18))) AS DOUBLE) / COUNT(*),
-      {round_digits}
-    ) AS mse
-    FROM d
-    """
-
-
-def pq_index_drift(
-    spark,
-    index_uri: str,
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> dict:
-    """Measured codebook-drift metric for a persisted PQ index — the
-    REBUILD TRIGGER the codebook-invariance design needs.
-
-    Codebooks (and IVF centroids) are an index INVARIANT: refreshes
-    re-encode changed vectors through the books stored at creation, so the
-    index never splits across two encodings — but a corpus whose
-    distribution drifts away from the creation-time training data silently
-    degrades quantization (codes stay valid, they just reconstruct worse,
-    and ANN recall follows). This function makes that degradation a
-    NUMBER a caller can threshold:
-
-    - ``baseline_mse``: the mean quantization error measured over the
-      corpus at index CREATION, stored in the index configuration
-      (``deltars.pq.mse0``) — written once, in the same commit that
-      creates the index.
-    - ``current_mse``: the same metric measured now over ``corpus``
-      (one distributed pass; DECIMAL mean, so the value is deterministic
-      under any partitioning).
-    - ``ratio``: current / baseline.
-
-    POLICY (documented contract): the index never retrains itself — a
-    rebuild changes every code, so it must be an explicit, operator-scheduled
-    event, not a refresh side effect. Monitor ``ratio`` after refreshes;
-    when it exceeds your tolerance (1.5 is a reasonable default — PQ
-    recall degrades roughly with reconstruction error), retrain into a NEW
-    index uri with `update_pq_index` and swap readers, exactly like any
-    other derived-table rebuild. The metric costs one scan of the corpus,
-    so schedule it with refreshes, not with searches."""
-    import json
-
-    from ..table import DeltaTable
-
-    t = DeltaTable(index_uri)
-    stored = t.metadata().configuration.get(_PQ_BOOKS_KEY)
-    if not stored:
-        raise ValueError(f"{index_uri} carries no {_PQ_BOOKS_KEY} configuration")
-    books = json.loads(stored)
-    base = t.metadata().configuration.get(_PQ_MSE_KEY)
-    if base is None:
-        raise ValueError(
-            f"{index_uri} carries no {_PQ_MSE_KEY} configuration — index "
-            "created before drift tracking; rebuild to enable it"
-        )
-    baseline = float(base)
-    # residual indexes measure drift on the residual domain — the quantity
-    # mse0 was taken over at creation, so the ratio compares like with like
-    res_cents = None
-    if t.metadata().configuration.get(_PQ_RESIDUAL_KEY) == "true":
-        stored_cents = t.metadata().configuration.get(_PQ_CENTS_KEY)
-        if not stored_cents:
-            # same corruption, same contract as pq_index_search — not a
-            # bare KeyError from the configuration dict
-            raise ValueError(
-                f"{index_uri} is marked {_PQ_RESIDUAL_KEY} but carries no"
-                f" {_PQ_CENTS_KEY} — corrupt index configuration"
-            )
-        res_cents = json.loads(stored_cents)
-    current = _quantization_mse(corpus, books, id_col, vec_col, res_cents)
-    # a zero baseline (corpus perfectly quantizable at creation — degenerate
-    # but legal) must read 1.0 while current stays zero, not inf: inf-on-
-    # unchanged would trigger a rebuild loop the moment nothing drifted
-    if baseline > 0:
-        ratio = current / baseline
-    else:
-        ratio = 1.0 if current == 0.0 else float("inf")
-    return {
-        "baseline_mse": baseline,
-        "current_mse": current,
-        "ratio": ratio,
-    }
-
-
-def _adc_table(books: list[list[list[float]]], unit_vec) -> "F.Column":
-    """Flat m·k_codes query-side ADC table (entry j·k_codes + c =
-    dot(q_sub_j, book_j_c)) — literal-arithmetic codegen over the unit
-    query vector, shared by `pq_topk` / `ivf_pq_topk` / `pq_index_search`."""
-    # SQL-text build (round 12): m·k_codes literal dot products — the same
-    # py4j-construction fix as _l2_argmin_sql (bit-equal arithmetic);
-    # ``unit_vec`` is the SQL text of the unit query-vector expression.
-    m = len(books)
-    k_codes = len(books[0])
-    sub = len(books[0][0])
-    return F.expr(
-        "array("
-        + ", ".join(
-            f"aggregate(zip_with(slice({unit_vec}, {j * sub + 1}, {sub}),"
-            " array(" + ", ".join(_flit(x) for x in books[j][cd]) + "),"
-            " (x, y) -> x * y), 0.0D, (a, x) -> a + x)"
-            for j in range(m)
-            for cd in range(k_codes)
-        )
-        + ")"
-    )
-
-
-def _adc_score(m: int, k_codes: int, code_col):
-    """Σ_j adc[j·k_codes + code_j] — m table lookups per scanned code row.
-    ``code_col(j)`` names the j-th code column of the scanned side."""
-    score = None
-    for j in range(m):
-        term = F.element_at(
-            "_adc", code_col(j).cast("int") + F.lit(j * k_codes + 1)
-        )
-        score = term if score is None else score + term
-    return score
-
-
-def _net_corpus_changes(
-    spark, corpus_table, start: int, end: int, id_col: str, vec_col: str
-) -> DataFrame:
-    """Per-id NET effect of the corpus change feed over versions
-    [start, end] — the shared fold under every CDF-incremental vector
-    index (`update_pq_index`, `dedup.update_semantic_index`): the LATEST
-    commit wins, an upsert outranks a delete within the same commit (an
-    UPDATE's postimage and preimage share a version — the row still
-    exists), and a vector upserted to a DEGENERATE value — NULL, zero
-    norm, or a NaN/Inf/NULL element (non-finite norm) — is reclassified
-    as a delete: every encode/score path excludes such vectors
-    (`_with_norm`'s finite-positive-norm filter), so keeping the upsert
-    would strand STALE index rows a search could surface. Work ∝ changed
-    rows, never corpus size."""
-    from ..cdf import load_cdf
-
-    changes = load_cdf(
-        spark, corpus_table, starting_version=start, ending_version=end
-    )
-    relevant = changes.filter(
-        F.col("_change_type").isin("insert", "update_postimage", "delete")
-    ).withColumn(
-        "_w",
-        F.col("_commit_version") * 2
-        + F.when(F.col("_change_type") != "delete", F.lit(1)).otherwise(F.lit(0)),
-    )
-    norm_sq = F.aggregate(
-        F.coalesce(F.col(vec_col).cast("array<double>"), F.array()),
-        F.lit(0.0),
-        lambda acc, x: acc + x * x,
-    )
-    return (
-        relevant.groupBy(F.col(id_col))
-        .agg(
-            F.max_by(
-                F.struct("_change_type", F.col(vec_col).alias("_vec")), F.col("_w")
-            ).alias("_last")
-        )
-        .select(
-            id_col,
-            F.col("_last._change_type").alias("_change_type"),
-            F.col("_last._vec").alias(vec_col),
-        )
-        .withColumn(
-            "_change_type",
-            F.when(
-                (F.col("_change_type") != "delete")
-                # NOT (0 < norm² < inf): catches zero norm, NaN/Inf
-                # elements (NaN > 0 is TRUE under Spark's NaN ordering,
-                # so `<= 0` alone leaked them), and NULL elements (NULL
-                # norm² fails both comparisons; coalesce pins the NULL)
-                & ~F.coalesce(
-                    (norm_sq > F.lit(0.0))
-                    & (norm_sq < F.lit(float("inf"))),
-                    F.lit(False),
-                ),
-                F.lit("delete"),
-            ).otherwise(F.col("_change_type")),
-        )
-    )
-
-
-def update_pq_index(
-    spark,
-    corpus_table,
-    index_uri: str,
-    books: list[list[list[float]]] | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    app_id: str = "pq-index",
-    m: int = 16,
-    k_codes: int = 16,
-    iters: int = 2,
-    n_list: int | str | None = None,
-    cents: list[list[float]] | None = None,
-    compact_threshold_files: int | None = None,
-    residual: bool | None = None,
-) -> dict:
-    """Incrementally maintain a persisted PQ index over a Delta corpus.
-
-    ``residual=True`` (creation-time knob, requires the IVF tier) stores
-    IVFADC residual codes: codebooks train on — and codes quantize —
-    u − cent[l(u)] instead of the raw unit vector, and the marker is
-    serialized as ``deltars.pq.residual`` so search/drift/refresh always
-    agree on the encoding (an index invariant, exactly like the books).
-    See `ivf_pq_topk(residual=...)` for the measured growth motivation;
-    an index without the marker keeps raw scoring forever.
-
-    ``residual=None`` (the default) resolves at CREATION to the IVFADC
-    form whenever the operator both trains its own codebooks (``books is
-    None``) and has the IVF tier to take residuals against (``n_list`` or
-    ``cents``) — the same default rule, and the same rationale, as
-    `ivf_pq_topk`: the default-knob index gets the scale-stable encoding
-    (round 10), while explicit ``books`` keep the raw domain they were
-    trained in unless the caller passes ``residual=True`` with
-    residual-trained books. Flat indexes (no IVF tier) have no coarse
-    centroids to take residuals against and stay raw. On a refresh the
-    stored marker always wins.
-
-    The index is itself a Delta table of ``(id, code_0..code_{m-1})`` — one
-    m-byte row per corpus vector — with the codebooks serialized into the
-    table CONFIGURATION (``deltars.pq.codebooks``), so the index is
-    self-describing: `pq_index_search` needs only the index URI plus the
-    corpus for the final rerank fetch. Each call processes ONLY the corpus
-    rows changed since the last run:
-
-    1. The last-processed corpus version comes from the index's ``txn``
-       watermark (the same exactly-once mechanism as
-       `dedup.update_dedup_index`, reference ``rust/src/delta.rs:863-866``)
-       — crash-safe because the watermark commits atomically WITH the
-       index rows it covers.
-    2. Changes come from the corpus change feed for the unprocessed version
-       range; the per-id NET effect across the window is folded first
-       (latest commit wins; a postimage outranks the same version's
-       preimage), so work is ∝ distinct changed vectors, never corpus size.
-    3. Inserts / update-postimages re-encode through the codebooks (pure
-       codegen literals — `pq_codes`) and MERGE into the index (matched
-       update + not-matched insert); deletes MERGE with matched-delete, so
-       a vanished vector can never surface from a search. Refreshes are
-       idempotent: re-running a half-applied window converges to the same
-       index (matched-delete of absent rows is a no-op, upsert re-applies
-       the same codes).
-
-    Codebooks are an INDEX INVARIANT: ``books`` (or the trained default) is
-    used only when the index is created; refreshes always read the stored
-    books back from configuration, so a caller cannot silently split the
-    index across two encodings.
-
-    IVF TIER (optional, ``n_list``/``cents`` at creation): the index table
-    is PARTITIONED BY ``list_id`` — each vector's nearest-centroid
-    assignment — with the centroids serialized next to the codebooks.
-    ``n_list="auto"`` derives the list count from the corpus size with the
-    same square-root rule as `ivf_pq_topk` (``max(8, ceil(sqrt(n)))``, n
-    from the corpus's log-level row count — zero data I/O — falling back
-    to one bounded count job), so the long-lived artifact gets the same
-    FAISS-shape scaling as the ad-hoc path without hand-knobbing. A
-    probing search then prunes WHOLE PARTITIONS through the Delta log
-    (`pq_index_search` passes the probed lists as partition filters), so
-    at 100 TB an n_probe/n_list probe reads that fraction of the index's
-    FILES — the IVF list structure realized as Delta partition pruning
-    rather than an in-job filter. Like the books, centroids are an index
-    invariant; a re-encoded update moves its row to the new list's
-    partition through the same MERGE.
-
-    DRIFT TRACKING: creation also measures the corpus's mean quantization
-    error under the books (one DECIMAL-averaged pass) and stores it as
-    ``deltars.pq.mse0`` in the same commit. Because books/centroids are
-    invariants, corpus distribution drift degrades quantization silently;
-    `pq_index_drift` re-measures the metric against the live corpus and
-    returns current/baseline — the documented rebuild trigger (see its
-    docstring for the policy). Refreshes never retrain.
-
-    AUTO-COMPACTION (``compact_threshold_files``): incremental MERGE
-    refreshes are copy-on-write and accumulate small files; when set, a
-    refresh that leaves the index with more files than the threshold runs
-    OPTIMIZE in the same call (bin-packing within each list_id partition —
-    search results are invariant under compaction, pinned in
-    tests/test_pq_index.py). Size the threshold to a small multiple of the
-    partition count; None (default) leaves compaction to the operator's
-    own schedule.
-
-    Returns metrics: versions processed, upserts, deletes, corpus version,
-    and ``compacted`` (whether this call ran OPTIMIZE).
-
-    Creation over an EMPTY corpus is deferred: the call is a no-op (no
-    index table, watermark unset) and the first non-empty refresh
-    bootstraps over the whole log — so a streaming sink whose first
-    micro-batch is empty converges instead of crashing in k-means.
-    """
-    import json
-
-    from ..dml import merge
-    from ..protocol.actions import TxnAction
-    from ..protocol.snapshot import NotATableError
-    from ..table import DeltaTable
-    from ..writer import write_deltalake
-
-    corpus_version = corpus_table.version
-
-    index = None
-    last: int | None = None
-    try:
-        index = DeltaTable(index_uri)
-        last = index.get_app_transaction_version(app_id)
-    except NotATableError:
-        pass
-
-    start = 0 if last is None else last + 1
-    if start > corpus_version:
-        return {
-            "processed_versions": 0,
-            "upserts": 0,
-            "deletes": 0,
-            "corpus_version": corpus_version,
-            "compacted": False,
-        }
-
-    if index is not None:
-        stored = index.metadata().configuration.get(_PQ_BOOKS_KEY)
-        if not stored:
-            raise ValueError(
-                f"{index_uri} exists but carries no {_PQ_BOOKS_KEY} "
-                "configuration — not a PQ index table"
-            )
-        books = json.loads(stored)
-        stored_c = index.metadata().configuration.get(_PQ_CENTS_KEY)
-        cents = json.loads(stored_c) if stored_c else None
-        residual = (
-            index.metadata().configuration.get(_PQ_RESIDUAL_KEY) == "true"
-        )
-    else:
-        # CREATION over an empty corpus is DEFERRED, not an error: a
-        # streaming IndexMaintainingSink's first micro-batch can be empty
-        # (processing-time trigger with no data yet), and crashing the
-        # stream inside k-means would kill the query. No index table is
-        # written and the watermark stays unset, so the first non-empty
-        # refresh still covers the whole log — identical convergence to
-        # the semantic index's empty-window no-op.
-        n_live = corpus_table.count_rows()
-        if n_live is None:  # stats-free files: one bounded count job
-            n_live = corpus_table.to_df(spark).count()
-        if n_live == 0:
-            return {
-                "processed_versions": 0,
-                "upserts": 0,
-                "deletes": 0,
-                "corpus_version": corpus_version,
-                "compacted": False,
-            }
-        if cents is None and n_list is not None:
-            if n_list == "auto":
-                n_list = max(8, math.ceil(math.sqrt(n_live)))
-            cents = train_ivf_centroids(
-                corpus_table.to_df(spark), n_list, iters, id_col, vec_col
-            )
-        if residual is None:
-            residual = books is None and cents is not None
-        if residual and cents is None:
-            raise ValueError(
-                "residual=True requires the IVF tier (pass n_list or cents):"
-                " residual codes quantize u − cent[l(u)]"
-            )
-        if books is None:
-            books = train_pq_codebooks(
-                corpus_table.to_df(spark),
-                m=m,
-                k_codes=k_codes,
-                iters=iters,
-                id_col=id_col,
-                vec_col=vec_col,
-                cents=cents if residual else None,
-            )
-
-    net = _net_corpus_changes(
-        spark, corpus_table, start, corpus_version, id_col, vec_col
-    ).cache()
-    try:
-        counts = net.groupBy("_change_type").count().collect()
-        by_type = {r["_change_type"]: r["count"] for r in counts}
-        n_deletes = int(by_type.get("delete", 0))
-        n_upserts = sum(
-            v for t, v in by_type.items() if t in ("insert", "update_postimage")
-        )
-
-        import time as _time
-
-        txn = TxnAction(
-            app_id=app_id,
-            version=corpus_version,
-            last_updated=int(_time.time() * 1000),
-        )
-
-        if index is not None and n_deletes:
-            deletes = net.filter(F.col("_change_type") == "delete").select(id_col)
-            merge(
-                spark,
-                index,
-                deletes,
-                f"t.{id_col} = s.{id_col}",
-                when_matched_delete=True,
-                when_not_matched_insert=False,
-                # the watermark rides the LAST commit of the refresh; a
-                # deletes-only window carries it here
-                extra_actions=[txn] if not n_upserts else None,
-            )
-            index.update()
-
-        if n_upserts:
-            upserted = net.filter(F.col("_change_type") != "delete").select(
-                id_col, vec_col
-            )
-            fresh_codes = pq_codes(
-                upserted,
-                books,
-                id_col=id_col,
-                vec_col=vec_col,
-                cents=cents if residual else None,
-                # residual: the partition list_id comes from the SAME
-                # assignment the residual was encoded against (a second
-                # assignment over raw-norm vectors can flip a FP near-tie
-                # and persist a code under the wrong q·cent[l] partition)
-                emit_list_id=bool(residual and cents is not None),
-            )
-            if cents is not None and not residual:
-                # raw IVF tier: nearest-centroid partition key — change-
-                # sized join; a re-encoded vector moves partitions through
-                # the same MERGE (codes don't depend on the list here, so
-                # a separate assignment is safe)
-                assigned = _assign_lists(
-                    _with_norm(upserted, id_col, vec_col, "c"), cents, "c", 1
-                ).select(F.col("c_id").alias(id_col), "list_id")
-                fresh_codes = fresh_codes.join(assigned, id_col)
-            if index is None:
-                config = {
-                    _PQ_BOOKS_KEY: json.dumps(books),
-                    # creation-time quantization error — the drift baseline
-                    # pq_index_drift ratios against (one DECIMAL-mean pass
-                    # over the seed corpus, committed WITH the index)
-                    _PQ_MSE_KEY: repr(
-                        _quantization_mse(
-                            upserted,
-                            books,
-                            id_col,
-                            vec_col,
-                            cents if residual else None,
-                        )
-                    ),
-                }
-                if cents is not None:
-                    config[_PQ_CENTS_KEY] = json.dumps(cents)
-                if residual:
-                    config[_PQ_RESIDUAL_KEY] = "true"
-                write_deltalake(
-                    spark,
-                    fresh_codes,
-                    index_uri,
-                    partition_by=["list_id"] if cents is not None else None,
-                    configuration=config,
-                    extra_actions=[txn],
-                    operation="STREAMING UPDATE",
-                    operation_parameters_extra={
-                        "appId": app_id,
-                        "corpusVersion": corpus_version,
-                    },
-                )
-            else:
-                merge(
-                    spark,
-                    index,
-                    fresh_codes,
-                    f"t.{id_col} = s.{id_col}",
-                    extra_actions=[txn],
-                )
-    finally:
-        net.unpersist()
-    compacted = False
-    if compact_threshold_files is not None and (index is not None or n_upserts):
-        idx_t = DeltaTable(index_uri)
-        if len(idx_t.files()) > compact_threshold_files:
-            idx_t.optimize(spark)
-            compacted = True
-    return {
-        "processed_versions": corpus_version - start + 1,
-        "upserts": int(n_upserts),
-        "deletes": n_deletes,
-        "corpus_version": corpus_version,
-        "compacted": compacted,
-    }
-
-
-def pq_index_search(
-    spark,
-    index_uri: str,
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    oversample: int | None = None,
-    n_probe: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """ANN top-k over a PERSISTED PQ index — the search half of the
-    build-once / search-many split.
-
-    The only corpus-sized scan is the index's code columns (m bytes per
-    vector); codebooks come back out of the table configuration, the
-    query-side ADC tables fold into codegen as literals, and the float
-    vectors are fetched from ``corpus`` ONLY for the k·oversample rerank
-    survivors per query — an equi-join whose small side is the survivor
-    set, so at 100 TB the rerank reads a few thousand vectors, not the
-    corpus. Output schema and ordering contract match `cosine_topk`
-    (cosine rounded to 6, id tiebreak): at an exhaustive oversample the
-    result provably equals brute force.
-
-    ``oversample`` defaults to the pool-fraction rule over the index's
-    LOG-LEVEL row count (`DeltaTable.count_rows` — per-file numRecords
-    stats, zero data I/O), the production form of the ``n_rows`` hint.
-
-    On an IVF-PARTITIONED index (built with ``n_list``) the probe becomes
-    Delta PARTITION PRUNING: each query's ``n_probe`` nearest lists are
-    assigned from the stored centroids, and the UNION of probed lists goes
-    into the snapshot's partition filters — files of unprobed lists are
-    never read (pruned in the log, before any plan exists). The in-plan
-    list_id equi-join then restricts each query to ITS lists within the
-    pruned scan. ``n_probe`` defaults to the held-ratio rule
-    (max(6, ceil(0.75·n_list)), same calibration as `ivf_pq_topk`); the
-    pool-fraction oversample is taken over the probed fraction. At
-    ``n_probe = n_list`` the filter passes every partition and the result
-    provably equals the flat scan (and, at exhaustive oversample, brute
-    force — the certified ``similarity_ivfpq_index_search`` row)."""
-    import json
-
-    from ..table import DeltaTable
-
-    t = DeltaTable(index_uri)
-    stored = t.metadata().configuration.get(_PQ_BOOKS_KEY)
-    if not stored:
-        raise ValueError(f"{index_uri} carries no {_PQ_BOOKS_KEY} configuration")
-    books = json.loads(stored)
-    m, k_codes = len(books), len(books[0])
-    stored_c = t.metadata().configuration.get(_PQ_CENTS_KEY)
-    cents = json.loads(stored_c) if stored_c else None
-    residual = t.metadata().configuration.get(_PQ_RESIDUAL_KEY) == "true"
-    if residual and cents is None:
-        raise ValueError(
-            f"{index_uri} is marked {_PQ_RESIDUAL_KEY} but carries no"
-            f" {_PQ_CENTS_KEY} — corrupt index configuration"
-        )
-
-    n = t.count_rows()
-    if n is None:  # stats-free files: one bounded count job
-        n = t.to_df(spark).count()
-
-    # query stays RAW for the exact rerank (same shape as ivf_pq_topk); only
-    # the ADC table sees the unit form, matching the codebooks' domain
-    if cents is not None:
-        n_list = len(cents)
-        if n_probe is None:
-            n_probe = max(6, math.ceil(0.75 * n_list))
-        n_probe = min(n_probe, n_list)
-        if oversample is None:
-            oversample = _auto_pool_oversample(math.ceil(n * n_probe / n_list), k)
-        q = _assign_lists(_with_norm(queries, id_col, vec_col, "q"), cents, "q", n_probe)
-        qu = F.transform("q_v", lambda x: x / F.col("q_norm"))
-        qq = q.withColumn(
-            "_adc", _adc_table(books, "transform(q_v, x -> x / q_norm)")
-        )
-        if residual:
-            # exact q·cent[l] half of the IVFADC score, folded into the
-            # query-probe frame BEFORE it broadcasts (the centroid frame is
-            # n_list rows — driver-bounded by the sqrt rule, same size
-            # class as the assignment literals)
-            qq = (
-                qq.join(
-                    F.broadcast(_cents_df(queries.sparkSession, cents)),
-                    "list_id",
-                )
-                .withColumn("_qdotc", _dot(qu, F.col("_cent")))
-                .drop("_cent")
-            )
-        # bounded driver artifact (≤ |queries|·n_probe ints — the probe set
-        # is small by contract): the union of probed lists becomes a Delta
-        # PARTITION FILTER, so unprobed lists' files are pruned in the log
-        probed = sorted(
-            r.list_id for r in qq.select("list_id").distinct().collect()
-        )
-        idx = t.to_df(
-            spark,
-            partition_filters=[("list_id", "in", [str(p) for p in probed])],
-        ).select(
-            "list_id", F.col(id_col).alias("c_id"), *[f"code_{j}" for j in range(m)]
-        )
-        score = _adc_score(m, k_codes, lambda j: F.col(f"code_{j}"))
-        if residual:
-            score = score + F.col("_qdotc")
-        scored = (
-            idx.join(F.broadcast(qq), "list_id")
-            .filter(F.col("q_id") != F.col("c_id"))
-            .withColumn("qscore", score)
-        )
-    else:
-        if oversample is None:
-            oversample = _auto_pool_oversample(n, k)
-        idx = t.to_df(spark).select(
-            F.col(id_col).alias("c_id"), *[f"code_{j}" for j in range(m)]
-        )
-        q = _with_norm(queries, id_col, vec_col, "q")
-        qq = q.withColumn(
-            "_adc", _adc_table(books, "transform(q_v, x -> x / q_norm)")
-        )
-        scored = (
-            idx.crossJoin(F.broadcast(qq))
-            .filter(F.col("q_id") != F.col("c_id"))
-            .withColumn(
-                "qscore", _adc_score(m, k_codes, lambda j: F.col(f"code_{j}"))
-            )
-        )
-    keep = k * oversample
-    # two-phase screen on the ADC score (no reducer sees O(corpus) rows for
-    # one query), THEN fetch floats for the survivors only
-    w1 = W.partitionBy("q_id", "_pid").orderBy(F.col("qscore").desc(), F.col("c_id"))
-    w2 = W.partitionBy("q_id").orderBy(F.col("qscore").desc(), F.col("c_id"))
-    cand = (
-        scored.withColumn("_pid", F.spark_partition_id())
-        .withColumn("_pr", F.row_number().over(w1))
-        .filter(F.col("_pr") <= keep)
-        .drop("_pid", "_pr")
-        .withColumn("_qr", F.row_number().over(w2))
-        .filter(F.col("_qr") <= keep)
-        .select("q_id", "q_v", "q_norm", "c_id")
-    )
-    c = _with_norm(corpus, id_col, vec_col, "c")
-    w3 = W.partitionBy("q_id").orderBy(F.col("cosine").desc(), F.col("c_id"))
-    # the rerank fetch is deliberately UNHINTED: the survivor pool is
-    # |queries| · k·oversample rows, and the pool-fraction oversample rule
-    # makes that a constant FRACTION of the scanned candidates — i.e. it
-    # grows with the corpus. Forcing F.broadcast here would funnel a
-    # corpus-fraction-sized frame through the driver at exactly the scale
-    # the index targets; left to AQE, runtime sizes pick broadcast while
-    # the pool is small and a shuffled equi-join on c_id once it isn't
-    # (the same delegate-to-the-engine stance as the reference's
-    # DataFusion integration, rust/src/delta_datafusion.rs:48-111).
-    return (
-        c.join(cand, "c_id")
-        .withColumn(
-            "cosine",
-            F.round(
-                _cosine(F.col("q_v"), F.col("c_v"), F.col("q_norm"), F.col("c_norm")),
-                6,
-            ),
-        )
-        .withColumn("rank", F.row_number().over(w3))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("q_id").alias("query_id"),
-            F.col("c_id").alias("neighbor_id"),
-            "cosine",
-            "rank",
-        )
-        .orderBy("query_id", "rank")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Clustered-corpus fixture: the regime the IVF tier exists for
-# ---------------------------------------------------------------------------
-
-
-def clustered_corpus(
-    spark,
-    n: int = 2000,
-    dim: int = 16,
-    n_clusters: int = 25,
-    sep: float = 4.0,
-    seed: int = 7,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Deterministic mixture-of-Gaussians embedding corpus — the CLUSTERED
-    regime real embedding models produce and the IVF tier is designed for.
-
-    The synthetic `/root/testdata` embeddings are near-uniform on the
-    sphere: true neighbors spread across many IVF lists, so holding recall
-    there needs probe ratio ~0.75 — the index prunes only 25% of lists on
-    the data it was first certified on. Real corpora cluster; neighbors
-    concentrate into FEW lists and small ratios (0.1–0.25) hold recall.
-    This fixture makes that claim measurable (and its floors pinnable,
-    tests/test_clustered_recall.py) instead of prose: row i belongs to
-    cluster i mod ``n_clusters``; its vector is ``center[cluster]·sep +
-    unit-variance noise``.
-
-    Everything is md5-KEYED, never RNG-stateful, so the frame is
-    bit-identical under any partitioning and any executor count:
-
-    - cluster centers: driver-side standard normals via Box–Muller over two
-      md5 uniforms keyed (seed, cluster, dim), scaled by ``sep`` —
-      n_clusters·dim doubles of plan literals, KB-scale like codebooks;
-    - per-row noise: the same Box–Muller computed JVM-SIDE from
-      md5(seed, id, dim) — conv/log/cos whole-stage codegen, no Python, no
-      shuffle; `spark.range(n)` partitions the generation across the
-      cluster, so a 10⁹-row fixture generates exactly like 2000 rows.
-
-    ``sep=4`` with unit noise gives well-separated but overlapping-tail
-    clusters (inter-center distance ≈ 4·√(2·dim)·σ_noise pre-normalization);
-    ``sep=0`` degenerates to the near-uniform regime for A/B contrast.
-    """
-    import math as _math
-
-    def _driver_gauss(tag: str) -> float:
-        u1 = (
-            int(hashlib.md5(tag.encode()).hexdigest()[:8], 16) + 0.5
-        ) / float(1 << 32)
-        u2 = (
-            int(hashlib.md5((tag + "/b").encode()).hexdigest()[:8], 16) + 0.5
-        ) / float(1 << 32)
-        return _math.sqrt(-2.0 * _math.log(u1)) * _math.cos(2.0 * _math.pi * u2)
-
-    centers = [
-        [_driver_gauss(f"cc:{seed}:{c}:{d}") * sep for d in range(dim)]
-        for c in range(n_clusters)
-    ]
-    center_arr = F.element_at(
-        F.array(*[F.array(*[F.lit(float(x)) for x in cen]) for cen in centers]),
-        (F.col(id_col) % n_clusters).cast("int") + 1,
-    )
-
-    def _u(d: int, suffix: str):
-        h = F.md5(
-            F.concat_ws(
-                ":",
-                F.lit(f"cn:{seed}"),
-                F.col(id_col).cast("string"),
-                F.lit(str(d)),
-                F.lit(suffix),
-            )
-        )
-        return (
-            F.conv(F.substring(h, 1, 8), 16, 10).cast("double") + F.lit(0.5)
-        ) / F.lit(float(1 << 32))
-
-    vec = F.array(
-        *[
-            (
-                F.element_at(center_arr, d + 1)
-                + F.sqrt(F.lit(-2.0) * F.log(_u(d, "a")))
-                * F.cos(F.lit(2.0 * _math.pi) * _u(d, "b"))
-            ).cast("float")
-            for d in range(dim)
-        ]
-    )
-    return spark.range(n).select(
-        F.col("id").cast("long").alias(id_col), vec.alias(vec_col)
-    )
-
-
-def rebuild_pq_index(
-    spark,
-    corpus_table,
-    index_uri: str,
-    new_index_uri: str,
-    max_ratio: float | None = None,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    app_id: str = "pq-index",
-    residual: bool | None = None,
-) -> dict:
-    """The ACTION the drift policy triggers: retrain-into-a-NEW-uri rebuild
-    of a persisted PQ index — the other half of `pq_index_drift`'s
-    documented contract (refreshes never retrain; a rebuild changes every
-    code, so it is an explicit maintenance event producing a fresh
-    artifact readers swap to).
-
-    With ``max_ratio`` set, this IS the scheduled maintenance entry point:
-    it measures drift first (one corpus pass) and no-ops while
-    ``current/baseline ≤ max_ratio`` — so callers can run it after every
-    refresh and pay for retraining only when quantization has actually
-    degraded. Without it, the rebuild is unconditional.
-
-    The rebuild trains fresh codebooks (and IVF centroids, when the old
-    index has the tier — list count re-derived by the sqrt rule at the
-    CURRENT corpus size, so a corpus that grew 100× since creation gets a
-    100×-appropriate geometry, not the stale one) on the live corpus,
-    preserving the old index's (m, k_codes) shape, then bootstraps
-    ``new_index_uri`` through the ordinary `update_pq_index` path — same
-    watermark, same mse0 baseline, same self-describing configuration.
-    The OLD index stays untouched and serveable until the caller swaps
-    readers (a catalog/pointer update — two self-describing tables can
-    serve concurrently during the cutover) and then drops it.
-
-    ``residual=None`` (default) PRESERVES the old index's encoding —
-    refresh-compatible semantics, nothing changes for existing callers.
-    Since a rebuild retrains everything anyway, it is also the natural
-    MIGRATION point for a pre-round-10 raw index: pass ``residual=True``
-    to re-encode the new artifact in the IVFADC residual form (requires
-    the old index to have the IVF tier — a flat index has no coarse
-    centroids to take residuals against and the upgrade raises), or
-    ``residual=False`` to force a raw rebuild of a residual index. The
-    encoding remains an invariant of each INDEX; the knob only picks the
-    new artifact's.
-
-    Returns ``{"rebuilt": bool, "ratio": float | None,
-    "index_uri": <the uri readers should use now>}`` plus the bootstrap
-    metrics when a rebuild ran."""
-    import json
-    import math
-
-    from ..table import DeltaTable
-
-    ratio = None
-    if max_ratio is not None:
-        drift = pq_index_drift(
-            spark, index_uri, corpus_table.to_df(spark), id_col, vec_col
-        )
-        ratio = drift["ratio"]
-        if ratio <= max_ratio:
-            return {"rebuilt": False, "ratio": ratio, "index_uri": index_uri}
-
-    old = DeltaTable(index_uri)
-    stored = old.metadata().configuration.get(_PQ_BOOKS_KEY)
-    if not stored:
-        raise ValueError(f"{index_uri} carries no {_PQ_BOOKS_KEY} configuration")
-    old_books = json.loads(stored)
-    m, k_codes = len(old_books), len(old_books[0])
-    had_tier = old.metadata().configuration.get(_PQ_CENTS_KEY) is not None
-    had_residual = (
-        old.metadata().configuration.get(_PQ_RESIDUAL_KEY) == "true"
-    )
-    # None preserves the old encoding (the refresh-compatible default);
-    # an explicit flag migrates — the rebuild retrains everything anyway,
-    # so it is the one maintenance event where switching encodings is free
-    new_residual = had_residual if residual is None else bool(residual)
-    if new_residual and not had_tier:
-        raise ValueError(
-            "residual=True rebuild requires the IVF tier: the old index is "
-            "flat, so there are no coarse centroids to take residuals "
-            "against — rebuild into an IVF index first (update_pq_index "
-            "with n_list) or keep residual=False"
-        )
-
-    res = update_pq_index(
-        spark,
-        corpus_table,
-        new_index_uri,
-        id_col=id_col,
-        vec_col=vec_col,
-        app_id=app_id,
-        m=m,
-        k_codes=k_codes,
-        iters=iters,
-        n_list="auto" if had_tier else None,
-        residual=new_residual,
-    )
-    return {"rebuilt": True, "ratio": ratio, "index_uri": new_index_uri, **res}

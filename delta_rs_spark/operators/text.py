@@ -44,19 +44,6 @@ def lang_id(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> Da
     return d.select(id_col, guess.alias("lang_guess"))
 
 
-def lang_id_oracle_sql(table: str = "documents") -> str:
-    score = {
-        lang: f"len(list_intersect(list_distinct(string_split_regex(lower(text), '\\s+')), {words!r}))"
-        for lang, words in LANG_PROFILES.items()
-    }
-    best = "greatest({})".format(", ".join(score.values()))
-    case = f"CASE WHEN {best} = 0 THEN 'und' "
-    for lang in LANG_PROFILES:
-        case += f"WHEN {score[lang]} = {best} THEN '{lang}' "
-    case += "END"
-    return f"SELECT doc_id, {case} AS lang_guess FROM {table} ORDER BY doc_id"
-
-
 def quality_score(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Heuristic document-quality features + composite score.
 
@@ -89,31 +76,6 @@ def quality_score(df: DataFrame, id_col: str = "doc_id", text_col: str = "text")
         F.round(punct_ratio, 6).alias("punct_ratio"),
         score.cast("int").alias("quality_score"),
     )
-
-
-QUALITY_ORACLE_SQL_TEMPLATE = """
-WITH feats AS (
-  SELECT doc_id,
-         length(text) AS n_chars_computed,
-         len(string_split_regex(text, '\\s+')) AS n_words,
-         length(text) - length(regexp_replace(text, '\\s', '', 'g')) AS n_spaces,
-         length(text) - length(regexp_replace(text, '[.,;:!?]', '', 'g')) AS n_punct,
-         len(list_distinct(string_split_regex(lower(text), '\\s+'))) AS n_distinct
-  FROM {table}
-)
-SELECT doc_id, n_chars_computed, n_words,
-       round(CAST(CAST(n_chars_computed - n_spaces AS DECIMAL(18,6)) / n_words AS DOUBLE), 6) AS avg_word_len,
-       round(CAST(CAST(n_distinct AS DECIMAL(18,6)) / n_words AS DOUBLE), 6) AS type_token_ratio,
-       round(CAST(CAST(n_punct AS DECIMAL(18,6)) / n_chars_computed AS DOUBLE), 6) AS punct_ratio,
-       CAST(
-         (CASE WHEN n_words >= 20 THEN 1 ELSE 0 END)
-       + (CASE WHEN CAST(CAST(n_chars_computed - n_spaces AS DECIMAL(18,6)) / n_words AS DOUBLE)
-               BETWEEN 3 AND 12 THEN 1 ELSE 0 END)
-       + (CASE WHEN CAST(CAST(n_distinct AS DECIMAL(18,6)) / n_words AS DOUBLE) >= 0.3 THEN 1 ELSE 0 END)
-       + (CASE WHEN CAST(CAST(n_punct AS DECIMAL(18,6)) / n_chars_computed AS DOUBLE) <= 0.1 THEN 1 ELSE 0 END)
-       AS INT) AS quality_score
-FROM feats ORDER BY doc_id
-"""
 
 
 def token_count(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -270,23 +232,6 @@ def repetition_score(df: DataFrame, id_col: str = "doc_id", text_col: str = "tex
     )
 
 
-REPETITION_ORACLE_SQL_TEMPLATE = """
-WITH words AS (
-  SELECT doc_id, unnest(string_split_regex(lower(text), '\\s+')) AS w FROM {table}
-),
-per_word AS (
-  SELECT doc_id, w, count(*) AS cnt FROM words GROUP BY doc_id, w
-)
-SELECT doc_id,
-       CAST(SUM(cnt) AS BIGINT) AS n_words,
-       COUNT(*) AS n_distinct_words,
-       MAX(cnt) AS top_word_count,
-       round(CAST(CAST(MAX(cnt) AS DECIMAL(18,6)) / SUM(cnt) AS DOUBLE), 6) AS repetition_ratio,
-       round(CAST(CAST(COUNT(*) AS DECIMAL(18,6)) / SUM(cnt) AS DOUBLE), 6) AS distinct_ratio
-FROM per_word GROUP BY doc_id ORDER BY doc_id
-"""
-
-
 def fingerprint(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """Deterministic document fingerprint: md5 of whitespace-normalized text,
     plus a 64-bit rolling-style prefix (hex→bigint) usable as a shard key."""
@@ -297,45 +242,6 @@ def fingerprint(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
         fp.alias("fingerprint"),
         F.conv(F.substring(fp, 1, 15), 16, 10).cast("long").alias("fingerprint64"),
     )
-
-
-def normalize_text(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Canonical text normalization for dedup/fingerprint pipelines:
-    lowercase → strip everything but [a-z0-9 ] → collapse runs of whitespace
-    → trim. Pure codegen (three regexp passes fused in one projection — a
-    narrow map, no shuffle); the regex classes are engine-portable, so the
-    DuckDB oracle reproduces the bytes exactly. Returns id, the normalized
-    text's md5 (stable fingerprint), and the post-normalization token count.
-    """
-    norm = F.trim(
-        F.regexp_replace(
-            F.regexp_replace(F.lower(F.col(text_col)), "[^a-z0-9 ]", ""),
-            " +",
-            " ",
-        )
-    )
-    return df.select(
-        F.col(id_col),
-        F.md5(norm).alias("norm_md5"),
-        F.when(norm == "", 0)
-        .otherwise(F.size(F.split(norm, " ")))
-        .cast("long")
-        .alias("norm_tokens"),
-    )
-
-
-NORMALIZE_ORACLE_SQL_TEMPLATE = """
-WITH n AS (
-  SELECT {id_col} AS doc_id,
-         trim(regexp_replace(regexp_replace(lower({text_col}), '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g')) AS norm
-  FROM {table}
-)
-SELECT doc_id, md5(norm) AS norm_md5,
-       CAST(CASE WHEN norm = '' THEN 0 ELSE len(string_split(norm, ' ')) END AS BIGINT) AS norm_tokens
-FROM n ORDER BY doc_id
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -368,18 +274,6 @@ def pii_redact(
     for pat, repl in PII_PATTERNS:
         col = F.regexp_replace(col, pat, repl)
     return df.withColumn(out_col, col)
-
-
-PII_ORACLE_SQL_TEMPLATE = """
-SELECT {id_col} AS doc_id,
-       regexp_replace(
-         regexp_replace(
-           regexp_replace({text_col},
-             '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\\.[A-Za-z]{{2,}}', '<EMAIL>', 'g'),
-           '\\b\\d{{1,3}}\\.\\d{{1,3}}\\.\\d{{1,3}}\\.\\d{{1,3}}\\b', '<IP>', 'g'),
-         '\\+?\\d[\\d() -]{{7,}}\\d', '<PHONE>', 'g') AS text_redacted
-FROM {table} ORDER BY doc_id
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -424,78 +318,6 @@ def char_entropy(
             ).alias("char_entropy"),
         )
     )
-
-
-CHAR_ENTROPY_ORACLE_SQL_TEMPLATE = """
-WITH chars AS (
-  SELECT {id_col} AS doc_id, unnest(string_split({text_col}, '')) AS ch
-  FROM {table} WHERE length({text_col}) > 0
-),
-counts AS (
-  SELECT doc_id, ch, count(*) AS n_c FROM chars GROUP BY doc_id, ch
-),
-agg AS (
-  SELECT doc_id,
-         CAST(SUM(n_c) AS BIGINT) AS n_chars,
-         SUM(CAST(n_c * log2(n_c) AS DECIMAL(28,12))) AS s
-  FROM counts GROUP BY doc_id
-)
-SELECT doc_id, n_chars,
-       round(CAST(CAST(log2(n_chars) AS DECIMAL(28,12)) - s / n_chars AS DOUBLE), 6)
-         AS char_entropy
-FROM agg ORDER BY doc_id
-"""
-
-
-def lang_mismatch(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Per-source rate of documents whose DECLARED ``lang`` disagrees with
-    the n-gram detector (``lang_id``) — the standard crawl-metadata health
-    check: a source with a high mismatch rate has wrong language tags or
-    mixed-language pages and needs routing before per-language filtering.
-    One broadcast-friendly join of the per-doc guess back onto (source,
-    lang), then a map-side-combinable aggregate."""
-    guesses = lang_id(df, id_col=id_col, text_col=text_col)
-    joined = df.select(id_col, "source", "lang").join(guesses, id_col)
-    return (
-        joined.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.when(F.col("lang_guess") != F.col("lang"), 1).otherwise(0))
-            .cast("long")
-            .alias("n_mismatch"),
-        )
-        .withColumn(
-            "mismatch_rate",
-            F.round(
-                F.col("n_mismatch").cast("double") / F.col("n_docs").cast("double"), 6
-            ),
-        )
-        .orderBy("source")
-    )
-
-
-def lang_mismatch_oracle_sql(table: str = "documents") -> str:
-    score = {
-        lang: f"len(list_intersect(list_distinct(string_split_regex(lower(text), '\\s+')), {words!r}))"
-        for lang, words in LANG_PROFILES.items()
-    }
-    best = "greatest({})".format(", ".join(score.values()))
-    case = f"CASE WHEN {best} = 0 THEN 'und' "
-    for lang in LANG_PROFILES:
-        case += f"WHEN {score[lang]} = {best} THEN '{lang}' "
-    case += "END"
-    return f"""
-    WITH guesses AS (
-      SELECT doc_id, source, lang, {case} AS lang_guess FROM {table}
-    )
-    SELECT source,
-           count(*) AS n_docs,
-           CAST(SUM(CASE WHEN lang_guess <> lang THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_mismatch,
-           round(CAST(SUM(CASE WHEN lang_guess <> lang THEN 1 ELSE 0 END) AS DOUBLE)
-                 / count(*), 6) AS mismatch_rate
-    FROM guesses GROUP BY source ORDER BY source
-    """
 
 
 # ---------------------------------------------------------------------------
@@ -562,40 +384,6 @@ def gopher_rules(
     )
 
 
-def gopher_rules_oracle_sql(
-    table: str = "documents",
-    min_words: int = 40,
-    max_words: int = 100_000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 10.0,
-    min_alpha_frac: float = 0.80,
-    min_stop_hits: int = 2,
-) -> str:
-    stops = "[" + ", ".join(f"'{s}'" for s in GOPHER_STOPWORDS) + "]"
-    return f"""
-    WITH w AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '') AS ws
-      FROM {table}
-    ), m AS (
-      SELECT doc_id,
-             len(ws) AS n_words,
-             round(CAST(list_sum(list_transform(ws, x -> len(x))) AS DOUBLE)
-                   / len(ws), 4) AS mean_word_len,
-             round(CAST(len(list_filter(ws, x -> regexp_matches(x, '[a-z]'))) AS DOUBLE)
-                   / len(ws), 4) AS alpha_frac,
-             CAST(len(list_intersect(list_distinct(ws), {stops})) AS BIGINT) AS stop_hits
-      FROM w
-    )
-    SELECT doc_id, n_words, mean_word_len, alpha_frac, stop_hits,
-           (n_words BETWEEN {min_words} AND {max_words})
-           AND (mean_word_len BETWEEN {min_mean_word_len} AND {max_mean_word_len})
-           AND (alpha_frac >= {min_alpha_frac})
-           AND (stop_hits >= {min_stop_hits}) AS passes
-    FROM m ORDER BY doc_id
-    """
-
-
 # ---------------------------------------------------------------------------
 # Boilerplate / hot-shingle ratio (CCNet-style line-frequency filtering,
 # lifted to n-gram shingles because the corpus has no line structure)
@@ -652,40 +440,6 @@ def boilerplate_ratio(
             ).alias("boilerplate_ratio"),
         )
     )
-
-
-def boilerplate_ratio_oracle_sql(
-    table: str = "documents", n: int = 3, max_doc_freq: int = 50
-) -> str:
-    """Same ratios via shingle STRINGS (the metric is hash-agnostic)."""
-    return f"""
-    WITH w AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '') AS ws
-      FROM {table}
-    ), sh AS (
-      SELECT doc_id, unnest(
-               list_distinct(list_transform(
-                 range(len(ws) - {n} + 1),
-                 i -> array_to_string(ws[i + 1 : i + {n}], ' ')
-               ))
-             ) AS s
-      FROM w WHERE len(ws) >= {n}
-    ), counts AS (
-      SELECT doc_id, count(*) AS n_shingles FROM sh GROUP BY doc_id
-    ), hot AS (
-      SELECT s FROM sh GROUP BY s HAVING count(*) > {max_doc_freq}
-    ), nh AS (
-      SELECT sh.doc_id, count(*) AS n_hot FROM sh JOIN hot USING (s) GROUP BY sh.doc_id
-    )
-    SELECT c.doc_id,
-           CAST(c.n_shingles AS BIGINT) AS n_shingles,
-           CAST(COALESCE(nh.n_hot, 0) AS BIGINT) AS n_hot,
-           round(CAST(COALESCE(nh.n_hot, 0) AS DOUBLE) / c.n_shingles, 4)
-             AS boilerplate_ratio
-    FROM counts c LEFT JOIN nh ON c.doc_id = nh.doc_id
-    ORDER BY c.doc_id
-    """
 
 
 def hashed_classifier(

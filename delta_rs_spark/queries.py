@@ -37,7 +37,7 @@ SparkQuery = Callable[[SparkSession, str], DataFrame]
 class QueryDef:
     spark: SparkQuery
     oracle: Optional[str]  # DuckDB SQL; None → rows-only check
-    headline: bool = False  # include in bench.py
+    headline: bool = False  # executed-plan check in tests/test_plan_quality.py
 
 
 QUERIES: dict[str, QueryDef] = {}
@@ -117,11 +117,9 @@ def SUM_DEC(expr: str, alias: str, scale: int = 6) -> str:
 )
 def q1(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single spark.sql call: ONE parse+analysis instead of one Catalyst
-    # analysis per chained DataFrame op (measured ~10x cheaper construction,
-    # re-paid by the bench's timed region on every run). Plan shape pinned
-    # by tests/test_plan_quality.py; byte-level parity with the former chain
-    # was verified via the BENCH_PLANS.json capture (not a regression gate);
-    # the sum_dec/sum_dec_sql lockstep pin is in test_functions.
+    # analysis per chained DataFrame op (measured ~10x cheaper construction).
+    # Plan shape pinned by tests/test_plan_quality.py; the
+    # sum_dec/sum_dec_sql lockstep pin is in test_functions.
     l = load_table(spark, sf_dir, "lineitem")
     return spark.sql(
         f"""
@@ -1533,10 +1531,6 @@ def queries() -> dict[str, SparkQuery]:
 
 def oracle_sql() -> dict[str, str]:
     return {name: qd.oracle for name, qd in QUERIES.items() if qd.oracle is not None}
-
-
-def headline_queries() -> dict[str, SparkQuery]:
-    return {name: qd.spark for name, qd in QUERIES.items() if qd.headline}
 
 
 @query(

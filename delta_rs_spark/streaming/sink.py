@@ -38,25 +38,20 @@ class ExactlyOnceDeltaSink:
         app_id: str,
         partition_by: Optional[list[str]] = None,
         output_mode: str = "Append",
-        configuration: Optional[dict] = None,
     ):
         self.table_uri = table_uri
         self.app_id = app_id
         self.partition_by = partition_by
         self.output_mode = output_mode
-        # applied when the FIRST batch creates the table (e.g. CDF on, so
-        # downstream incremental consumers can fold the stream's commits)
-        self.configuration = configuration
         # observability for tests/metrics — bounded to the newest entries
         # (a long-running replay-heavy stream must not grow driver memory)
         self.skipped_epochs: list[int] = []
         self.skipped_epoch_count: int = 0
-        # cached table handle (round 12, guide §6): the watermark check and
-        # the index-refresh half each re-replayed the log from scratch every
-        # micro-batch; the handle is now loaded once and incrementally
-        # advanced (`update()` applies only the commits newer than the
-        # loaded snapshot), so per-batch log I/O is ∝ new commits, not
-        # checkpoint + tail. A restart builds a fresh sink → fresh replay.
+        # cached table handle: loaded once and incrementally advanced
+        # (`update()` applies only the commits newer than the loaded
+        # snapshot), so the per-batch watermark check costs log I/O ∝ new
+        # commits, not checkpoint + tail. A restart builds a fresh sink →
+        # fresh replay.
         self._table = None
         self._table_head = None  # _commit_identity of the cached handle
 
@@ -109,7 +104,6 @@ class ExactlyOnceDeltaSink:
             self.table_uri,
             mode=mode,
             partition_by=self.partition_by,
-            configuration=self.configuration,
             extra_actions=[TxnAction(app_id=self.app_id, version=epoch_id)],
             operation="STREAMING UPDATE",
             operation_parameters_extra={
@@ -233,237 +227,3 @@ class UpsertDeltaSink:
             when_matched_update=self.when_matched_update,
             extra_actions=[txn],
         )
-
-
-class IndexMaintainingSink(ExactlyOnceDeltaSink):
-    """Streaming ANN ingestion: exactly-once append of embedding batches
-    to the corpus table, then an incremental PQ-index refresh in the SAME
-    foreachBatch call — the thin wrapper that keeps a persisted
-    `operators.similarity` index current as its corpus streams in.
-
-    Composition of two independently-idempotent halves, so every
-    restart/replay interleaving converges:
-
-    - the corpus append carries the epoch ``txn`` watermark (inherited) —
-      a replayed micro-batch is skipped;
-    - `update_pq_index` carries its OWN watermark on the INDEX table,
-      keyed by corpus version, and its refresh window is a per-id net
-      fold — re-running a half-applied window is a no-op or an idempotent
-      re-apply. A crash between append and refresh just widens the next
-      call's CDF window (work stays ∝ what changed).
-
-    The corpus table is created with CDF enabled (the refresh reads the
-    change feed); pass ``n_list="auto"`` to give the index the sqrt-rule
-    IVF tier at creation, and ``compact_threshold_files`` to bound the
-    small-file count MERGE refreshes accumulate. ``last_refresh`` exposes
-    the latest refresh metrics for monitoring (pair with
-    `pq_index_drift` on the rebuild schedule).
-
-    ``refresh_every_n`` decouples index freshness from batch latency: at
-    high-rate streams a synchronous MERGE refresh per micro-batch would
-    dominate the batch time, so with cadence N only epochs where
-    ``epoch_id % N == 0`` pay the refresh — the decision is keyed on the
-    deterministic epoch id, so replays agree with the original run. The
-    skipped epochs are SAFE, not lost: the index watermark rides corpus
-    versions, so the next refreshing epoch folds the whole accumulated
-    CDF window (work stays ∝ what changed, it just arrives in fewer,
-    larger MERGEs). Skipped epoch ids are recorded in
-    ``skipped_refreshes`` for monitoring index lag — BOUNDED to the most
-    recent ``_SKIP_LOG_CAP`` ids (a long-running stream with a large
-    cadence would otherwise grow driver memory without limit);
-    ``skipped_refresh_count`` keeps the lifetime total. After the final
-    batch of a finite stream the index can lag behind the corpus until
-    another on-cadence epoch arrives — call ``flush(spark)`` at stream
-    shutdown to run the deferred refresh immediately (idempotent: the
-    refresh window is watermark-driven, so flushing an already-current
-    index is a no-op).
-
-    Usage::
-
-        sink = IndexMaintainingSink(corpus_uri, index_uri, app_id="ann")
-        df.writeStream.foreachBatch(sink).option("checkpointLocation", ...).start()
-    """
-
-    def __init__(
-        self,
-        table_uri: str,
-        index_uri: str,
-        app_id: str,
-        books: Optional[list] = None,
-        n_list=None,
-        id_col: str = "vec_id",
-        vec_col: str = "embedding",
-        compact_threshold_files: Optional[int] = None,
-        m: int = 16,
-        k_codes: int = 16,
-        refresh_every_n: int = 1,
-        # None = update_pq_index's default rule: residual IVFADC when the
-        # index trains its own books under an IVF tier, raw with explicit
-        # (raw-domain) books or no tier
-        residual: Optional[bool] = None,
-    ):
-        if refresh_every_n < 1:
-            raise ValueError("refresh_every_n must be >= 1")
-        super().__init__(
-            table_uri,
-            app_id,
-            configuration={"delta.enableChangeDataFeed": "true"},
-        )
-        self.index_uri = index_uri
-        self.books = books
-        self.n_list = n_list
-        self.id_col = id_col
-        self.vec_col = vec_col
-        self.compact_threshold_files = compact_threshold_files
-        self.m = m
-        self.k_codes = k_codes
-        self.refresh_every_n = refresh_every_n
-        self.residual = residual
-        self.last_refresh: Optional[dict] = None
-        self.skipped_refreshes: list[int] = []
-        self.skipped_refresh_count: int = 0
-
-    # skipped_refreshes keeps only the newest this many epoch ids — lag
-    # telemetry, not an audit log (the lifetime total is the counter)
-    _SKIP_LOG_CAP = 64
-
-    def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
-        super().__call__(batch_df, epoch_id)
-        if self.refresh_every_n > 1 and epoch_id % self.refresh_every_n:
-            # off-cadence epoch: append landed, refresh deferred — the next
-            # on-cadence epoch's CDF window folds this one (watermark-safe)
-            self.skipped_refresh_count += 1
-            self.skipped_refreshes.append(epoch_id)
-            del self.skipped_refreshes[: -self._SKIP_LOG_CAP]
-            return
-        spark = (
-            batch_df.sparkSession
-            if hasattr(batch_df, "sparkSession")
-            else batch_df.sql_ctx.sparkSession
-        )
-        self.flush(spark)
-
-    def flush(self, spark) -> dict:
-        """Run the incremental index refresh NOW over whatever CDF window
-        the corpus-version watermark leaves open. Called by every
-        on-cadence epoch; call it yourself at stream shutdown so a finite
-        stream ending on an off-cadence epoch doesn't leave the index
-        lagging. Idempotent — a current index refreshes an empty window."""
-        from ..operators.similarity import update_pq_index
-
-        self.last_refresh = update_pq_index(
-            spark,
-            self._refresh_table(),
-            self.index_uri,
-            books=self.books,
-            id_col=self.id_col,
-            vec_col=self.vec_col,
-            app_id=f"{self.app_id}-index",
-            m=self.m,
-            k_codes=self.k_codes,
-            n_list=self.n_list,
-            compact_threshold_files=self.compact_threshold_files,
-            residual=self.residual,
-        )
-        return self.last_refresh
-
-
-class SemanticIndexMaintainingSink(ExactlyOnceDeltaSink):
-    """Streaming SEMANTIC-DEDUP ingestion: exactly-once append of embedding
-    batches to the corpus table, then an incremental semantic-index
-    refresh (`operators.dedup.update_semantic_index`) in the same
-    foreachBatch call — the dedup twin of `IndexMaintainingSink`, with the
-    identical idempotency composition:
-
-    - the corpus append carries the epoch ``txn`` watermark (inherited) —
-      a replayed micro-batch is skipped;
-    - the refresh carries its OWN watermark on the index's pairs table,
-      keyed by corpus version, and folds the CDF window per id — replays
-      converge, crashes between append and refresh just widen the next
-      window.
-
-    Creation-time index knobs (``threshold`` / ``n_list`` / ``n_probe`` /
-    ``collapse_exact`` / ``collapse_buckets`` / ``max_list_candidates``)
-    apply when the FIRST refresh bootstraps the index; after that the
-    stored invariants win, exactly as in the batch API. ``collapse_exact``
-    matters doubly here: an ingestion stream is where boilerplate
-    duplicate clusters actually arrive, and the collapsed index pays one
-    keeper per distinct vector instead of a growing Θ(c²) pair set.
-    ``refresh_every_n`` and ``flush()`` behave as in
-    `IndexMaintainingSink` (cadence keyed on the deterministic epoch id;
-    call flush at stream end so the index doesn't lag an off-cadence
-    final batch)."""
-
-    def __init__(
-        self,
-        table_uri: str,
-        index_uri: str,
-        app_id: str,
-        threshold: float = 0.4,
-        n_list=None,
-        n_probe: Optional[int] = None,
-        id_col: str = "vec_id",
-        vec_col: str = "embedding",
-        max_list_candidates: Optional[int] = None,
-        collapse_exact: bool = False,
-        collapse_buckets=16,
-        refresh_every_n: int = 1,
-        compact_threshold_files: Optional[int] = None,
-    ):
-        if refresh_every_n < 1:
-            raise ValueError("refresh_every_n must be >= 1")
-        super().__init__(
-            table_uri,
-            app_id,
-            configuration={"delta.enableChangeDataFeed": "true"},
-        )
-        self.index_uri = index_uri
-        self.threshold = threshold
-        self.n_list = n_list
-        self.n_probe = n_probe
-        self.id_col = id_col
-        self.vec_col = vec_col
-        self.max_list_candidates = max_list_candidates
-        self.collapse_exact = collapse_exact
-        self.collapse_buckets = collapse_buckets
-        self.refresh_every_n = refresh_every_n
-        self.compact_threshold_files = compact_threshold_files
-        self.last_refresh: Optional[dict] = None
-        self.skipped_refreshes: list[int] = []
-        self.skipped_refresh_count: int = 0
-
-    def __call__(self, batch_df: DataFrame, epoch_id: int) -> None:
-        super().__call__(batch_df, epoch_id)
-        if self.refresh_every_n > 1 and epoch_id % self.refresh_every_n:
-            self.skipped_refresh_count += 1
-            self.skipped_refreshes.append(epoch_id)
-            del self.skipped_refreshes[: -self._SKIP_LOG_CAP]
-            return
-        spark = (
-            batch_df.sparkSession
-            if hasattr(batch_df, "sparkSession")
-            else batch_df.sql_ctx.sparkSession
-        )
-        self.flush(spark)
-
-    def flush(self, spark) -> dict:
-        """Run the incremental semantic-index refresh NOW over the open
-        CDF window (idempotent; see IndexMaintainingSink.flush)."""
-        from ..operators.dedup import update_semantic_index
-
-        self.last_refresh = update_semantic_index(
-            spark,
-            self._refresh_table(),
-            self.index_uri,
-            threshold=self.threshold,
-            n_list=self.n_list,
-            n_probe=self.n_probe,
-            id_col=self.id_col,
-            vec_col=self.vec_col,
-            app_id=f"{self.app_id}-semindex",
-            max_list_candidates=self.max_list_candidates,
-            collapse_exact=self.collapse_exact,
-            collapse_buckets=self.collapse_buckets,
-            compact_threshold_files=self.compact_threshold_files,
-        )
-        return self.last_refresh

@@ -262,11 +262,10 @@ def write_deltalake(
     if exists and configuration:
         # table configuration is a CREATE-time declaration; a write to an
         # existing table keeps the stored config. Silently ignoring a
-        # CONFLICTING request hid that contract from callers (VERDICT r9
-        # missing #4) — warn with the exact divergent keys. Re-passing the
-        # stored values (streaming sinks re-send their creation config on
-        # every micro-batch append) stays silent: both sides are str→str
-        # by now, so a passed True matches a stored "true".
+        # CONFLICTING request hid that contract from callers — warn with
+        # the exact divergent keys. Re-passing the stored values stays
+        # silent: both sides are str→str by now, so a passed True matches
+        # a stored "true".
         stored_cfg = table.metadata().configuration or {}
         divergent = {
             k: (stored_cfg.get(k), v)

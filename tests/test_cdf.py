@@ -428,3 +428,105 @@ def test_dedup_index_auto_compaction(spark, docs, tmp_path):
     assert len(DeltaTable(index_uri).files()) <= 4
     n_distinct = corpus.to_df(spark).select("text").distinct().count()
     assert DeltaTable(index_uri).to_df(spark).count() == n_distinct
+
+
+@pytest.mark.parametrize("seed", [13, 31])
+def test_cdf_windows_fold_to_live_table_under_fuzz(spark, tmp_path, seed):
+    """Random appends, deletion-vector deletes and updates on a CDF table;
+    at random points a window of one or several versions closes. Folding
+    each window's ``load_cdf`` rows into a per-id model (inserts and
+    postimages add a row, deletes and preimages take one away) must give
+    the live table after every window. Within a window, each deleted row
+    appears exactly once and each updated row has exactly one preimage and
+    one postimage, in the version that changed it."""
+    import random
+    from collections import Counter
+
+    rng = random.Random(seed)
+    uri = str(tmp_path / f"fold{seed}")
+
+    def rows(ids):
+        return spark.createDataFrame(
+            [(i, str(i % 3), i * 10) for i in ids], "id long, g string, m long"
+        )
+
+    model = {i: (str(i % 3), i * 10) for i in range(60)}
+    write_deltalake(
+        spark,
+        rows(range(60)),
+        uri,
+        configuration={CDF_PROPERTY: "true", "delta.enableDeletionVectors": "true"},
+    )
+    # version -> (change kind, ids the commit changed)
+    expected = {0: ("insert", set(model))}
+    folded: Counter = Counter()
+    next_id, folded_to, history = 60, -1, ["seed(60)"]
+
+    def close_window():
+        nonlocal folded_to
+        t = DeltaTable(uri)
+        window = t.load_cdf(
+            spark, starting_version=folded_to + 1, ending_version=t.version
+        ).collect()
+        assert {r._commit_version for r in window} == set(
+            range(folded_to + 1, t.version + 1)
+        ), history
+        by_version: dict = {}
+        for r in window:
+            by_version.setdefault(r._commit_version, []).append(r)
+            sign = 1 if r._change_type in ("insert", "update_postimage") else -1
+            folded[(r.id, r.g, r.m)] += sign
+        for v, changes in by_version.items():
+            kind, ids = expected[v]
+            types = Counter(r._change_type for r in changes)
+            if kind == "update":
+                assert types == {
+                    "update_preimage": len(ids),
+                    "update_postimage": len(ids),
+                }, history
+                pre = {r.id: r.m for r in changes if r._change_type == "update_preimage"}
+                post = {r.id: r.m for r in changes if r._change_type == "update_postimage"}
+                assert set(pre) == set(post) == ids, history
+                assert all(post[i] == pre[i] + 1000 for i in ids), history
+            else:
+                assert types == {kind: len(ids)}, history
+                assert {r.id for r in changes} == ids, history
+        assert all(n in (0, 1) for n in folded.values()), history
+        live = sorted(k for k, n in folded.items() if n == 1)
+        table_rows = sorted((r.id, r.g, r.m) for r in t.to_df(spark).collect())
+        assert live == table_rows, history
+        assert live == sorted((i, g, m) for i, (g, m) in model.items()), history
+        folded_to = t.version
+        history.append(f"window->v{folded_to}")
+
+    for _ in range(10):
+        op = rng.choice(["append", "delete", "update"])
+        if op == "append":
+            ids = set(range(next_id, next_id + rng.randrange(5, 20)))
+            write_deltalake(spark, rows(sorted(ids)), uri, mode="append")
+            model.update({i: (str(i % 3), i * 10) for i in ids})
+            next_id += len(ids)
+            kind = "insert"
+        else:
+            k, r = rng.choice([(7, 3), (5, 1), (4, 0), (6, 5)])
+            ids = {i for i in model if i % k == r}
+            if not ids:
+                continue
+            t = DeltaTable(uri)
+            if op == "delete":
+                t.delete(spark, f"id % {k} = {r}")
+                for i in ids:
+                    del model[i]
+                kind = "delete"
+            else:
+                t.update_where(spark, f"id % {k} = {r}", {"m": "m + 1000"})
+                for i in ids:
+                    model[i] = (model[i][0], model[i][1] + 1000)
+                kind = "update"
+        version = DeltaTable(uri).version
+        expected[version] = (kind, ids)
+        history.append(f"{op}({len(ids)})@v{version}")
+        if rng.random() < 0.4:
+            close_window()
+    if folded_to < DeltaTable(uri).version:
+        close_window()

@@ -1,39 +1,9 @@
 """Tests for the public expression helpers (delta_rs_spark.functions)."""
 
-import math
-
 import pytest
 from pyspark.sql import functions as F
 
 from delta_rs_spark import functions as dfn
-
-
-def test_dot_norm_cosine(spark):
-    df = spark.createDataFrame([([1.0, 2.0, 3.0], [4.0, 5.0, 6.0])], "a ARRAY<DOUBLE>, b ARRAY<DOUBLE>")
-    r = df.select(
-        dfn.dot("a", "b").alias("d"),
-        dfn.l2_norm("a").alias("na"),
-        dfn.cosine_similarity("a", "b").alias("c"),
-    ).collect()[0]
-    assert r.d == pytest.approx(32.0)
-    assert r.na == pytest.approx(math.sqrt(14.0))
-    assert r.c == pytest.approx(32.0 / (math.sqrt(14) * math.sqrt(77)))
-
-
-def test_unit_vector(spark):
-    df = spark.createDataFrame([([3.0, 4.0],)], "v ARRAY<DOUBLE>")
-    r = df.select(dfn.unit_vector("v").alias("u")).collect()[0]
-    assert r.u == pytest.approx([0.6, 0.8])
-
-
-def test_shingles_including_short_text(spark):
-    df = spark.createDataFrame(
-        [(1, "a b c d"), (2, "a b"), (3, "a b c a b c")], "id LONG, t STRING"
-    )
-    out = {r.id: sorted(r.s) for r in df.select("id", dfn.shingles("t", 3).alias("s")).collect()}
-    assert out[1] == ["a b c", "b c d"]
-    assert out[2] == []  # shorter than n: empty, not an error
-    assert out[3] == ["a b c", "b c a", "c a b"]  # distinct
 
 
 def test_sum_dec_matches_exact(spark):
@@ -98,20 +68,6 @@ def test_sum_dec_sql_lockstep_with_column_form(spark):
             a = df.agg(dfn.sum_dec(col, "v", scale))
             b = df.agg(F.expr(dfn.sum_dec_sql(expr_sql, "v", scale)))
             assert norm(optimized(a)) == norm(optimized(b)), (expr_sql, scale)
-
-
-def test_shingles_ignore_surrounding_whitespace(spark):
-    from pyspark.sql import functions as F
-
-    from delta_rs_spark.functions import shingles
-
-    df = spark.createDataFrame(
-        [(" a b c",), ("a b c ",), ("a  b c",), ("a b c",), ("a b ",)],
-        "t string",
-    )
-    rows = df.select(shingles(F.col("t"), 3).alias("s")).collect()
-    assert rows[0].s == rows[1].s == rows[2].s == rows[3].s == ["a b c"]
-    assert rows[4].s == []  # two real words < n: empty, no bogus shingle
 
 
 def test_avro_truncated_container_raises():

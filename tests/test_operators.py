@@ -1854,38 +1854,3 @@ def test_non_finite_vectors_never_rank_or_pair(spark):
     gem = dedup.embedding_cosine_pairs(df, threshold=0.1).collect()
     gids = {r.id_a for r in gem} | {r.id_b for r in gem}
     assert gids <= {1, 2, 3}
-
-
-def test_net_corpus_changes_reclassifies_non_finite_upserts(spark, tmp_path):
-    """A vector UPDATEd to a NaN/Inf/NULL-element value must net to a
-    DELETE (like zero-norm): every encode path excludes it, so keeping
-    the upsert would strand stale index rows a search could surface."""
-    from delta_rs_spark import DeltaTable, write_deltalake
-    from delta_rs_spark.operators import similarity
-
-    df = spark.createDataFrame(
-        [(i, [1.0 + i, 1.0]) for i in range(6)],
-        "vec_id long, embedding array<float>",
-    )
-    src = str(tmp_path / "src")
-    write_deltalake(
-        spark, df, src, configuration={"delta.enableChangeDataFeed": "true"}
-    )
-    t = DeltaTable(src)
-    t.update_where(
-        spark, "vec_id = 0", {"embedding": "array(float('NaN'), float(1.0))"}
-    )
-    t.update()
-    t.update_where(
-        spark, "vec_id = 1", {"embedding": "array(float('Infinity'), float(1.0))"}
-    )
-    t.update()
-    t.update_where(
-        spark, "vec_id = 2", {"embedding": "array(float(1.0), CAST(NULL AS FLOAT))"}
-    )
-    t.update()
-    net = similarity._net_corpus_changes(
-        spark, DeltaTable(src), 1, DeltaTable(src).version, "vec_id", "embedding"
-    )
-    got = {r.vec_id: r._change_type for r in net.collect()}
-    assert got == {0: "delete", 1: "delete", 2: "delete"}

@@ -56,70 +56,13 @@ def test_q5_q7_no_cartesian(q):
         assert summarize(df).broadcast_hash_joins >= 2
 
 
-def test_range_join_is_equi_not_nested_loop(q):
-    """The whole point of the bucketed range join: no BroadcastNestedLoopJoin
-    for the interval predicate."""
-    df = q("range_join_error_windows")
-    s = summarize(df)
-    assert s.broadcast_hash_joins + s.sort_merge_joins + s.shuffled_hash_joins >= 1
-    # the left-restore join may broadcast but must not be nested-loop
-    assert s.nested_loop_joins == 0
-
-
-def test_asof_join_single_shuffle_per_side(q):
-    df = q("asof_join_events")
-    s = summarize(df)
-    assert s.nested_loop_joins == 0
-    # union + one window: no join explosion — at most the window shuffle and
-    # the final sort
-    assert s.broadcast_hash_joins + s.sort_merge_joins + s.shuffled_hash_joins == 0
-
-
-# queries that INTENTIONALLY cross join (brute-force exact baselines, or a
-# broadcast of a 1-row aggregate)
+# queries that INTENTIONALLY cross join (a broadcast of a 1-row aggregate)
 CARTESIAN_OK = {
-    "similarity_topk",        # exact brute-force baseline by design
-    "similarity_quantized_topk",  # int8 brute scoring (broadcast probe side)
-    "similarity_quantized_rerank",  # same int8 brute scoring, exact-oracle companion
-    "similarity_pq_topk",     # ADC brute scoring (broadcast probe side)
-    "similarity_pq_exact",    # same, at exhaustive oversample
     "q11_important_parts",    # 1-row sum-threshold broadcast
-    "text_tfidf_topk",        # 1-row document-count broadcast
     "q15_top_supplier",       # 1-row max broadcast
     "q22_idle_customers",     # 1-row avg broadcast
     "q_events_funnel",        # crossJoin of three 1-row stage counts
-    "corpus_unigram_lm",      # 1-row total-token-count broadcast
-    "corpus_dsir_importance",  # 1-row (N_t, N_r, |V|) scalar broadcast
-    "corpus_pmi_bigrams",     # 1-row (N, M) corpus-totals broadcast
-    "recall_contracts",       # 1-row hit/total count crosses + the exact
-                              # brute-force baseline it measures against
-    "recall_clustered_contracts",  # same shape: 1-row ratio crosses + the
-                                   # exact baselines on both synthetic corpora
-    "similarity_index_drift",  # crossJoin of three 1-row mse scalars
-    "similarity_pq_index_search",  # ADC code-column brute scan (broadcast
-                                   # probe side) — the flat-PQ screen shape;
-                                   # floats fetched only for rerank survivors
 }
-
-
-def test_embedding_cosine_dedup_is_bucketed_not_cartesian(q):
-    """The certified near-dup query (threshold 0.4 → blocked-GEMM path):
-    block routing is two broadcast equi-joins + a cogroup — no cross join
-    anywhere in the executed plan (the O(n²) brute force remains only as
-    the test oracle)."""
-    df = q("dedup_embedding_cosine")
-    assert_no_nested_loop_join(df)
-    s = summarize(df)
-    assert s.broadcast_hash_joins + s.sort_merge_joins + s.shuffled_hash_joins >= 2
-
-
-def test_topk_is_two_phase(q):
-    """Per-query top-k must reduce per (query, input partition) BEFORE the
-    per-query window, so no reducer ever sees O(corpus) rows for one query
-    key: two Window nodes in the plan, the first keyed on the partition id."""
-    for name in ("similarity_topk", "similarity_lsh_topk", "similarity_ivf_topk"):
-        s = summarize(q(name))
-        assert s.windows >= 2, f"{name}: expected partial+final windows, got {s.windows}"
 
 
 @pytest.mark.slow  # builder tier: see pyproject [tool.pytest.ini_options]
@@ -133,30 +76,6 @@ def test_every_certified_query_builds_and_avoids_cartesian(spark, sf_dir):
         if name not in CARTESIAN_OK and s.nested_loop_joins:
             offenders[name] = s.nested_loop_joins
     assert not offenders, f"unexpected nested-loop joins: {offenders}"
-
-
-def test_histogram_single_scan_pruned(q):
-    """Profiling must stay one pass: a single pruned scan and at most the
-    partial/final agg exchange pair (+ the tiny final sort)."""
-    df = q("profile_price_histogram")
-    s = summarize(df)
-    assert s.scans == 1
-    assert any(set(cols) == {"l_extendedprice"} for cols in s.read_schemas)
-
-
-def test_column_profile_single_scan(q):
-    s = summarize(q("profile_lineitem_columns"))
-    assert s.scans == 1
-    assert any(
-        set(cols) == {"l_quantity", "l_discount", "l_tax"} for cols in s.read_schemas
-    )
-
-
-def test_tfidf_no_extra_scans(q):
-    """tf, df and N all derive from ONE documents scan (reused exchange /
-    cached branch), and the N-broadcast is the only nested-loop join."""
-    s = summarize(q("text_tfidf_topk"))
-    assert s.nested_loop_joins <= 1
 
 
 def test_events_funnel_no_cartesian_and_pruned(q):
@@ -188,24 +107,6 @@ def test_events_pivot_one_shuffle(q):
     # single groupBy pivot: one scan; shuffles limited to agg + final sort
     assert s.scans == 1
     assert s.exchanges <= 3
-
-
-def test_stratified_sample_window_group_limit(q, spark, sf_dir):
-    """The per-stratum rank must be limit-pushed (WindowGroupLimit), so no
-    stratum ever fully materializes in the window sort."""
-    from delta_rs_spark.plans import _plan_text
-
-    df = q("sample_stratified_exact")
-    assert "WindowGroupLimit" in _plan_text(df)
-
-
-def test_centroid_norms_partial_agg(q):
-    """posexplode -> (label,pos) agg must partial-aggregate before the
-    shuffle; no nested-loop; embeddings scan reads only 2 columns."""
-    df = q("embedding_centroid_norms")
-    s = summarize(df)
-    assert_no_nested_loop_join(df)
-    assert all(len(cols) <= 2 for cols in s.read_schemas)
 
 
 def test_referential_integrity_key_only_anti_joins(q):
@@ -267,125 +168,6 @@ def test_identity_and_default_assignment_is_codegen_no_shuffle(spark, tmp_path, 
     assert "BatchEvalPython" not in text and "ArrowEvalPython" not in text
 
 
-def test_rolling_zscore_single_scan_pruned_window(q):
-    """The anomaly gate is one pruned scan + one keyed window pass — no
-    self-joins, no second scan of events, props column never read."""
-    s = summarize(q("events_rolling_zscore"))
-    assert s.scans == 1
-    assert s.windows >= 1
-    assert not s.nested_loop_joins
-    assert all("props" not in cols for cols in s.read_schemas)
-
-
-def test_substring_dedup_pruned_and_bucketed(q):
-    """Exact-substring dedup must stay linear: pruned scans (only doc_id +
-    text ever read), the census/anti-join on gram hashes as hash joins —
-    never a nested loop — and no sort-merge demotion of the per-doc
-    reassembly joins."""
-    df = q("text_substring_dedup")
-    s = summarize(df)
-    assert not s.nested_loop_joins
-    assert s.sort_merge_joins == 0
-    assert all(set(cols) <= {"doc_id", "text"} for cols in s.read_schemas), (
-        s.read_schemas
-    )
-
-
-@pytest.mark.slow  # builder tier: see pyproject [tool.pytest.ini_options]
-def test_ivfpq_is_bucketed_not_brute(q):
-    """The IVF-PQ candidate join must be the bucketed list equi-join —
-    a nested-loop here would mean the probe degenerated to the corpus-wide
-    brute scan the composition exists to avoid. Scans stay pruned to
-    (vec_id, embedding).
-
-    Since the residual default (round 10) the query-probe frame carries
-    the broadcast centroid join for the q·cent[l] term, which pushes its
-    STATIC size estimate past the broadcast threshold — the static plan
-    then shows a sort-merge join on list_id. That is the correct
-    100 TB fallback shape (the kNN-graph case has a corpus-sized query
-    side that MUST be able to shuffle, the reason this join is unhinted),
-    so the gate asserts the EXECUTED plan: AQE reads the actual
-    |queries|·n_probe size at runtime and picks broadcast here; a
-    nested loop or a residual-regression that defeats the equi-join would
-    still fail."""
-    df = q("similarity_ivfpq_topk")
-    from delta_rs_spark.plans import summarize_executed
-
-    df.collect()
-    s = summarize_executed(df)
-    assert not s.nested_loop_joins
-    assert s.sort_merge_joins == 0
-    assert s.broadcast_hash_joins >= 1
-    assert all(set(cols) <= {"vec_id", "embedding"} for cols in s.read_schemas)
-
-
-@pytest.mark.slow  # builder tier: see pyproject [tool.pytest.ini_options]
-def test_ivfpq_index_search_is_pruned_equi_join(q):
-    """Probing search over the PARTITIONED persisted index: candidate
-    generation must be the list_id equi-join (never a nested loop — the
-    probe exists to avoid the corpus-wide scan) and the survivor float
-    fetch must stay a broadcast equi-join; no sort-merge join anywhere.
-    The file-level pruning itself is pinned in tests/test_pq_index.py."""
-    df = q("similarity_ivfpq_index_search")
-    s = summarize(df)
-    assert not s.nested_loop_joins
-    assert s.sort_merge_joins == 0
-
-
-def test_clustered_semantic_dedup_no_corpus_nlj(q):
-    """Cluster-first semantic dedup must never plan a corpus-wide
-    nested-loop: pairs come from the within-cluster cogrouped GEMM, the
-    keeplist from a size-adaptive anti join."""
-    s = summarize(q("dedup_semantic_clustered"))
-    assert not s.nested_loop_joins
-    assert s.sort_merge_joins == 0
-
-
-# every catalog row whose final step subtracts a duplicates-scaled loser set
-# (the last one's read half expands through the corpus-scaled groups table —
-# same rule: strategy choice belongs to AQE)
-KEEPLIST_ROWS = [
-    "dedup_keeplist",
-    "dedup_keeplist_longest",
-    "dedup_semantic_keeplist",
-    "dedup_semantic_clustered",
-    "dedup_semantic_collapsed",
-    "dedup_semantic_index_collapsed",
-    "stream_semantic_index_pipeline",
-]
-
-
-@pytest.mark.slow  # builder tier: see pyproject [tool.pytest.ini_options]
-@pytest.mark.parametrize("name", KEEPLIST_ROWS)
-def test_keeplist_anti_joins_are_unhinted(q, name):
-    """VERDICT r8 #1: the keeplist anti joins (and keeplist_by_score's
-    winners join) must carry NO forced broadcast hint. The losers/winners
-    frames are every duplicate id / cluster — at a fixed dup rate a constant
-    FRACTION of the corpus, 10⁸-10⁹ ids at the 100 TB the docstrings
-    advertise — so a forced F.broadcast there is a driver-OOM plan, the
-    same defect class round 8 fixed (and gated) in pq_index_search's rerank
-    join. Strategy choice belongs to AQE's runtime sizes. Asserted on the
-    OPTIMIZED logical plan, where a forced hint is a static property
-    independent of runtime sizes; the keeplist chains have no legitimate
-    hint at all (pair generation is severed behind the components
-    checkpoint), so the assertion is simply hint-free."""
-    df = q(name)
-    txt = df._jdf.queryExecution().optimizedPlan().toString()
-    hinted = [
-        ln.strip()
-        for ln in txt.splitlines()
-        if "strategy=" in ln
-        # the deletion-vector position anti join inside the Delta READ
-        # path hints broadcast only when the descriptors' total
-        # sizeInBytes clears the scan's DV_BROADCAST_MAX_BYTES gate — a
-        # different component with its own (size-gated) contract, visible
-        # here only when a keeplist row's corpus carries MoR deletes;
-        # this gate is about the duplicates-scaled loser/winner joins
-        and "_dv_pos" not in ln
-    ]
-    assert not hinted, f"{name}: forced join hint in keeplist plan: {hinted}"
-
-
 HEADLINE = [name for name, qd in QUERIES.items() if qd.headline]
 
 
@@ -411,3 +193,168 @@ def test_headline_executed_plan_survives_aqe(spark, sf_dir, name):
     # silently drop these — now sourced from the formatted detail blocks)
     assert len(s.read_schemas) >= s.scans, f"{name}: ReadSchema lost to truncation"
     assert all(cols for cols in s.read_schemas), f"{name}: empty ReadSchema entry"
+
+
+# ---------------------------------------------------------------------------
+# operators/: the same plan properties for the DataFrame operators, built
+# directly over the test tables (they are outside the certified catalog)
+# ---------------------------------------------------------------------------
+
+
+@pytest.fixture()
+def table(spark, sf_dir):
+    from delta_rs_spark.sources.tables import load_table
+
+    return lambda name: load_table(spark, sf_dir, name)
+
+
+def test_range_join_is_equi_not_nested_loop(table):
+    """The whole point of the bucketed range join: no BroadcastNestedLoopJoin
+    for the interval predicate (views within 5 minutes after each error)."""
+    from pyspark.sql import functions as F
+
+    from delta_rs_spark.operators import timeseries
+
+    e = table("events")
+    views = e.filter(F.col("event_type") == "view").select("ts")
+    windows = (
+        e.filter(F.col("event_type") == "error")
+        .select(F.col("ts").alias("w_start"))
+        .withColumn("w_end", F.col("w_start") + F.expr("INTERVAL 5 MINUTES"))
+    )
+    matched = timeseries.range_join(
+        views, windows, on="ts", start_col="w_start", end_col="w_end", bucket_width=300.0
+    )
+    counts = matched.groupBy("w_start").agg(F.count(F.lit(1)).alias("n_views"))
+    df = windows.join(counts, "w_start", "left")
+    s = summarize(df)
+    assert s.broadcast_hash_joins + s.sort_merge_joins + s.shuffled_hash_joins >= 1
+    # the left-restore join may broadcast but must not be nested-loop
+    assert s.nested_loop_joins == 0
+
+
+def test_asof_join_single_shuffle_per_side(table):
+    from pyspark.sql import functions as F
+
+    from delta_rs_spark.operators import timeseries
+
+    e = table("events")
+    clicks = e.filter(F.col("event_type") == "click").select("event_id", "user_id", "ts", "value")
+    errors = e.filter(F.col("event_type") == "error").select("user_id", "ts", "value")
+    df = timeseries.asof_join(clicks, errors, on="ts", by="user_id", right_cols=["value"])
+    s = summarize(df)
+    assert s.nested_loop_joins == 0
+    # union + one window: no join explosion — at most the window shuffle
+    assert s.broadcast_hash_joins + s.sort_merge_joins + s.shuffled_hash_joins == 0
+
+
+def test_embedding_cosine_dedup_is_bucketed_not_cartesian(table):
+    """Near-dup pairs at threshold 0.4 (the blocked-GEMM path): block
+    routing is two broadcast equi-joins + a cogroup — no cross join
+    anywhere in the plan (the O(n²) brute force remains only as the test
+    oracle)."""
+    from delta_rs_spark.operators import dedup
+
+    df = dedup.embedding_cosine_pairs(table("embeddings"), threshold=0.4)
+    assert_no_nested_loop_join(df)
+    s = summarize(df)
+    assert s.broadcast_hash_joins + s.sort_merge_joins + s.shuffled_hash_joins >= 2
+
+
+def test_topk_is_two_phase(table):
+    """Per-query top-k must reduce per (query, input partition) BEFORE the
+    per-query window, so no reducer ever sees O(corpus) rows for one query
+    key: two Window nodes in the plan, the first keyed on the partition id."""
+    from pyspark.sql import functions as F
+
+    from delta_rs_spark.operators import similarity
+
+    emb = table("embeddings")
+    probes = emb.filter(F.col("vec_id") < 5)
+    for name, df in (
+        ("cosine_topk", similarity.cosine_topk(emb, probes, k=10)),
+        ("lsh_topk", similarity.lsh_topk(emb, probes, k=10, n_planes=4, n_tables=16)),
+        ("ivf_topk", similarity.ivf_topk(emb, probes, k=10, n_list=8, n_probe=6)),
+    ):
+        s = summarize(df)
+        assert s.windows >= 2, f"{name}: expected partial+final windows, got {s.windows}"
+
+
+def test_histogram_single_scan_pruned(table):
+    """Profiling must stay one pass: a single pruned scan and at most the
+    partial/final agg exchange pair."""
+    from delta_rs_spark.operators import profiling
+
+    df = profiling.numeric_histogram(table("lineitem"), "l_extendedprice", 0.0, 60000.0, 20)
+    s = summarize(df)
+    assert s.scans == 1
+    assert any(set(cols) == {"l_extendedprice"} for cols in s.read_schemas)
+
+
+def test_column_profile_single_scan(table):
+    from delta_rs_spark.operators import profiling
+
+    cols = ["l_quantity", "l_discount", "l_tax"]
+    s = summarize(profiling.column_profile(table("lineitem"), cols))
+    assert s.scans == 1
+    assert any(set(c) == set(cols) for c in s.read_schemas)
+
+
+def test_tfidf_no_extra_scans(table):
+    """tf, df and N all derive from ONE documents scan (reused exchange /
+    cached branch), and the N-broadcast is the only nested-loop join."""
+    from delta_rs_spark.operators import corpus
+
+    s = summarize(corpus.tfidf_top_terms(table("documents"), k=3))
+    assert s.nested_loop_joins <= 1
+
+
+def test_stratified_sample_window_group_limit(table):
+    """The per-stratum rank must be limit-pushed (WindowGroupLimit), so no
+    stratum ever fully materializes in the window sort."""
+    from delta_rs_spark.operators import sampling
+    from delta_rs_spark.plans import _plan_text
+
+    df = sampling.stratified_take(table("documents"), "source", 5, id_col="doc_id")
+    assert "WindowGroupLimit" in _plan_text(df)
+
+
+def test_rolling_zscore_single_scan_pruned_window(table):
+    """The anomaly gate is one pruned scan + one keyed window pass — no
+    self-joins, no second scan of events, props column never read."""
+    from delta_rs_spark.operators import profiling
+
+    s = summarize(profiling.rolling_zscore(table("events")))
+    assert s.scans == 1
+    assert s.windows >= 1
+    assert not s.nested_loop_joins
+    assert all("props" not in cols for cols in s.read_schemas)
+
+
+def test_substring_dedup_pruned_and_bucketed(table):
+    """Exact-substring dedup must stay linear: pruned scans (only doc_id +
+    text ever read), the census/anti-join on gram hashes as hash joins —
+    never a nested loop — and no sort-merge demotion of the per-doc
+    reassembly joins."""
+    from delta_rs_spark.operators import text
+
+    s = summarize(text.substring_dedup(table("documents"), min_count=2, window=10))
+    assert not s.nested_loop_joins
+    assert s.sort_merge_joins == 0
+    assert all(set(cols) <= {"doc_id", "text"} for cols in s.read_schemas), (
+        s.read_schemas
+    )
+
+
+def test_clustered_semantic_dedup_no_corpus_nlj(table):
+    """Cluster-first semantic dedup must never plan a corpus-wide
+    nested-loop: pairs come from the within-cluster cogrouped GEMM, the
+    keeplist from a size-adaptive anti join."""
+    from delta_rs_spark.operators import dedup
+
+    df = dedup.semantic_keeplist(
+        table("embeddings"), threshold=0.4, method="clustered", n_list=4, n_probe=4
+    )
+    s = summarize(df)
+    assert not s.nested_loop_joins
+    assert s.sort_merge_joins == 0

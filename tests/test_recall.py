@@ -1,21 +1,15 @@
 """Recall contracts for the approximate operators.
 
-The rows-only catalog queries (minhash LSH dedup, LSH / IVF / quantized /
-PQ / IVF-PQ top-k) are approximate by design — no SQL oracle can pin their
-output. These tests bound HOW approximate they are: recall against the
-exact operator on the same data, with floors asserted at sf0.01 (the
-driver's certification scale) and — for the auto-scaled PQ family, whose
-r6 fixed knobs decayed with corpus size — at sf0.1 as well. The operators
-are fully deterministic (md5-seeded hyperplanes/permutations,
-deterministic k-means seeds), so the measured values are stable run to
-run; floors leave margin only for parameter-neutral refactors.
+MinHash LSH dedup and the LSH / IVF / quantized top-k operators are
+approximate by design. These tests bound HOW approximate they are: recall
+against the exact operator on the same data, with floors asserted at
+sf0.01. The operators are fully deterministic (md5-seeded
+hyperplanes/permutations, deterministic k-means seeds), so the measured
+values are stable run to run; floors leave margin only for
+parameter-neutral refactors.
 
-Measured at sf0.01 (the full per-SF ladder, including the auto-scaled PQ
-family after the r7 knob work, lives in QUERIES.md — single source of
-truth; highlights: lsh 0.90, ivf 0.90, quantized 1.00, pq auto 0.96,
-ivf-pq auto 0.92, minhash 1.00/1.00, clustered pairs (8,3) 0.949,
-clustered keeplist Jaccard 0.9955 — and at sf0.1 every value holds or
-improves: pq 0.94, ivf-pq 0.92).
+Measured at sf0.01: lsh 0.90, ivf 0.90, quantized 1.00, minhash 1.00/1.00,
+clustered pairs (8,3) 0.949, clustered keeplist Jaccard 0.9955.
 """
 
 from __future__ import annotations
@@ -97,171 +91,6 @@ def test_ivf_exhaustive_probe_equals_brute_force(spark, emb):
         for r in similarity.ivf_topk(emb, q, k=10, n_list=8, n_probe=8).collect()
     ]
     assert ivf == exact
-
-
-@pytest.fixture(scope="module")
-def pq_books(spark, emb):
-    """The per-session trained-codebook cache (pipeline_queries._TRAIN_CACHE,
-    VERDICT r6 item #7) — shared across every PQ test here exactly as the
-    catalog rows share it in a driver window. Training is deterministic, so
-    cache-vs-retrain equality is pinned by the exhaustive-equals-brute-force
-    tests below: wrong cached books could not reproduce brute force."""
-    from delta_rs_spark.pipeline_queries import _cached_pq_books
-
-    return _cached_pq_books(spark, SF_DIR)
-
-
-def test_pq_exhaustive_oversample_equals_brute_force(spark, emb, pq_books):
-    """oversample >= corpus/k keeps every ADC candidate, so the PQ output —
-    trained codebooks, encode, ADC lookup, exact rerank — must equal
-    cosine_topk row for row (the property the certified companion
-    similarity_pq_exact hashes against the brute-force oracle)."""
-    q = emb.filter(F.col("vec_id") < 5)
-    exact = [tuple(r) for r in similarity.cosine_topk(emb, q, k=10).collect()]
-    pq = [
-        tuple(r)
-        for r in similarity.pq_topk(
-            emb, q, k=10, oversample=1_000_000, books=pq_books
-        ).collect()
-    ]
-    assert pq == exact
-
-
-@pytest.mark.slow  # builder tier: see pyproject [tool.pytest.ini_options]
-def test_ivfpq_exhaustive_equals_brute_force(spark, emb, pq_books):
-    """n_probe = n_list AND exhaustive oversample makes both IVF-PQ tiers
-    exhaustive: the composed output must equal cosine_topk row for row
-    (the property similarity_ivfpq_exact hashes against the oracle)."""
-    q = emb.filter(F.col("vec_id") < 5)
-    exact = [tuple(r) for r in similarity.cosine_topk(emb, q, k=10).collect()]
-    got = [
-        tuple(r)
-        for r in similarity.ivf_pq_topk(
-            emb, q, k=10, n_list=8, n_probe=8, oversample=1_000_000, books=pq_books
-        ).collect()
-    ]
-    assert got == exact
-
-
-# ---------------------------------------------------------------------------
-# PQ-family floors at BOTH scales (VERDICT r6 item #2): the r6 fixed knobs
-# (oversample=8, n_list=8) decayed recall 0.94 → 0.74 (PQ) and 0.88 → 0.74
-# (IVF-PQ) from sf0.01 to sf0.1 — the exact failure mode a 100× scale-up
-# hits. The auto-scaled defaults (pool-fraction oversample, probe-ratio-held
-# n_list/n_probe — see similarity.pq_topk / ivf_pq_topk docstrings) must
-# clear the same floors at BOTH certification scales.
-# ---------------------------------------------------------------------------
-
-_BOTH_SFS = ["/root/testdata/sf0.01", "/root/testdata/sf0.1"]
-
-
-@pytest.fixture(scope="module", params=_BOTH_SFS, ids=["sf0.01", "sf0.1"])
-def scaled_sf_dir(request):
-    return request.param
-
-
-@pytest.fixture(scope="module")
-def scaled_emb(spark, scaled_sf_dir):
-    return load_table(spark, scaled_sf_dir, "embeddings")
-
-
-@pytest.fixture(scope="module")
-def scaled_exact_topk(spark, scaled_emb):
-    q = scaled_emb.filter(F.col("vec_id") < 5)
-    return {
-        (r.query_id, r.neighbor_id)
-        for r in similarity.cosine_topk(scaled_emb, q, k=10).collect()
-    }
-
-
-@pytest.fixture(scope="module")
-def scaled_pq_setup(spark, scaled_sf_dir):
-    from delta_rs_spark.pipeline_queries import _cached_n_rows, _cached_pq_books
-
-    return (
-        _cached_pq_books(spark, scaled_sf_dir),
-        _cached_n_rows(spark, scaled_sf_dir, "embeddings"),
-    )
-
-
-@pytest.mark.slow  # builder tier: see pyproject [tool.pytest.ini_options]
-def test_pq_topk_recall_floor_auto_scaled(
-    spark, scaled_emb, scaled_exact_topk, scaled_pq_setup
-):
-    books, n = scaled_pq_setup
-    q = scaled_emb.filter(F.col("vec_id") < 5)
-    r = _recall(
-        similarity.pq_topk(scaled_emb, q, k=10, books=books, n_rows=n),
-        scaled_exact_topk,
-    )
-    assert r >= 0.85, f"pq_topk auto-scaled recall@10 dropped to {r} at n={n}"
-
-
-@pytest.mark.slow  # builder tier: see pyproject [tool.pytest.ini_options]
-def test_ivfpq_topk_recall_floor_auto_scaled(
-    spark, scaled_emb, scaled_exact_topk, scaled_pq_setup
-):
-    """Explicit raw-trained books (the pre-r10 configuration, still
-    reachable: explicit books resolve residual=None to raw) keep their
-    auto-scaled floor at both SFs."""
-    books, n = scaled_pq_setup
-    q = scaled_emb.filter(F.col("vec_id") < 5)
-    r = _recall(
-        similarity.ivf_pq_topk(scaled_emb, q, k=10, books=books, n_rows=n),
-        scaled_exact_topk,
-    )
-    assert r >= 0.8, f"ivf_pq_topk auto-scaled recall@10 dropped to {r} at n={n}"
-
-
-@pytest.mark.slow  # builder tier: see pyproject [tool.pytest.ini_options]
-def test_ivfpq_default_residual_recall_floor_auto_scaled(
-    spark, scaled_emb, scaled_exact_topk, scaled_pq_setup
-):
-    """Round 10: the DEFAULT path — no books, residual IVFADC trained
-    internally — clears the same floor at BOTH certification scales
-    (measured 0.88 at n=500, 0.98 at n=2000; the driver twin is the
-    'ivf_pq_topk@10 auto-scaled residual-default' recall contract)."""
-    _, n = scaled_pq_setup
-    q = scaled_emb.filter(F.col("vec_id") < 5)
-    r = _recall(
-        similarity.ivf_pq_topk(scaled_emb, q, k=10, n_rows=n),
-        scaled_exact_topk,
-    )
-    assert r >= 0.8, f"default residual ivf_pq recall@10 dropped to {r} at n={n}"
-
-
-@pytest.mark.slow  # builder tier: see pyproject [tool.pytest.ini_options]
-def test_knn_graph_recall_floor_auto_scaled(spark, scaled_emb, scaled_pq_setup):
-    """The kNN graph SemDeDup would actually consume (VERDICT r7 #4): a
-    CORPUS-SIZED query side at the auto-scaled production knobs, recalled
-    against the exact all-pairs graph. The certified similarity_knn_graph
-    row pins exhaustive knobs ≡ brute force; this floor pins what the
-    production knobs recall at both certification scales. Round 10: the
-    graph runs the DEFAULT residual path (measured 0.94 at sf0.01 n=500,
-    0.96 at sf0.1 n=2000; raw books measured 0.93/0.96 — the near-uniform
-    corpus doesn't separate the encodings, the clustered ladder does)."""
-    _, n = scaled_pq_setup
-    exact = {
-        (r.query_id, r.neighbor_id)
-        for r in similarity.cosine_topk(scaled_emb, scaled_emb, k=5).collect()
-    }
-    got = {
-        (r.query_id, r.neighbor_id)
-        for r in similarity.ivf_pq_topk(
-            scaled_emb, scaled_emb, k=5, n_rows=n
-        ).collect()
-    }
-    r = len(got & exact) / len(exact)
-    assert r >= 0.8, f"knn-graph auto-scaled recall@5 dropped to {r} at n={n}"
-
-
-def test_pq_codebook_training_is_deterministic(spark, emb):
-    """Per-subspace Lloyd codebooks must not vary with shuffle reduction
-    order (DECIMAL means, xxhash64 seeds) — identical books from
-    differently-partitioned input, bit for bit."""
-    b1 = similarity.train_pq_codebooks(emb.repartition(3), m=4, k_codes=8, iters=1)
-    b2 = similarity.train_pq_codebooks(emb.repartition(7), m=4, k_codes=8, iters=1)
-    assert b1 == b2
 
 
 def test_clustered_pairs_probe_all_equals_exact(spark, emb):

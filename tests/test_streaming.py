@@ -112,6 +112,28 @@ def test_sink_distinct_app_ids_are_independent(spark, tmp_path):
     assert t.to_df(spark).count() == 6
 
 
+def test_sink_empty_first_batch_creates_table(spark, tmp_path):
+    """A streaming query's first micro-batch can be empty (a trigger that
+    fires before data arrives). It creates the table with no rows and
+    records its epoch; the next epoch appends and its replay is skipped."""
+    uri = str(tmp_path / "empty_first")
+    sink = ExactlyOnceDeltaSink(uri, app_id="q-empty")
+    sink(spark.createDataFrame([], "id long"), 0)
+    t = DeltaTable(uri)
+    assert t.version == 0
+    assert t.to_df(spark).count() == 0
+    assert t.get_app_transaction_version("q-empty") == 0
+
+    sink(spark.range(0, 5), 1)
+    assert sink.skipped_epochs == []
+    sink(spark.range(0, 5), 1)
+    assert sink.skipped_epochs == [1]
+    t = DeltaTable(uri)
+    assert t.version == 1
+    assert t.get_app_transaction_version("q-empty") == 1
+    assert sorted(r.id for r in t.to_df(spark).collect()) == list(range(5))
+
+
 def test_stream_source_microbatches(spark, tmp_path):
     """End-to-end Structured Streaming: delta_stream source → memory sink."""
     uri = str(tmp_path / "src_tbl")
@@ -312,9 +334,8 @@ def test_stateful_running_totals_across_microbatches(spark, tmp_path):
 
 def test_stream_dedup_within_watermark(spark, tmp_path):
     """Streaming exact dedup: duplicate keys arriving across commits (and
-    therefore across micro-batches) are emitted once. This is the streaming
-    counterpart of operators.dedup.exact_dedup — Spark keeps one state entry
-    per key inside the watermark instead of shuffling the corpus."""
+    therefore across micro-batches) are emitted once. Spark keeps one state
+    entry per key inside the watermark instead of shuffling the corpus."""
     uri = str(tmp_path / "dup_tbl")
     # commit 0: ids 0..4; commit 1: ids 3..7 — overlap {3, 4}
     _mk_table(spark, uri, 0, 5)
@@ -950,318 +971,12 @@ def test_stream_attempts_retries_task_death_and_timeout_only():
         _stream_attempts("t", wrong_answer)
 
 
-def test_index_maintaining_sink_streams_the_ann_index(spark, tmp_path):
-    """Streaming ANN ingestion (round 8): the foreachBatch wrapper appends
-    embedding batches exactly-once AND keeps the persisted PQ index current
-    in the same call. Certifies the two-watermark composition: a replayed
-    epoch is an append-skip + refresh no-op, and a crash BETWEEN the append
-    and the refresh (simulated by running only the parent sink for one
-    epoch) leaves an orphan corpus window the NEXT replayed call folds —
-    the index always converges to the one-shot encode of the corpus."""
-    from delta_rs_spark.operators import similarity
-    from delta_rs_spark.streaming.sink import IndexMaintainingSink
-
-    src, idx = str(tmp_path / "corpus"), str(tmp_path / "idx")
-    books = similarity.pq_random_codebooks(4, 2, 4)  # dim 8
-
-    def frame(lo: int, hi: int):
-        return spark.createDataFrame(
-            [
-                (i, [float((i * 13 + j * 5) % 7 - 3) for j in range(8)])
-                for i in range(lo, hi)
-            ],
-            "vec_id long, embedding array<float>",
-        )
-
-    sink = IndexMaintainingSink(src, idx, app_id="ann", books=books, n_list=4)
-    sink(frame(0, 30), 0)  # creates CDF-enabled corpus + partitioned index
-    sink(frame(30, 50), 1)
-    sink(frame(30, 50), 1)  # replay: append skipped, refresh watermark no-op
-    assert sink.skipped_epochs == [1]
-    assert sink.last_refresh["processed_versions"] == 0
-
-    # crash between the halves: epoch 2's append lands, refresh never runs
-    ExactlyOnceDeltaSink.__call__(sink, frame(50, 60), 2)
-    # restart replays epoch 2: append skipped, refresh folds the orphan window
-    sink(frame(50, 60), 2)
-    assert sink.skipped_epochs == [1, 2]
-    assert sink.last_refresh["upserts"] == 10
-
-    idx_t = DeltaTable(idx)
-    assert idx_t.metadata().partition_columns == ["list_id"]
-    got = {tuple(r) for r in idx_t.to_df(spark).drop("list_id").collect()}
-    want = {tuple(r) for r in similarity.pq_codes(frame(0, 60), books).collect()}
-    assert got == want
-    assert idx_t.get_app_transaction_version("ann-index") == DeltaTable(src).version
-
-
-@pytest.mark.slow  # builder tier: see pyproject [tool.pytest.ini_options]
-def test_index_sink_refresh_cadence_converges(spark, tmp_path):
-    """VERDICT r8 missing #3: refresh_every_n=3 pays the index MERGE only
-    on every third epoch (high-rate streams must not pay a synchronous
-    refresh per micro-batch) yet converges to the SAME index as cadence 1
-    — the skipped epochs' CDF windows fold into the next on-cadence
-    refresh under the corpus-version watermark."""
-    from delta_rs_spark.operators import similarity
-    from delta_rs_spark.streaming.sink import IndexMaintainingSink
-
-    books = similarity.pq_random_codebooks(4, 2, 4)  # dim 8
-
-    def frame(lo: int, hi: int):
-        return spark.createDataFrame(
-            [
-                (i, [float((i * 13 + j * 5) % 7 - 3) for j in range(8)])
-                for i in range(lo, hi)
-            ],
-            "vec_id long, embedding array<float>",
-        )
-
-    batches = [frame(0, 20), frame(20, 35), frame(35, 45), frame(45, 60)]
-
-    src1, idx1 = str(tmp_path / "c1"), str(tmp_path / "i1")
-    every = IndexMaintainingSink(src1, idx1, app_id="ann", books=books, n_list=4)
-    src3, idx3 = str(tmp_path / "c3"), str(tmp_path / "i3")
-    lazy = IndexMaintainingSink(
-        src3, idx3, app_id="ann", books=books, n_list=4, refresh_every_n=3
-    )
-    for epoch, b in enumerate(batches):
-        every(b, epoch)
-        lazy(b, epoch)
-        if epoch == 2:
-            # epochs 1 and 2 appended but deferred the refresh: the index
-            # watermark still sits at the bootstrap corpus version
-            assert lazy.skipped_refreshes == [1, 2]
-            assert lazy.skipped_refresh_count == 2
-            assert (
-                DeltaTable(idx3).get_app_transaction_version("ann-index") == 0
-            )
-
-    # epoch 3 folded the deferred windows: both indexes equal the one-shot
-    # encode of the full corpus, watermarks at the corpus head
-    want = {tuple(r) for r in similarity.pq_codes(frame(0, 60), books).collect()}
-    for idx, src in ((idx1, src1), (idx3, src3)):
-        t = DeltaTable(idx)
-        got = {tuple(r) for r in t.to_df(spark).drop("list_id").collect()}
-        assert got == want
-        assert t.get_app_transaction_version("ann-index") == DeltaTable(src).version
-    assert lazy.last_refresh["processed_versions"] == 3
-
-    # a finite stream ending OFF-cadence leaves the index lagging until
-    # flush() runs the deferred refresh (ADVICE r9); the skip log is
-    # bounded while the lifetime counter keeps the total
-    src5, idx5 = str(tmp_path / "c5"), str(tmp_path / "i5")
-    tail = IndexMaintainingSink(
-        src5, idx5, app_id="ann", books=books, n_list=4, refresh_every_n=3
-    )
-    tail._SKIP_LOG_CAP = 1
-    for epoch, b in enumerate(batches):  # epochs 1,2 skip; 0 and 3 refresh
-        tail(b, epoch)
-    tail(frame(60, 70), 4)  # the stream ends on an OFF-cadence epoch
-    assert tail.skipped_refreshes == [4] and tail.skipped_refresh_count == 3
-    lag = DeltaTable(idx5).get_app_transaction_version("ann-index")
-    assert lag < DeltaTable(src5).version
-    tail.flush(spark)
-    t5 = DeltaTable(idx5)
-    assert t5.get_app_transaction_version("ann-index") == DeltaTable(src5).version
-    got5 = {tuple(r) for r in t5.to_df(spark).drop("list_id").collect()}
-    want5 = {tuple(r) for r in similarity.pq_codes(frame(0, 70), books).collect()}
-    assert got5 == want5
-    # flushing a current index is a watermark no-op
-    assert tail.flush(spark)["processed_versions"] == 0
-
-    with pytest.raises(ValueError, match="refresh_every_n"):
-        IndexMaintainingSink(src3, idx3, app_id="x", refresh_every_n=0)
-
-
-@pytest.mark.slow  # builder tier: see pyproject [tool.pytest.ini_options]
-def test_semantic_index_sink_composes_and_collapses(spark, tmp_path):
-    """Round 10: SemanticIndexMaintainingSink — the dedup twin of the ANN
-    index sink. Batches append exactly-once and the semantic index
-    refreshes incrementally in the same call; with collapse_exact the
-    stream absorbs an arriving boilerplate duplicate cluster (keeper-only
-    pairs, cap never pressured). Final pairs must equal the one-shot
-    exhaustive pair set over the corpus keepers, the derived keeplist must
-    equal the one-shot semantic_keeplist, and a replayed epoch is a
-    no-op."""
-    from delta_rs_spark.operators import dedup
-    from delta_rs_spark.streaming.sink import SemanticIndexMaintainingSink
-
-    def frame(rows):
-        return spark.createDataFrame(
-            rows, "vec_id long, embedding array<float>"
-        )
-
-    base = [
-        (1, [1.0, 0.0, 0.0, 0.0]),
-        (2, [0.0, 1.0, 0.0, 0.0]),
-        (3, [2.0, 0.05, 0.0, 0.0]),  # near-dup of 1 at theta=0.9
-    ]
-    clones = [(100 + i, [0.0, 1.0, 0.0, 0.0]) for i in range(80)]  # dups of 2
-
-    src, idx = str(tmp_path / "corpus"), str(tmp_path / "semidx")
-    sink = SemanticIndexMaintainingSink(
-        src,
-        idx,
-        app_id="semstream",
-        threshold=0.9,
-        n_list=2,
-        n_probe=2,
-        collapse_exact=True,
-        max_list_candidates=500,  # 80-clone cluster would blow this raw
-    )
-    sink(frame(base), 0)
-    sink(frame(clones), 1)
-    assert sink.last_refresh["collapse"] is True
-    assert sink.last_refresh["rep_upserts"] == 1  # one touched keeper (2)
-    assert sink.last_refresh["upserts"] == 80
-
-    live = DeltaTable(src).to_df(spark).select("vec_id", "embedding")
-    assert live.count() == 83
-
-    got_keep = sorted(
-        r.vec_id
-        for r in dedup.semantic_keeplist_from_index(spark, idx, live).collect()
-    )
-    want_keep = sorted(
-        r.vec_id
-        for r in dedup.semantic_keeplist(live, threshold=0.9).collect()
-    )
-    assert got_keep == want_keep == [1, 2]
-
-    # pairs are keeper-level: (1,3) near-dup only — the clone clique never
-    # materializes
-    pairs = {
-        (r.id_a, r.id_b)
-        for r in DeltaTable(f"{idx}/pairs").to_df(spark).collect()
-    }
-    assert pairs == {(1, 3)}
-
-    # replayed epoch: corpus append skipped by the txn watermark, refresh
-    # folds an empty window
-    sink(frame(clones), 1)
-    assert DeltaTable(src).to_df(spark).count() == 83
-    assert sink.last_refresh["processed_versions"] == 0
-    assert sink.skipped_epoch_count == 1
-
-
-@pytest.mark.slow  # builder tier: see pyproject [tool.pytest.ini_options]
-def test_semantic_sink_refresh_cadence_converges(spark, tmp_path):
-    """Round 11: the semantic sink's refresh_every_n honors the same
-    deterministic-cadence contract as the ANN sink — skipped epochs' CDF
-    windows fold into the next on-cadence refresh, and flush() drains an
-    off-cadence tail, so cadence 2 converges to the cadence-1 keeplist."""
-    from delta_rs_spark.operators import dedup
-    from delta_rs_spark.streaming.sink import SemanticIndexMaintainingSink
-
-    def frame(rows):
-        return spark.createDataFrame(
-            rows, "vec_id long, embedding array<float>"
-        )
-
-    batches = [
-        frame([(1, [1.0, 0.0, 0.0, 0.0]), (2, [0.0, 1.0, 0.0, 0.0])]),
-        frame([(10 + i, [1.0, 0.0, 0.0, 0.0]) for i in range(20)]),  # dups of 1
-        frame([(3, [2.0, 0.05, 0.0, 0.0])]),  # near-dup of 1
-    ]
-    kw = dict(
-        threshold=0.9, n_list=2, n_probe=2, collapse_exact=True
-    )
-    src1, idx1 = str(tmp_path / "c1"), str(tmp_path / "i1")
-    every = SemanticIndexMaintainingSink(src1, idx1, app_id="sem", **kw)
-    src2, idx2 = str(tmp_path / "c2"), str(tmp_path / "i2")
-    lazy = SemanticIndexMaintainingSink(
-        src2, idx2, app_id="sem", refresh_every_n=2, **kw
-    )
-    for epoch, b in enumerate(batches):
-        every(b, epoch)
-        lazy(b, epoch)
-    # epoch 1 deferred its refresh; epoch 2 folded both windows
-    assert lazy.skipped_refreshes == [1]
-    assert lazy.last_refresh["processed_versions"] == 2
-    # the stream ends on-cadence here, but flush() must stay a no-op
-    assert lazy.flush(spark)["processed_versions"] == 0
-
-    for src, idx in ((src1, idx1), (src2, idx2)):
-        live = DeltaTable(src).to_df(spark).select("vec_id", "embedding")
-        got = sorted(
-            r.vec_id
-            for r in dedup.semantic_keeplist_from_index(
-                spark, idx, live
-            ).collect()
-        )
-        want = sorted(
-            r.vec_id
-            for r in dedup.semantic_keeplist(live, threshold=0.9).collect()
-        )
-        assert got == want == [1, 2]
-
-
-def test_index_sinks_survive_empty_first_batch(spark, tmp_path):
-    """Round 11: a streaming query's FIRST micro-batch can be empty
-    (processing-time trigger before data arrives). Both index sinks must
-    treat it as deferred creation — corpus table created with CDF on,
-    index untouched, no crash inside k-means — and bootstrap on the
-    first non-empty batch."""
-    from delta_rs_spark.operators import dedup, similarity
-    from delta_rs_spark.protocol.snapshot import NotATableError
-    from delta_rs_spark.streaming.sink import (
-        IndexMaintainingSink,
-        SemanticIndexMaintainingSink,
-    )
-
-    empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
-    data = spark.createDataFrame(
-        [(i, [float(i == j) for j in range(8)]) for i in range(8)],
-        "vec_id long, embedding array<float>",
-    )
-
-    src_a, idx_a = str(tmp_path / "ca"), str(tmp_path / "ia")
-    ann = IndexMaintainingSink(
-        src_a, idx_a, app_id="ann", n_list=4, m=4, k_codes=4
-    )
-    ann(empty, 0)
-    assert ann.last_refresh["processed_versions"] == 0
-    with pytest.raises(NotATableError):
-        DeltaTable(idx_a)
-    ann(data, 1)
-    assert ann.last_refresh["upserts"] == 8
-    got = similarity.pq_index_search(
-        spark,
-        idx_a,
-        DeltaTable(src_a).to_df(spark),
-        data.filter(F.col("vec_id") < 2),
-        k=3,
-        n_probe=4,
-        oversample=1_000_000,
-    )
-    assert got.count() == 6
-
-    src_s, idx_s = str(tmp_path / "cs"), str(tmp_path / "is")
-    sem = SemanticIndexMaintainingSink(
-        src_s, idx_s, app_id="sem", threshold=0.9, n_list=2, n_probe=2,
-        collapse_exact=True,
-    )
-    sem(empty, 0)
-    assert sem.last_refresh["processed_versions"] == 0
-    assert sem.last_refresh["rep_upserts"] == 0
-    with pytest.raises(NotATableError):
-        DeltaTable(f"{idx_s}/assignments")
-    sem(data, 1)
-    assert sem.last_refresh["upserts"] == 8
-    live = DeltaTable(src_s).to_df(spark).select("vec_id", "embedding")
-    keep = sorted(
-        r.vec_id
-        for r in dedup.semantic_keeplist_from_index(spark, idx_s, live).collect()
-    )
-    assert keep == list(range(8))
-
-
 def test_sink_cached_handle_sees_external_commits(spark, tmp_path):
     """Round 12: the sinks cache their DeltaTable handle across batches and
     advance it incrementally (per-batch log I/O ∝ new commits). The cached
     snapshot must still observe commits made OUTSIDE the sink between
-    batches — both for the watermark check and for the data a refresh
-    reads — and replay skipping must be unaffected."""
+    batches for the watermark check, and replay skipping must be
+    unaffected."""
     from delta_rs_spark import write_deltalake
 
     uri = str(tmp_path / "cached_handle_tbl")

@@ -938,7 +938,8 @@ def test_append_time_configuration_conflict_warns(spark, tmp_path):
     to an existing table keeps the stored config. A caller passing a
     CONFLICTING configuration on append used to get silence — now a
     UserWarning names the divergent keys. Re-passing the stored values
-    (what streaming sinks do every micro-batch) stays silent."""
+    (a caller that re-sends its creation config on every append) stays
+    silent."""
     import warnings
 
     from delta_rs_spark import write_deltalake
@@ -968,8 +969,8 @@ def test_append_time_configuration_conflict_warns(spark, tmp_path):
             mode="append",
             configuration={"delta.enableChangeDataFeed": "true"},
         )
-        # semantically-equal non-string values (ADVICE r10): a sink passing
-        # True against stored "true" must not warn on every micro-batch
+        # semantically-equal non-string values (ADVICE r10): a caller
+        # passing True against stored "true" must not warn on every append
         write_deltalake(
             spark,
             df,
