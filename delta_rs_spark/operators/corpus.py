@@ -34,7 +34,7 @@ def _tokens(text_col: str):
 
     ENGINE-PARITY CAVEAT: Java regex ``\\s`` includes U+000B where RE2's
     does not, and Spark/DuckDB ``lower()`` can disagree on non-ASCII case
-    folding (e.g. U+0130). The certified oracles therefore assume an
+    folding (e.g. U+0130). The ``*_oracle_sql`` helpers therefore assume an
     ASCII-whitespace / ASCII-case corpus — true of the test tables; a
     production corpus with exotic whitespace should be normalized upstream
     (text.normalize) before these operators.
@@ -761,7 +761,7 @@ def _syms_expr(w):
 
 # bpe_train: compact the lazy replace chain into a persisted frame after
 # this many rounds (bounds plan depth at real merge counts; chosen above the
-# certified n_merges=8 so the certified path runs zero extra jobs, and low
+# default n_merges=8 so the default path runs zero extra jobs, and low
 # enough that census recompute stays a dozen vocab-sized string maps)
 _REMATERIALIZE_EVERY = 12
 
@@ -871,7 +871,7 @@ def bpe_encode(
     - ``"codegen"``: the document becomes one wrapped symbol string, each
       merge is one literal ``replace``, and the token list falls out of
       three marker replaces — zero shuffles, zero Python, and exactly
-      SQL-oracle-expressible (the certified `corpus_bpe_encode` path).
+      SQL-oracle-expressible.
       The chain depth is n_merges, so this is for small merge lists.
     - ``"arrow"``: an Arrow-batched ``mapInPandas`` kernel doing
       rank-priority merging (always merge the lowest-rank adjacent pair,

@@ -475,7 +475,8 @@ def embedding_cosine_pairs(
       cosine verify (`similarity.lsh_bucketed_pairs`). All equi-joins;
       candidate volume ∝ bucket density; banding derived from the
       threshold so the per-pair miss probability is below 1e-9
-      (deterministic hyperplanes — certified against the exact oracle).
+      (deterministic hyperplanes — pinned equal to brute force by
+      tests/test_operators.py::test_lsh_bucketed_pairs_high_threshold_near_dups).
     - < 0.7 → ``"block"``: blocked exact GEMM pairs
       (`similarity.blocked_exact_pairs`). At low thresholds the sign-LSH
       bit-agreement gap collapses (p_bit = 1 − θ/π → 0.5) and hitting the
@@ -707,8 +708,8 @@ def semantic_keeplist(
       scored; the contract traded away is pair RECALL (floor pinned vs the
       exact keeplist in tests/test_recall.py). At ``n_probe = n_list`` the
       pair set — and so the keeplist — provably equals the exact path
-      (certified: `dedup_semantic_clustered` hash-matches the recursive-CTE
-      oracle).
+      (pinned by
+      tests/test_recall.py::test_clustered_pairs_probe_all_equals_exact).
     """
     from .clustering import connected_components
 

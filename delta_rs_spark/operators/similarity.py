@@ -325,9 +325,8 @@ def ivf_topk(
     partition-pruning equi-join key); each query probes its ``n_probe``
     nearest lists and reranks exactly inside them. Recall tunes with
     n_probe/n_list; at ``n_probe = n_list`` probing is exhaustive and the
-    output provably equals :func:`cosine_topk` (the certified companion
-    ``similarity_ivf_exact`` hash-matches the brute-force oracle on exactly
-    this property). The list assignment is an equi-join, so at scale the
+    output provably equals :func:`cosine_topk` (pinned row for row by
+    tests/test_recall.py::test_ivf_exhaustive_probe_equals_brute_force). The list assignment is an equi-join, so at scale the
     candidate generation shuffles n·n_probe/n_list rows instead of n² pairs.
 
     Vectors stay RAW end to end: a vector's own norm is a positive scalar,
@@ -485,8 +484,9 @@ def lsh_bucketed_pairs(
     Banding parameters derive from the threshold (``_band_params``): the
     probability of missing a qualifying pair is below ``target_miss``
     (default 1e-9 — deterministic planes, so a given dataset either
-    matches the brute-force output or it doesn't; certified against the
-    exact oracle at test SFs). Lower thresholds cost more bands; genuinely
+    matches the brute-force output or it doesn't; pinned equal to brute
+    force by
+    tests/test_operators.py::test_lsh_bucketed_pairs_high_threshold_near_dups). Lower thresholds cost more bands; genuinely
     antagonistic thresholds (<~0.3) degrade toward brute-force candidate
     volume — use ``dedup.embedding_cosine_pairs(method="brute")`` there.
     """
@@ -782,9 +782,8 @@ def clustered_exact_pairs(
     multi-probes each vector into its nearest clusters to recover boundary
     pairs (recall floor pinned in tests/test_recall.py); at
     ``n_probe = n_list`` every pair co-occurs in every cluster and the
-    output provably equals `blocked_exact_pairs` — the certified companion
-    `dedup_semantic_clustered` hash-matches the exact recursive-CTE oracle
-    on exactly this property.
+    output provably equals `blocked_exact_pairs` (pinned by
+    tests/test_recall.py::test_clustered_pairs_probe_all_equals_exact).
 
     Same EAGER-BUILD CONTRACT as `blocked_exact_pairs` (centroid training
     already runs bounded driver jobs; one more count sizes the per-cluster

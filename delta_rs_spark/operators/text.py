@@ -641,8 +641,8 @@ def substring_dedup(
     few per doc), and the final token filter costs O(tokens x intervals)
     per doc with merged intervals. Grams shuffle as xxhash64 (8 bytes),
     not token strings; a 2^-64 collision falsely REMOVES a span — the
-    conservative direction for dedup (certified exact vs a string-keyed
-    oracle at sf0.01, same pattern as the shingle-hash operators).
+    conservative direction for dedup (same pattern as the shingle-hash
+    operators).
     """
     text_safe = F.coalesce(F.col(text_col), F.lit(""))
     toks = F.filter(F.split(text_safe, r"\s+"), lambda w: w != "")

@@ -1,51 +1,111 @@
-"""Small-probe-ratio recall on a CLUSTERED corpus (VERDICT r7 item #3).
+"""Small-probe-ratio IVF recall on a CLUSTERED corpus.
 
-Every recall number in the r1–r7 ladder was measured on /root/testdata's
-near-uniform synthetic vectors — the regime where IVF pruning is WEAKEST
-(true neighbors spread across many lists; holding recall there needs probe
-ratio 0.75, i.e. the index prunes only 25% of lists). The design claim at
-similarity.ivf_pq_topk's docstring — real embedding corpora cluster, so
-neighbors concentrate into few lists and small ratios hold recall — was
-prose until now. `similarity.clustered_corpus` (deterministic md5-keyed
-mixture of Gaussians) makes it data: at sep=4·σ and probe ratio 0.125 the
-measured recall is 1.00 for IVF, IVF-PQ and the persisted probing index,
-while the SAME knobs on the sep=0 (near-uniform) corpus collapse to ~0.32.
-These tests pin both sides: floors on the clustered corpus at ratios the
-whole index design exists for, and the contrast against the uniform regime
-so the demonstration itself can't silently rot. The measured ladder lives
-in QUERIES.md; the driver-hashed twin is `recall_clustered_contracts`.
-
-Round 9 re-ran the ladder at a second size (n=20,000, the sf0.1 embedding
-count) and found the raw-PQ stage — not the IVF pruning — decays at
-growth: IVF holds 1.00 at probe ratio 0.125 while raw-coded IVF-PQ drops
-to 0.70 (m=8) / 0.86 (m=16). The fix is the IVFADC residual form
-(`ivf_pq_topk(residual=True)` / `update_pq_index(residual=True)`), whose
-floors hold ≥0.9 at BOTH sizes here; the raw decay is pinned as a
-contrast ceiling so the motivation stays measured.
+The synthetic test tables' embeddings are near-uniform on the sphere — the
+regime where IVF pruning is WEAKEST (true neighbors spread across many
+lists; holding recall there needs probe ratio 0.75, i.e. the index prunes
+only 25% of lists). The IVF tier's premise — real embedding corpora
+cluster, so neighbors concentrate into few lists and small ratios hold
+recall — is made data here by `clustered_corpus` below
+(deterministic md5-keyed mixture of Gaussians): at sep=4·σ and probe ratio
+0.125 the measured IVF recall is 1.00, while the SAME knobs on the sep=0
+(near-uniform) corpus collapse to ~0.32. These tests pin both sides: floors
+on the clustered corpus at the ratios the IVF tier exists for, and the
+contrast against the uniform regime so the demonstration itself can't
+silently rot.
 """
 
 from __future__ import annotations
 
+import hashlib
+import math
+
 import pytest
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from delta_rs_spark.operators import similarity
 
-# builder tier: every test in this module is multi-minute-fixture fuzz/recall
-# work (see pyproject [tool.pytest.ini_options]); the certified contracts stay
-# in the driver tier via the oracle rows.
+# builder tier: every test in this module is multi-minute-fixture recall
+# work (see pyproject [tool.pytest.ini_options])
 pytestmark = pytest.mark.slow
 
 N = 2000
 N_LIST = 16
 
 
-# VERDICT r8 missing #4: the small-ratio floors are the round's headline
-# demonstration, so they get the same two-scale rigor as every other floor
-# in the repo — n=2,000 (the original certification size) and n=20,000
-# (the sf0.1 embedding count). Same 25-cluster geometry, same n_list, same
-# probe ratios: growth packs more points per cluster and per list, which
-# is exactly the claim ("neighbors concentrate into few lists") scaled 10×.
+def clustered_corpus(
+    spark,
+    n: int = 2000,
+    dim: int = 16,
+    n_clusters: int = 25,
+    sep: float = 4.0,
+    seed: int = 7,
+) -> DataFrame:
+    """Deterministic mixture-of-Gaussians embedding corpus (vec_id,
+    embedding): row i belongs to cluster i mod ``n_clusters``; its vector is
+    ``center[cluster]·sep + unit-variance noise``.
+
+    Everything is md5-KEYED, never RNG-stateful, so the frame is
+    bit-identical under any partitioning and any executor count:
+
+    - cluster centers: driver-side standard normals via Box–Muller over two
+      md5 uniforms keyed (seed, cluster, dim), scaled by ``sep``;
+    - per-row noise: the same Box–Muller computed JVM-SIDE from
+      md5(seed, id, dim) — no Python, no shuffle.
+
+    ``sep=4`` gives well-separated but overlapping-tail clusters; ``sep=0``
+    degenerates to the near-uniform regime for A/B contrast.
+    """
+
+    def _driver_gauss(tag: str) -> float:
+        u1 = (int(hashlib.md5(tag.encode()).hexdigest()[:8], 16) + 0.5) / float(1 << 32)
+        u2 = (int(hashlib.md5((tag + "/b").encode()).hexdigest()[:8], 16) + 0.5) / float(
+            1 << 32
+        )
+        return math.sqrt(-2.0 * math.log(u1)) * math.cos(2.0 * math.pi * u2)
+
+    centers = [
+        [_driver_gauss(f"cc:{seed}:{c}:{d}") * sep for d in range(dim)]
+        for c in range(n_clusters)
+    ]
+    center_arr = F.element_at(
+        F.array(*[F.array(*[F.lit(float(x)) for x in cen]) for cen in centers]),
+        (F.col("vec_id") % n_clusters).cast("int") + 1,
+    )
+
+    def _u(d: int, suffix: str):
+        h = F.md5(
+            F.concat_ws(
+                ":",
+                F.lit(f"cn:{seed}"),
+                F.col("vec_id").cast("string"),
+                F.lit(str(d)),
+                F.lit(suffix),
+            )
+        )
+        return (F.conv(F.substring(h, 1, 8), 16, 10).cast("double") + F.lit(0.5)) / F.lit(
+            float(1 << 32)
+        )
+
+    vec = F.array(
+        *[
+            (
+                F.element_at(center_arr, d + 1)
+                + F.sqrt(F.lit(-2.0) * F.log(_u(d, "a")))
+                * F.cos(F.lit(2.0 * math.pi) * _u(d, "b"))
+            ).cast("float")
+            for d in range(dim)
+        ]
+    )
+    return spark.range(n).select(
+        F.col("id").cast("long").alias("vec_id"), vec.alias("embedding")
+    )
+
+
+# two scales, same 25-cluster geometry, same n_list and probe ratios: n=2,000
+# and n=20,000 (the sf0.1 embedding count). Growth packs more points per
+# cluster and per list — the claim ("neighbors concentrate into few lists")
+# scaled 10×.
 @pytest.fixture(scope="module", params=[2000, 20000], ids=["n2k", "n20k"])
 def size(request):
     return request.param
@@ -53,9 +113,7 @@ def size(request):
 
 @pytest.fixture(scope="module")
 def clustered(spark, size):
-    df = similarity.clustered_corpus(
-        spark, n=size, dim=16, n_clusters=25, sep=4.0
-    ).cache()
+    df = clustered_corpus(spark, n=size, dim=16, n_clusters=25, sep=4.0).cache()
     df.count()
     yield df
     df.unpersist()
@@ -70,53 +128,27 @@ def exact(spark, clustered):
     }
 
 
-@pytest.fixture(scope="module")
-def clustered_books(spark, clustered):
-    return similarity.train_pq_codebooks(clustered, m=8, k_codes=16, iters=2)
-
-
-@pytest.fixture(scope="module")
-def clustered_cents(spark, clustered):
-    # the same derivation ivf_pq_topk runs internally (n_list, iters=2), so
-    # residual books trained under these cents match the in-call assignment
-    return similarity.train_ivf_centroids(
-        clustered, N_LIST, 2, "vec_id", "embedding"
-    )
-
-
-@pytest.fixture(scope="module")
-def residual_books(spark, clustered, clustered_cents):
-    return similarity.train_pq_codebooks(
-        clustered, m=16, k_codes=16, iters=2, cents=clustered_cents
-    )
-
-
 def _recall(df, exact: set) -> float:
     got = {(r.query_id, r.neighbor_id) for r in df.collect()}
     return len(got & exact) / len(exact)
 
 
 def test_generator_is_partitioning_invariant(spark):
-    """The fixture's md5-keyed generation must be bit-identical under any
-    partitioning — the property that lets a 1000-executor run reproduce the
-    2000-row certification corpus exactly."""
+    """The md5-keyed generation must be bit-identical under any
+    partitioning, so a run on any cluster reproduces the same corpus."""
     a = {
         (r.vec_id, tuple(r.embedding))
-        for r in similarity.clustered_corpus(spark, n=200, dim=8).collect()
+        for r in clustered_corpus(spark, n=200, dim=8).collect()
     }
     b = {
         (r.vec_id, tuple(r.embedding))
-        for r in similarity.clustered_corpus(spark, n=200, dim=8)
-        .repartition(7)
-        .collect()
+        for r in clustered_corpus(spark, n=200, dim=8).repartition(7).collect()
     }
     assert a == b
 
 
 @pytest.mark.parametrize("n_probe", [2, 4], ids=["ratio0.125", "ratio0.25"])
-def test_ivf_small_ratio_recall_floor_clustered(
-    spark, clustered, exact, n_probe
-):
+def test_ivf_small_ratio_recall_floor_clustered(spark, clustered, exact, n_probe):
     """Probe ratio 0.125–0.25 on clustered data: measured 1.00 (sep=4),
     floor 0.9 — the pruning regime the IVF tier is designed for."""
     q = clustered.filter(F.col("vec_id") < 5)
@@ -127,145 +159,13 @@ def test_ivf_small_ratio_recall_floor_clustered(
     assert r >= 0.9, f"clustered ivf recall at probe {n_probe}/{N_LIST}: {r}"
 
 
-@pytest.mark.parametrize("n_probe", [2, 4], ids=["ratio0.125", "ratio0.25"])
-def test_ivfpq_small_ratio_recall_floor_clustered(
-    spark, clustered, exact, residual_books, n_probe, size
-):
-    """The composed IVF-PQ path holds the same small-ratio floor at BOTH
-    sizes: coarse pruning to 2 of 16 lists, residual-PQ-compressed scan
-    (IVFADC — the raw form decays at growth, pinned as a ceiling below),
-    pool-fraction rerank. Measured: 1.00/1.00 at n=2k, 0.92/1.00 at
-    n=20k (probe 2 and 4)."""
-    q = clustered.filter(F.col("vec_id") < 5)
-    r = _recall(
-        similarity.ivf_pq_topk(
-            clustered,
-            q,
-            k=10,
-            n_list=N_LIST,
-            n_probe=n_probe,
-            books=residual_books,
-            n_rows=size,
-            residual=True,
-        ),
-        exact,
-    )
-    assert r >= 0.9, f"clustered ivf-pq recall at probe {n_probe}/{N_LIST}: {r}"
-
-
-def test_raw_pq_decays_at_growth_residual_does_not(
-    spark, clustered, exact, clustered_books, size
-):
-    """The round-9 growth finding, pinned from both sides: RAW-form PQ
-    codebooks saturate on between-cluster structure, so within-list
-    ranking — and recall at a held probe ratio — decays as lists fill
-    (the coarse IVF tier itself holds 1.00 at the same knobs, see the
-    ivf floors above; the loss is purely the PQ stage). At n=2,000 the
-    raw m=8 books still clear 0.9; at n=20,000 the SAME knobs measure
-    0.70 — pinned BELOW 0.9 as a contrast ceiling so the residual
-    motivation can't silently rot (the same two-sided pattern as the
-    sep=0 uniform twin)."""
-    q = clustered.filter(F.col("vec_id") < 5)
-    r = _recall(
-        similarity.ivf_pq_topk(
-            clustered,
-            q,
-            k=10,
-            n_list=N_LIST,
-            n_probe=2,
-            books=clustered_books,
-            n_rows=size,
-        ),
-        exact,
-    )
-    if size == 2000:
-        assert r >= 0.9, f"raw PQ at n=2k should still hold the floor: {r}"
-    else:
-        assert r < 0.9, (
-            f"raw-PQ recall at n={size} unexpectedly high ({r}) — the decay "
-            "that motivates residual encoding is gone; re-measure the ladder"
-        )
-
-
-def test_default_path_resolves_to_residual_form(spark, clustered, exact, size):
-    """Round 10 (VERDICT r9 #1): ivf_pq_topk's DEFAULT — no books, no
-    residual flag — must BE the IVFADC residual path. Pinned by output
-    identity: training is deterministic, so the default's rows must equal
-    the explicit residual=True call row for row, and must differ from the
-    explicit raw call at knobs where the encodings demonstrably rank
-    differently (the ladder's m=8 books, probe 2/16, and a small fixed
-    oversample so the exact rerank can't wash the ADC ordering out — at
-    the auto pool-fraction oversample the rerank forgives both encodings
-    on this corpus and the outputs coincide)."""
-    if size != 2000:
-        pytest.skip("resolution identity is size-independent; pin at n=2k")
-    q = clustered.filter(F.col("vec_id") < 5)
-
-    def rows(**kw):
-        return sorted(
-            tuple(r)
-            for r in similarity.ivf_pq_topk(
-                clustered,
-                q,
-                k=10,
-                n_list=N_LIST,
-                n_probe=2,
-                m=8,
-                oversample=2,
-                n_rows=size,
-                **kw,
-            ).collect()
-        )
-
-    default = rows()
-    assert default == rows(residual=True), (
-        "default no-books path must be the IVFADC residual form"
-    )
-    assert default != rows(residual=False), (
-        "default and explicit-raw outputs coincide at the discriminating "
-        "knobs — the resolution pin lost its teeth; re-measure"
-    )
-
-
-def test_index_probing_small_ratio_recall_floor_clustered(
-    spark, clustered, exact, residual_books, tmp_path
-):
-    """The persisted index — the serving path — at probe 2/16: partition
-    pruning reads 1/8 of the index's files and still clears the floor on
-    clustered data at BOTH sizes (measured 1.00 at n=2k, 0.92 at n=20k),
-    because the index stores IVFADC residual codes (deltars.pq.residual)
-    and the search adds the exact q·cent[l] term."""
-    from delta_rs_spark import DeltaTable, write_deltalake
-
-    src, idx = str(tmp_path / "src"), str(tmp_path / "idx")
-    write_deltalake(
-        spark, clustered, src, configuration={"delta.enableChangeDataFeed": "true"}
-    )
-    similarity.update_pq_index(
-        spark,
-        DeltaTable(src),
-        idx,
-        books=residual_books,
-        n_list=N_LIST,
-        residual=True,
-    )
-    q = clustered.filter(F.col("vec_id") < 5)
-    r = _recall(
-        similarity.pq_index_search(spark, idx, clustered, q, k=10, n_probe=2),
-        exact,
-    )
-    assert r >= 0.9, f"clustered index probing recall at 2/{N_LIST}: {r}"
-
-
 def test_uniform_regime_contrast_at_same_knobs(spark):
     """The demonstration's other half: the SAME probe ratio on the sep=0
     (near-uniform) corpus must collapse (measured 0.32) — proving the
     clustered floors above measure the data regime, not a trivially easy
     knob setting. If this ever PASSES the clustered floor, the contrast is
-    gone and the ladder's 'clustered regime' framing needs re-measuring."""
-    uni = similarity.clustered_corpus(
-        spark, n=N, dim=16, n_clusters=25, sep=0.0
-    ).cache()
+    gone and the 'clustered regime' framing needs re-measuring."""
+    uni = clustered_corpus(spark, n=N, dim=16, n_clusters=25, sep=0.0).cache()
     try:
         uni.count()
         q = uni.filter(F.col("vec_id") < 5)
@@ -273,9 +173,7 @@ def test_uniform_regime_contrast_at_same_knobs(spark):
             (r.query_id, r.neighbor_id)
             for r in similarity.cosine_topk(uni, q, k=10).collect()
         }
-        r = _recall(
-            similarity.ivf_topk(uni, q, k=10, n_list=N_LIST, n_probe=2), exact_u
-        )
+        r = _recall(similarity.ivf_topk(uni, q, k=10, n_list=N_LIST, n_probe=2), exact_u)
         assert r < 0.7, (
             f"uniform-corpus recall at probe 2/16 unexpectedly high ({r}) — "
             "the clustered-vs-uniform contrast no longer demonstrates the "
@@ -283,44 +181,3 @@ def test_uniform_regime_contrast_at_same_knobs(spark):
         )
     finally:
         uni.unpersist()
-
-
-def test_semantic_pairs_small_probe_recall_clustered(spark):
-    """The semantic-dedup index's partial-probe contract in the clustered
-    regime (round-8 measurement): pair recall vs the corpus-wide exact
-    pair set at θ=0.9 — probe 1/16 already recalls 0.978 (sep=4; 0.990 at
-    sep=2) and probe 2/16 is exhaustive-equal (1.00), because near-dup
-    pairs are by definition the pairs that co-locate in k-means lists.
-    Floors at 0.95 (probe 1) / 0.99 (probe 2). Precision is exact by
-    construction (every candidate is exactly verified).
-
-    Deliberately pinned at n=2,000 ONLY (its own fixture, not the two-size
-    param): the θ=0.9 pair set is quadratic in cluster size — ~80-member
-    clusters give ~80k pairs; at n=20,000 the same geometry gives ~8M,
-    which this test would collect into driver-side Python sets. The
-    two-size growth rigor lives in the top-k recall floors above; pair-set
-    EQUALITY at growth is the semantic index's degeneracy contract
-    (tests/test_semantic_index.py::test_degenerate_cluster_guard)."""
-    from delta_rs_spark.operators import dedup
-
-    clustered = similarity.clustered_corpus(
-        spark, n=N, dim=16, n_clusters=25, sep=4.0
-    ).cache()
-    clustered.count()
-    exact = {
-        (r.id_a, r.id_b)
-        for r in dedup.embedding_cosine_pairs(clustered, threshold=0.9).collect()
-    }
-    assert exact, "fixture regression: no true θ=0.9 pairs on the clustered corpus"
-    cents = similarity.train_ivf_centroids(clustered, N_LIST, 2, "vec_id", "embedding")
-    for probe, floor in ((1, 0.95), (2, 0.99)):
-        got = {
-            (r.id_a, r.id_b)
-            for r in dedup.semantic_pairs_snapshot(
-                clustered, cents, probe, 0.9
-            ).collect()
-        }
-        recall = len(got & exact) / len(exact)
-        assert recall >= floor, f"probe {probe}/{N_LIST} pair recall {recall}"
-        assert got <= exact, "semantic pairs must be a verified subset"
-    clustered.unpersist()

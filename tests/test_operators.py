@@ -1729,7 +1729,7 @@ def test_bpe_matches_python_model_randomized(spark):
 
 def test_bpe_encode_arrow_equals_codegen(spark):
     """The Arrow rank-priority kernel (the 32k-merge production path) must
-    segment identically to the certified codegen replace-chain path —
+    segment identically to the codegen replace-chain path —
     rank-priority merging reproduces sequential rank-order application.
     Fuzzed on small-alphabet corpora where merges stack deeply (multi-char
     symbols, within-word repeats, the overlap cases like 'aaaa')."""

@@ -4,6 +4,7 @@ These are the properties that decide 100 TB behavior; losing one is a perf
 bug even while results stay correct."""
 
 import pytest
+from pyspark.sql import functions as F
 
 from delta_rs_spark.catalog import QUERIES
 from delta_rs_spark.plans import (
@@ -358,3 +359,53 @@ def test_clustered_semantic_dedup_no_corpus_nlj(table):
     s = summarize(df)
     assert not s.nested_loop_joins
     assert s.sort_merge_joins == 0
+
+
+# every keeplist operator's final step subtracts a duplicates-scaled loser
+# (or non-winner) set; name -> builder over the test tables
+KEEPLIST_OPERATORS = {
+    "semantic_keeplist": lambda dedup, t: dedup.semantic_keeplist(
+        t("embeddings"), threshold=0.4
+    ),
+    "semantic_keeplist_clustered": lambda dedup, t: dedup.semantic_keeplist(
+        t("embeddings"), threshold=0.4, method="clustered", n_list=4, n_probe=4
+    ),
+    "semantic_keeplist_collapsed": lambda dedup, t: dedup.semantic_keeplist_collapsed(
+        t("embeddings"), threshold=0.4
+    ),
+    "keeplist_by_score": lambda dedup, t: dedup.keeplist_by_score(
+        t("documents"),
+        dedup.ngram_jaccard_pairs(t("documents"), threshold=0.8, n=3),
+        score=F.length("text"),
+    ),
+}
+
+
+@pytest.mark.slow  # builder tier: see pyproject [tool.pytest.ini_options]
+@pytest.mark.parametrize("name", sorted(KEEPLIST_OPERATORS))
+def test_keeplist_anti_joins_are_unhinted(table, name):
+    """The keeplist anti joins (and keeplist_by_score's winners join) must
+    carry NO forced broadcast hint. The losers/winners frames are every
+    duplicate id / cluster — at a fixed dup rate a constant FRACTION of the
+    corpus, 10⁸-10⁹ ids at 100 TB — so a forced F.broadcast there is a
+    driver-OOM plan. Strategy choice belongs to AQE's runtime sizes.
+    Asserted on the OPTIMIZED logical plan, where a forced hint is a static
+    property independent of runtime sizes; the keeplist chains have no
+    legitimate hint at all (pair generation is severed behind the
+    components checkpoint), so the assertion is simply hint-free."""
+    from delta_rs_spark.operators import dedup
+
+    df = KEEPLIST_OPERATORS[name](dedup, table)
+    txt = df._jdf.queryExecution().optimizedPlan().toString()
+    hinted = [
+        ln.strip()
+        for ln in txt.splitlines()
+        if "strategy=" in ln
+        # the deletion-vector position anti join inside the Delta READ
+        # path hints broadcast only when the descriptors' total
+        # sizeInBytes clears the scan's DV_BROADCAST_MAX_BYTES gate — a
+        # different component with its own (size-gated) contract; this
+        # gate is about the duplicates-scaled loser/winner joins
+        and "_dv_pos" not in ln
+    ]
+    assert not hinted, f"{name}: forced join hint in keeplist plan: {hinted}"

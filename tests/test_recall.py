@@ -81,9 +81,7 @@ def test_minhash_lsh_pair_recall_and_precision(spark):
 
 def test_ivf_exhaustive_probe_equals_brute_force(spark, emb):
     """n_probe = n_list makes IVF probing exhaustive: the full output —
-    ids, exact-rerank cosines, ranks — must equal cosine_topk row for row
-    (the property the certified companion similarity_ivf_exact hashes
-    against the brute-force oracle)."""
+    ids, exact-rerank cosines, ranks — must equal cosine_topk row for row."""
     q = emb.filter(F.col("vec_id") < 5)
     exact = [tuple(r) for r in similarity.cosine_topk(emb, q, k=10).collect()]
     ivf = [
@@ -96,9 +94,7 @@ def test_ivf_exhaustive_probe_equals_brute_force(spark, emb):
 def test_clustered_pairs_probe_all_equals_exact(spark, emb):
     """n_probe = n_list puts every vector in every cluster, so the
     within-cluster GEMM sees every pair: clustered_exact_pairs must equal
-    blocked_exact_pairs row for row — ids AND cosines (the property the
-    certified companion dedup_semantic_clustered hashes against the exact
-    recursive-CTE oracle)."""
+    blocked_exact_pairs row for row — ids AND cosines."""
     exact = {
         tuple(r)
         for r in similarity.blocked_exact_pairs(
